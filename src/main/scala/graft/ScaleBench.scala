@@ -83,12 +83,6 @@ object ScaleBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.tune(spark)
-    // per-stage wall log for the staged minhash pipeline (r13 verdict
-    // task 3): SPARK_GRAFT_MINHASH_STAGELOG=<dir> makes every
-    // minHashLshPairs barrier append (stage, seconds, rows) there —
-    // warmup + timed reps all append, in run order
-    sys.env.get("SPARK_GRAFT_MINHASH_STAGELOG").foreach(d =>
-      spark.conf.set("spark.graft.minhash.stageLogDir", d))
 
     val baseDocs = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "30000").toLong
     val baseVecs = sys.env.getOrElse("SPARK_GRAFT_SCALE_VECS", "20000").toLong

@@ -208,13 +208,6 @@ object HeaderEtlJob {
         expr("coalesce(to_date(creazione_dta_raw, 'M/d/yyyy'), to_date(creazione_dta_raw, 'yyyy-MM-dd'))"))
   }
 
-  /** One operationMetrics value from the table's latest commit. */
-  private def lastMetric(table: VersionedTable, key: String): Long =
-    table.history(1).select("operationMetrics")
-      .collect().headOption
-      .flatMap(_.getAs[Map[String, String]](0).get(key))
-      .map(_.toLong).getOrElse(-1L)
-
   /** The two-phase SCD2 merge (init if absent, Phase A close-on-change
     * once per key, Phase B idempotent insert — reference:
     * src/header_etl.py:157-280). Shared by the batch job and
@@ -233,7 +226,7 @@ object HeaderEtlJob {
     }
     val table = VersionedTable.forPath(spark, writePath)
     // rows written by the init carry this batch_id → they count as inserted
-    val initRows = if (inited) lastMetric(table, "numOutputRows") else 0L
+    val initRows = if (inited) table.lastMetric("numOutputRows") else 0L
 
     // -- Phase L (opt-in): late-arriving-event interval splitting --------
     // Runs against the PRE-merge snapshot (table.read resolves its file
@@ -288,7 +281,7 @@ object HeaderEtlJob {
           "is_current" -> "false",
           "closed_by_batch" -> s"'$batchId'"))
       .execute()
-    val closed = lastMetric(table, "numTargetRowsUpdated")
+    val closed = table.lastMetric("numTargetRowsUpdated")
 
     // -- Phase B: idempotent insert of all version rows ------------------
     // (reference: src/header_etl.py:219-280)
@@ -299,7 +292,7 @@ object HeaderEtlJob {
       .whenNotMatchedInsert(values =
         StagedColumns.map(c => c -> s"staged.$c").toMap)
       .execute()
-    val insertedB = lastMetric(table, "numTargetRowsInserted")
+    val insertedB = table.lastMetric("numTargetRowsInserted")
 
     val inserted =
       if (initRows < 0 || insertedB < 0) -1L else initRows + insertedB

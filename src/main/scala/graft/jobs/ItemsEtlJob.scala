@@ -138,7 +138,7 @@ object ItemsEtlJob {
       // ---- INIT (reference: src/items_etl.py:79-81) --------------------
       VersionedTable.create(spark, dfTransformed, writePath, Schemas.PartitionColumns)
       if (collectCounts)
-        (lastMetric(VersionedTable.forPath(spark, writePath), "numOutputRows"), 0L)
+        (VersionedTable.forPath(spark, writePath).lastMetric("numOutputRows"), 0L)
       else (-1L, -1L)
     } else {
       // ---- SCD2 MERGE (reference: src/items_etl.py:86-143) -------------
@@ -174,8 +174,8 @@ object ItemsEtlJob {
           InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
         .execute()
       if (collectCounts)
-        (lastMetric(table, "numTargetRowsInserted"),
-          lastMetric(table, "numTargetRowsUpdated"))
+        (table.lastMetric("numTargetRowsInserted"),
+          table.lastMetric("numTargetRowsUpdated"))
       else (-1L, -1L)
     }
     val durMerge = secondsSince(tMerge0)
@@ -206,13 +206,6 @@ object ItemsEtlJob {
     metrics
     } finally flagged.unpersist(false)
   }
-
-  /** One operationMetrics value from the table's latest commit. */
-  private def lastMetric(table: VersionedTable, key: String): Long =
-    table.history(1).select("operationMetrics")
-      .collect().headOption
-      .flatMap(_.getAs[Map[String, String]](0).get(key))
-      .map(_.toLong).getOrElse(-1L)
 
   private def secondsSince(nanos: Long): Double =
     (System.nanoTime() - nanos) / 1e9

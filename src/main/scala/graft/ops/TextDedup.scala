@@ -160,25 +160,6 @@ object TextDedup {
 
     val bands = base.select(col(idCol), explode(col("__bands")).as("__band"))
 
-    // per-stage wall-clock audit hook (r13 verdict task 3 — name the
-    // superlinear stage at 100× vs 300× from an artifact): when
-    // spark.graft.minhash.stageLogDir is set, each staged barrier appends
-    // (stage, seconds, rows). No extra job anywhere — the timestamps wrap
-    // actions the staged pipeline already runs.
-    val session = df.sparkSession
-    val stageLogDir = session.conf.getOption("spark.graft.minhash.stageLogDir")
-    def stageLog(stage: String, sec: Double, rows: Long): Unit =
-      stageLogDir.foreach { d =>
-        try {
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(d, "minhash_stages.csv"),
-            f"$stage,$sec%.3f,$rows%d\n",
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        } catch { case scala.util.control.NonFatal(_) => }
-      }
-
     // The eager probe job yields the max raw band occupancy (the
     // [[LshBuckets.candidates]] mega-bucket guard signal, handed down as
     // knownMaxOcc so no second probe runs) and materializes `base`'s
@@ -189,12 +170,10 @@ object TextDedup {
     // array came out null/empty, and an undercount at the gate boundary
     // would silently flip a large corpus onto the direct (unprefiltered)
     // path — output-identical but defeating the scale path (ADVICE r12).
-    val tProbe0 = System.nanoTime()
     val probeRow = bands.groupBy(col("__band")).agg(count(lit(1)).as("__occ"))
       .agg(max(col("__occ"))).head()
     val maxOcc = if (probeRow.isNullAt(0)) 0L else probeRow.getLong(0)
     val nDocs = base.count()
-    stageLog("sig_probe_base", (System.nanoTime() - tProbe0) / 1e9, nDocs)
     // staged: the probe's group-by exchange carries ~every distinct band
     // key (≈ docs × bands rows pre-combine) — release it before the
     // candidate stage piles its own exchanges on top
@@ -236,11 +215,9 @@ object TextDedup {
     // exchanges before the prefilter joins run
     val candidates =
       if (staged) {
-        val tCand0 = System.nanoTime()
         val c = Caches.registered(candidatesPlan
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val nCand = c.count()
-        stageLog("candidates", (System.nanoTime() - tCand0) / 1e9, nCand)
+        c.count()
         Caches.purgeShuffles(df)
         c
       } else candidatesPlan
@@ -284,9 +261,7 @@ object TextDedup {
     // staged: materialize the (duplicate-rate-∝) prefiltered pair cache
     // and release the prefilter joins' exchanges before verification
     if (staged) {
-      val tPre0 = System.nanoTime()
-      val nPre = prefiltered.count()
-      stageLog("prefiltered", (System.nanoTime() - tPre0) / 1e9, nPre)
+      prefiltered.count()
       Caches.purgeShuffles(df)
     }
 
@@ -583,21 +558,6 @@ object TextDedup {
       labels = next
       converged = changed == 0
       i += 1
-      // audit hook: `changed` IS the next round's frontier size — when
-      // spark.graft.cc.roundLogDir is set, append it so the claim "the
-      // propagation join input shrinks round over round" is checkable
-      // from an artifact (no extra job: the count was the convergence
-      // probe already).
-      session.conf.getOption("spark.graft.cc.roundLogDir").foreach { d =>
-        try {
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(d, "cc_rounds.csv"),
-            s"$i,$changed\n",
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        } catch { case scala.util.control.NonFatal(_) => }
-      }
     }
     } finally session.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     val result = labels

@@ -152,17 +152,20 @@ class VersionedTable private (val spark: SparkSession,
     (commits, cps)
   }
 
-  private[tables] def entries: Seq[LogEntry] = {
+  private[tables] def entries: Seq[LogEntry] = parsedLog(newestFirst = false).toSeq
+
+  /** The log's commits, parsed lazily one file at a time as the iterator
+    * is consumed. Same tolerance as snapshot(): a torn NEWEST commit is
+    * aborted-publish debris, not history — history()/readChanges() keep
+    * working on the parsable prefix; torn anywhere else is corruption and
+    * throws. */
+  private def parsedLog(newestFirst: Boolean): Iterator[LogEntry] = {
     val f = fs
     val commits = listLog()._1
-    // same tolerance as snapshot(): a torn NEWEST commit is aborted-
-    // publish debris, not history — history()/readChanges() keep working
-    // on the parsable prefix; torn anywhere else is corruption and throws
-    commits.flatMap { case (v, p) =>
+    val newest = commits.lastOption.fold(-1L)(_._1)
+    (if (newestFirst) commits.reverseIterator else commits.iterator).flatMap { case (v, p) =>
       try Some(parseEntry(readFully(f, p)))
-      catch {
-        case scala.util.control.NonFatal(_) if v == commits.last._1 => None
-      }
+      catch { case scala.util.control.NonFatal(_) if v == newest => None }
     }
   }
 
@@ -299,7 +302,7 @@ class VersionedTable private (val spark: SparkSession,
     * publishes at its end, so on a [[ConcurrentCommitException]] the
     * operation is simply re-run against the winner's new table state —
     * re-snapshot, re-rewrite, re-CAS — up to
-    * `spark.graft.commit.maxRetries` times (default 3, 0 disables).
+    * `spark.graft.commit.maxRetries` times (default 10, 0 disables).
     * Physically-conflicting writers (same keys, same files) stay correct
     * under this loop because each retry rewrites from the committed
     * state; it is the CONCURRENCY discipline that is optimistic, not the
@@ -539,15 +542,22 @@ class VersionedTable private (val spark: SparkSession,
   }
 
   /** Commit history, newest first (reference: DeltaTable.history —
-    * schema_evolution_step1.py:129-136). */
+    * schema_evolution_step1.py:129-136). Parses only the newest `limit`
+    * commit files (one more when the newest is torn and skipped). */
   def history(limit: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    entries.sortBy(-_.version).take(limit)
+    parsedLog(newestFirst = true).take(limit).toSeq
       .map(e => (e.version, new Timestamp(e.timestampMs), e.operation,
         e.operationMetrics, e.add.size.toLong, e.remove.size.toLong))
       .toDF("version", "timestamp", "operation", "operationMetrics",
         "numAddedFiles", "numRemovedFiles")
   }
+
+  /** One operationMetrics value of the newest commit; -1 when that
+    * commit does not record it. Parses one commit file. */
+  def lastMetric(key: String): Long =
+    parsedLog(newestFirst = true).nextOption().flatMap(_.operationMetrics.get(key))
+      .map(_.toLong).getOrElse(-1L)
 
   def schema: StructType = snapshot(None)._2
   def partitionColumns: Seq[String] = snapshot(None)._3
@@ -1546,29 +1556,33 @@ class VersionedTable private (val spark: SparkSession,
                                    schemaEvolution: Boolean = false): Unit = {
     // The source is consumed 2-3 times (stats/cardinality agg, file-prune
     // join, then the rewrite or anti join) — persist it so the lineage
-    // runs once. GUARDED (guide §5: caching competes with execution
-    // memory): only a plan with a join/aggregate/window/generate above
-    // its scans is worth a second materialization. The common cheap
-    // shape — a projection over the caller's ALREADY-CACHED batch (the
-    // header job's Phase-B staging) — previously got persisted here
-    // unconditionally, writing a second full copy of the batch to
-    // storage memory per merge; re-running a projection over the
-    // existing cache costs less than that copy. Non-deterministic
-    // sources are persisted regardless of shape: re-evaluating one
-    // across the probe/rewrite passes would let the probe and the
-    // rewrite see DIFFERENT rows. try/finally: any failure must still
-    // release the cached blocks. The retry loop sits INSIDE the persist
-    // scope: a CAS-losing merge re-runs reusing the cached source.
+    // runs once. SCD2 merge sources are typically a join/aggregate over
+    // the TARGET TABLE itself (HeaderEtlJob Phase A's first-change frame,
+    // ItemsEtlJob's staged union): unpersisted, every evaluation replays
+    // a table scan plus a shuffle join. GUARDED (guide §5: caching
+    // competes with execution memory): only a plan with a join/aggregate/
+    // window/generate above its scans — in the analyzed plan, or
+    // introduced by the optimizer (a distinct becomes an Aggregate) — is
+    // worth a second materialization. The common cheap shape, a
+    // projection over the caller's ALREADY-CACHED batch (the header job's
+    // Phase-B staging), would only double-cache the batch; re-running a
+    // projection over the existing cache costs less than that copy.
+    // Non-deterministic sources are persisted regardless of shape:
+    // re-evaluating one across the probe/rewrite passes would let the
+    // probe and the rewrite see DIFFERENT rows. try/finally: any failure
+    // must still release the cached blocks. The retry loop sits INSIDE
+    // the persist scope: a CAS-losing merge re-runs reusing the cached
+    // source.
     val srcExpensive = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, Window => LWindow}
-      val plan = source.queryExecution.analyzed
-      plan.exists {
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, LogicalPlan, Window => LWindow}
+      def heavy(p: LogicalPlan): Boolean = p match {
         case _: Join | _: Aggregate | _: LWindow | _: Generate => true
-        case other => !other.deterministic
+        case _ => false
       }
+      source.queryExecution.analyzed.exists(p => heavy(p) || !p.deterministic) ||
+        source.queryExecution.optimizedPlan.exists(heavy)
     }
-    val doPersist = srcExpensive && source.storageLevel == StorageLevel.NONE &&
-      spark.conf.get("spark.graft.merge.persistSource", "true") != "false"
+    val doPersist = srcExpensive && source.storageLevel == StorageLevel.NONE
     val src = if (doPersist) source.persist(StorageLevel.MEMORY_AND_DISK) else source
     try withCommitRetry {
       mergeBody(targetAlias, src, condition, matchedUpdate, notMatchedInsert,
@@ -1740,32 +1754,6 @@ class VersionedTable private (val spark: SparkSession,
       else StructType(baseSchema.fields ++ evolvedCols)
     val dataCols = tableSchema.fields.toSeq
 
-    // --- source persist: mergeBody evaluates the source 2-3 times (the
-    // stats/cardinality agg, the touched-file probe, then the rewrite or
-    // the insert anti-join). Re-evaluating a trivially-cheap source (a
-    // caller-cached staged batch) costs nothing, but SCD2 merge sources
-    // are typically a join/aggregate over the TARGET TABLE itself
-    // (HeaderEtlJob Phase A's first-change frame, ItemsEtlJob's staged
-    // union) — without a persist every evaluation replays a table scan
-    // plus a shuffle join (guide §1.2: remove redundant passes first).
-    // Guarded: only plans containing a join/aggregate/window/generate
-    // are persisted — a plain projection over the caller's cache would
-    // just double-cache the batch — and
-    // spark.graft.merge.persistSource=false turns it off.
-    val persistSource =
-      spark.conf.get("spark.graft.merge.persistSource", "true") != "false"
-    val srcExpensive = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, Window => LWindow}
-      src.queryExecution.optimizedPlan.exists {
-        case _: Join | _: Aggregate | _: LWindow | _: Generate => true
-        case _ => false
-      }
-    }
-    val srcPersisted = persistSource && srcExpensive &&
-      src.storageLevel == StorageLevel.NONE
-    val src2 = if (srcPersisted) src.persist(StorageLevel.MEMORY_AND_DISK) else src
-    try {
-
     // --- stats pruning + cardinality fast path: ONE source-side agg -----
     // For each conjunctive equi-key, the agg computes its min/max — files
     // whose footer stats don't overlap EVERY key range cannot contain
@@ -1778,8 +1766,6 @@ class VersionedTable private (val spark: SparkSession,
     // unnecessary (the common case — e.g. a deduped batch). Conservative
     // on every failure path: unknown shapes prune nothing and keep the
     // exact check.
-    val checkCardinality =
-      spark.conf.get("spark.graft.merge.checkCardinality", "true") != "false"
     val (pairs, pureEqui) = equiPairs(condition, targetAlias)
     // ≤2 files: the min/max agg costs more than scanning them
     val wantStats = pairs.nonEmpty && files.size > 2
@@ -1821,7 +1807,7 @@ class VersionedTable private (val spark: SparkSession,
                 groupAttrs.forall(keys.contains)
             case _ => false
           }
-          val analyzed = src2.queryExecution.analyzed
+          val analyzed = src.queryExecution.analyzed
           // source-side key column names: parse each pair's source sql
           // (possibly alias-qualified / backquoted) back to its last part
           val keyNames = pairs.flatMap { case (_, sexpr) =>
@@ -1836,13 +1822,12 @@ class VersionedTable private (val spark: SparkSession,
             dig(analyzed, AttributeSet(keyAttrs))
         } catch { case scala.util.control.NonFatal(_) => false }
       }
+    val anyMatchedClause = matchedUpdate.isDefined || matchedDelete.isDefined
+    val uniqueByPlan = keysUniqueByPlan
     // dup check only matters on the rewrite path (insert-only merges
     // return before the probe and never rewrite matched rows)
-    val uniqueByPlan = checkCardinality && keysUniqueByPlan
-    val wantDupCheck = checkCardinality && !uniqueByPlan && pureEqui && pairs.nonEmpty &&
-      (matchedUpdate.isDefined || matchedDelete.isDefined)
-    val anyMatchedClause = matchedUpdate.isDefined || matchedDelete.isDefined
-    var srcKeysUnique = uniqueByPlan
+    val wantDupCheck = !uniqueByPlan && pureEqui && pairs.nonEmpty && anyMatchedClause
+    var uniqueByCount = false
     val matchCandidates: Seq[FileEntry] =
       try {
         if (!wantStats && !wantDupCheck) files
@@ -1859,7 +1844,7 @@ class VersionedTable private (val spark: SparkSession,
             countDistinct(keyExprs.head, keyExprs.tail: _*).as("__graft_nd"))
           val aggs = statAggs ++ dupAggs
           val row = labeled("merge: source stats/cardinality agg") {
-            src2.agg(aggs.head, aggs.tail: _*).collect()(0)
+            src.agg(aggs.head, aggs.tail: _*).collect()(0)
           }
           if (wantDupCheck) {
             // rows with a NULL key can never equi-match a target row;
@@ -1867,7 +1852,7 @@ class VersionedTable private (val spark: SparkSession,
             // non-null-key row count
             val nn = if (row.isNullAt(statAggs.size)) 0L else row.getLong(statAggs.size)
             val nd = row.getLong(statAggs.size + 1)
-            srcKeysUnique = nn == nd
+            uniqueByCount = nn == nd
           }
           if (!wantStats) files
           else pairs.zipWithIndex.foldLeft(files) { case (cand, ((tcol, _), i)) =>
@@ -1892,24 +1877,31 @@ class VersionedTable private (val spark: SparkSession,
     // conservatively stays un-hinted and Catalyst/AQE decides. Full-outer
     // rewrites (update+insert merges) are excluded below — broadcast hash
     // join does not support full-outer and the hint would be dead weight.
-    val bcastCapBytes = spark.conf.get(
-      "spark.graft.merge.broadcastSourceBytes",
-      (128L * 1024 * 1024).toString).toLong
-    // `src2.storageLevel != NONE`, NOT the local srcPersisted flag: the
-    // usual path persists expensive sources one frame up (executeMerge),
-    // which made the local flag false for exactly the sources the hint
-    // targets — the hint was dead code for every executeMerge-persisted
-    // source. LAZY: forced only inside maybeBroadcast, i.e. strictly
-    // after the stats/cardinality agg above ran its collect and filled
-    // the cache, so the InMemoryRelation stats read here are the exact
-    // materialized bytes (on the no-stats ≤2-file path the cache may be
-    // cold and this reads the estimate — a ≤2-file table is fixture
-    // scale, where either join strategy is fine).
-    lazy val srcSmall = src2.storageLevel != StorageLevel.NONE && (try {
-      src2.queryExecution.optimizedPlan.stats.sizeInBytes <= bcastCapBytes
+    // `src.storageLevel != NONE` covers both a source executeMerge
+    // persisted and one the caller cached. LAZY: forced only inside
+    // maybeBroadcast, i.e. strictly after the stats/cardinality agg above
+    // ran its collect and filled the cache, so the InMemoryRelation stats
+    // read here are the exact materialized bytes (on the no-stats ≤2-file
+    // path the cache may be cold and this reads the estimate — a ≤2-file
+    // table is fixture scale, where either join strategy is fine).
+    lazy val srcSmall = src.storageLevel != StorageLevel.NONE && (try {
+      src.queryExecution.optimizedPlan.stats.sizeInBytes <= MergeBroadcastSourceBytes
     } catch { case scala.util.control.NonFatal(_) => false })
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (srcSmall) broadcast(df) else df
+
+    // What this merge decided, recorded in its commit's operationMetrics
+    // (and so in history()): whether the source was cached, whether the
+    // join that writes the new files carried the source broadcast hint,
+    // that join's type, and what proved the source keys unique — "plan"
+    // (a groupBy on the keys), "count" (the stats agg's countDistinct) or
+    // "unchecked" (neither; the probe's per-row cardinality check runs).
+    def decision(joinType: String, broadcastHint: Boolean): Map[String, String] = Map(
+      "sourceCached" -> (src.storageLevel != StorageLevel.NONE).toString,
+      "sourceBroadcast" -> broadcastHint.toString,
+      "rewriteJoinType" -> joinType,
+      "sourceKeysUnique" ->
+        (if (uniqueByPlan) "plan" else if (uniqueByCount) "count" else "unchecked"))
 
     // --- fast path: insert-only merge rewrites NOTHING ------------------
     // With no matched-update/delete clause (e.g. the header job's Phase
@@ -1924,7 +1916,7 @@ class VersionedTable private (val spark: SparkSession,
       // anti-join only against the stats-candidate files: rows in skipped
       // files cannot equal any source key, so they cannot absorb inserts
       val target = readFileEntries(matchCandidates, tableSchema).alias(targetAlias)
-      val unmatched = src2.join(target, expr(condition), "left_anti")
+      val unmatched = src.join(target, expr(condition), "left_anti")
       val toInsert = insCondOpt.fold(unmatched)(c => unmatched.filter(expr(c)))
       val rows = toInsert.select(dataCols.map { f =>
         insVals.get(f.name).map(expr).getOrElse(lit(null))
@@ -1948,7 +1940,7 @@ class VersionedTable private (val spark: SparkSession,
           "numTargetRowsDeleted" -> "0",
           "numTargetRowsInserted" -> inserted.toString,
           "numColumnsEvolved" -> evolvedCols.size.toString,
-          "insertOnly" -> "true")), added)
+          "insertOnly" -> "true") ++ decision("left_anti", broadcastHint = false)), added)
       return
     }
 
@@ -1964,7 +1956,7 @@ class VersionedTable private (val spark: SparkSession,
     // collect is bounded by file count, never by row count. Catalyst/AQE
     // picks the join strategy — the source side of a batch merge is
     // typically small enough to broadcast.
-    val needExactCardinality = checkCardinality && !srcKeysUnique
+    val needExactCardinality = !uniqueByPlan && !uniqueByCount
     val qualify = files.map(fe =>
       fs.makeQualified(new Path(dataDir, fe.path)).toString -> fe.path).toMap
     val knownRel = files.map(_.path).toSet
@@ -1977,7 +1969,7 @@ class VersionedTable private (val spark: SparkSession,
         // it now: after a DV anti-join, _metadata no longer resolves)
         val t = readFileEntries(matchCandidates, tableSchema, keepMeta = true)
           .alias(targetAlias)
-        val matched = t.join(maybeBroadcast(src2), expr(condition), "inner")
+        val matched = t.join(maybeBroadcast(src), expr(condition), "inner")
         if (needExactCardinality) {
           val perFile = labeled("merge: touched-file probe + cardinality") {
             matched
@@ -2015,7 +2007,8 @@ class VersionedTable private (val spark: SparkSession,
     // sort-merge join (guide §2.4/§3.1).
     val rewriteJoinType = if (notMatchedInsert.isEmpty) "left_outer" else "full_outer"
     val t = touchedDF.withColumn(TPresent, lit(true)).alias(targetAlias)
-    val s = (if (rewriteJoinType == "left_outer") maybeBroadcast(src2) else src2)
+    val rewriteBroadcast = rewriteJoinType == "left_outer" && srcSmall
+    val s = (if (rewriteBroadcast) broadcast(src) else src)
       .withColumn(SPresent, lit(true))
     val joined = t.join(s, expr(condition), rewriteJoinType)
 
@@ -2083,32 +2076,6 @@ class VersionedTable private (val spark: SparkSession,
     }
     val rewritten = kept.select(outCols: _*)
 
-    // plan-audit hook: when spark.graft.merge.explainDir is set, dump the
-    // rewrite join's formatted physical plan there (one file per merge,
-    // named by target + version) so optimization claims about the merge's
-    // internal plan shape (join strategy, exchange count, cached source)
-    // are checkable — the merge plan never appears in any returned frame.
-    spark.conf.getOption("spark.graft.merge.explainDir").foreach { d =>
-      try {
-        val name = rootPath.getName + s"_v${pinnedV + 1}_rewrite.txt"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        // header line: the measured-size broadcast decision's inputs, so
-        // a dump where the hint did NOT flip the join is self-explaining
-        // (un-persisted source vs size over cap vs estimate already fired)
-        val srcBytes =
-          try src2.queryExecution.optimizedPlan.stats.sizeInBytes.toString
-          catch { case scala.util.control.NonFatal(_) => "?" }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(d, name),
-          s"-- merge source: cached=${src2.storageLevel != StorageLevel.NONE}" +
-            s" sizeInBytes=$srcBytes" +
-            s" capBytes=$bcastCapBytes hinted=$srcSmall" +
-            s" rewriteJoinType=$rewriteJoinType\n" +
-          rewritten.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-      } catch { case scala.util.control.NonFatal(_) => }
-    }
-
     val doWrite = touchedFiles.nonEmpty || notMatchedInsert.nonEmpty
     val added =
       if (doWrite) labeled("merge: rewrite + write") {
@@ -2146,8 +2113,8 @@ class VersionedTable private (val spark: SparkSession,
         "numTargetRowsUpdated" -> rowsUpdated.toString,
         "numTargetRowsInserted" -> rowsInserted.toString,
         "numTargetRowsDeleted" -> rowsDeleted.toString,
-        "numColumnsEvolved" -> evolvedCols.size.toString)), added)
-    } finally if (srcPersisted) src2.unpersist(false)
+        "numColumnsEvolved" -> evolvedCols.size.toString) ++
+        decision(rewriteJoinType, rewriteBroadcast)), added)
   }
 
   // ------------------------------------------------------------- helpers --
@@ -2187,6 +2154,9 @@ object VersionedTable {
   private val LogDirName = "_graft_log"
   /** Commits between snapshot checkpoints (Delta uses 10 as well). */
   private[tables] val CheckpointInterval = 10L
+  /** A merge source whose cached size is at most this gets the broadcast
+    * hint on its probe and left-outer rewrite joins. */
+  private val MergeBroadcastSourceBytes = 128L * 1024 * 1024
 
   /** Reference-counted per-session scope forcing
     * `spark.sql.parquet.outputTimestampType = TIMESTAMP_MICROS` around

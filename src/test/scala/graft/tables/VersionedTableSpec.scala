@@ -221,6 +221,75 @@ class VersionedTableSpec extends AnyFunSuite {
     }
   }
 
+  test("merge records its source, broadcast, join and uniqueness decisions") {
+    def lastMetrics(t: VersionedTable): Map[String, String] =
+      t.history(1).select("operationMetrics").as[Map[String, String]].head()
+    // three files, so the source stats agg runs and fills the cache
+    // before the broadcast decision reads its size
+    val t = VersionedTable.create(spark,
+      (1 to 30).map(i => (s"k$i", i)).toDF("key", "val").repartition(3),
+      tmpDir() + "/tdecide")
+
+    // update-only from a groupBy on the key: cached, unique by plan, and
+    // the small cached source is broadcast into the left-outer rewrite
+    val agg = Seq(("k1", 10), ("k1", 7), ("k3", 30)).toDF("key", "v")
+      .groupBy("key").agg(min("v").as("minv")).alias("s")
+    t.alias("e").merge(agg, "e.key = s.key")
+      .whenMatchedUpdate(set = Map("val" -> "s.minv")).execute()
+    val m1 = lastMetrics(t)
+    assert(m1("rewriteJoinType") == "left_outer")
+    assert(m1("sourceCached") == "true")
+    assert(m1("sourceBroadcast") == "true")
+    assert(m1("sourceKeysUnique") == "plan")
+    assert(t.read.filter($"key" === "k1").select("val").as[Int].head() == 7)
+
+    // update + insert from a plain frame: full-outer rewrite, which a
+    // broadcast hash join cannot run, and uniqueness from the count
+    val plain = Seq(("k2", 20), ("k99", 99)).toDF("key", "v").alias("s")
+    t.alias("e").merge(plain, "e.key = s.key")
+      .whenMatchedUpdate(set = Map("val" -> "s.v"))
+      .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v"))
+      .execute()
+    val m2 = lastMetrics(t)
+    assert(m2("rewriteJoinType") == "full_outer")
+    assert(m2("sourceBroadcast") == "false")
+    assert(m2("sourceCached") == "false")
+    assert(m2("sourceKeysUnique") == "count")
+
+    // insert-only: the anti-join path records its own join
+    t.alias("e").merge(Seq(("k100", 100)).toDF("key", "v").alias("s"), "e.key = s.key")
+      .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v"))
+      .execute()
+    val m3 = lastMetrics(t)
+    assert(m3("insertOnly") == "true" && m3("rewriteJoinType") == "left_anti")
+    assert(m3("sourceBroadcast") == "false")
+    assert(t.read.count() == 32)
+  }
+
+  test("an expensive merge source is unpersisted after the merge, also when it throws") {
+    import org.apache.spark.storage.StorageLevel
+    val t = VersionedTable.create(spark,
+      Seq(("k1", 1), ("k2", 2)).toDF("key", "val"), tmpDir() + "/trelease")
+    val agg = Seq(("k1", 10), ("k2", 20)).toDF("key", "v")
+      .groupBy("key").agg(max("v").as("v")).alias("s")
+    t.alias("e").merge(agg, "e.key = s.key")
+      .whenMatchedUpdate(set = Map("val" -> "s.v")).execute()
+    assert(t.history(1).select("operationMetrics").as[Map[String, String]]
+      .head()("sourceCached") == "true", "the aggregate source must be persisted")
+    assert(agg.storageLevel == StorageLevel.NONE)
+
+    // grouped by more than the join key: not unique by plan, the count
+    // sees the duplicate, and the probe's cardinality check throws
+    val dup = Seq(("k1", "x", 1), ("k1", "y", 2)).toDF("key", "g", "v")
+      .groupBy("key", "g").agg(max("v").as("v")).alias("s")
+    val e = intercept[IllegalStateException] {
+      t.alias("e").merge(dup, "e.key = s.key")
+        .whenMatchedUpdate(set = Map("val" -> "s.v")).execute()
+    }
+    assert(e.getMessage.contains("multiple source rows matched the same target row"))
+    assert(dup.storageLevel == StorageLevel.NONE)
+  }
+
   test("NULL merge keys in source never match (items staging trick J6)") {
     val path = tmpDir() + "/t8"
     val t = VersionedTable.create(spark,
@@ -675,6 +744,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // reads tolerate: the torn newest is treated as aborted → version 0
     assert(t.read.count() == 1, "reader must fall back to the last parsable version")
     assert(t.history().count() == 1, "history lists only the parsable prefix")
+    assert(t.history(1).select("version").as[Long].collect().toSeq == Seq(0L),
+      "history(1) skips the torn newest commit")
     // explicit time travel TO the torn version must fail, not lie
     intercept[Exception] { t.readVersion(1L).collect() }
     // writers refuse to commit past the hole
