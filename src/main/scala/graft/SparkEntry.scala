@@ -87,8 +87,7 @@ object SparkEntry {
     * the session's own value (the deployment's parallelism choice) stays
     * the CEILING, so production volumes keep production parallelism and
     * only provably-small inputs scale down.
-    * SPARK_GRAFT_STREAM_MB_PER_PARTITION overrides the 16 MB/partition
-    * target. The previous setting is restored after the drain; the conf
+    * The previous setting is restored after the drain; the conf
     * is read at stream start, so the scope covers start→awaitTermination
     * (results are partitioning-independent — only the plan changes). */
   private def withScaledStreamShuffle[T](s: SparkSession, inputPath: String)
@@ -100,10 +99,8 @@ object SparkEntry {
           Option(f.listFiles()).map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
         else f.length
       } catch { case scala.util.control.NonFatal(_) => 0L }
-    val mbPerPart = sys.env.getOrElse("SPARK_GRAFT_STREAM_MB_PER_PARTITION", "16")
-      .trim.toLong
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val perPart = mbPerPart * 1024 * 1024
+    val perPart = 16L * 1024 * 1024
     val target = math.max(1L,
       math.min(prev.toLong, (bytes + perPart - 1) / perPart))
     s.conf.set("spark.sql.shuffle.partitions", target.toString)

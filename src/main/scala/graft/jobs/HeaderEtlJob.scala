@@ -1,8 +1,5 @@
 package graft.jobs
 
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
-
 import graft.core.Schemas
 import graft.ops.{DqMetrics, Validation}
 import graft.tables.VersionedTable
@@ -58,6 +55,7 @@ case class HeaderRunMetrics(batch_id: String,
   * the join); the merge itself rewrites only files containing matched keys.
   */
 object HeaderEtlJob {
+  import JobSupport.secondsSince
 
   private val MaxTsExpr = s"to_timestamp('${Schemas.MaxTs}')"
 
@@ -90,10 +88,7 @@ object HeaderEtlJob {
           lateSplit: Boolean = false): HeaderRunMetrics = {
     val t0 = System.nanoTime()
     val filename = readPath.split("/").last
-    // driver-side batch id (reference computes the same value through the
-    // cluster: src/header_etl.py:70-73)
-    val batchId = DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
-      .withZone(ZoneOffset.UTC).format(Instant.now()) + "_" + filename
+    val batchId = JobSupport.batchId(filename)
 
     // ---- EXTRACT (reference: src/header_etl.py:64-73) ------------------
     val tExtract0 = System.nanoTime()
@@ -171,7 +166,7 @@ object HeaderEtlJob {
       dq_duplicates_older = dq.duplicatesOlder,
       dq_null_key = dq.nullKey,
       dq_batch_date_mismatch = dq.batchDateMismatch)
-    writeMetrics(spark, metrics, s"$metricsPath/$batchId")
+    JobSupport.writeMetrics(metrics, s"$metricsPath/$batchId")
     metrics
   }
 
@@ -367,25 +362,4 @@ object HeaderEtlJob {
       .withColumn("is_current", col("is_current") && col("next_ex_from").isNull)
       .drop("next_ex_from")
   }
-
-  /** Run-metrics CSV sink, one dir per batch, append semantics with
-    * header (reference: src/header_etl.py:338-340). Written DRIVER-SIDE:
-    * the previous `Seq(m).toDF().coalesce(1).write.csv` paid a full Spark
-    * job (plan + schedule + task + commit protocol) for ONE row inside
-    * every batch — pure fixed overhead (guide §5: the driver should do no
-    * data work, and symmetrically one row is driver work, not a cluster
-    * job). Same on-disk layout: a per-batch dir holding one headered
-    * part file; none of the values need CSV quoting (no separators or
-    * newlines in batch ids / app ids / numbers). */
-  private def writeMetrics(spark: SparkSession, m: HeaderRunMetrics, path: String): Unit = {
-    val dir = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(
-      dir.resolve(s"part-00000-${java.util.UUID.randomUUID()}.csv"),
-      m.productElementNames.mkString(",") + "\n" +
-        m.productIterator.mkString(",") + "\n")
-  }
-
-  private def secondsSince(nanos: Long): Double =
-    (System.nanoTime() - nanos) / 1e9
 }

@@ -44,6 +44,7 @@ case class ItemsRunMetrics(batch_id: String,
   * (reference: notes.md:3-20) preserved for parity.
   */
 object ItemsEtlJob {
+  import JobSupport.secondsSince
 
   /** All table columns, for the whenNotMatchedInsert values map
     * (reference: src/items_etl.py:121-141). */
@@ -57,25 +58,17 @@ object ItemsEtlJob {
   /** @return number of duplicated rows dropped by the dedup step (the
     *         reference logs this count — src/items_etl.py:57-61). */
   def run(spark: SparkSession, readPath: String, writePath: String): Long =
-    runWithMetrics(spark, readPath, writePath,
-      collectCounts = false).duplicated_count
+    runWithMetrics(spark, readPath, writePath).duplicated_count
 
   /** [[run]] with the full phase-timing/count breakdown; when
     * `metricsPath` is given, appends the row as a one-line header CSV
     * under `metricsPath/<batch_id>` (the header job's metrics-sink
-    * shape — reference logs these values, src/items_etl.py:57-61).
-    * `collectCounts = false` skips the staged-count action and the
-    * commit-metrics history reads (those fields read -1) — the plain
-    * [[run]] entry point uses it so correctness replays and tests
-    * don't pay ~0.6 s of accounting-only driver jobs per batch. */
+    * shape — reference logs these values, src/items_etl.py:57-61). */
   def runWithMetrics(spark: SparkSession, readPath: String, writePath: String,
-                     metricsPath: Option[String] = None,
-                     collectCounts: Boolean = true): ItemsRunMetrics = {
+                     metricsPath: Option[String] = None): ItemsRunMetrics = {
     val t0 = System.nanoTime()
     val filename = readPath.split("/").last
-    val batchId = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.now()) + "_" + filename
+    val batchId = JobSupport.batchId(filename)
 
     // ---- EXTRACT (reference: src/items_etl.py:49-52) -------------------
     val tExtract0 = System.nanoTime()
@@ -92,23 +85,27 @@ object ItemsEtlJob {
     // and logs flag==2 — keys with 3+ copies are dropped but not counted)
     // The flagged frame is the batch's ONE expensive lineage (CSV scan +
     // the whole-partition count window) and has two consumers: the
-    // duplicated-count action here and everything downstream of the
-    // transform. Persisting it makes the count() the action that fills
-    // the cache, so the scan+window run ONCE per batch instead of twice
-    // (guide §1.2: don't repeat passes; previously the downstream
-    // transform cache re-ran both). Downstream re-derives transform
+    // count aggregate here and everything downstream of the transform.
+    // Persisting it makes that aggregate the action that fills the
+    // cache, so the scan+window run ONCE per batch instead of twice
+    // (guide §1.2: don't repeat passes). Downstream re-derives transform
     // columns from this cache — narrow, no shuffle.
     val tDedup0 = System.nanoTime()
     val wDup = Window.partitionBy(Schemas.ItemsDedupKeys.map(col): _*)
     val flagged = dfExtracted.withColumn("flag", count(lit(1)).over(wDup))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the try/finally that releases the cache starts HERE, immediately
-    // after the persist: the dedup count() below is the action that
+    // after the persist: the count aggregate below is the action that
     // materializes it and can throw on bad input — thrown OUTSIDE the
     // guard it would leak the pinned cache into a long-lived session
     // (ADVICE r13)
     try {
-    val duplicatedCount = flagged.filter(col("flag") === 2).count()
+    // ONE job counts both the dropped duplicates (flag == 2) and the
+    // staged rows (flag == 1: the dedup keeps them, the transform is
+    // row-preserving)
+    val counts = flagged.agg(
+      count(when(col("flag") === 2, true)), count(when(col("flag") === 1, true))).head()
+    val (duplicatedCount, stagedCount) = (counts.getLong(0), counts.getLong(1))
     val deduped = flagged.filter(col("flag") === 1)
     val durDedup = secondsSince(tDedup0)
 
@@ -126,20 +123,17 @@ object ItemsEtlJob {
     // ---- MERGE / INIT (reference: src/items_etl.py:79-143) -------------
     // No second persist here: dfTransformed is a narrow projection over
     // the already-cached flagged frame (the dedup phase materialized it),
-    // so its consumers — the staged count and both arms of the merge's
-    // staged union — each replay only cheap column expressions over the
-    // cache. A second full-width copy of the batch in storage memory
-    // bought nothing and competed with the merge join for memory
-    // (guide §5: caching competes with execution memory).
+    // so its consumers — both arms of the merge's staged union — each
+    // replay only cheap column expressions over the cache. A second
+    // full-width copy of the batch in storage memory would buy nothing
+    // and compete with the merge join for memory (guide §5: caching
+    // competes with execution memory).
     val tMerge0 = System.nanoTime()
-    val stagedCount = if (collectCounts) dfTransformed.count() else -1L
     val (insertedCount, closedCount) =
       if (!VersionedTable.isTable(spark, writePath)) {
       // ---- INIT (reference: src/items_etl.py:79-81) --------------------
-      VersionedTable.create(spark, dfTransformed, writePath, Schemas.PartitionColumns)
-      if (collectCounts)
-        (VersionedTable.forPath(spark, writePath).lastMetric("numOutputRows"), 0L)
-      else (-1L, -1L)
+      (VersionedTable.create(spark, dfTransformed, writePath, Schemas.PartitionColumns)
+        .lastMetric("numOutputRows"), 0L)
     } else {
       // ---- SCD2 MERGE (reference: src/items_etl.py:86-143) -------------
       val table = VersionedTable.forPath(spark, writePath)
@@ -173,10 +167,8 @@ object ItemsEtlJob {
         .whenNotMatchedInsert(values =
           InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
         .execute()
-      if (collectCounts)
-        (table.lastMetric("numTargetRowsInserted"),
-          table.lastMetric("numTargetRowsUpdated"))
-      else (-1L, -1L)
+      (table.lastMetric("numTargetRowsInserted"),
+        table.lastMetric("numTargetRowsUpdated"))
     }
     val durMerge = secondsSince(tMerge0)
 
@@ -192,21 +184,8 @@ object ItemsEtlJob {
       inserted_count = insertedCount,
       closed_count = closedCount,
       spark_app_id = spark.sparkContext.applicationId)
-    // driver-side one-row CSV (same layout as the former
-    // df.coalesce(1).write.csv dir): a Spark job per single metrics row
-    // was pure fixed overhead inside the batch (guide §5)
-    metricsPath.foreach { p =>
-      val dir = java.nio.file.Paths.get(s"$p/$batchId")
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(
-        dir.resolve(s"part-00000-${java.util.UUID.randomUUID()}.csv"),
-        metrics.productElementNames.mkString(",") + "\n" +
-          metrics.productIterator.mkString(",") + "\n")
-    }
+    metricsPath.foreach(p => JobSupport.writeMetrics(metrics, s"$p/$batchId"))
     metrics
     } finally flagged.unpersist(false)
   }
-
-  private def secondsSince(nanos: Long): Double =
-    (System.nanoTime() - nanos) / 1e9
 }

@@ -111,7 +111,7 @@ class VersionedTable private (val spark: SparkSession,
 
   /** Columns carrying parquet bloom filters (property
     * `bloom.filter.columns`, comma-separated), written by every file this
-    * table writes and probed by [[readWhereEquals]]. */
+    * table writes and probed by [[pruneFiles]]. */
   private def bloomColumns: Seq[String] =
     tableProps.get(BloomColsProp).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
@@ -825,7 +825,7 @@ class VersionedTable private (val spark: SparkSession,
       var writer = df.write.mode("overwrite")
       // per-column parquet bloom filters (table property): written into
       // the file footer region by parquet-mr itself — no extra data pass,
-      // nothing stored in the commit log. Probed by readWhereEquals.
+      // nothing stored in the commit log. Probed by pruneFiles.
       bloomColumns.filter(df.schema.fieldNames.contains).foreach { c =>
         writer = writer
           .option(s"parquet.bloom.filter.enabled#$c", "true")
@@ -899,17 +899,6 @@ class VersionedTable private (val spark: SparkSession,
   private def footerInfo(file: Path): (Option[Map[String, FileColStats]], Long) =
     VersionedTable.footerInfoAt(file, spark.sparkContext.hadoopConfiguration)
 
-  /** "a ≤ b" under numeric comparison when both sides parse as numbers,
-    * lexical otherwise — only for merging SAME-column parquet stat
-    * strings across row groups (same stringifier on both sides; ISO
-    * date/timestamp forms are fixed-width, so lexical order is value
-    * order there). NOT safe between a stat string and a caller bound —
-    * that comparison must be type-aware ([[cmpTyped]]). */
-  private def ordered(a: String, b: String): Boolean =
-    VersionedTable.statOrdered(a, b)
-  private def toNum(s: String): Option[BigDecimal] =
-    VersionedTable.statNum(s)
-
   /** Parquet's stat stringifier writes timestamps as ISO 'T' forms with
     * micros and an optional zone suffix; normalize to epoch micros. */
   private def tsMicros(raw: String): Long = {
@@ -957,30 +946,49 @@ class VersionedTable private (val spark: SparkSession,
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Can `fe` contain rows with `colName` ∈ [lo, hi]? Conservative:
+  /** Can `fe` contain rows with `colName` ∈ [lo, hi]? A `null` edge is an
+    * open bound; two `null` edges constrain nothing. Conservative:
     * missing/unparseable stats keep the file; all-null files are skipped
-    * (a range predicate never matches NULL). */
+    * (a bound never matches NULL). */
   private def fileOverlaps(fe: FileEntry, colName: String, lo: Any, hi: Any,
                            dt: Option[DataType]): Boolean =
-    fe.stats.flatMap(_.get(colName)) match {
+    (lo == null && hi == null) || (fe.stats.flatMap(_.get(colName)) match {
       case Some(s) if !s.hasMinMax => false // all NULL
       case Some(s) =>
-        dt match {
-          case None => true // column not in schema — never skip
-          case Some(t) =>
-            // overlap: min <= hi AND lo <= max; keep on any None
-            cmpTyped(s.min, hi, t).forall(_ <= 0) &&
-              cmpTyped(s.max, lo, t).forall(_ >= 0)
-        }
+        // column not in schema — never skip; overlap: min <= hi AND
+        // lo <= max, keeping the file on any None
+        dt.forall(t => (hi == null || cmpTyped(s.min, hi, t).forall(_ <= 0)) &&
+          (lo == null || cmpTyped(s.max, lo, t).forall(_ >= 0)))
       case None => true
-    }
+    })
 
-  /** Which live files can contain rows with `colName` ∈ [lo, hi]?
-    * @return (candidate files, total live files) */
-  private[tables] def candidateFiles(colName: String, lo: Any, hi: Any): (Seq[FileEntry], Int) = {
-    val (files, tableSchema, _) = snapshot(None)
-    val dt = tableSchema.fields.find(_.name == colName).map(_.dataType)
-    (files.filter(fe => fileOverlaps(fe, colName, lo, hi, dt)), files.size)
+  /** The data-skipping rule every file-selecting operation shares (the
+    * skipping reads, DELETE, UPDATE and MERGE, as Delta applies one
+    * stats rule to queries and DML): a file survives only if its footer
+    * stats overlap EVERY `(column, lo, hi)` bound and, for an equality
+    * bound (`lo == hi`) on a declared bloom column, its parquet bloom
+    * filter might contain the value. Stats can't prune a point lookup on
+    * a uniformly-spread key — every file's [min,max] covers it — which is
+    * exactly where the bloom bites. The bloom probe is a footer-region
+    * metadata read per stats candidate, driver-side here; a deployment
+    * with millions of candidates would run the same probe as an
+    * executor-parallel job over the file list (Hudi's bloom-index tag
+    * step). Skipped files provably hold no row inside the bounds.
+    * @return (candidates after stats and bloom, count after stats alone)
+    *         — the two counts attribute pruning to stats vs bloom */
+  private[tables] def pruneFiles(files: Seq[FileEntry], schema: StructType,
+                                 bounds: Seq[(String, Any, Any)]): (Seq[FileEntry], Int) = {
+    val typed = bounds.map { case (c, lo, hi) =>
+      (c, lo, hi, schema.fields.find(_.name == c).map(_.dataType))
+    }
+    val statsCand = files.filter(fe =>
+      typed.forall { case (c, lo, hi, dt) => fileOverlaps(fe, c, lo, hi, dt) })
+    val blooms = typed.collect {
+      case (c, v, hi, Some(t)) if v != null && v == hi && bloomColumns.contains(c) => (c, v, t)
+    }
+    (statsCand.filter(fe => blooms.forall { case (c, v, t) =>
+      bloomMightContain(fe, c, v, t).getOrElse(true)
+    }), statsCand.size)
   }
 
   /** Data-skipping read: scan only files whose footer stats overlap
@@ -988,67 +996,31 @@ class VersionedTable private (val spark: SparkSession,
     * `read.filter(col between (lo, hi))` but bounded by the candidate
     * file set — the per-file analogue of partition pruning, for columns
     * the table is NOT partitioned by. */
-  def readWhereBetween(colName: String, lo: Any, hi: Any): DataFrame = {
-    val (_, schema, _) = snapshot(None)
-    val (cand, _) = candidateFiles(colName, lo, hi)
-    val df = readFileEntries(cand, schema)
-    val pruned = aliasName.fold(df)(df.alias)
-    pruned.filter(col(colName).between(lit(lo), lit(hi)))
-  }
+  def readWhereBetween(colName: String, lo: Any, hi: Any): DataFrame =
+    readWhereBetweenAll((colName, lo, hi))
 
-  /** Multi-column data-skipping read: the candidate set is the
-    * INTERSECTION of each predicate's stats-candidate files, then every
-    * exact filter is applied. With a [[compact]] `zOrderBy` layout this
-    * prunes on all z dimensions at once — the point of the z-curve. */
+  /** Multi-column data-skipping read: the candidate set is the files
+    * that overlap EVERY predicate, then every exact filter is applied.
+    * With a [[compact]] `zOrderBy` layout this prunes on all z dimensions
+    * at once — the point of the z-curve. */
   def readWhereBetweenAll(preds: (String, Any, Any)*): DataFrame = {
     require(preds.nonEmpty, "readWhereBetweenAll needs at least one predicate")
-    val (files, schema, _) = snapshot(None)
-    val dts = preds.map { case (c, _, _) =>
-      c -> schema.fields.find(_.name == c).map(_.dataType)
-    }.toMap
-    val cand = files.filter(fe => preds.forall { case (c, lo, hi) =>
-      fileOverlaps(fe, c, lo, hi, dts(c))
-    })
-    val df = readFileEntries(cand, schema)
-    val base = aliasName.fold(df)(df.alias)
-    preds.foldLeft(base) { case (acc, (c, lo, hi)) =>
-      acc.filter(col(c).between(lit(lo), lit(hi)))
-    }
+    readPruned(preds, preds.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) })
   }
 
   /** Point-lookup read: min/max stats pruning first, then each surviving
     * file's parquet BLOOM filter is probed for the literal (when the
-    * table declares `bloom.filter.columns` covering `colName`). Stats
-    * can't prune a point lookup on a uniformly-spread key — every file's
-    * [min,max] covers it — which is exactly where the bloom bites: only
-    * files that (probably) contain the value are scanned. The probe is a
-    * footer-region metadata read per candidate, driver-side here; a
-    * deployment with millions of candidates would run the same probe as
-    * an executor-parallel job over the file list (Hudi's bloom-index tag
-    * step) — the per-file work is identical. */
-  def readWhereEquals(colName: String, value: Any): DataFrame = {
-    val (cand, _, _) = candidateFilesEquals(colName, value)
-    val (_, schema, _) = snapshot(None)
-    val df = readFileEntries(cand, schema)
-    val pruned = aliasName.fold(df)(df.alias)
-    pruned.filter(col(colName) === lit(value))
-  }
+    * table declares `bloom.filter.columns` covering `colName`) — see
+    * [[pruneFiles]]. */
+  def readWhereEquals(colName: String, value: Any): DataFrame =
+    readPruned(Seq((colName, value, value)), Seq(col(colName) === lit(value)))
 
-  /** Candidate files for `colName == value`.
-    * @return (candidates after stats+bloom, count after stats only,
-    *         total live files) — the two counts let callers (and specs)
-    *         attribute pruning to stats vs bloom. */
-  private[tables] def candidateFilesEquals(colName: String,
-                                           value: Any): (Seq[FileEntry], Int, Int) = {
-    val (files, tableSchema, _) = snapshot(None)
-    val dt = tableSchema.fields.find(_.name == colName).map(_.dataType)
-    val statsCand = files.filter(fe => fileOverlaps(fe, colName, value, value, dt))
-    val cand = dt match {
-      case Some(t) if bloomColumns.contains(colName) =>
-        statsCand.filter(fe => bloomMightContain(fe, colName, value, t).getOrElse(true))
-      case _ => statsCand
-    }
-    (cand, statsCand.size, files.size)
+  /** One snapshot, then a scan of its [[pruneFiles]] candidates under
+    * the exact `filters`. */
+  private def readPruned(bounds: Seq[(String, Any, Any)], filters: Seq[Column]): DataFrame = {
+    val (files, schema, _) = snapshot(None)
+    val df = readFileEntries(pruneFiles(files, schema, bounds)._1, schema)
+    filters.foldLeft(aliasName.fold(df)(df.alias))(_ filter _)
   }
 
   /** Probe one file's parquet bloom filter(s) for `value`. Some(false) ⇒
@@ -1329,59 +1301,13 @@ class VersionedTable private (val spark: SparkSession,
             val vs = list.map(valOf)
             colOf(a).filter(_ => vs.forall(_.isDefined)).map { c =>
               val sorted = vs.flatten
-              (c, sorted.reduceLeft((x, y) => if (ordered(x.toString, y.toString)) x else y),
-                sorted.reduceLeft((x, y) => if (ordered(x.toString, y.toString)) y else x))
+              (c, sorted.reduceLeft((x, y) => if (statOrdered(x.toString, y.toString)) x else y),
+                sorted.reduceLeft((x, y) => if (statOrdered(x.toString, y.toString)) y else x))
             }
           case _ => Seq.empty
         }
     } catch { case scala.util.control.NonFatal(_) => Seq.empty }
   }
-
-  /** Stats+bloom candidate files for a DML predicate: a file survives
-    * only if EVERY recognized conjunct bound overlaps its footer stats
-    * (an open-ended bound checks one edge), and — for equality bounds on
-    * a declared bloom column — its bloom filter might contain the value.
-    * Files skipped here provably contain no matching row, so DELETE /
-    * UPDATE never read them. */
-  private def dmlCandidates(files: Seq[FileEntry], tableSchema: StructType,
-                            condition: String): Seq[FileEntry] = {
-    val bounds = predicateBounds(condition)
-    if (bounds.isEmpty) files
-    else files.filter { fe =>
-      bounds.forall { case (c, lo, hi) =>
-        val dt = tableSchema.fields.find(_.name == c).map(_.dataType)
-        val statsOk = (lo, hi) match {
-          case (null, null) => true
-          case (l, null) => fileOverlapsAbove(fe, c, l, dt)
-          case (null, h) => fileOverlapsBelow(fe, c, h, dt)
-          case (l, h) => fileOverlaps(fe, c, l, h, dt)
-        }
-        statsOk && ((lo, hi, dt) match {
-          case (l, h, Some(t)) if l != null && l == h && bloomColumns.contains(c) =>
-            bloomMightContain(fe, c, l, t).getOrElse(true)
-          case _ => true
-        })
-      }
-    }
-  }
-
-  /** Can `fe` contain rows with `colName >= lo`? (max >= lo, conservative) */
-  private def fileOverlapsAbove(fe: FileEntry, colName: String, lo: Any,
-                                dt: Option[DataType]): Boolean =
-    fe.stats.flatMap(_.get(colName)) match {
-      case Some(s) if !s.hasMinMax => false // all NULL never matches
-      case Some(s) => dt.forall(t => cmpTyped(s.max, lo, t).forall(_ >= 0))
-      case None => true
-    }
-
-  /** Can `fe` contain rows with `colName <= hi`? (min <= hi, conservative) */
-  private def fileOverlapsBelow(fe: FileEntry, colName: String, hi: Any,
-                                dt: Option[DataType]): Boolean =
-    fe.stats.flatMap(_.get(colName)) match {
-      case Some(s) if !s.hasMinMax => false
-      case Some(s) => dt.forall(t => cmpTyped(s.min, hi, t).forall(_ <= 0))
-      case None => true
-    }
 
   // ------------------------------------------------------------- delete --
 
@@ -1404,51 +1330,85 @@ class VersionedTable private (val spark: SparkSession,
     *    unreferenced sidecars. DVs are for SMALL deletions by contract —
     *    a delete matching most of the table should rewrite instead.
     *
-    * Either way the probe is ONE job over the predicate's stats/bloom
-    * candidate files — recognized conjunct bounds (`=`, `<`, `<=`, `>`,
-    * `>=`, `IN`) skip files whose footer stats (and bloom filters, for
-    * equality on a declared bloom column) prove no match, so a point
-    * delete on a clustered table reads candidates, not the table. The
-    * scan is DV-applied (re-deleting an already-dead row is a no-op) and
-    * yields exact per-file counts; files without matches are never read
-    * again. A delete matching nothing commits nothing.
+    * Either way the probe is the one [[rewriteMatching]] shares with
+    * UPDATE. A delete matching nothing commits nothing.
     * @return number of rows deleted */
   def delete(condition: String, deletionVectors: Boolean = false): Long =
+    rewriteMatching("DELETE", condition, "numDeletedRows",
+      Map("deletionVectors" -> deletionVectors.toString), deletionVectors) { _ =>
+      // NULL-condition rows are kept — exactly the rows the probe's
+      // filter(condition) did not match
+      _.filter(!coalesce(expr(condition), lit(false)))
+    }
+
+  // ------------------------------------------------------------- update --
+
+  /** UPDATE rows matching `condition`: `set` maps column name → SQL
+    * expression (bare column names on both — evaluated on the table's own
+    * schema). Only the files holding matched rows are rewritten (matched
+    * rows transformed, neighbors copied), everything else is carried by
+    * reference. Rows whose condition evaluates NULL are not matched —
+    * same as the probe's filter. A rewrite of a DV'd file applies the
+    * vector first and drops it. An update matching nothing commits
+    * nothing.
+    * @return number of rows updated */
+  def update(condition: String, set: Map[String, String]): Long =
+    rewriteMatching("UPDATE", condition, "numUpdatedRows") { tableSchema =>
+      val unknown = set.keySet.filterNot(tableSchema.fieldNames.contains)
+      require(unknown.isEmpty, s"update sets unknown column(s): ${unknown.mkString(", ")}")
+      val cond = coalesce(expr(condition), lit(false))
+      val out = tableSchema.fields.toSeq.map { f =>
+        set.get(f.name)
+          .map(e => when(cond, expr(e).cast(f.dataType)).otherwise(col(f.name)))
+          .getOrElse(col(f.name)).as(f.name)
+      }
+      _.select(out: _*)
+    }
+
+  /** The body DELETE and UPDATE share: probe → touched files → rewrite →
+    * commit. The probe is ONE DV-applied job over the predicate's
+    * [[pruneFiles]] candidates — recognized conjunct bounds (`=`, `<`,
+    * `<=`, `>`, `>=`, `IN`, see [[predicateBounds]]) skip files whose
+    * footer stats (and bloom filters, for equality on a declared bloom
+    * column) prove no match, so a point delete on a clustered table reads
+    * candidates, not the table. It yields exact per-file match counts;
+    * files without matches are never read again. The touched files are
+    * rewritten through the projection `project` builds from the table
+    * schema — or, with `deletionVectors`, marked by a sidecar instead.
+    * A probe matching nothing commits nothing.
+    * @return number of matched rows */
+  private def rewriteMatching(op: String, condition: String, rowsKey: String,
+                              extraMetrics: Map[String, String] = Map.empty,
+                              deletionVectors: Boolean = false)
+                             (project: StructType => DataFrame => DataFrame): Long =
     withCommitRetry {
       val (pinnedV, files, tableSchema, partCols) = pinnedSnapshot()
       if (files.isEmpty) return 0L
-      // stats/bloom skipping bounds the probe itself: a point delete on a
-      // clustered or bloomed table reads candidate files, not the table
-      val cand = dmlCandidates(files, tableSchema, condition)
-      val statsSkipped = files.size - cand.size
+      val rewrite = project(tableSchema)
+      val (cand, _) = pruneFiles(files, tableSchema, predicateBounds(condition))
       val matched = readFileEntries(cand, tableSchema, keepMeta = true)
         .filter(expr(condition))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // the sidecar write re-reads the matched rows
+      if (deletionVectors) matched.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val perFile = matched.groupBy(col(FileCol))
-          .agg(count(lit(1)).as("__graft_n")).collect()
-        if (perFile.isEmpty) return 0L
-        val qualify = files.map(fe =>
-          fs.makeQualified(new Path(dataDir, fe.path)).toString -> fe.path).toMap
-        val known = files.map(_.path).toSet
-        val relCounts: Map[String, Long] = perFile.map(r =>
-          relativize(r.getString(0), qualify, known) -> r.getLong(1)).toMap
-        val deleted = relCounts.values.sum
-        val touched = files.filter(fe => relCounts.contains(fe.path))
-        val metrics = Map(
-          "numDeletedRows" -> deleted.toString,
-          "numTouchedFiles" -> touched.size.toString,
-          "numFilesUntouched" -> (files.size - touched.size).toString,
-          "numFilesSkippedByStats" -> statsSkipped.toString,
-          "deletionVectors" -> deletionVectors.toString)
+        val touched = touchedFiles(files, matched.groupBy(col(FileCol))
+          .agg(count(lit(1))).collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
+        if (touched.isEmpty) return 0L
+        val rows = touched.map(_._3).sum
+        val entries = touched.map(_._2)
+        val metrics = extraMetrics ++ Map(
+          rowsKey -> rows.toString,
+          "numTouchedFiles" -> entries.size.toString,
+          "numFilesUntouched" -> (files.size - entries.size).toString,
+          "numFilesSkippedByStats" -> (files.size - cand.size).toString)
         if (deletionVectors) {
           // remap the scan's qualified paths to log-relative ones through
           // a broadcast of the probe's OWN validated keys — the join can
           // never miss, the strings come from the same scan
           val lookup = spark.createDataFrame(
-            java.util.Arrays.asList(perFile.map(r => org.apache.spark.sql.Row(
-              r.getString(0),
-              relativize(r.getString(0), qualify, known))): _*),
+            java.util.Arrays.asList(touched.map { case (scanPath, fe, _) =>
+              org.apache.spark.sql.Row(scanPath, fe.path)
+            }: _*),
             StructType(Seq(StructField(FileCol, StringType),
               StructField("file", StringType))))
           val dvName = s"_dv/${UUID.randomUUID()}"
@@ -1461,83 +1421,42 @@ class VersionedTable private (val spark: SparkSession,
           val sidecars = f.listStatus(dvDir).map(_.getPath.getName)
             .filter(_.endsWith(".parquet")).sorted
             .map(n => s"$dvName/$n").toSeq
-          val updated = touched.map(fe => fe.copy(
-            dv = fe.dv ++ sidecars, dvRows = fe.dvRows + relCounts(fe.path)))
+          val updated = touched.map { case (_, fe, n) =>
+            fe.copy(dv = fe.dv ++ sidecars, dvRows = fe.dvRows + n)
+          }
           // add-with-same-path REPLACES the entry on replay — the data
           // file stays live, only its DV reference set changes
-          try commit(LogEntry(pinnedV + 1, now(), "DELETE",
+          try commit(LogEntry(pinnedV + 1, now(), op,
             tableSchema.json, partCols, updated, Seq.empty, metrics))
           catch {
             case e: ConcurrentCommitException =>
               f.delete(dvDir, true); throw e
           }
         } else {
-          // NULL-condition rows are kept — exactly the rows the probe's
-          // filter(condition) did not match
-          val keep = readFileEntries(touched, tableSchema)
-            .filter(!coalesce(expr(condition), lit(false)))
-          val added = writeFiles(keep, partCols)
-          commitOrClean(LogEntry(pinnedV + 1, now(), "DELETE",
-            tableSchema.json, partCols, added, touched.map(_.path),
+          val added = writeFiles(rewrite(readFileEntries(entries, tableSchema)), partCols)
+          commitOrClean(LogEntry(pinnedV + 1, now(), op,
+            tableSchema.json, partCols, added, entries.map(_.path),
             metrics ++ Map(
               "numTargetFilesAdded" -> added.size.toString,
-              "numTargetFilesRemoved" -> touched.size.toString)), added)
+              "numTargetFilesRemoved" -> entries.size.toString)), added)
         }
-        deleted
-      } finally matched.unpersist(false)
+        rows
+      } finally if (deletionVectors) matched.unpersist(false)
     }
 
-  // ------------------------------------------------------------- update --
-
-  /** UPDATE rows matching `condition`: `set` maps column name → SQL
-    * expression (bare column names on both — evaluated on the table's own
-    * schema). Same bounded-work shape as [[delete]]: ONE DV-applied probe
-    * job over the predicate's stats/bloom candidate files finds the files
-    * containing matched rows and their exact per-file counts; only those
-    * files are rewritten (matched rows transformed, neighbors copied),
-    * everything else is carried by reference. Rows
-    * whose condition evaluates NULL are not matched — same as the probe's
-    * filter. A rewrite of a DV'd file applies the vector first and drops
-    * it. An update matching nothing commits nothing.
-    * @return number of rows updated */
-  def update(condition: String, set: Map[String, String]): Long =
-    withCommitRetry {
-      val (pinnedV, files, tableSchema, partCols) = pinnedSnapshot()
-      if (files.isEmpty) return 0L
-      val unknown = set.keySet.filterNot(tableSchema.fieldNames.contains)
-      require(unknown.isEmpty, s"update sets unknown column(s): ${unknown.mkString(", ")}")
-      val cand = dmlCandidates(files, tableSchema, condition)
-      val statsSkipped = files.size - cand.size
-      val perFile = readFileEntries(cand, tableSchema, keepMeta = true)
-        .filter(expr(condition))
-        .groupBy(col(FileCol)).agg(count(lit(1)).as("__graft_n")).collect()
-      if (perFile.isEmpty) return 0L
-      val qualify = files.map(fe =>
-        fs.makeQualified(new Path(dataDir, fe.path)).toString -> fe.path).toMap
-      val known = files.map(_.path).toSet
-      val relCounts: Map[String, Long] = perFile.map(r =>
-        relativize(r.getString(0), qualify, known) -> r.getLong(1)).toMap
-      val updatedRows = relCounts.values.sum
-      val touched = files.filter(fe => relCounts.contains(fe.path))
-      val cond = coalesce(expr(condition), lit(false))
-      val out = tableSchema.fields.toSeq.map { f =>
-        set.get(f.name)
-          .map(e => when(cond, expr(e).cast(f.dataType)).otherwise(col(f.name)))
-          .getOrElse(col(f.name)).as(f.name)
-      }
-      val rewritten = readFileEntries(touched, tableSchema).select(out: _*)
-      val added = writeFiles(rewritten, partCols)
-      commitOrClean(LogEntry(pinnedV + 1, now(), "UPDATE",
-        tableSchema.json, partCols, added, touched.map(_.path),
-        Map(
-          "numUpdatedRows" -> updatedRows.toString,
-          "numTouchedFiles" -> touched.size.toString,
-          "numFilesUntouched" -> (files.size - touched.size).toString,
-          "numFilesSkippedByStats" -> statsSkipped.toString,
-          "numTargetFilesAdded" -> added.size.toString,
-          "numTargetFilesRemoved" -> touched.size.toString)), added)
-      updatedRows
-    }
+  /** The probe → touched-files step of DELETE, UPDATE and MERGE: maps
+    * each collected (qualified scan path, count) row to the live entry it
+    * names (see [[relativize]]).
+    * @return (scan path, entry, count) per touched file, in snapshot
+    *         order */
+  private def touchedFiles(files: Seq[FileEntry],
+                           perFile: Seq[(String, Long)]): Seq[(String, FileEntry, Long)] = {
+    val qualify = files.map(fe =>
+      fs.makeQualified(new Path(dataDir, fe.path)).toString -> fe.path).toMap
+    val known = qualify.values.toSet
+    val byRel = perFile.map { case (q, n) => relativize(q, qualify, known) -> (q, n) }.toMap
+    files.flatMap(fe => byRel.get(fe.path).map { case (q, n) => (q, fe, n) })
+  }
 
   // -------------------------------------------------------------- merge --
 
@@ -1756,7 +1675,8 @@ class VersionedTable private (val spark: SparkSession,
 
     // --- stats pruning + cardinality fast path: ONE source-side agg -----
     // For each conjunctive equi-key, the agg computes its min/max — files
-    // whose footer stats don't overlap EVERY key range cannot contain
+    // that [[pruneFiles]] rules out for those key ranges (stats, and the
+    // bloom filter when a key's range is one value) cannot contain
     // matched rows and are skipped by both the insert-only anti-join and
     // the touched-file probe (the same role Delta's file stats play in
     // MERGE). When the condition is a PURE equi-conjunction, the same agg
@@ -1855,15 +1775,9 @@ class VersionedTable private (val spark: SparkSession,
             uniqueByCount = nn == nd
           }
           if (!wantStats) files
-          else pairs.zipWithIndex.foldLeft(files) { case (cand, ((tcol, _), i)) =>
-            val lo = row.get(i * 2)
-            val hi = row.get(i * 2 + 1)
-            if (lo == null || hi == null) cand
-            else {
-              val dt = tableSchema.fields.find(_.name == tcol).map(_.dataType)
-              cand.filter(fe => fileOverlaps(fe, tcol, lo, hi, dt))
-            }
-          }
+          else pruneFiles(files, tableSchema, pairs.zipWithIndex.map { case ((tcol, _), i) =>
+            (tcol, row.get(i * 2), row.get(i * 2 + 1))
+          })._1
         }
       } catch { case scala.util.control.NonFatal(_) => files }
     val statsSkipped = files.size - matchCandidates.size
@@ -1957,11 +1871,8 @@ class VersionedTable private (val spark: SparkSession,
     // picks the join strategy — the source side of a batch merge is
     // typically small enough to broadcast.
     val needExactCardinality = !uniqueByPlan && !uniqueByCount
-    val qualify = files.map(fe =>
-      fs.makeQualified(new Path(dataDir, fe.path)).toString -> fe.path).toMap
-    val knownRel = files.map(_.path).toSet
-    val touchedRel: Set[String] =
-      if (matchCandidates.isEmpty) Set.empty
+    val touched: Seq[FileEntry] =
+      if (matchCandidates.isEmpty) Seq.empty
       else {
         // probe scans only the stats-candidate files — skipped files
         // cannot contain matched rows and are untouched by construction.
@@ -1970,31 +1881,29 @@ class VersionedTable private (val spark: SparkSession,
         val t = readFileEntries(matchCandidates, tableSchema, keepMeta = true)
           .alias(targetAlias)
         val matched = t.join(maybeBroadcast(src), expr(condition), "inner")
-        if (needExactCardinality) {
-          val perFile = labeled("merge: touched-file probe + cardinality") {
-            matched
-              .groupBy(col(FileCol), col(RowIdxCol))
-              .agg(count(lit(1)).as("__graft_m"))
-              .groupBy(col(FileCol))
-              .agg(max("__graft_m").as("__graft_maxm"))
-              .collect()
-          }
-          if (perFile.exists(_.getLong(1) > 1))
-            throw new IllegalStateException(
-              "MERGE: multiple source rows matched the same target row")
-          perFile.map(r => relativize(r.getString(0), qualify, knownRel)).toSet
-        } else
-          labeled("merge: touched-file probe") {
-            matched.select(col(FileCol)).distinct()
-              .collect().map(_.getString(0))
-          }.map(p => relativize(p, qualify, knownRel))
-            .toSet
+        val perFile =
+          if (needExactCardinality) {
+            val maxMatches = labeled("merge: touched-file probe + cardinality") {
+              matched
+                .groupBy(col(FileCol), col(RowIdxCol))
+                .agg(count(lit(1)).as("__graft_m"))
+                .groupBy(col(FileCol))
+                .agg(max("__graft_m").as("__graft_maxm"))
+                .collect()
+            }
+            if (maxMatches.exists(_.getLong(1) > 1))
+              throw new IllegalStateException(
+                "MERGE: multiple source rows matched the same target row")
+            maxMatches.map(r => (r.getString(0), r.getLong(1)))
+          } else
+            labeled("merge: touched-file probe") {
+              matched.select(col(FileCol)).distinct().collect()
+            }.map(r => (r.getString(0), 1L))
+        touchedFiles(files, perFile.toSeq).map(_._2)
       }
-    val untouched = files.filterNot(fe => touchedRel.contains(fe.path))
-    val touchedFiles = files.filter(fe => touchedRel.contains(fe.path))
 
     // --- 2. rewrite touched files + insert unmatched source rows --------
-    val touchedDF = readFileEntries(touchedFiles, tableSchema)
+    val touchedDF = readFileEntries(touched, tableSchema)
 
     // An update/delete-only merge (no insert clause) preserves every
     // target row and adds none, so a LEFT join is exactly equivalent to
@@ -2076,7 +1985,7 @@ class VersionedTable private (val spark: SparkSession,
     }
     val rewritten = kept.select(outCols: _*)
 
-    val doWrite = touchedFiles.nonEmpty || notMatchedInsert.nonEmpty
+    val doWrite = touched.nonEmpty || notMatchedInsert.nonEmpty
     val added =
       if (doWrite) labeled("merge: rewrite + write") {
         writeFiles(rewritten, partCols)
@@ -2094,8 +2003,8 @@ class VersionedTable private (val spark: SparkSession,
             // from the touched files' LIVE row counts (footer total minus
             // rows already dead under a deletion vector) minus survivors
             val touchedRows =
-              if (touchedFiles.forall(_.rows >= 0))
-                touchedFiles.map(fe => fe.rows - fe.dvRows).sum
+              if (touched.forall(_.rows >= 0))
+                touched.map(fe => fe.rows - fe.dvRows).sum
               else -1L
             if (touchedRows >= 0) touchedRows - cnt("t") else -1L
           }
@@ -2104,11 +2013,11 @@ class VersionedTable private (val spark: SparkSession,
 
     commitOrClean(LogEntry(pinnedV + 1, now(), "MERGE",
       tableSchema.json, partCols,
-      added, touchedFiles.map(_.path),
+      added, touched.map(_.path),
       Map(
         "numTargetFilesAdded" -> added.size.toString,
-        "numTargetFilesRemoved" -> touchedFiles.size.toString,
-        "numTargetFilesUntouched" -> untouched.size.toString,
+        "numTargetFilesRemoved" -> touched.size.toString,
+        "numTargetFilesUntouched" -> (files.size - touched.size).toString,
         "numTargetFilesSkippedByStats" -> statsSkipped.toString,
         "numTargetRowsUpdated" -> rowsUpdated.toString,
         "numTargetRowsInserted" -> rowsInserted.toString,
@@ -2365,15 +2274,15 @@ object VersionedTable {
   }
 }
 
-/** Fluent MERGE builder mirroring the subset of the Delta API the
-  * reference exercises: at most one whenMatchedUpdate and one
-  * whenNotMatchedInsert clause, conditions and assignments as SQL
-  * expression strings over the target/source aliases. */
 /** A commit lost the version compare-and-swap to a concurrent writer:
   * the table state is untouched by the loser; re-read and retry.
   * Subclasses IllegalStateException so pre-CAS callers keep working. */
 class ConcurrentCommitException(msg: String) extends IllegalStateException(msg)
 
+/** Fluent MERGE builder mirroring the subset of the Delta API the
+  * reference exercises: at most one whenMatchedUpdate, one
+  * whenMatchedDelete and one whenNotMatchedInsert clause, conditions and
+  * assignments as SQL expression strings over the target/source aliases. */
 class MergeBuilder private[tables] (table: VersionedTable,
                                     targetAlias: String,
                                     source: DataFrame,

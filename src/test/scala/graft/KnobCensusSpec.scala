@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -10,13 +10,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * understand, test and keep working. The census pins the set, so a new
   * knob is a deliberate edit here, not a side effect of a change. */
 class KnobCensusSpec extends AnyFunSuite {
-  test("the engine reads exactly one spark.graft.* conf: commit.maxRetries") {
-    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+  private val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+
+  private def mainSources: Seq[Path] = {
     assert(Files.isDirectory(root), s"main sources not found at $root")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+  }
+
+  test("the engine reads exactly one spark.graft.* conf: commit.maxRetries") {
     val key = """spark\.graft\.[A-Za-z0-9_.]+""".r
-    val keys = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap(f => key.findAllIn(Files.readString(f))).toSet
+    val keys = mainSources.flatMap(f => key.findAllIn(Files.readString(f))).toSet
     assert(keys == Set("spark.graft.commit.maxRetries"))
+  }
+
+  test("only the measurement mains and the session builder read the environment") {
+    val read = """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
+    val allowed = Set("Bench.scala", "ScaleBench.scala", "Verify.scala",
+      "RoundSummary.scala", "PlanDump.scala", "GraftSession.scala")
+    val readers = mainSources
+      .filter(f => read.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.getFileName.toString).toSet
+    assert(readers.subsetOf(allowed), s"unexpected environment reads in ${readers -- allowed}")
   }
 }

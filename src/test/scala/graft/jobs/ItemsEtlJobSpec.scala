@@ -131,6 +131,40 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     assert(orphans.map(_.getAs[String]("contratto_cod")).toSeq == Seq("ZZ9"))
   }
 
+  test("run metrics: exact staged, duplicated, inserted and closed counts") {
+    val table = s"$root/landing/items_metrics"
+    val metricsDir = s"$root/metrics/items"
+    def drop(file: String, rows: Seq[Seq[String]]): String = {
+      val path = s"$root/crm/items_metrics/$file"
+      TestCsv.write(path, header, rows)
+      path
+    }
+    val d1 = drop("items_20230201.txt", Seq(
+      item("M1", "10", "100.00"), item("M1", "11", "200.00"), item("M2", "10", "50.00")))
+    val m1 = ItemsEtlJob.runWithMetrics(spark, d1, table, Some(metricsDir))
+    assert((m1.staged_count, m1.duplicated_count, m1.inserted_count, m1.closed_count) ===
+      ((3L, 0L, 3L, 0L)))
+
+    val d2 = drop("items_20230202.txt", Seq(
+      item("M1", "10", "150.00"), // changed tracked field → close + insert
+      item("M1", "11", "200.00"), // unchanged → no-op
+      item("M3", "10", "70.00"), item("M3", "10", "70.00"), // duplicated → both dropped
+      item("M4", "10", "80.00"))) // new key → insert
+    val m2 = ItemsEtlJob.runWithMetrics(spark, d2, table, Some(metricsDir))
+    assert((m2.staged_count, m2.duplicated_count, m2.inserted_count, m2.closed_count) ===
+      ((3L, 2L, 2L, 1L)))
+    assert(VersionedTable.forPath(spark, table).read.count() === 5L)
+
+    // one headered CSV row per batch
+    val csv = Files.list(java.nio.file.Paths.get(s"$metricsDir/${m2.batch_id}"))
+      .iterator().next()
+    assert(Files.readAllLines(csv).get(0) === m2.productElementNames.mkString(","))
+
+    // run reports the same dropped-duplicate count; the replay changes nothing
+    assert(ItemsEtlJob.run(spark, d2, table) === m2.duplicated_count)
+    assert(VersionedTable.forPath(spark, table).read.count() === 5L)
+  }
+
   test("non-null-safe <> change detection ignores NULL-valued changes") {
     // a NULL contracted_price never satisfies `<>` — known reference
     // defect preserved for parity (reference: notes.md:3-20)

@@ -76,6 +76,35 @@ class DmlSkippingSpec extends AnyFunSuite {
     assert(t.read.count() === 19999)
   }
 
+  test("a one-key merge skips files by bloom like DELETE does (shuffled layout)") {
+    val t = VersionedTable.create(spark, baseDf.repartition(8), tmpDir() + "/t",
+      properties = Map(VersionedTable.BloomColsProp -> "id",
+        VersionedTable.BloomNdvProp -> "20000"))
+    val total = t.liveEntries.size
+    t.alias("t").merge(Seq((4242L, -1L)).toDF("id", "v").alias("s"), "t.id = s.id")
+      .whenMatchedUpdate(set = Map("v" -> "s.v"))
+      .execute()
+    val m = lastMetrics(t)
+    assert(m("numTargetFilesSkippedByStats").toInt >= total - 2,
+      s"bloom must skip merge targets stats cannot: $m")
+    assert(m("numTargetRowsUpdated") === "1")
+    val others = col("id") =!= 4242
+    assert(t.read.filter(others).collect().toSet === baseDf.filter(others).collect().toSet)
+    assert(t.read.filter(!others).select("grp", "v").as[(Long, Long)].collect().toSeq ===
+      Seq((4242L % 40, -1L)))
+  }
+
+  test("DELETE skips exactly the files the point-lookup read does not scan") {
+    val t = VersionedTable.create(spark, baseDf.repartition(8), tmpDir() + "/t")
+    t.compact(targetBytes = 16 * 1024, clusterBy = Seq("id"))
+    val (readCand, _, total) = Candidates(t, "id", 12345L, 12345L)
+    assert(readCand.size < total, s"the read must prune: ${readCand.size} of $total")
+    assert(t.readWhereEquals("id", 12345L).count() === 1L)
+    assert(t.delete("id = 12345") === 1L)
+    assert(lastMetrics(t)("numFilesSkippedByStats").toInt === total - readCand.size)
+    assert(t.read.count() === 19999)
+  }
+
   test("bounds that prune EVERY file are a clean no-op, nothing committed") {
     val t = VersionedTable.create(spark, baseDf.repartition(8), tmpDir() + "/t")
     val v = t.currentVersion

@@ -319,7 +319,7 @@ class VersionedTableSpec extends AnyFunSuite {
       .repartitionByRange(8, $"id")
       .selectExpr("id", "cast(id % 7 AS double) AS v")
     val t = VersionedTable.create(spark, df, path)
-    val (cand, total) = t.candidateFiles("id", 100, 200)
+    val (cand, _, total) = Candidates(t, "id", 100, 200)
     assert(total >= 8, s"expected >=8 files, got $total")
     assert(cand.size < total,
       s"stats should prune files: kept ${cand.size} of $total")
@@ -330,9 +330,9 @@ class VersionedTableSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.max("id")).collect()(0).toSeq == Seq(100L, 200L))
     // stats survive the log round-trip (fresh handle)
     val t2 = VersionedTable.forPath(spark, path)
-    assert(t2.candidateFiles("id", 9999, 10001)._1.size < total)
+    assert(Candidates(t2, "id", 9999, 10001)._1.size < total)
     // a column with no stats falls back to keeping every file
-    assert(t2.candidateFiles("no_such_col", 0, 1)._1.size == total)
+    assert(Candidates(t2, "no_such_col", 0, 1)._1.size == total)
   }
 
   test("data skipping is type-aware: timestamp/date/decimal bounds never lose rows") {
@@ -371,7 +371,7 @@ class VersionedTableSpec extends AnyFunSuite {
 
     // and skipping still actually prunes on the typed column when stats
     // are usable (conservative keep-all is correct but notes the miss)
-    val (cand, total) = t.candidateFiles("ts", lo, hi)
+    val (cand, _, total) = Candidates(t, "ts", lo, hi)
     assert(cand.size <= total)
   }
 
@@ -458,12 +458,12 @@ class VersionedTableSpec extends AnyFunSuite {
       t.append(spark.range(0, 1000)
         .selectExpr(s"id * 7919 % 6000 AS id", "cast(id AS string) AS v"))
     }
-    val (candBefore, totalBefore) = t.candidateFiles("id", 100, 150)
+    val (candBefore, _, totalBefore) = Candidates(t, "id", 100, 150)
     assert(candBefore.size == totalBefore, "full-range files can't be pruned")
 
     val compacted = t.compact(targetBytes = 8 * 1024, clusterBy = Seq("id"))
     assert(compacted > 0)
-    val (candAfter, totalAfter) = t.candidateFiles("id", 100, 150)
+    val (candAfter, _, totalAfter) = Candidates(t, "id", 100, 150)
     assert(totalAfter > 1, s"compaction should leave several files, got $totalAfter")
     assert(candAfter.size < totalAfter,
       s"clustered files must prune: ${candAfter.size} of $totalAfter")

@@ -37,10 +37,10 @@ class ZOrderBloomSpec extends AnyFunSuite {
     val tl = VersionedTable.create(spark, xyDf.repartition(8), lPath)
     tl.compact(targetBytes = 32 * 1024, clusterBy = Seq("x", "y"))
 
-    val (zxCand, zTotal) = tz.candidateFiles("x", 100, 160)
-    val (zyCand, _)      = tz.candidateFiles("y", 500, 560)
-    val (lxCand, lTotal) = tl.candidateFiles("x", 100, 160)
-    val (lyCand, _)      = tl.candidateFiles("y", 500, 560)
+    val (zxCand, _, zTotal) = Candidates(tz, "x", 100, 160)
+    val (zyCand, _, _)      = Candidates(tz, "y", 500, 560)
+    val (lxCand, _, lTotal) = Candidates(tl, "x", 100, 160)
+    val (lyCand, _, _)      = Candidates(tl, "y", 500, 560)
     assert(zTotal >= 12 && lTotal >= 12, s"compaction must leave several files (z=$zTotal l=$lTotal)")
     // z-curve: a narrow band on EITHER dim hits only that band's tiles
     assert(zxCand.size * 2 <= zTotal, s"z x-band: ${zxCand.size} of $zTotal")
@@ -91,7 +91,7 @@ class ZOrderBloomSpec extends AnyFunSuite {
         VersionedTable.BloomNdvProp -> "10000"))
     val probe = 12345L
 
-    val (cand, afterStats, total) = t.candidateFilesEquals("k", probe)
+    val (cand, afterStats, total) = Candidates(t, "k", probe, probe)
     assert(total == 8, s"expected 8 files, got $total")
     assert(afterStats == total, "stats must NOT prune a uniformly-spread key")
     assert(cand.size < afterStats,
@@ -104,7 +104,7 @@ class ZOrderBloomSpec extends AnyFunSuite {
 
     // absent key: no false rows, and the bloom prunes (near-)everything
     assert(t.readWhereEquals("k", 999999L).count() == 0)
-    val (candAbsent, _, _) = t.candidateFilesEquals("k", 999999L)
+    val (candAbsent, _, _) = Candidates(t, "k", 999999L, 999999L)
     assert(candAbsent.size <= 2, s"absent key kept ${candAbsent.size} of $total files")
   }
 
@@ -120,7 +120,7 @@ class ZOrderBloomSpec extends AnyFunSuite {
       .whenMatchedUpdate(set = Map("n" -> "t.n + s.add"))
       .execute()
     assert(t.read.filter(col("k") === 7L).select("n").as[Long].head() == 6L)
-    val (cand, afterStats, total) = t.candidateFilesEquals("k", 7L)
+    val (cand, afterStats, total) = Candidates(t, "k", 7L, 7L)
     assert(cand.size < afterStats || afterStats < total,
       s"post-merge lookup still prunes: $total -> $afterStats -> ${cand.size}")
     assert(t.readWhereEquals("k", 7L).count() == 1)
@@ -128,7 +128,7 @@ class ZOrderBloomSpec extends AnyFunSuite {
     // no property ⇒ no bloom ⇒ candidates == stats candidates, results exact
     val plainPath = tmpDir() + "/tb3"
     val tp = VersionedTable.create(spark, df.repartition(4), plainPath)
-    val (pc, ps, _) = tp.candidateFilesEquals("k", 7L)
+    val (pc, ps, _) = Candidates(tp, "k", 7L, 7L)
     assert(pc.size == ps, "without the property bloom must be a no-op")
     assert(tp.readWhereEquals("k", 7L).count() == 1)
   }
