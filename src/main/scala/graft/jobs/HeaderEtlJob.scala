@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.core.Schemas
 import graft.ops.{DqMetrics, Validation}
-import graft.tables.VersionedTable
+import graft.tables.{Txn, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,7 +46,8 @@ case class HeaderRunMetrics(batch_id: String,
   *     Phase A closes the open row once per key at the first event that
   *     null-safely differs on {status_quote, codice_agente,
   *     codice_ordine_sap}; Phase B idempotently inserts all version rows
-  *     keyed on (contratto_cod, valid_from_ts).
+  *     keyed on (contratto_cod, valid_from_ts). Both phases (and the
+  *     opt-in Phase L) commit as ONE table version per batch.
   *
   * Scale notes: the transformed batch is persisted once and feeds the init
   * write, the Phase-A change join, and the Phase-B staging — one CSV
@@ -125,15 +126,17 @@ object HeaderEtlJob {
     // the merge's first job over the source instead of in a dedicated
     // pass. RunMetricsSpec pins staged_count == dq_kept.
     val stagedCount = dq.kept
-    val (table, mInserted, mClosed) =
-      twoPhaseMerge(spark, writePath, dfTransformed, batchId, lateSplit)
+    // try/finally: a merge that throws must still release the persisted
+    // batch and the validation staging dir
+    val (insertedCount, closedCount) = try {
+      val (table, mInserted, mClosed) =
+        twoPhaseMerge(spark, writePath, dfTransformed, batchId, lateSplit)
 
-    // post-merge accounting from the MERGE OPERATION METRICS (the same
-    // numbers the reference derives by re-scanning the whole table twice
-    // at src/header_etl.py:284-294 — a per-batch full scan that would be
-    // the accounting bottleneck at 100 TB). Falls back to the one-scan
-    // aggregate only if a metric wasn't measured (-1).
-    val (insertedCount, closedCount) =
+      // post-merge accounting from the MERGE OPERATION METRICS (the same
+      // numbers the reference derives by re-scanning the whole table twice
+      // at src/header_etl.py:284-294 — a per-batch full scan that would be
+      // the accounting bottleneck at 100 TB). Falls back to the one-scan
+      // aggregate only if a metric wasn't measured (-1).
       if (mInserted >= 0 && mClosed >= 0) (mInserted, mClosed)
       else {
         val counts = table.read.agg(
@@ -143,10 +146,11 @@ object HeaderEtlJob {
         (Option(counts.getAs[Long]("inserted")).getOrElse(0L),
           Option(counts.getAs[Long]("closed")).getOrElse(0L))
       }
+    } finally {
+      dfTransformed.unpersist(false)
+      releaseValidation()
+    }
     val durMerge = secondsSince(tMerge0)
-
-    dfTransformed.unpersist(false)
-    releaseValidation()
 
     val metrics = HeaderRunMetrics(
       batch_id = batchId,
@@ -206,7 +210,10 @@ object HeaderEtlJob {
   /** The two-phase SCD2 merge (init if absent, Phase A close-on-change
     * once per key, Phase B idempotent insert — reference:
     * src/header_etl.py:157-280). Shared by the batch job and
-    * [[graft.streaming.StreamingScd2Ingest]].
+    * [[graft.streaming.StreamingScd2Ingest]]. Phases L, A and B run in ONE
+    * [[VersionedTable.transaction]], so a batch lands as one table version
+    * (an init batch: the create plus that one): no reader ever sees a key
+    * whose open row Phase A closed before Phase B inserted its successor.
     * @return (table, rows inserted this batch, rows closed this batch) —
     *         both from merge operation metrics, -1 if unmeasured */
   private[graft] def twoPhaseMerge(spark: SparkSession, writePath: String,
@@ -223,71 +230,71 @@ object HeaderEtlJob {
     // rows written by the init carry this batch_id → they count as inserted
     val initRows = if (inited) table.lastMetric("numOutputRows") else 0L
 
-    // -- Phase L (opt-in): late-arriving-event interval splitting --------
-    // Runs against the PRE-merge snapshot (table.read resolves its file
-    // list eagerly, so later merges can't shift it). On an init batch
-    // there is no pre-existing history to split. Phase B then inserts the
-    // ADJUSTED staged rows.
-    val stagedForInsert =
-      if (lateSplit && !inited) lateSplitAdjust(table, dfTransformed, batchId)
-      else dfTransformed
+    val (closed, insertedB) = table.alias("existing").transaction { tx =>
+      // -- Phase L (opt-in): late-arriving-event interval splitting ------
+      // Runs against the PRE-merge state. On an init batch there is no
+      // pre-existing history to split. Phase B then inserts the ADJUSTED
+      // staged rows.
+      val stagedForInsert =
+        if (lateSplit && !inited) lateSplitAdjust(tx, dfTransformed, batchId)
+        else dfTransformed
 
-    // -- Phase A: close open rows only on real change, once per key ------
-    // (reference: src/header_etl.py:168-215)
-    val existingCurrent = table.read
-      .filter(col("valid_to_ts").isNull || col("valid_to_ts") === expr(MaxTsExpr))
-      // narrow projection shrinks the join (reference: src/header_etl.py:174-180)
-      .select("contratto_cod", "status_quote", "codice_agente",
-        "codice_ordine_sap", "valid_from_ts")
+      // -- Phase A: close open rows only on real change, once per key ----
+      // (reference: src/header_etl.py:168-215)
+      val existingCurrent = tx.read
+        .filter(col("valid_to_ts").isNull || col("valid_to_ts") === expr(MaxTsExpr))
+        // narrow projection shrinks the join (reference: src/header_etl.py:174-180)
+        .select("contratto_cod", "status_quote", "codice_agente",
+          "codice_ordine_sap", "valid_from_ts")
 
-    val joined = dfTransformed.alias("st").join(
-      existingCurrent.alias("ex"),
-      col("st.contratto_cod") === col("ex.contratto_cod"), "inner")
+      val joined = dfTransformed.alias("st").join(
+        existingCurrent.alias("ex"),
+        col("st.contratto_cod") === col("ex.contratto_cod"), "inner")
 
-    // null-safe difference on the tracked attributes (reference: :189-194)
-    val diffExpr =
-      "NOT (st.status_quote <=> ex.status_quote) OR " +
-        "NOT (st.codice_agente <=> ex.codice_agente) OR " +
-        "NOT (st.codice_ordine_sap <=> ex.codice_ordine_sap)"
-    // Under lateSplit, an event OLDER than the open version belongs to
-    // Phase L — left in here it would poison min(first_change_ts) below
-    // the open row's valid_from and block the close of the open row at a
-    // genuinely newer change. Without lateSplit the reference's exact
-    // behavior is kept (the merge condition neutralizes the stale min).
-    val changeCandidates =
-      if (lateSplit) joined.filter(col("st.valid_from_ts") > col("ex.valid_from_ts"))
-      else joined
-    val changedEvents = changeCandidates.filter(expr(diffExpr))
-      .select(col("st.contratto_cod").as("contratto_cod"),
-        col("st.valid_from_ts").as("valid_from_ts"))
+      // null-safe difference on the tracked attributes (reference: :189-194)
+      val diffExpr =
+        "NOT (st.status_quote <=> ex.status_quote) OR " +
+          "NOT (st.codice_agente <=> ex.codice_agente) OR " +
+          "NOT (st.codice_ordine_sap <=> ex.codice_ordine_sap)"
+      // Under lateSplit, an event OLDER than the open version belongs to
+      // Phase L — left in here it would poison min(first_change_ts) below
+      // the open row's valid_from and block the close of the open row at
+      // a genuinely newer change. Without lateSplit the reference's exact
+      // behavior is kept (the merge condition neutralizes the stale min).
+      val changeCandidates =
+        if (lateSplit) joined.filter(col("st.valid_from_ts") > col("ex.valid_from_ts"))
+        else joined
+      val changedEvents = changeCandidates.filter(expr(diffExpr))
+        .select(col("st.contratto_cod").as("contratto_cod"),
+          col("st.valid_from_ts").as("valid_from_ts"))
 
-    // first event causing a difference, per key (reference: :200)
-    val firstChange = changedEvents.groupBy("contratto_cod")
-      .agg(min("valid_from_ts").as("first_change_ts"))
+      // first event causing a difference, per key (reference: :200)
+      val firstChange = changedEvents.groupBy("contratto_cod")
+        .agg(min("valid_from_ts").as("first_change_ts"))
 
-    table.alias("existing")
-      .merge(firstChange.alias("min_staged"),
-        "existing.contratto_cod = min_staged.contratto_cod")
-      .whenMatchedUpdate(
-        condition = s"(existing.valid_to_ts = $MaxTsExpr OR existing.valid_to_ts IS NULL) " +
-          "AND min_staged.first_change_ts > existing.valid_from_ts",
-        set = Map(
-          "valid_to_ts" -> "min_staged.first_change_ts",
-          "is_current" -> "false",
-          "closed_by_batch" -> s"'$batchId'"))
-      .execute()
-    val closed = table.lastMetric("numTargetRowsUpdated")
+      val closed = tx
+        .merge(firstChange.alias("min_staged"),
+          "existing.contratto_cod = min_staged.contratto_cod")
+        .whenMatchedUpdate(
+          condition = s"(existing.valid_to_ts = $MaxTsExpr OR existing.valid_to_ts IS NULL) " +
+            "AND min_staged.first_change_ts > existing.valid_from_ts",
+          set = Map(
+            "valid_to_ts" -> "min_staged.first_change_ts",
+            "is_current" -> "false",
+            "closed_by_batch" -> s"'$batchId'"))
+        .execute()("numTargetRowsUpdated").toLong
 
-    // -- Phase B: idempotent insert of all version rows ------------------
-    // (reference: src/header_etl.py:219-280)
-    val staged = stagedForInsert.selectExpr(StagedColumns: _*)
-    table.alias("existing")
-      .merge(staged.alias("staged"),
-        "existing.contratto_cod = staged.contratto_cod AND existing.valid_from_ts = staged.valid_from_ts")
-      .whenNotMatchedInsert(values =
-        StagedColumns.map(c => c -> s"staged.$c").toMap)
-      .execute()
-    val insertedB = table.lastMetric("numTargetRowsInserted")
+      // -- Phase B: idempotent insert of all version rows ----------------
+      // (reference: src/header_etl.py:219-280)
+      val staged = stagedForInsert.selectExpr(StagedColumns: _*)
+      val inserted = tx
+        .merge(staged.alias("staged"),
+          "existing.contratto_cod = staged.contratto_cod AND existing.valid_from_ts = staged.valid_from_ts")
+        .whenNotMatchedInsert(values =
+          StagedColumns.map(c => c -> s"staged.$c").toMap)
+        .execute()("numTargetRowsInserted").toLong
+      (closed, inserted)
+    }
 
     val inserted =
       if (initRows < 0 || insertedB < 0) -1L else initRows + insertedB
@@ -335,15 +342,15 @@ object HeaderEtlJob {
     (splits, bound)
   }
 
-  private[jobs] def lateSplitAdjust(table: VersionedTable,
+  private[jobs] def lateSplitAdjust(tx: Txn,
                                     dfTransformed: DataFrame,
                                     batchId: String): DataFrame = {
-    // pre-merge snapshot, narrowed to the interval skeleton
-    val exN = table.read.select(col("contratto_cod"),
+    // pre-merge state, narrowed to the interval skeleton
+    val exN = tx.read.select(col("contratto_cod"),
       col("valid_from_ts").as("ex_from"),
       coalesce(col("valid_to_ts"), expr(MaxTsExpr)).as("ex_to"))
     val (splits, bound) = lateSplitProbes(exN, dfTransformed)
-    table.alias("existing")
+    tx
       .merge(splits.alias("sp"),
         "existing.contratto_cod = sp.contratto_cod AND existing.valid_from_ts = sp.ex_from")
       .whenMatchedUpdate(

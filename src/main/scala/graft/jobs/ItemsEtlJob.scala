@@ -155,7 +155,7 @@ object ItemsEtlJob {
         .union(dfTransformed.selectExpr(
           "contratto_cod as mergeKey", "numero_annuncio as mergeKey2", "*"))
 
-      table.alias("existing")
+      val m = table.alias("existing")
         .merge(stagedUpdates.alias("staged_updates"),
           "existing.contratto_cod = mergeKey AND existing.numero_annuncio = mergeKey2")
         .whenMatchedUpdate(
@@ -167,8 +167,7 @@ object ItemsEtlJob {
         .whenNotMatchedInsert(values =
           InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
         .execute()
-      (table.lastMetric("numTargetRowsInserted"),
-        table.lastMetric("numTargetRowsUpdated"))
+      (m("numTargetRowsInserted").toLong, m("numTargetRowsUpdated").toLong)
     }
     val durMerge = secondsSince(tMerge0)
 

@@ -16,9 +16,11 @@ import org.apache.spark.sql.types.StringType
   * files; each micro-batch is deduped (keep-latest per key+event_time,
   * the validation operator's W2 window), transformed with the SAME
   * [[HeaderEtlJob.transform]] lead-chain versioning, and merged with the
-  * SAME [[HeaderEtlJob.twoPhaseMerge]] two-phase SCD2 merge. Phase-B's
-  * (contratto_cod, valid_from_ts) key makes redelivered files idempotent
-  * — exactly-once table state on top of at-least-once file delivery.
+  * SAME [[HeaderEtlJob.twoPhaseMerge]] two-phase SCD2 merge, so each
+  * non-empty micro-batch commits as ONE table version: a reader never
+  * sees it half-applied. Phase-B's (contratto_cod, valid_from_ts) key
+  * makes redelivered files idempotent — exactly-once table state on top
+  * of at-least-once file delivery.
   *
   * Scale: each micro-batch does one window shuffle + the bounded
   * file-rewrite merge; the streaming checkpoint tracks processed files,
@@ -59,7 +61,8 @@ object StreamingScd2Ingest {
   }
 
   /** One micro-batch: dedup (keep latest per (contratto_cod, event_time),
-    * W2) → lead-chain transform → two-phase merge, batch-id'd by epoch. */
+    * W2) → lead-chain transform → two-phase merge, batch-id'd by epoch,
+    * committed as one table version (an empty batch commits nothing). */
   private[streaming] def mergeMicroBatch(spark: SparkSession, batch: DataFrame,
                                          tablePath: String, epochId: Long): Unit = {
     if (batch.isEmpty) return

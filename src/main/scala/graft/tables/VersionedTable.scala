@@ -174,25 +174,6 @@ class VersionedTable private (val spark: SparkSession,
     if (commits.isEmpty) -1L else commits.last._1
   }
 
-  /** Current state together with the version it reflects, for mutations
-    * that REMOVE files (merge/DML/compact): their commit must be pinned
-    * to this version + 1 so any commit landing after this read loses the
-    * CAS and [[withCommitRetry]] re-runs the operation on fresh state.
-    * An unpinned `currentVersion + 1` evaluated at COMMIT time would
-    * publish a rewrite of a STALE file set as the next free version — a
-    * silent lost update: two concurrent disjoint-key merges that each
-    * rewrite the same base file would BOTH land, duplicating every row
-    * of that file (caught by the q92 oracle). Reading the version first
-    * and the state AT that version is safe in the only racy direction: a
-    * commit between the two reads makes the pinned CAS fail spuriously
-    * (retry), never succeed wrongly. Add-only appends stay unpinned by
-    * design — see [[append]]. */
-  private def pinnedSnapshot(): (Long, Seq[FileEntry], StructType, Seq[String]) = {
-    val v = currentVersion
-    val (files, schema, partCols) = snapshot(Some(v))
-    (v, files, schema, partCols)
-  }
-
   /** Live file set at `asOf` (inclusive), with the schema of that version.
     * Starts from the newest checkpoint ≤ target and replays only the
     * commits after it — O(CheckpointInterval) JSON reads, not O(versions). */
@@ -298,17 +279,16 @@ class VersionedTable private (val spark: SparkSession,
         "another writer won this version; re-read the table and retry the operation")
 
   /** Delta-style optimistic-concurrency loop around a whole write
-    * operation: the body re-reads the snapshot at its start and CAS-
-    * publishes at its end, so on a [[ConcurrentCommitException]] the
-    * operation is simply re-run against the winner's new table state —
-    * re-snapshot, re-rewrite, re-CAS — up to
-    * `spark.graft.commit.maxRetries` times (default 10, 0 disables).
+    * operation — [[transaction]] or [[append]]: the body re-reads the
+    * snapshot at its start and CAS-publishes at its end, so on a
+    * [[ConcurrentCommitException]] the operation is simply re-run against
+    * the winner's new table state — re-snapshot, re-rewrite, re-CAS — up
+    * to `spark.graft.commit.maxRetries` times (default 10, 0 disables).
     * Physically-conflicting writers (same keys, same files) stay correct
     * under this loop because each retry rewrites from the committed
     * state; it is the CONCURRENCY discipline that is optimistic, not the
-    * correctness. The loser's orphaned data files are deleted before each
-    * retry (see the commit call sites), so retries don't accumulate
-    * garbage. */
+    * correctness. Both callers delete the losing attempt's data files
+    * before rethrowing, so retries don't accumulate garbage. */
   private def withCommitRetry[T](body: => T): T = {
     // 10 retries (was 3): txn-pinned appends turn EVERY intervening
     // commit into a CAS loss by design (the pin is what makes replays
@@ -336,20 +316,60 @@ class VersionedTable private (val spark: SparkSession,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Commit, deleting this attempt's freshly-written data files when the
-    * commit LOSES a CAS race — they are referenced by no log version, and
-    * a retry writes its own — before rethrowing for the retry loop. */
-  private def commitOrClean(entry: LogEntry, wrote: Seq[FileEntry]): Unit =
-    try commit(entry)
-    catch {
-      case e: ConcurrentCommitException =>
-        val f = fs
-        wrote.foreach { fe =>
-          try f.delete(new Path(dataDir, fe.path), false)
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-        throw e
+  /** The one commit path for every write that REMOVES or REPLACES files
+    * (MERGE, UPDATE, DELETE, OPTIMIZE, RESTORE): pin a version, run
+    * `body`'s steps against a working copy of that snapshot, publish ONE
+    * [[LogEntry]] at pinned + 1, retry through [[withCommitRetry]] on a
+    * lost CAS. Steps plan against `tx.files`/`tx.schema` and read the
+    * working state through [[Txn.read]], so a later step sees an earlier
+    * one's rows; readers of the table see all of them or none — the
+    * multi-action commit Delta's log publishes atomically.
+    *
+    * The pin: the commit must land at exactly the read version + 1, so
+    * any commit after that read loses the CAS and the body re-runs on
+    * fresh state. An unpinned `currentVersion + 1` evaluated at COMMIT
+    * time would publish a rewrite of a STALE file set as the next free
+    * version — a silent lost update: two concurrent disjoint-key merges
+    * that each rewrite the same base file would BOTH land, duplicating
+    * every row of that file (caught by the q92 oracle). Reading the
+    * version first and the state AT that version is safe in the only
+    * racy direction: a commit between the two reads makes the pinned CAS
+    * fail spuriously (retry), never succeed wrongly. Add-only appends
+    * stay unpinned by design — see [[append]].
+    *
+    * The entry adds the working entries that differ from the pinned ones
+    * and removes the pinned paths no longer live. One step commits under
+    * its own operation and metrics; several commit as `MERGE` with
+    * numeric metrics summed and other values joined by `,` in step
+    * order. A body that stages no step publishes nothing. If anything
+    * throws (a lost CAS included) every file and sidecar dir the attempt
+    * wrote is deleted; after a publish, files one step wrote and a later
+    * step replaced are deleted too — no version ever referenced them. */
+  def transaction[T](body: Txn => T): T = withCommitRetry {
+    val v = currentVersion
+    val (files, schema, partCols) = snapshot(Some(v))
+    val tx = new Txn(this, v, files, schema, partCols)
+    val out =
+      try {
+        val o = body(tx)
+        tx.entry(now()).foreach(commit)
+        o
+      } catch {
+        case e: Throwable => deleteData(tx.written); throw e
+      }
+    val live = tx.files.flatMap(fe => fe.path +: fe.dv.map(d => d.take(d.lastIndexOf('/')))).toSet
+    deleteData(tx.written.filterNot(live))
+    out
+  }
+
+  /** Best-effort recursive delete of data-dir relative paths. */
+  private def deleteData(paths: Iterable[String]): Unit = {
+    val f = fs
+    paths.foreach { p =>
+      try f.delete(new Path(dataDir, p), true)
+      catch { case scala.util.control.NonFatal(_) => }
     }
+  }
 
   /** Publish a commit file via compare-and-swap: the version file is
     * created if and ONLY if it does not exist, atomically, AND appears to
@@ -501,13 +521,15 @@ class VersionedTable private (val spark: SparkSession,
     * (a training-data refresh, an index builder) picks up "what's new
     * since I last looked" without rescanning the table.
     *
-    * Exact row-level semantics hold for append-style commits — CREATE /
-    * WRITE / insert-only MERGE (the volume path of the SCD2 pipelines'
-    * Phase B) — whose added files contain precisely the new rows.
-    * OPTIMIZE commits are skipped (layout-only, no logical change). A
-    * rewriting MERGE's added files mix updated, inserted AND copied rows;
-    * such commits throw unless `includeRewrites = true`, which returns
-    * the added files with that documented coarseness.
+    * Exact row-level semantics hold for commits that remove no file —
+    * CREATE / WRITE / insert-only MERGE, and a [[transaction]] whose
+    * rewriting steps only rewrote files it wrote itself — whose added
+    * files contain precisely the new rows. OPTIMIZE commits are skipped
+    * (layout-only, no logical change). A MERGE or UPDATE that removes
+    * files (an SCD2 header batch, whose Phase A closes open rows, is one)
+    * adds files mixing updated, inserted AND copied rows; such commits
+    * throw unless `includeRewrites = true`, which returns the added files
+    * with that documented coarseness.
     * @param fromVersion last version the consumer has seen (exclusive) */
   def readChanges(fromVersion: Long,
                   toVersion: Option[Long] = None,
@@ -526,8 +548,9 @@ class VersionedTable private (val spark: SparkSession,
             s"version ${e.version} is a DELETE: rows disappeared, which " +
               "added-rows semantics cannot express; pass includeRewrites=true " +
               "to skip it, or consume from operation metrics instead")
-        case "MERGE" | "UPDATE" if e.remove.nonEmpty &&
-          !e.operationMetrics.get("insertOnly").contains("true") =>
+        // an insert-only step never removes a file, so a remove means
+        // some step rewrote committed rows
+        case "MERGE" | "UPDATE" if e.remove.nonEmpty =>
           if (includeRewrites) e.add
           else throw new IllegalArgumentException(
             s"version ${e.version} is a rewriting ${e.operation}: its added " +
@@ -576,29 +599,26 @@ class VersionedTable private (val spark: SparkSession,
     * sees the restore's re-added files as new data — their rows are
     * newly live, which is exactly what an incremental reader must apply.
     * @return (filesReAdded, filesRemoved) as recorded by the commit */
-  def restoreToVersion(version: Long): (Int, Int) = withCommitRetry {
-    val (targetFiles, targetSchema, targetPartCols) = snapshot(Some(version))
-    val cur = currentVersion
-    val (curFiles, _, _) = snapshot(None)
+  def restoreToVersion(version: Long): (Int, Int) = transaction { tx =>
+    val (targetFiles, targetSchema, _) = snapshot(Some(version))
     // compare full entries, not just paths: a deletion-vector DELETE
     // changes an entry's dv refs while the data file path stays the same —
     // restoring past it must re-commit the old entry (replay's add
     // overwrites by path)
-    val curByPath = curFiles.map(fe => fe.path -> fe).toMap
+    val curByPath = tx.files.map(fe => fe.path -> fe).toMap
     val tgtSet = targetFiles.map(_.path).toSet
     val toAdd = targetFiles.filterNot(fe => curByPath.get(fe.path).contains(fe))
-    val toRemove = curFiles.map(_.path).filterNot(tgtSet.contains)
+    val toRemove = tx.files.map(_.path).filterNot(tgtSet.contains)
     val f = fs
     val missing = toAdd.filterNot(fe =>
       (fe.path +: fe.dv).forall(p => f.exists(new Path(dataDir, p))))
     if (missing.nonEmpty) throw new IllegalStateException(
       s"cannot restore $root to version $version: ${missing.size} data " +
         s"file(s) of that version were vacuumed (e.g. ${missing.head.path})")
-    commit(LogEntry(cur + 1, now(), "RESTORE", targetSchema.json,
-      targetPartCols, toAdd, toRemove,
+    tx.stage("RESTORE", toAdd, toRemove,
       Map("restoredVersion" -> version.toString,
         "numRestoredFiles" -> toAdd.size.toString,
-        "numRemovedFiles" -> toRemove.size.toString)))
+        "numRemovedFiles" -> toRemove.size.toString), targetSchema)
     (toAdd.size, toRemove.size)
   }
 
@@ -718,10 +738,7 @@ class VersionedTable private (val spark: SparkSession,
                                 baseSchemaJson: String,
                                 txn: Option[(String, Long)]): Unit = {
     val f = fs
-    def cleanup(): Unit = wrote.foreach { fe =>
-      try f.delete(new Path(dataDir, fe.path), false)
-      catch { case scala.util.control.NonFatal(_) => }
-    }
+    def cleanup(): Unit = deleteData(wrote.map(_.path))
     var e = entry
     var slides = 0
     val maxSlides = 20
@@ -852,6 +869,15 @@ class VersionedTable private (val spark: SparkSession,
     walk(stage, "")
     f.delete(stage, true)
     statsForMoved(moved.toSeq)
+  }
+
+  /** [[writeFiles]] for a transaction step: the written paths are
+    * recorded on `tx` at once, so a throw before the step stages (or
+    * before the publish) still deletes them. */
+  private def writeIn(tx: Txn, df: DataFrame): Seq[FileEntry] = {
+    val added = writeFiles(df, tx.partCols)
+    tx.written ++= added.map(_.path)
+    added
   }
 
   /** Footer stats for a commit's written files, Delta-style: metadata-
@@ -1089,14 +1115,14 @@ class VersionedTable private (val spark: SparkSession,
     * @return number of files compacted away (0 = nothing to do) */
   def compact(targetBytes: Long = 128L * 1024 * 1024,
               clusterBy: Seq[String] = Seq.empty,
-              zOrderBy: Seq[String] = Seq.empty): Int = withCommitRetry {
+              zOrderBy: Seq[String] = Seq.empty): Int = transaction { tx =>
     require(clusterBy.isEmpty || zOrderBy.isEmpty,
       "clusterBy and zOrderBy are mutually exclusive")
-    val (pinnedV, files, tableSchema, partCols) = pinnedSnapshot()
+    val (tableSchema, partCols) = (tx.schema, tx.partCols)
     // only partitions with 2+ small files benefit — unless clustering was
     // requested, which re-sorts every small file even alone in its partition
     val reSort = clusterBy.nonEmpty || zOrderBy.nonEmpty
-    val byPartition = files.groupBy(_.partitionValues)
+    val byPartition = tx.files.groupBy(_.partitionValues)
     // bin-packing selects only small files (rewriting a full-size file to
     // produce another full-size file is wasted IO); a clustering rewrite
     // selects EVERY file — the point is the global layout, and a large
@@ -1106,30 +1132,30 @@ class VersionedTable private (val spark: SparkSession,
       .map(fs => if (reSort) fs else fs.filter(_.sizeBytes < targetBytes))
       .filter(fs => fs.size >= 2 || (reSort && fs.nonEmpty))
       .flatten.toSeq
-    if (toCompact.isEmpty) return 0
-    val totalBytes = toCompact.map(_.sizeBytes).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = readFileEntries(toCompact, tableSchema)
-    val packed =
-      if (zOrderBy.nonEmpty) {
-        val ZKey = "__graft_zkey"
-        val keyed = df.withColumn(ZKey, zOrderKey(df, zOrderBy, tableSchema))
-        keyed.repartitionByRange(nOut, (partCols.map(col) :+ col(ZKey)): _*)
-          .sortWithinPartitions((partCols.map(col) :+ col(ZKey)): _*)
-          .drop(ZKey) // projection after the sort — order survives, schema doesn't change
-      } else if (clusterBy.nonEmpty)
-        df.repartitionByRange(nOut, (partCols ++ clusterBy).map(col): _*)
-          .sortWithinPartitions((partCols ++ clusterBy).map(col): _*)
-      else if (partCols.nonEmpty) df.repartition(nOut, partCols.map(col): _*)
-      else df.repartition(nOut)
-    val added = writeFiles(packed, partCols)
-    commitOrClean(LogEntry(pinnedV + 1, now(), "OPTIMIZE",
-      tableSchema.json, partCols, added, toCompact.map(_.path),
-      Map("numFilesRemoved" -> toCompact.size.toString,
-        "numFilesAdded" -> added.size.toString,
-        "bytesCompacted" -> totalBytes.toString,
-        "clusterBy" -> clusterBy.mkString(","),
-        "zOrderBy" -> zOrderBy.mkString(","))), added)
+    if (toCompact.nonEmpty) {
+      val totalBytes = toCompact.map(_.sizeBytes).sum
+      val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+      val df = readFileEntries(toCompact, tableSchema)
+      val packed =
+        if (zOrderBy.nonEmpty) {
+          val ZKey = "__graft_zkey"
+          val keyed = df.withColumn(ZKey, zOrderKey(df, zOrderBy, tableSchema))
+          keyed.repartitionByRange(nOut, (partCols.map(col) :+ col(ZKey)): _*)
+            .sortWithinPartitions((partCols.map(col) :+ col(ZKey)): _*)
+            .drop(ZKey) // projection after the sort — order survives, schema doesn't change
+        } else if (clusterBy.nonEmpty)
+          df.repartitionByRange(nOut, (partCols ++ clusterBy).map(col): _*)
+            .sortWithinPartitions((partCols ++ clusterBy).map(col): _*)
+        else if (partCols.nonEmpty) df.repartition(nOut, partCols.map(col): _*)
+        else df.repartition(nOut)
+      val added = writeIn(tx, packed)
+      tx.stage("OPTIMIZE", added, toCompact.map(_.path),
+        Map("numFilesRemoved" -> toCompact.size.toString,
+          "numFilesAdded" -> added.size.toString,
+          "bytesCompacted" -> totalBytes.toString,
+          "clusterBy" -> clusterBy.mkString(","),
+          "zOrderBy" -> zOrderBy.mkString(",")))
+    }
     toCompact.size
   }
 
@@ -1365,8 +1391,9 @@ class VersionedTable private (val spark: SparkSession,
       _.select(out: _*)
     }
 
-  /** The body DELETE and UPDATE share: probe → touched files → rewrite →
-    * commit. The probe is ONE DV-applied job over the predicate's
+  /** The body DELETE and UPDATE share, run as a one-step [[transaction]]:
+    * probe → touched files → rewrite → stage. The probe is ONE DV-applied
+    * job over the predicate's
     * [[pruneFiles]] candidates — recognized conjunct bounds (`=`, `<`,
     * `<=`, `>`, `>=`, `IN`, see [[predicateBounds]]) skip files whose
     * footer stats (and bloom filters, for equality on a declared bloom
@@ -1381,9 +1408,8 @@ class VersionedTable private (val spark: SparkSession,
                               extraMetrics: Map[String, String] = Map.empty,
                               deletionVectors: Boolean = false)
                              (project: StructType => DataFrame => DataFrame): Long =
-    withCommitRetry {
-      val (pinnedV, files, tableSchema, partCols) = pinnedSnapshot()
-      if (files.isEmpty) return 0L
+    transaction { tx =>
+      val (files, tableSchema) = (tx.files, tx.schema)
       val rewrite = project(tableSchema)
       val (cand, _) = pruneFiles(files, tableSchema, predicateBounds(condition))
       val matched = readFileEntries(cand, tableSchema, keepMeta = true)
@@ -1391,9 +1417,9 @@ class VersionedTable private (val spark: SparkSession,
       // the sidecar write re-reads the matched rows
       if (deletionVectors) matched.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val touched = touchedFiles(files, matched.groupBy(col(FileCol))
-          .agg(count(lit(1))).collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
-        if (touched.isEmpty) return 0L
+        val touched = if (files.isEmpty) Seq.empty else touchedFiles(files,
+          matched.groupBy(col(FileCol)).agg(count(lit(1))).collect()
+            .map(r => (r.getString(0), r.getLong(1))).toSeq)
         val rows = touched.map(_._3).sum
         val entries = touched.map(_._2)
         val metrics = extraMetrics ++ Map(
@@ -1401,7 +1427,8 @@ class VersionedTable private (val spark: SparkSession,
           "numTouchedFiles" -> entries.size.toString,
           "numFilesUntouched" -> (files.size - entries.size).toString,
           "numFilesSkippedByStats" -> (files.size - cand.size).toString)
-        if (deletionVectors) {
+        if (touched.isEmpty) () // matched nothing: stage nothing
+        else if (deletionVectors) {
           // remap the scan's qualified paths to log-relative ones through
           // a broadcast of the probe's OWN validated keys — the join can
           // never miss, the strings come from the same scan
@@ -1413,12 +1440,12 @@ class VersionedTable private (val spark: SparkSession,
               StructField("file", StringType))))
           val dvName = s"_dv/${UUID.randomUUID()}"
           val dvDir = new Path(dataDir, dvName)
+          tx.written += dvName
           matched.select(col(FileCol), col(RowIdxCol))
             .join(broadcast(lookup), FileCol)
             .select(col("file"), col(RowIdxCol).as("row_idx"))
             .write.parquet(dvDir.toString)
-          val f = fs
-          val sidecars = f.listStatus(dvDir).map(_.getPath.getName)
+          val sidecars = fs.listStatus(dvDir).map(_.getPath.getName)
             .filter(_.endsWith(".parquet")).sorted
             .map(n => s"$dvName/$n").toSeq
           val updated = touched.map { case (_, fe, n) =>
@@ -1426,19 +1453,13 @@ class VersionedTable private (val spark: SparkSession,
           }
           // add-with-same-path REPLACES the entry on replay — the data
           // file stays live, only its DV reference set changes
-          try commit(LogEntry(pinnedV + 1, now(), op,
-            tableSchema.json, partCols, updated, Seq.empty, metrics))
-          catch {
-            case e: ConcurrentCommitException =>
-              f.delete(dvDir, true); throw e
-          }
+          tx.stage(op, updated, Seq.empty, metrics)
         } else {
-          val added = writeFiles(rewrite(readFileEntries(entries, tableSchema)), partCols)
-          commitOrClean(LogEntry(pinnedV + 1, now(), op,
-            tableSchema.json, partCols, added, entries.map(_.path),
+          val added = writeIn(tx, rewrite(readFileEntries(entries, tableSchema)))
+          tx.stage(op, added, entries.map(_.path),
             metrics ++ Map(
               "numTargetFilesAdded" -> added.size.toString,
-              "numTargetFilesRemoved" -> entries.size.toString)), added)
+              "numTargetFilesRemoved" -> entries.size.toString))
         }
         rows
       } finally if (deletionVectors) matched.unpersist(false)
@@ -1463,16 +1484,28 @@ class VersionedTable private (val spark: SparkSession,
   /** Delta-style MERGE builder (reference API usage:
     * src/header_etl.py:205-215,253-280; src/items_etl.py:114-143). */
   def merge(source: DataFrame, condition: String): MergeBuilder =
-    new MergeBuilder(this, aliasName.getOrElse("existing"), source, condition)
+    new MergeBuilder(this, aliasName.getOrElse("existing"), source, condition, None)
 
-  private[tables] def executeMerge(targetAlias: String,
+  /** [[merge]] and `read` of a [[Txn]] opened on this handle (same alias). */
+  private[tables] def mergeIn(tx: Txn, source: DataFrame, condition: String): MergeBuilder =
+    new MergeBuilder(this, aliasName.getOrElse("existing"), source, condition, Some(tx))
+  private[tables] def readIn(tx: Txn): DataFrame = {
+    val df = readFileEntries(tx.files, tx.schema)
+    aliasName.fold(df)(df.alias)
+  }
+
+  /** One MERGE step: staged into `txn`, or run as a one-step
+    * [[transaction]] of its own.
+    * @return the step's operation metrics */
+  private[tables] def executeMerge(txn: Option[Txn],
+                                   targetAlias: String,
                                    source: DataFrame,
                                    condition: String,
                                    matchedUpdate: Option[(Option[String], Map[String, String])],
                                    notMatchedInsert: Option[(Option[String], Map[String, String])],
-                                   matchedDelete: Option[Option[String]] = None,
-                                   deleteFirst: Boolean = false,
-                                   schemaEvolution: Boolean = false): Unit = {
+                                   matchedDelete: Option[Option[String]],
+                                   deleteFirst: Boolean,
+                                   schemaEvolution: Boolean): Map[String, String] = {
     // The source is consumed 2-3 times (stats/cardinality agg, file-prune
     // join, then the rewrite or anti join) — persist it so the lineage
     // runs once. SCD2 merge sources are typically a join/aggregate over
@@ -1489,9 +1522,9 @@ class VersionedTable private (val spark: SparkSession,
     // Non-deterministic sources are persisted regardless of shape:
     // re-evaluating one across the probe/rewrite passes would let the
     // probe and the rewrite see DIFFERENT rows. try/finally: any failure
-    // must still release the cached blocks. The retry loop sits INSIDE
-    // the persist scope: a CAS-losing merge re-runs reusing the cached
-    // source.
+    // must still release the cached blocks. A stand-alone merge's retry
+    // loop sits INSIDE the persist scope: a CAS-losing merge re-runs
+    // reusing the cached source.
     val srcExpensive = {
       import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, LogicalPlan, Window => LWindow}
       def heavy(p: LogicalPlan): Boolean = p match {
@@ -1503,10 +1536,10 @@ class VersionedTable private (val spark: SparkSession,
     }
     val doPersist = srcExpensive && source.storageLevel == StorageLevel.NONE
     val src = if (doPersist) source.persist(StorageLevel.MEMORY_AND_DISK) else source
-    try withCommitRetry {
-      mergeBody(targetAlias, src, condition, matchedUpdate, notMatchedInsert,
-        matchedDelete, deleteFirst, schemaEvolution)
-    } finally if (doPersist) src.unpersist(false)
+    def step(tx: Txn) = mergeBody(tx, targetAlias, src, condition, matchedUpdate,
+      notMatchedInsert, matchedDelete, deleteFirst, schemaEvolution)
+    try txn.fold(transaction(step))(step)
+    finally if (doPersist) src.unpersist(false)
   }
 
   /** Simple conjunctive equi-predicates `targetAlias.col = <srcExpr>`
@@ -1634,15 +1667,16 @@ class VersionedTable private (val spark: SparkSession,
     }
   }
 
-  private def mergeBody(targetAlias: String,
+  private def mergeBody(tx: Txn,
+                        targetAlias: String,
                         src: DataFrame,
                         condition: String,
                         matchedUpdate: Option[(Option[String], Map[String, String])],
                         notMatchedInsert: Option[(Option[String], Map[String, String])],
                         matchedDelete: Option[Option[String]],
                         deleteFirst: Boolean,
-                        schemaEvolution: Boolean): Unit = {
-    val (pinnedV, files, baseSchema, partCols) = pinnedSnapshot()
+                        schemaEvolution: Boolean): Map[String, String] = {
+    val (files, baseSchema) = (tx.files, tx.schema)
     // Merge-time schema evolution (the reference's autoMerge case,
     // notes.md:102-105; Delta's spark.databricks.delta.schema.autoMerge):
     // columns ASSIGNED by an update/insert clause but absent from the
@@ -1837,25 +1871,20 @@ class VersionedTable private (val spark: SparkSession,
           .cast(f.dataType).as(f.name)
       }: _*)
       val added = labeled("merge: insert-only anti-join + write") {
-        writeFiles(rows, partCols)
+        writeIn(tx, rows)
       }
       // inserted rows come free from the written files' footer counts —
       // callers never need a post-merge table scan for accounting
       val inserted =
         if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
-      commitOrClean(LogEntry(pinnedV + 1, now(), "MERGE",
-        tableSchema.json, partCols, added, Seq.empty,
-        Map(
-          "numTargetFilesAdded" -> added.size.toString,
-          "numTargetFilesRemoved" -> "0",
+      return stageMerge(tx, added, Seq.empty, tableSchema, Map(
           "numTargetFilesUntouched" -> files.size.toString,
           "numTargetFilesSkippedByStats" -> statsSkipped.toString,
           "numTargetRowsUpdated" -> "0",
           "numTargetRowsDeleted" -> "0",
           "numTargetRowsInserted" -> inserted.toString,
           "numColumnsEvolved" -> evolvedCols.size.toString,
-          "insertOnly" -> "true") ++ decision("left_anti", broadcastHint = false)), added)
-      return
+          "insertOnly" -> "true") ++ decision("left_anti", broadcastHint = false))
     }
 
     // --- 1. prune + cardinality, ONE job: which existing files contain
@@ -1988,7 +2017,7 @@ class VersionedTable private (val spark: SparkSession,
     val doWrite = touched.nonEmpty || notMatchedInsert.nonEmpty
     val added =
       if (doWrite) labeled("merge: rewrite + write") {
-        writeFiles(rewritten, partCols)
+        writeIn(tx, rewritten)
       } else Seq.empty
     // obs.get blocks until its action ran — only consult it after a write
     val (rowsUpdated, rowsInserted, rowsDeleted) =
@@ -2011,20 +2040,22 @@ class VersionedTable private (val spark: SparkSession,
         (cnt("u"), cnt("i"), deleted)
       } else (0L, 0L, 0L)
 
-    commitOrClean(LogEntry(pinnedV + 1, now(), "MERGE",
-      tableSchema.json, partCols,
-      added, touched.map(_.path),
-      Map(
-        "numTargetFilesAdded" -> added.size.toString,
-        "numTargetFilesRemoved" -> touched.size.toString,
+    stageMerge(tx, added, touched.map(_.path), tableSchema, Map(
         "numTargetFilesUntouched" -> (files.size - touched.size).toString,
         "numTargetFilesSkippedByStats" -> statsSkipped.toString,
         "numTargetRowsUpdated" -> rowsUpdated.toString,
         "numTargetRowsInserted" -> rowsInserted.toString,
         "numTargetRowsDeleted" -> rowsDeleted.toString,
         "numColumnsEvolved" -> evolvedCols.size.toString) ++
-        decision(rewriteJoinType, rewriteBroadcast)), added)
+        decision(rewriteJoinType, rewriteBroadcast))
   }
+
+  /** Stage one MERGE step (both [[mergeBody]] paths) with its file counts. */
+  private def stageMerge(tx: Txn, added: Seq[FileEntry], removed: Seq[String],
+                         schema: StructType, metrics: Map[String, String]): Map[String, String] =
+    tx.stage("MERGE", added, removed, metrics ++ Map(
+      "numTargetFilesAdded" -> added.size.toString,
+      "numTargetFilesRemoved" -> removed.size.toString), schema)
 
   // ------------------------------------------------------------- helpers --
 
@@ -2279,14 +2310,71 @@ object VersionedTable {
   * Subclasses IllegalStateException so pre-CAS callers keep working. */
 class ConcurrentCommitException(msg: String) extends IllegalStateException(msg)
 
+/** One attempt of a [[VersionedTable.transaction]]: the pinned version,
+  * the working file set (the pinned snapshot plus the steps' staged adds
+  * and removes), the working schema, every path the attempt wrote and
+  * each step's (operation, metrics). Callers see only [[merge]] and
+  * [[read]]; the table's writers stage into it. */
+final class Txn private[tables] (table: VersionedTable,
+                                 pinned: Long,
+                                 pinnedFiles: Seq[FileEntry],
+                                 private[tables] var schema: StructType,
+                                 private[tables] val partCols: Seq[String]) {
+  private[tables] var files: Seq[FileEntry] = pinnedFiles
+  private[tables] val written = scala.collection.mutable.ArrayBuffer[String]()
+  private val steps = scala.collection.mutable.ArrayBuffer[(String, Map[String, String])]()
+
+  /** A MERGE into the working state, staged into this transaction. */
+  def merge(source: DataFrame, condition: String): MergeBuilder =
+    table.mergeIn(this, source, condition)
+
+  /** The working state: the pinned snapshot with every staged step applied. */
+  def read: DataFrame = table.readIn(this)
+
+  /** Apply one step's file actions to the working state; returns its
+    * metrics. An added entry replaces a live one with the same path (a
+    * deletion-vector update). */
+  private[tables] def stage(op: String, added: Seq[FileEntry], removedPaths: Seq[String],
+                            metrics: Map[String, String],
+                            schema: StructType = this.schema): Map[String, String] = {
+    val gone = removedPaths.toSet ++ added.map(_.path)
+    files = files.filterNot(fe => gone(fe.path)) ++ added
+    this.schema = schema
+    steps += op -> metrics
+    metrics
+  }
+
+  /** The one log entry this attempt publishes at pinned + 1, or None when
+    * no step staged anything. */
+  private[tables] def entry(timestampMs: Long): Option[LogEntry] =
+    if (steps.isEmpty) None
+    else {
+      val (op, metrics) =
+        if (steps.size == 1) steps.head
+        else ("MERGE", steps.flatMap(_._2.keys).distinct.map { k =>
+          val vs = steps.flatMap(_._2.get(k)).toSeq
+          k -> (if (vs.forall(_.toLongOption.isDefined)) vs.map(_.toLong).sum.toString
+                else vs.mkString(","))
+        }.toMap)
+      val byPath = pinnedFiles.map(fe => fe.path -> fe).toMap
+      val live = files.map(_.path).toSet
+      Some(LogEntry(pinned + 1, timestampMs, op, schema.json, partCols,
+        files.filterNot(fe => byPath.get(fe.path).contains(fe)),
+        pinnedFiles.map(_.path).filterNot(live), metrics))
+    }
+}
+
 /** Fluent MERGE builder mirroring the subset of the Delta API the
   * reference exercises: at most one whenMatchedUpdate, one
   * whenMatchedDelete and one whenNotMatchedInsert clause, conditions and
-  * assignments as SQL expression strings over the target/source aliases. */
+  * assignments as SQL expression strings over the target/source aliases.
+  * Built by [[VersionedTable.merge]] (commits on its own) or
+  * [[Txn.merge]] (stages into the transaction). */
 class MergeBuilder private[tables] (table: VersionedTable,
                                     targetAlias: String,
                                     source: DataFrame,
-                                    condition: String) {
+                                    condition: String,
+                                    txn: Option[Txn]) {
   private var matchedUpdate: Option[(Option[String], Map[String, String])] = None
   private var notMatchedInsert: Option[(Option[String], Map[String, String])] = None
   private var matchedDelete: Option[Option[String]] = None
@@ -2329,7 +2417,9 @@ class MergeBuilder private[tables] (table: VersionedTable,
     * is the contract). */
   def withSchemaEvolution(): MergeBuilder = { schemaEvolution = true; this }
 
-  def execute(): Unit =
-    table.executeMerge(targetAlias, source, condition, matchedUpdate,
+  /** Run the merge.
+    * @return its operation metrics — the map a one-step commit records */
+  def execute(): Map[String, String] =
+    table.executeMerge(txn, targetAlias, source, condition, matchedUpdate,
       notMatchedInsert, matchedDelete, deleteFirst, schemaEvolution)
 }

@@ -27,10 +27,21 @@ class KnobCensusSpec extends AnyFunSuite {
   test("only the measurement mains and the session builder read the environment") {
     val read = """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
     val allowed = Set("Bench.scala", "ScaleBench.scala", "Verify.scala",
-      "RoundSummary.scala", "PlanDump.scala", "GraftSession.scala")
+      "PlanDump.scala", "GraftSession.scala")
     val readers = mainSources
       .filter(f => read.findFirstIn(Files.readString(f)).isDefined)
       .map(_.getFileName.toString).toSet
     assert(readers.subsetOf(allowed), s"unexpected environment reads in ${readers -- allowed}")
+  }
+
+  test("log entries are built only by the transaction publish, append, create and clone") {
+    // every other writer stages into VersionedTable.transaction, the one
+    // place that pins, publishes, cleans up and retries
+    val sites = mainSources.flatMap(f => Files.readAllLines(f).asScala.map(_.trim))
+      .filter(l => l.contains("LogEntry(") && !l.startsWith("case class") &&
+        !l.startsWith("//") && !l.startsWith("*"))
+    val owners = Seq("pinned + 1", "\"WRITE\"", "\"CREATE TABLE AS SELECT\"", "\"CLONE\"")
+    assert(sites.size == owners.size && owners.forall(o => sites.exists(_.contains(o))),
+      sites.mkString("\n"))
   }
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import graft.SharedSpark
 import graft.tables.VersionedTable
+import org.apache.spark.sql.execution.CacheProbe
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,12 +53,24 @@ class HeaderEtlJobSpec extends AnyFunSuite {
     // creazione_dta parsed through the M/d/yyyy fallback on the init path
     assert(rows(0).getAs[java.sql.Date]("creazione_dta_parsed") ==
       java.sql.Date.valueOf("2022-11-25"))
+    // an init batch is the create plus one merge transaction
+    assert(VersionedTable.forPath(spark, tablePath).currentVersion == 1L)
   }
 
   test("T2: changed status closes previous version and opens a new one") {
-    runBatch("header_20230102.csv", Seq(
+    val v0 = VersionedTable.forPath(spark, tablePath).currentVersion
+    val m = runBatch("header_20230102.csv", Seq(
       Seq("C1", "ORD1", "365", "P1", "2022-01-01", "100.00", "", "", "AG1",
         "Rifiutata", "11/25/2022", "2023-01-02 12:00:00")))
+    // Phases A and B land as ONE version, carrying the batch's counts
+    val t = VersionedTable.forPath(spark, tablePath)
+    assert(t.currentVersion == v0 + 1)
+    val (op, om) = t.history(1).collect().map(r =>
+      (r.getAs[String]("operation"), r.getAs[scala.collection.Map[String, String]]("operationMetrics")))
+      .head
+    assert(op == "MERGE" && m.closed_count == 1 && m.inserted_count == 1)
+    assert(om("numTargetRowsUpdated").toLong == m.closed_count &&
+      om("numTargetRowsInserted").toLong == m.inserted_count)
     val rows = tableFor("C1").collect()
     assert(rows.length == 2)
     val (first, second) = (rows(0), rows(1))
@@ -167,5 +180,29 @@ class HeaderEtlJobSpec extends AnyFunSuite {
     // metrics CSVs were written (one dir per batch)
     val metricsDirs = new java.io.File(metricsPath).list()
     assert(metricsDirs != null && metricsDirs.nonEmpty)
+  }
+
+  test("a merge that throws still releases the persisted batch and the staging dir") {
+    val root = Files.createTempDirectory("graft-header-leak").toString
+    def run(file: String, ts: String) = {
+      val path = s"$root/crm/$file"
+      TestCsv.write(path, header, Seq(Seq("L1", "ORD1", "365", "P1", "", "1.00", "", "",
+        "AG1", "Accepted", "", ts)))
+      HeaderEtlJob.run(spark, path, s"$root/table", s"$root/discarded", s"$root/metrics")
+    }
+    run("header_20230101.csv", "2023-01-01 10:00:00")
+    val t = VersionedTable.forPath(spark, s"$root/table")
+    // a torn newest commit (a writer that died mid-publish on a store
+    // without an atomic rename): every writer refuses to commit past it
+    val torn = t.currentVersion + 1
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$root/table", "_graft_log", f"$torn%020d.json"),
+      s"""{"version":$torn,"opera""")
+    val cached = CacheProbe.entries(spark)
+    intercept[Exception](run("header_20230102.csv", "2023-01-02 10:00:00"))
+    assert(CacheProbe.entries(spark) == cached, "the transformed batch must be unpersisted")
+    assert(!new java.io.File(s"$root/discarded/.validation_staging_20230102").exists(),
+      "the validation staging dir must be deleted")
+    assert(t.currentVersion == torn)
   }
 }

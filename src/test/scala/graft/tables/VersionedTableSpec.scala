@@ -730,6 +730,113 @@ class VersionedTableSpec extends AnyFunSuite {
       s"slow row reads NULL for the evolved column, got $rows")
   }
 
+  /** Data-dir-relative paths of the parquet files under `<path>/data`. */
+  private def dataFiles(path: String): Set[String] = {
+    val data = java.nio.file.Paths.get(path, "data")
+    scala.jdk.CollectionConverters.IteratorHasAsScala(Files.walk(data).iterator()).asScala
+      .map(data.relativize(_).toString).filter(_.endsWith(".parquet")).toSet
+  }
+  private def kvTable(name: String): VersionedTable =
+    VersionedTable.create(spark,
+      (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(2), tmpDir() + name)
+  private def kv(k: Long, v: String) = Seq((k, v)).toDF("k", "v").alias("s")
+  private def rows(t: VersionedTable): Seq[(Long, String)] =
+    t.read.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  test("a transaction whose second merge throws publishes nothing and leaves no file") {
+    val t = kvTable("/txthrow")
+    val (v0, before) = (t.currentVersion, dataFiles(t.root))
+    val e = intercept[IllegalStateException] {
+      t.alias("t").transaction { tx =>
+        tx.merge(kv(1L, "x"), "t.k = s.k").whenMatchedUpdate(Map("v" -> "s.v")).execute()
+        // two source rows for one target row: the cardinality check throws
+        tx.merge(Seq((2L, "a"), (2L, "b")).toDF("k", "v").alias("s"), "t.k = s.k")
+          .whenMatchedUpdate(Map("v" -> "s.v")).execute()
+      }
+    }
+    assert(e.getMessage.contains("multiple source rows matched the same target row"))
+    assert(t.currentVersion == v0)
+    assert(dataFiles(t.root) == before, "the first step's files must be deleted")
+    assert(rows(t) == (1 to 10).map(i => (i.toLong, s"v$i")))
+  }
+
+  test("a transaction that loses its CAS re-runs its body and lands one version") {
+    val t = kvTable("/txcas")
+    val v0 = t.currentVersion
+    val attempts = new java.util.concurrent.atomic.AtomicInteger
+    val out = t.alias("t").transaction { tx =>
+      // a concurrent writer commits after the pin, on the first attempt only
+      if (attempts.incrementAndGet() == 1)
+        VersionedTable.forPath(spark, t.root).append(Seq((100L, "c")).toDF("k", "v"))
+      tx.merge(kv(1L, "x"), "t.k = s.k").whenMatchedUpdate(Map("v" -> "s.v")).execute()
+      tx.merge(kv(50L, "n"), "t.k = s.k")
+        .whenNotMatchedInsert(values = Map("k" -> "s.k", "v" -> "s.v")).execute()
+      attempts.get
+    }
+    assert(out == 2 && attempts.get == 2, "the lost CAS must re-run the body once")
+    assert(t.currentVersion == v0 + 2, "the append plus exactly one transaction version")
+
+    val serial = kvTable("/txcasserial")
+    serial.append(Seq((100L, "c")).toDF("k", "v"))
+    serial.alias("t").merge(kv(1L, "x"), "t.k = s.k").whenMatchedUpdate(Map("v" -> "s.v")).execute()
+    serial.alias("t").merge(kv(50L, "n"), "t.k = s.k")
+      .whenNotMatchedInsert(values = Map("k" -> "s.k", "v" -> "s.v")).execute()
+    assert(rows(t) == rows(serial))
+    // the losing attempt's files are gone: every file on disk is in the log
+    assert(dataFiles(t.root) == t.entries.flatMap(_.add.map(_.path)).toSet)
+  }
+
+  test("a file one step writes and a later step rewrites is deleted after publish") {
+    val t = kvTable("/txinterim")
+    val before = t.liveEntries.map(_.path).toSet
+    var interim = Set.empty[String]
+    t.alias("t").transaction { tx =>
+      tx.merge(kv(50L, "n"), "t.k = s.k")
+        .whenNotMatchedInsert(values = Map("k" -> "s.k", "v" -> "s.v")).execute()
+      interim = tx.files.map(_.path).toSet -- before
+      tx.merge(kv(50L, "m"), "t.k = s.k").whenMatchedUpdate(Map("v" -> "s.v")).execute()
+    }
+    assert(interim.nonEmpty && (interim & dataFiles(t.root)).isEmpty)
+    // no version references the interim files: the publish adds only the rewrite
+    assert(t.entries.last.add.map(_.path).toSet == t.liveEntries.map(_.path).toSet -- before)
+    assert(rows(t).last == (50L, "m"))
+  }
+
+  test("a transaction of two insert-only merges reads back exactly through readChanges") {
+    val t = kvTable("/txchanges")
+    val v0 = t.currentVersion
+    def insert(tx: Txn, df: org.apache.spark.sql.DataFrame) =
+      tx.merge(df.alias("s"), "t.k = s.k")
+        .whenNotMatchedInsert(values = Map("k" -> "s.k", "v" -> "s.v")).execute()
+    val (m1, m2) = t.alias("t").transaction { tx =>
+      (insert(tx, Seq((20L, "a"), (21L, "b")).toDF("k", "v")),
+        // 21 was staged by the first step: the second sees it and skips it
+        insert(tx, Seq((21L, "b"), (22L, "c"), (5L, "dup")).toDF("k", "v")))
+    }
+    assert(m1("numTargetRowsInserted") == "2" && m2("numTargetRowsInserted") == "1")
+    assert(t.currentVersion == v0 + 1)
+    val h = t.history(1).select("operation", "operationMetrics")
+      .as[(String, Map[String, String])].head()
+    assert(h._1 == "MERGE" && h._2("numTargetRowsInserted") == "3" &&
+      h._2("insertOnly") == "true,true")
+    assert(t.readChanges(v0).collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+      Seq((20L, "a"), (21L, "b"), (22L, "c")))
+  }
+
+  test("a transaction with a rewriting step makes readChanges throw unless includeRewrites") {
+    val t = kvTable("/txrewrite")
+    val v0 = t.currentVersion
+    t.alias("t").transaction { tx =>
+      tx.merge(kv(1L, "x"), "t.k = s.k").whenMatchedUpdate(Map("v" -> "s.v")).execute()
+      tx.merge(kv(60L, "n"), "t.k = s.k")
+        .whenNotMatchedInsert(values = Map("k" -> "s.k", "v" -> "s.v")).execute()
+    }
+    val m = t.history(1).select("operationMetrics").as[Map[String, String]].head()
+    assert(m("numTargetRowsUpdated") == "1" && m("numTargetRowsInserted") == "1")
+    intercept[IllegalArgumentException] { t.readChanges(v0).count() }
+    assert(t.readChanges(v0, includeRewrites = true).filter($"k" === 60L).count() == 1)
+  }
+
   test("a torn newest commit: reads fall back, writes refuse, recovery unblocks") {
     val path = tmpDir() + "/t11torn"
     VersionedTable.create(spark, Seq((1L, "a")).toDF("k", "v"), path)
