@@ -340,11 +340,12 @@ class VersionedTable private (val spark: SparkSession,
     * The entry adds the working entries that differ from the pinned ones
     * and removes the pinned paths no longer live. One step commits under
     * its own operation and metrics; several commit as `MERGE` with
-    * numeric metrics summed and other values joined by `,` in step
-    * order. A body that stages no step publishes nothing. If anything
-    * throws (a lost CAS included) every file and sidecar dir the attempt
-    * wrote is deleted; after a publish, files one step wrote and a later
-    * step replaced are deleted too — no version ever referenced them. */
+    * numeric metrics summed (`-1`, "not measured", in any step makes the
+    * sum `-1`) and other values joined by `,` in step order. A body that
+    * stages no step publishes nothing. If anything throws (a lost CAS
+    * included) every file and sidecar dir the attempt wrote is deleted;
+    * after a publish, files one step wrote and a later step replaced are
+    * deleted too — no version ever referenced them. */
   def transaction[T](body: Txn => T): T = withCommitRetry {
     val v = currentVersion
     val (files, schema, partCols) = snapshot(Some(v))
@@ -1279,6 +1280,17 @@ class VersionedTable private (val spark: SparkSession,
     deleted
   }
 
+  /** The top-level `AND` conjuncts of a SQL condition, parsed (not split
+    * as a string); a parse failure throws. */
+  private def conjunctsOf(condition: String): Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case other => Seq(other)
+    }
+    split(spark.sessionState.sqlParser.parseExpression(condition))
+  }
+
   /** Conservative per-column bounds implied by a DML predicate's
     * top-level conjuncts, for stats-based file skipping: `c = 5` ⇒ [5,5],
     * `c > 5 AND c <= 9` ⇒ [5,9] (inequality edges kept inclusive — stats
@@ -1289,13 +1301,8 @@ class VersionedTable private (val spark: SparkSession,
   private def predicateBounds(condition: String): Seq[(String, Any, Any)] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo,
-      Expression => CExpr, GreaterThan, GreaterThanOrEqual, In, LessThan,
-      LessThanOrEqual, Literal => CLit}
-    def conjunctsOf(e: CExpr): Seq[CExpr] = e match {
-      case CAnd(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
-      case other => Seq(other)
-    }
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression => CExpr,
+      GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal => CLit}
     def colOf(e: CExpr): Option[String] = e match {
       case UnresolvedAttribute(Seq(c)) => Some(c)
       case _ => None
@@ -1306,7 +1313,7 @@ class VersionedTable private (val spark: SparkSession,
       case _ => None
     }
     try {
-      conjunctsOf(spark.sessionState.sqlParser.parseExpression(condition))
+      conjunctsOf(condition)
         .flatMap {
           case EqualTo(a, b) =>
             colOf(a).zip(valOf(b)).map { case (c, v) => (c, v, v) } ++
@@ -1497,15 +1504,7 @@ class VersionedTable private (val spark: SparkSession,
   /** One MERGE step: staged into `txn`, or run as a one-step
     * [[transaction]] of its own.
     * @return the step's operation metrics */
-  private[tables] def executeMerge(txn: Option[Txn],
-                                   targetAlias: String,
-                                   source: DataFrame,
-                                   condition: String,
-                                   matchedUpdate: Option[(Option[String], Map[String, String])],
-                                   notMatchedInsert: Option[(Option[String], Map[String, String])],
-                                   matchedDelete: Option[Option[String]],
-                                   deleteFirst: Boolean,
-                                   schemaEvolution: Boolean): Map[String, String] = {
+  private[tables] def executeMerge(txn: Option[Txn], m: MergeBuilder): Map[String, String] = {
     // The source is consumed 2-3 times (stats/cardinality agg, file-prune
     // join, then the rewrite or anti join) — persist it so the lineage
     // runs once. SCD2 merge sources are typically a join/aggregate over
@@ -1531,13 +1530,12 @@ class VersionedTable private (val spark: SparkSession,
         case _: Join | _: Aggregate | _: LWindow | _: Generate => true
         case _ => false
       }
-      source.queryExecution.analyzed.exists(p => heavy(p) || !p.deterministic) ||
-        source.queryExecution.optimizedPlan.exists(heavy)
+      m.source.queryExecution.analyzed.exists(p => heavy(p) || !p.deterministic) ||
+        m.source.queryExecution.optimizedPlan.exists(heavy)
     }
-    val doPersist = srcExpensive && source.storageLevel == StorageLevel.NONE
-    val src = if (doPersist) source.persist(StorageLevel.MEMORY_AND_DISK) else source
-    def step(tx: Txn) = mergeBody(tx, targetAlias, src, condition, matchedUpdate,
-      notMatchedInsert, matchedDelete, deleteFirst, schemaEvolution)
+    val doPersist = srcExpensive && m.source.storageLevel == StorageLevel.NONE
+    val src = if (doPersist) m.source.persist(StorageLevel.MEMORY_AND_DISK) else m.source
+    def step(tx: Txn) = runMerge(tx, m, src, planMerge(tx, m, src))
     try txn.fold(transaction(step))(step)
     finally if (doPersist) src.unpersist(false)
   }
@@ -1558,11 +1556,7 @@ class VersionedTable private (val spark: SparkSession,
     *         the join condition */
   private[tables] def equiPairs(condition: String, targetAlias: String): (Seq[(String, String)], Boolean) = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo, Expression => CExpr}
-    def conjunctsOf(e: CExpr): Seq[CExpr] = e match {
-      case CAnd(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
-      case other => Seq(other)
-    }
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression => CExpr}
     def targetCol(e: CExpr): Option[String] = e match {
       case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(targetAlias) => Some(c)
       case _ => None
@@ -1573,8 +1567,7 @@ class VersionedTable private (val spark: SparkSession,
       case _ => false
     }
     try {
-      val tree = spark.sessionState.sqlParser.parseExpression(condition)
-      val parsed = conjunctsOf(tree).map {
+      val parsed = conjunctsOf(condition).map {
         case EqualTo(l, r) =>
           (targetCol(l), targetCol(r)) match {
             case (Some(c), None) if !referencesTarget(r) => Some(c -> r.sql)
@@ -1667,16 +1660,13 @@ class VersionedTable private (val spark: SparkSession,
     }
   }
 
-  private def mergeBody(tx: Txn,
-                        targetAlias: String,
-                        src: DataFrame,
-                        condition: String,
-                        matchedUpdate: Option[(Option[String], Map[String, String])],
-                        notMatchedInsert: Option[(Option[String], Map[String, String])],
-                        matchedDelete: Option[Option[String]],
-                        deleteFirst: Boolean,
-                        schemaEvolution: Boolean): Map[String, String] = {
-    val (files, baseSchema) = (tx.files, tx.schema)
+  /** Plan one MERGE step: the only place a MERGE decides anything — the
+    * evolved schema, the candidate files, what proves the source keys
+    * unique, the join that writes the new files and the broadcast test.
+    * Runs at most one Spark job (the source stats/cardinality agg), writes
+    * no file and stages nothing. */
+  private[tables] def planMerge(tx: Txn, m: MergeBuilder, src: DataFrame): MergePlan = {
+    val files = tx.files
     // Merge-time schema evolution (the reference's autoMerge case,
     // notes.md:102-105; Delta's spark.databricks.delta.schema.autoMerge):
     // columns ASSIGNED by an update/insert clause but absent from the
@@ -1686,12 +1676,12 @@ class VersionedTable private (val spark: SparkSession,
     // this commit; untouched files are carried by reference and read the
     // new column as NULL — evolving a 100 TB table rewrites nothing extra.
     val evolvedCols: Seq[StructField] =
-      if (!schemaEvolution) Seq.empty
+      if (!m.evolve) Seq.empty
       else {
-        val assigned = (matchedUpdate.map(_._2).getOrElse(Map.empty) ++
-          notMatchedInsert.map(_._2).getOrElse(Map.empty)).toSeq
+        val assigned = (m.update.fold(Map.empty[String, String])(_.set) ++
+          m.insert.fold(Map.empty[String, String])(_.set)).toSeq
         assigned
-          .filterNot { case (n, _) => baseSchema.fieldNames.exists(_.equalsIgnoreCase(n)) }
+          .filterNot { case (n, _) => tx.schema.fieldNames.exists(_.equalsIgnoreCase(n)) }
           .map { case (n, e) =>
             val dt = try src.select(expr(e)).schema.head.dataType
             catch {
@@ -1702,10 +1692,9 @@ class VersionedTable private (val spark: SparkSession,
             StructField(n, dt, nullable = true)
           }
       }
-    val tableSchema =
-      if (evolvedCols.isEmpty) baseSchema
-      else StructType(baseSchema.fields ++ evolvedCols)
-    val dataCols = tableSchema.fields.toSeq
+    val schema =
+      if (evolvedCols.isEmpty) tx.schema
+      else StructType(tx.schema.fields ++ evolvedCols)
 
     // --- stats pruning + cardinality fast path: ONE source-side agg -----
     // For each conjunctive equi-key, the agg computes its min/max — files
@@ -1720,7 +1709,7 @@ class VersionedTable private (val spark: SparkSession,
     // unnecessary (the common case — e.g. a deduped batch). Conservative
     // on every failure path: unknown shapes prune nothing and keep the
     // exact check.
-    val (pairs, pureEqui) = equiPairs(condition, targetAlias)
+    val (pairs, pureEqui) = equiPairs(m.condition, m.targetAlias)
     // ≤2 files: the min/max agg costs more than scanning them
     val wantStats = pairs.nonEmpty && files.size > 2
     // Key uniqueness FROM THE PLAN, before paying any job for it: a source
@@ -1776,13 +1765,13 @@ class VersionedTable private (val spark: SparkSession,
             dig(analyzed, AttributeSet(keyAttrs))
         } catch { case scala.util.control.NonFatal(_) => false }
       }
-    val anyMatchedClause = matchedUpdate.isDefined || matchedDelete.isDefined
+    val anyMatchedClause = m.update.isDefined || m.delete.isDefined
     val uniqueByPlan = keysUniqueByPlan
     // dup check only matters on the rewrite path (insert-only merges
-    // return before the probe and never rewrite matched rows)
+    // never probe and never rewrite matched rows)
     val wantDupCheck = !uniqueByPlan && pureEqui && pairs.nonEmpty && anyMatchedClause
     var uniqueByCount = false
-    val matchCandidates: Seq[FileEntry] =
+    val candidates: Seq[FileEntry] =
       try {
         if (!wantStats && !wantDupCheck) files
         else {
@@ -1809,12 +1798,24 @@ class VersionedTable private (val spark: SparkSession,
             uniqueByCount = nn == nd
           }
           if (!wantStats) files
-          else pruneFiles(files, tableSchema, pairs.zipWithIndex.map { case ((tcol, _), i) =>
+          else pruneFiles(files, schema, pairs.zipWithIndex.map { case ((tcol, _), i) =>
             (tcol, row.get(i * 2), row.get(i * 2 + 1))
           })._1
         }
       } catch { case scala.util.control.NonFatal(_) => files }
-    val statsSkipped = files.size - matchCandidates.size
+
+    // An update/delete-only merge (no insert clause) preserves every
+    // target row and adds none, so a LEFT join is exactly equivalent to
+    // the full-outer: the source-only rows full-outer would emit are
+    // filtered out by the rewrite (its insert guard is lit(false)). The
+    // switch matters because Spark can never execute a full-outer as a
+    // broadcast hash join — with it, a small source (e.g. the header
+    // job's Phase-A first-change keys) rewrites the touched files in one
+    // map-only scan instead of shuffling + sorting every touched row
+    // through a sort-merge join (guide §2.4/§3.1).
+    val joinType =
+      if (!anyMatchedClause && m.insert.isDefined) "left_anti"
+      else if (m.insert.isEmpty) "left_outer" else "full_outer"
 
     // --- broadcast the source side of the probe/rewrite joins when its
     // MATERIALIZED (cached) size is provably small: the other side is the
@@ -1823,239 +1824,174 @@ class VersionedTable private (val spark: SparkSession,
     // stats (exact once the stats agg above materialized it), never from
     // a pre-execution estimate; an unpersisted or unmaterialized source
     // conservatively stays un-hinted and Catalyst/AQE decides. Full-outer
-    // rewrites (update+insert merges) are excluded below — broadcast hash
-    // join does not support full-outer and the hint would be dead weight.
+    // rewrites (update+insert merges) are excluded by
+    // [[MergePlan.rewriteBroadcast]] — broadcast hash join does not
+    // support full-outer and the hint would be dead weight.
     // `src.storageLevel != NONE` covers both a source executeMerge
-    // persisted and one the caller cached. LAZY: forced only inside
-    // maybeBroadcast, i.e. strictly after the stats/cardinality agg above
-    // ran its collect and filled the cache, so the InMemoryRelation stats
-    // read here are the exact materialized bytes (on the no-stats ≤2-file
-    // path the cache may be cold and this reads the estimate — a ≤2-file
-    // table is fixture scale, where either join strategy is fine).
-    lazy val srcSmall = src.storageLevel != StorageLevel.NONE && (try {
+    // persisted and one the caller cached. Read strictly after the
+    // stats/cardinality agg above ran its collect and filled the cache,
+    // so the InMemoryRelation stats read here are the exact materialized
+    // bytes (on the no-stats ≤2-file path the cache may be cold and this
+    // reads the estimate — a ≤2-file table is fixture scale, where either
+    // join strategy is fine). The anti-join path never reads it.
+    val sourceSmall = joinType != "left_anti" && src.storageLevel != StorageLevel.NONE && (try {
       src.queryExecution.optimizedPlan.stats.sizeInBytes <= MergeBroadcastSourceBytes
     } catch { case scala.util.control.NonFatal(_) => false })
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (srcSmall) broadcast(df) else df
 
-    // What this merge decided, recorded in its commit's operationMetrics
-    // (and so in history()): whether the source was cached, whether the
-    // join that writes the new files carried the source broadcast hint,
-    // that join's type, and what proved the source keys unique — "plan"
-    // (a groupBy on the keys), "count" (the stats agg's countDistinct) or
-    // "unchecked" (neither; the probe's per-row cardinality check runs).
-    def decision(joinType: String, broadcastHint: Boolean): Map[String, String] = Map(
-      "sourceCached" -> (src.storageLevel != StorageLevel.NONE).toString,
-      "sourceBroadcast" -> broadcastHint.toString,
-      "rewriteJoinType" -> joinType,
-      "sourceKeysUnique" ->
-        (if (uniqueByPlan) "plan" else if (uniqueByCount) "count" else "unchecked"))
-
-    // --- fast path: insert-only merge rewrites NOTHING ------------------
-    // With no matched-update/delete clause (e.g. the header job's Phase
-    // B), matched target rows are untouched by definition — the merge
-    // reduces to appending the source rows that match no target row: one
-    // left-anti join + write of new files. No touched-file collect, no
-    // full-outer rewrite of files whose rows would only be copied.
-    // (At 10M rows this halves the merge phase; Delta special-cases
-    // insert-only merges the same way.)
-    if (!anyMatchedClause && notMatchedInsert.isDefined) {
-      val (insCondOpt, insVals) = notMatchedInsert.get
-      // anti-join only against the stats-candidate files: rows in skipped
-      // files cannot equal any source key, so they cannot absorb inserts
-      val target = readFileEntries(matchCandidates, tableSchema).alias(targetAlias)
-      val unmatched = src.join(target, expr(condition), "left_anti")
-      val toInsert = insCondOpt.fold(unmatched)(c => unmatched.filter(expr(c)))
-      val rows = toInsert.select(dataCols.map { f =>
-        insVals.get(f.name).map(expr).getOrElse(lit(null))
-          .cast(f.dataType).as(f.name)
-      }: _*)
-      val added = labeled("merge: insert-only anti-join + write") {
-        writeIn(tx, rows)
-      }
-      // inserted rows come free from the written files' footer counts —
-      // callers never need a post-merge table scan for accounting
-      val inserted =
-        if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
-      return stageMerge(tx, added, Seq.empty, tableSchema, Map(
-          "numTargetFilesUntouched" -> files.size.toString,
-          "numTargetFilesSkippedByStats" -> statsSkipped.toString,
-          "numTargetRowsUpdated" -> "0",
-          "numTargetRowsDeleted" -> "0",
-          "numTargetRowsInserted" -> inserted.toString,
-          "numColumnsEvolved" -> evolvedCols.size.toString,
-          "insertOnly" -> "true") ++ decision("left_anti", broadcastHint = false))
-    }
-
-    // --- 1. prune + cardinality, ONE job: which existing files contain
-    // rows matched by source, and does any target row match >1 source
-    // rows? The probe joins the candidate files with the source on the
-    // merge condition. When the source-key uniqueness fast path did NOT
-    // prove cardinality safe, grouping by (file, _metadata.row_index)
-    // folds Delta's merge-cardinality check into the SAME job that
-    // collects touched file names; on the fast path the probe stays a
-    // cheap distinct over file names (the per-row grouping would push
-    // every matched row through a wide hash aggregate for nothing). The
-    // collect is bounded by file count, never by row count. Catalyst/AQE
-    // picks the join strategy — the source side of a batch merge is
-    // typically small enough to broadcast.
-    val needExactCardinality = !uniqueByPlan && !uniqueByCount
-    val touched: Seq[FileEntry] =
-      if (matchCandidates.isEmpty) Seq.empty
-      else {
-        // probe scans only the stats-candidate files — skipped files
-        // cannot contain matched rows and are untouched by construction.
-        // keepMeta supplies file/row-index identity (readFileEntries owns
-        // it now: after a DV anti-join, _metadata no longer resolves)
-        val t = readFileEntries(matchCandidates, tableSchema, keepMeta = true)
-          .alias(targetAlias)
-        val matched = t.join(maybeBroadcast(src), expr(condition), "inner")
-        val perFile =
-          if (needExactCardinality) {
-            val maxMatches = labeled("merge: touched-file probe + cardinality") {
-              matched
-                .groupBy(col(FileCol), col(RowIdxCol))
-                .agg(count(lit(1)).as("__graft_m"))
-                .groupBy(col(FileCol))
-                .agg(max("__graft_m").as("__graft_maxm"))
-                .collect()
-            }
-            if (maxMatches.exists(_.getLong(1) > 1))
-              throw new IllegalStateException(
-                "MERGE: multiple source rows matched the same target row")
-            maxMatches.map(r => (r.getString(0), r.getLong(1)))
-          } else
-            labeled("merge: touched-file probe") {
-              matched.select(col(FileCol)).distinct().collect()
-            }.map(r => (r.getString(0), 1L))
-        touchedFiles(files, perFile.toSeq).map(_._2)
-      }
-
-    // --- 2. rewrite touched files + insert unmatched source rows --------
-    val touchedDF = readFileEntries(touched, tableSchema)
-
-    // An update/delete-only merge (no insert clause) preserves every
-    // target row and adds none, so a LEFT join is exactly equivalent to
-    // the full-outer: the source-only rows full-outer would emit are
-    // filtered out below (insCond is lit(false)). The switch matters
-    // because Spark can never execute a full-outer as a broadcast hash
-    // join — with it, a small source (e.g. the header job's Phase-A
-    // first-change keys) rewrites the touched files in one map-only scan
-    // instead of shuffling + sorting every touched row through a
-    // sort-merge join (guide §2.4/§3.1).
-    val rewriteJoinType = if (notMatchedInsert.isEmpty) "left_outer" else "full_outer"
-    val t = touchedDF.withColumn(TPresent, lit(true)).alias(targetAlias)
-    val rewriteBroadcast = rewriteJoinType == "left_outer" && srcSmall
-    val s = (if (rewriteBroadcast) broadcast(src) else src)
-      .withColumn(SPresent, lit(true))
-    val joined = t.join(s, expr(condition), rewriteJoinType)
-
-    val tPresent = col(TPresent) === lit(true)
-    val sPresent = col(SPresent) === lit(true)
-
-    val rawUpdCond: Column = matchedUpdate match {
-      case Some((Some(c), _)) => expr(c)
-      case Some((None, _)) => lit(true)
-      case None => lit(false)
-    }
-    val rawDelCond: Column = matchedDelete match {
-      case Some(Some(c)) => expr(c)
-      case Some(None) => lit(true)
-      case None => lit(false)
-    }
-    // Delta clause semantics: matched clauses are tried in the order they
-    // were added, first satisfied condition wins, and a NULL condition
-    // means NOT satisfied. The earlier clause's guard must therefore be
-    // coalesced to false before negation — `!NULL` is NULL, and a NULL
-    // guard would block the later clause (or, worse, a NULL delete term
-    // in the keep filter below would silently DROP unmatched target rows
-    // riding the same file, since `tPresent && !NULL` filters as false).
-    val updCond =
-      if (deleteFirst && matchedDelete.isDefined)
-        rawUpdCond && !coalesce(rawDelCond, lit(false))
-      else rawUpdCond
-    val delCond =
-      if (!deleteFirst && matchedUpdate.isDefined)
-        rawDelCond && !coalesce(rawUpdCond, lit(false))
-      else rawDelCond
-    val updSet = matchedUpdate.map(_._2).getOrElse(Map.empty)
-    val insCond: Column = notMatchedInsert match {
-      case Some((Some(c), _)) => expr(c)
-      case Some((None, _)) => lit(true)
-      case None => lit(false)
-    }
-    val insVals = notMatchedInsert.map(_._2).getOrElse(Map.empty)
-
-    // Row-level merge metrics (the numbers Delta reports as
-    // numTargetRowsUpdated/Inserted/Deleted) ride the rewrite write as an
-    // Observation — no extra job, no persisted join; callers can account
-    // for a merge without re-scanning the table afterwards.
-    // NB TPresent is NULL (not false) on source-only full-outer rows.
-    // Deleted rows are simply NOT in the rewrite (their file is dropped
-    // from the log, the survivors copied) — same mechanics as Delta.
-    val obs = org.apache.spark.sql.Observation()
-    val kept = joined
-      .filter((tPresent && !coalesce(sPresent && delCond, lit(false))) ||
-        (!coalesce(col(TPresent), lit(false)) && sPresent && insCond))
-      .observe(obs,
-        sum(when(tPresent && sPresent && updCond, 1L).otherwise(0L)).as("u"),
-        sum(when(sPresent && insCond && !coalesce(col(TPresent), lit(false)), 1L)
-          .otherwise(0L)).as("i"),
-        // surviving target rows — deleted = touched-file row total minus this
-        sum(when(tPresent, 1L).otherwise(0L)).as("t"))
-    val outCols = dataCols.map { f =>
-      val tCol = col(s"$targetAlias.${f.name}")
-      val upd = updSet.get(f.name).map(expr).getOrElse(tCol)
-      val ins = insVals.get(f.name).map(expr).getOrElse(lit(null))
-      when(tPresent && sPresent && updCond, upd.cast(f.dataType))
-        .when(tPresent, tCol)
-        .otherwise(ins.cast(f.dataType))
-        .as(f.name)
-    }
-    val rewritten = kept.select(outCols: _*)
-
-    val doWrite = touched.nonEmpty || notMatchedInsert.nonEmpty
-    val added =
-      if (doWrite) labeled("merge: rewrite + write") {
-        writeIn(tx, rewritten)
-      } else Seq.empty
-    // obs.get blocks until its action ran — only consult it after a write
-    val (rowsUpdated, rowsInserted, rowsDeleted) =
-      if (doWrite) {
-        val o = obs.get
-        def cnt(k: String) = // sums are NULL when zero rows flowed
-          Option(o(k)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-        val deleted =
-          if (matchedDelete.isEmpty) 0L
-          else {
-            // deleted rows never reach the observed write — derive them
-            // from the touched files' LIVE row counts (footer total minus
-            // rows already dead under a deletion vector) minus survivors
-            val touchedRows =
-              if (touched.forall(_.rows >= 0))
-                touched.map(fe => fe.rows - fe.dvRows).sum
-              else -1L
-            if (touchedRows >= 0) touchedRows - cnt("t") else -1L
-          }
-        (cnt("u"), cnt("i"), deleted)
-      } else (0L, 0L, 0L)
-
-    stageMerge(tx, added, touched.map(_.path), tableSchema, Map(
-        "numTargetFilesUntouched" -> (files.size - touched.size).toString,
-        "numTargetFilesSkippedByStats" -> statsSkipped.toString,
-        "numTargetRowsUpdated" -> rowsUpdated.toString,
-        "numTargetRowsInserted" -> rowsInserted.toString,
-        "numTargetRowsDeleted" -> rowsDeleted.toString,
-        "numColumnsEvolved" -> evolvedCols.size.toString) ++
-        decision(rewriteJoinType, rewriteBroadcast))
+    MergePlan(schema, evolvedCols.size, candidates, files.size - candidates.size,
+      if (uniqueByPlan) "plan" else if (uniqueByCount) "count" else "unchecked",
+      joinType, src.storageLevel != StorageLevel.NONE, sourceSmall)
   }
 
-  /** Stage one MERGE step (both [[mergeBody]] paths) with its file counts. */
-  private def stageMerge(tx: Txn, added: Seq[FileEntry], removed: Seq[String],
-                         schema: StructType, metrics: Map[String, String]): Map[String, String] =
-    tx.stage("MERGE", added, removed, metrics ++ Map(
+  /** Execute a [[MergePlan]]: write the step's files and stage them into
+    * `tx` as one MERGE step carrying the plan's metrics and the measured
+    * counts. Decides nothing — it branches once, on the plan's join type:
+    * the insert-only anti-join write, or probe → [[touchedFiles]] →
+    * rewrite.
+    * @return the step's operation metrics */
+  private def runMerge(tx: Txn, m: MergeBuilder, src: DataFrame, plan: MergePlan): Map[String, String] = {
+    val (files, alias, cond) = (tx.files, m.targetAlias, expr(m.condition))
+    val dataCols = plan.schema.fields.toSeq
+    def insertValue(f: StructField): Column =
+      m.insert.flatMap(_.set.get(f.name)).map(expr).getOrElse(lit(null)).cast(f.dataType)
+    val (added, touched, updated, inserted, deleted) =
+      if (plan.joinType == "left_anti") {
+        // --- fast path: insert-only merge rewrites NOTHING --------------
+        // With no matched-update/delete clause (e.g. the header job's
+        // Phase B), matched target rows are untouched by definition — the
+        // merge reduces to appending the source rows that match no target
+        // row: one left-anti join + write of new files. No touched-file
+        // collect, no full-outer rewrite of files whose rows would only be
+        // copied. (At 10M rows this halves the merge phase; Delta
+        // special-cases insert-only merges the same way.) The anti-join
+        // reads only the stats-candidate files: rows in skipped files
+        // cannot equal any source key, so they cannot absorb inserts.
+        val target = readFileEntries(plan.candidates, plan.schema).alias(alias)
+        val unmatched = src.join(target, cond, "left_anti")
+        val toInsert = m.insert.get.cond.fold(unmatched)(c => unmatched.filter(expr(c)))
+        val added = labeled("merge: insert-only anti-join + write") {
+          writeIn(tx, toInsert.select(dataCols.map(f => insertValue(f).as(f.name)): _*))
+        }
+        // inserted rows come free from the written files' footer counts —
+        // callers never need a post-merge table scan for accounting
+        (added, Seq.empty[FileEntry], 0L,
+          if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L, 0L)
+      } else {
+        // --- 1. prune + cardinality, ONE job: which existing files
+        // contain rows matched by source, and does any target row match >1
+        // source rows? The probe joins the candidate files with the source
+        // on the merge condition. When the plan did NOT prove the source
+        // keys unique, grouping by (file, _metadata.row_index) folds
+        // Delta's merge-cardinality check into the SAME job that collects
+        // touched file names; otherwise the probe stays a cheap distinct
+        // over file names (the per-row grouping would push every matched
+        // row through a wide hash aggregate for nothing). The collect is
+        // bounded by file count, never by row count.
+        val touched: Seq[FileEntry] =
+          if (plan.candidates.isEmpty) Seq.empty
+          else {
+            // probe scans only the stats-candidate files — skipped files
+            // cannot contain matched rows and are untouched by
+            // construction. keepMeta supplies file/row-index identity
+            // (after a DV anti-join, _metadata no longer resolves)
+            val t = readFileEntries(plan.candidates, plan.schema, keepMeta = true).alias(alias)
+            val matched = t.join(if (plan.sourceSmall) broadcast(src) else src, cond, "inner")
+            val perFile =
+              if (plan.keysUnique == "unchecked") {
+                val maxMatches = labeled("merge: touched-file probe + cardinality") {
+                  matched
+                    .groupBy(col(FileCol), col(RowIdxCol))
+                    .agg(count(lit(1)).as("__graft_m"))
+                    .groupBy(col(FileCol))
+                    .agg(max("__graft_m").as("__graft_maxm"))
+                    .collect()
+                }
+                if (maxMatches.exists(_.getLong(1) > 1))
+                  throw new IllegalStateException(
+                    "MERGE: multiple source rows matched the same target row")
+                maxMatches.map(r => (r.getString(0), r.getLong(1)))
+              } else
+                labeled("merge: touched-file probe") {
+                  matched.select(col(FileCol)).distinct().collect()
+                }.map(r => (r.getString(0), 1L))
+            touchedFiles(files, perFile.toSeq).map(_._2)
+          }
+
+        // --- 2. rewrite touched files + insert unmatched source rows ----
+        val t = readFileEntries(touched, plan.schema).withColumn(TPresent, lit(true)).alias(alias)
+        val s = (if (plan.rewriteBroadcast) broadcast(src) else src)
+          .withColumn(SPresent, lit(true))
+        val joined = t.join(s, cond, plan.joinType)
+        val tPresent = col(TPresent) === lit(true)
+        val sPresent = col(SPresent) === lit(true)
+        val (upd, del) = (m.update.fold(lit(false))(_.guard), m.delete.fold(lit(false))(_.guard))
+        // Delta clause semantics: matched clauses are tried in the order
+        // they were added, first satisfied condition wins, and a NULL
+        // condition means NOT satisfied. The earlier clause's guard must
+        // therefore be coalesced to false before negation — `!NULL` is
+        // NULL, and a NULL guard would block the later clause (or, worse,
+        // a NULL delete term in the keep filter below would silently DROP
+        // unmatched target rows riding the same file, since
+        // `tPresent && !NULL` filters as false).
+        val updCond = if (m.deleteFirst && m.delete.isDefined) upd && !coalesce(del, lit(false)) else upd
+        val delCond = if (!m.deleteFirst && m.update.isDefined) del && !coalesce(upd, lit(false)) else del
+        val insCond = m.insert.fold(lit(false))(_.guard)
+
+        // Row-level merge metrics (the numbers Delta reports as
+        // numTargetRowsUpdated/Inserted/Deleted) ride the rewrite write as
+        // an Observation — no extra job, no persisted join; callers can
+        // account for a merge without re-scanning the table afterwards.
+        // NB TPresent is NULL (not false) on source-only full-outer rows.
+        // Deleted rows are simply NOT in the rewrite (their file is
+        // dropped from the log, the survivors copied) — same mechanics as
+        // Delta.
+        val obs = org.apache.spark.sql.Observation()
+        val kept = joined
+          .filter((tPresent && !coalesce(sPresent && delCond, lit(false))) ||
+            (!coalesce(col(TPresent), lit(false)) && sPresent && insCond))
+          .observe(obs,
+            sum(when(tPresent && sPresent && updCond, 1L).otherwise(0L)).as("u"),
+            sum(when(sPresent && insCond && !coalesce(col(TPresent), lit(false)), 1L)
+              .otherwise(0L)).as("i"),
+            // surviving target rows — deleted = touched-file row total minus this
+            sum(when(tPresent, 1L).otherwise(0L)).as("t"))
+        val rewritten = kept.select(dataCols.map { f =>
+          val tCol = col(s"$alias.${f.name}")
+          val assigned = m.update.flatMap(_.set.get(f.name)).map(expr).getOrElse(tCol)
+          when(tPresent && sPresent && updCond, assigned.cast(f.dataType))
+            .when(tPresent, tCol)
+            .otherwise(insertValue(f))
+            .as(f.name)
+        }: _*)
+
+        if (touched.isEmpty && m.insert.isEmpty) (Seq.empty, touched, 0L, 0L, 0L)
+        else {
+          val added = labeled("merge: rewrite + write") { writeIn(tx, rewritten) }
+          // obs.get blocks until its action ran — only consult it after a write
+          val o = obs.get
+          def cnt(k: String) = // sums are NULL when zero rows flowed
+            Option(o(k)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
+          // deleted rows never reach the observed write — derive them from
+          // the touched files' LIVE row counts (footer total minus rows
+          // already dead under a deletion vector) minus survivors
+          val touchedRows =
+            if (touched.forall(_.rows >= 0)) touched.map(fe => fe.rows - fe.dvRows).sum
+            else -1L
+          (added, touched, cnt("u"), cnt("i"),
+            if (m.delete.isEmpty) 0L else if (touchedRows >= 0) touchedRows - cnt("t") else -1L)
+        }
+      }
+
+    tx.stage("MERGE", added, touched.map(_.path), plan.metrics ++ Map(
+      "numTargetFilesUntouched" -> (files.size - touched.size).toString,
+      "numTargetRowsUpdated" -> updated.toString,
+      "numTargetRowsInserted" -> inserted.toString,
+      "numTargetRowsDeleted" -> deleted.toString,
       "numTargetFilesAdded" -> added.size.toString,
-      "numTargetFilesRemoved" -> removed.size.toString), schema)
+      "numTargetFilesRemoved" -> touched.size.toString) ++
+      (if (plan.joinType == "left_anti") Map("insertOnly" -> "true") else Map.empty),
+      plan.schema)
+  }
 
   // ------------------------------------------------------------- helpers --
 
@@ -2353,8 +2289,11 @@ final class Txn private[tables] (table: VersionedTable,
         if (steps.size == 1) steps.head
         else ("MERGE", steps.flatMap(_._2.keys).distinct.map { k =>
           val vs = steps.flatMap(_._2.get(k)).toSeq
-          k -> (if (vs.forall(_.toLongOption.isDefined)) vs.map(_.toLong).sum.toString
-                else vs.mkString(","))
+          val ns = vs.flatMap(_.toLongOption)
+          // -1 means "not measured" (an unreadable footer): a sum over it
+          // would be a plausible but wrong count
+          k -> (if (ns.size < vs.size) vs.mkString(",")
+                else if (ns.contains(-1L)) "-1" else ns.sum.toString)
         }.toMap)
       val byPath = pinnedFiles.map(fe => fe.path -> fe).toMap
       val live = files.map(_.path).toSet
@@ -2371,21 +2310,21 @@ final class Txn private[tables] (table: VersionedTable,
   * Built by [[VersionedTable.merge]] (commits on its own) or
   * [[Txn.merge]] (stages into the transaction). */
 class MergeBuilder private[tables] (table: VersionedTable,
-                                    targetAlias: String,
-                                    source: DataFrame,
-                                    condition: String,
+                                    private[tables] val targetAlias: String,
+                                    private[tables] val source: DataFrame,
+                                    private[tables] val condition: String,
                                     txn: Option[Txn]) {
-  private var matchedUpdate: Option[(Option[String], Map[String, String])] = None
-  private var notMatchedInsert: Option[(Option[String], Map[String, String])] = None
-  private var matchedDelete: Option[Option[String]] = None
-  private var deleteFirst: Boolean = false
-  private var schemaEvolution: Boolean = false
+  private[tables] var update: Option[Clause] = None
+  private[tables] var delete: Option[Clause] = None
+  private[tables] var insert: Option[Clause] = None
+  private[tables] var deleteFirst: Boolean = false
+  private[tables] var evolve: Boolean = false
 
   def whenMatchedUpdate(set: Map[String, String]): MergeBuilder =
     whenMatchedUpdate(null, set)
   def whenMatchedUpdate(condition: String, set: Map[String, String]): MergeBuilder = {
-    require(matchedUpdate.isEmpty, "only one whenMatchedUpdate clause is supported")
-    matchedUpdate = Some((Option(condition), set)); this
+    require(update.isEmpty, "only one whenMatchedUpdate clause is supported")
+    update = Some(Clause(Option(condition), set)); this
   }
   /** Delta-style matched-DELETE clause: matched target rows satisfying
     * `condition` are removed from the table (their file is rewritten
@@ -2396,16 +2335,16 @@ class MergeBuilder private[tables] (table: VersionedTable,
     * "technical deletion" the reference asks about at notes.md:97. */
   def whenMatchedDelete(): MergeBuilder = whenMatchedDelete(null)
   def whenMatchedDelete(condition: String): MergeBuilder = {
-    require(matchedDelete.isEmpty, "only one whenMatchedDelete clause is supported")
-    matchedDelete = Some(Option(condition))
-    deleteFirst = matchedUpdate.isEmpty
+    require(delete.isEmpty, "only one whenMatchedDelete clause is supported")
+    delete = Some(Clause(Option(condition), Map.empty))
+    deleteFirst = update.isEmpty
     this
   }
   def whenNotMatchedInsert(values: Map[String, String]): MergeBuilder =
     whenNotMatchedInsert(null, values)
   def whenNotMatchedInsert(condition: String, values: Map[String, String]): MergeBuilder = {
-    require(notMatchedInsert.isEmpty, "only one whenNotMatchedInsert clause is supported")
-    notMatchedInsert = Some((Option(condition), values)); this
+    require(insert.isEmpty, "only one whenNotMatchedInsert clause is supported")
+    insert = Some(Clause(Option(condition), values)); this
   }
   /** Merge-time schema evolution (the reference's autoMerge case,
     * notes.md:102-105): update/insert assignments may name columns the
@@ -2415,11 +2354,52 @@ class MergeBuilder private[tables] (table: VersionedTable,
     * see NULL for the new column in pre-evolution files. Without this
     * call, assignments to unknown columns are ignored (the target schema
     * is the contract). */
-  def withSchemaEvolution(): MergeBuilder = { schemaEvolution = true; this }
+  def withSchemaEvolution(): MergeBuilder = { evolve = true; this }
 
   /** Run the merge.
     * @return its operation metrics — the map a one-step commit records */
-  def execute(): Map[String, String] =
-    table.executeMerge(txn, targetAlias, source, condition, matchedUpdate,
-      notMatchedInsert, matchedDelete, deleteFirst, schemaEvolution)
+  def execute(): Map[String, String] = table.executeMerge(txn, this)
+}
+
+/** One MERGE clause: its optional SQL condition and its assignments
+  * (column → SQL expression; none for a delete). */
+private[tables] final case class Clause(cond: Option[String], set: Map[String, String]) {
+  /** The condition as a column; a clause without one always applies. */
+  def guard: Column = cond.fold(lit(true))(expr)
+}
+
+/** What one MERGE step decided before writing anything
+  * ([[VersionedTable#planMerge]]); the executor only carries it out.
+  * @param evolved    columns the step's schema evolution added
+  * @param candidates target files that may hold matched rows
+  * @param keysUnique what proved the source keys unique: "plan" (a
+  *                   groupBy on the keys), "count" (the stats agg's
+  *                   countDistinct) or "unchecked" (neither; the probe's
+  *                   per-row cardinality check runs)
+  * @param joinType   the join that writes the new files: `left_anti` on
+  *                   the insert-only path, else `left_outer`/`full_outer`
+  * @param sourceSmall the cached source is small enough to broadcast */
+private[tables] final case class MergePlan(schema: StructType,
+                                           evolved: Int,
+                                           candidates: Seq[FileEntry],
+                                           skippedByStats: Int,
+                                           keysUnique: String,
+                                           joinType: String,
+                                           sourceCached: Boolean,
+                                           sourceSmall: Boolean) {
+  /** The rewrite join carries the source broadcast hint; a broadcast hash
+    * join cannot run a full outer join. */
+  def rewriteBroadcast: Boolean = joinType == "left_outer" && sourceSmall
+
+  /** The decision part of the step's operationMetrics (and so of
+    * history()): whether the source was cached, whether the join that
+    * writes the new files carried the broadcast hint, that join's type,
+    * the uniqueness proof, the stats-skipped files and evolved columns. */
+  def metrics: Map[String, String] = Map(
+    "sourceCached" -> sourceCached.toString,
+    "sourceBroadcast" -> rewriteBroadcast.toString,
+    "rewriteJoinType" -> joinType,
+    "sourceKeysUnique" -> keysUnique,
+    "numTargetFilesSkippedByStats" -> skippedByStats.toString,
+    "numColumnsEvolved" -> evolved.toString)
 }

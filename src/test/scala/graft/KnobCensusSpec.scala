@@ -34,6 +34,14 @@ class KnobCensusSpec extends AnyFunSuite {
     assert(readers.subsetOf(allowed), s"unexpected environment reads in ${readers -- allowed}")
   }
 
+  test("a MERGE step's metrics map is built in one place") {
+    // the insert-only and rewrite paths stage one map: the plan's
+    // decisions plus one block of counts
+    val text = mainSources.map(Files.readString).mkString("\n")
+    for (k <- Seq("numTargetRowsInserted", "numTargetFilesSkippedByStats", "sourceKeysUnique"))
+      assert(text.split(java.util.regex.Pattern.quote(s"\"$k\" ->"), -1).length == 2, k)
+  }
+
   test("log entries are built only by the transaction publish, append, create and clone") {
     // every other writer stages into VersionedTable.transaction, the one
     // place that pins, publishes, cleans up and retries

@@ -222,8 +222,18 @@ class VersionedTableSpec extends AnyFunSuite {
   }
 
   test("merge records its source, broadcast, join and uniqueness decisions") {
+    import org.apache.spark.storage.StorageLevel
     def lastMetrics(t: VersionedTable): Map[String, String] =
       t.history(1).select("operationMetrics").as[Map[String, String]].head()
+    // planning decides without writing: inside a transaction that stages
+    // nothing, no version is published and no data file appears
+    def plan(t: VersionedTable, m: MergeBuilder,
+             src: org.apache.spark.sql.DataFrame): MergePlan = {
+      val (v, files) = (t.currentVersion, dataFiles(t.root))
+      val p = t.transaction(tx => t.planMerge(tx, m, src))
+      assert(t.currentVersion == v && dataFiles(t.root) == files)
+      p
+    }
     // three files, so the source stats agg runs and fills the cache
     // before the broadcast decision reads its size
     val t = VersionedTable.create(spark,
@@ -234,9 +244,14 @@ class VersionedTableSpec extends AnyFunSuite {
     // the small cached source is broadcast into the left-outer rewrite
     val agg = Seq(("k1", 10), ("k1", 7), ("k3", 30)).toDF("key", "v")
       .groupBy("key").agg(min("v").as("minv")).alias("s")
-    t.alias("e").merge(agg, "e.key = s.key")
-      .whenMatchedUpdate(set = Map("val" -> "s.minv")).execute()
+    val update = t.alias("e").merge(agg, "e.key = s.key")
+      .whenMatchedUpdate(set = Map("val" -> "s.minv"))
+    // the merge persists an aggregate source itself; the plan alone does not
+    agg.persist(StorageLevel.MEMORY_AND_DISK)
+    val p1 = try plan(t, update, agg) finally agg.unpersist(true)
+    update.execute()
     val m1 = lastMetrics(t)
+    assert(p1.metrics.toSet.subsetOf(m1.toSet), s"plan ${p1.metrics} vs commit $m1")
     assert(m1("rewriteJoinType") == "left_outer")
     assert(m1("sourceCached") == "true")
     assert(m1("sourceBroadcast") == "true")
@@ -246,24 +261,49 @@ class VersionedTableSpec extends AnyFunSuite {
     // update + insert from a plain frame: full-outer rewrite, which a
     // broadcast hash join cannot run, and uniqueness from the count
     val plain = Seq(("k2", 20), ("k99", 99)).toDF("key", "v").alias("s")
-    t.alias("e").merge(plain, "e.key = s.key")
+    val upsert = t.alias("e").merge(plain, "e.key = s.key")
       .whenMatchedUpdate(set = Map("val" -> "s.v"))
       .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v"))
-      .execute()
+    val p2 = plan(t, upsert, plain)
+    upsert.execute()
     val m2 = lastMetrics(t)
+    assert(p2.metrics.toSet.subsetOf(m2.toSet), s"plan ${p2.metrics} vs commit $m2")
     assert(m2("rewriteJoinType") == "full_outer")
     assert(m2("sourceBroadcast") == "false")
     assert(m2("sourceCached") == "false")
     assert(m2("sourceKeysUnique") == "count")
 
     // insert-only: the anti-join path records its own join
-    t.alias("e").merge(Seq(("k100", 100)).toDF("key", "v").alias("s"), "e.key = s.key")
+    val one = Seq(("k100", 100)).toDF("key", "v").alias("s")
+    val insert = t.alias("e").merge(one, "e.key = s.key")
       .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v"))
-      .execute()
+    val p3 = plan(t, insert, one)
+    insert.execute()
     val m3 = lastMetrics(t)
+    assert(p3.metrics.toSet.subsetOf(m3.toSet), s"plan ${p3.metrics} vs commit $m3")
     assert(m3("insertOnly") == "true" && m3("rewriteJoinType") == "left_anti")
     assert(m3("sourceBroadcast") == "false")
     assert(t.read.count() == 32)
+
+    // plans no merge above exercises, never executed
+    val live = t.liveEntries
+    // a non-equi condition prunes nothing and cannot prove uniqueness
+    val theta = plan(t, t.alias("e").merge(plain, "e.val > s.v")
+      .whenMatchedUpdate(set = Map("val" -> "s.v")), plain)
+    assert(theta.candidates == live && theta.skippedByStats == 0)
+    assert(theta.keysUnique == "unchecked" && theta.joinType == "left_outer")
+    // a duplicate key: the count sees it, so the probe must check per row
+    val dup = Seq(("k1", 1), ("k1", 2)).toDF("key", "v").alias("s")
+    val dupPlan = plan(t, t.alias("e").merge(dup, "e.key = s.key")
+      .whenMatchedUpdate(set = Map("val" -> "s.v")), dup)
+    assert(dupPlan.keysUnique == "unchecked")
+    // ≤2 files: no stats agg runs, so nothing is skipped or counted
+    val small = VersionedTable.create(spark,
+      Seq(("k1", 1), ("k2", 2)).toDF("key", "val").coalesce(1), tmpDir() + "/tdecide2")
+    val tiny = plan(small, small.alias("e").merge(one, "e.key = s.key")
+      .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v")), one)
+    assert(tiny.candidates == small.liveEntries && tiny.skippedByStats == 0)
+    assert(tiny.keysUnique == "unchecked" && tiny.joinType == "left_anti")
   }
 
   test("an expensive merge source is unpersisted after the merge, also when it throws") {
@@ -616,7 +656,7 @@ class VersionedTableSpec extends AnyFunSuite {
   test("merge commit is pinned to its snapshot: a commit landing mid-merge forces a retry, never a stale rewrite") {
     // Deterministic interleaving (not a barrier race): the slow merge's
     // SOURCE blocks inside its first materialization — which happens
-    // strictly AFTER mergeBody's snapshot — until the fast merge has
+    // strictly AFTER the merge transaction's snapshot — until the fast merge has
     // fully committed. The slow body therefore straddles the fast commit,
     // exactly the window where a commit version read at COMMIT time
     // (instead of pinned at snapshot) would publish a rewrite of the
@@ -835,6 +875,19 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(m("numTargetRowsUpdated") == "1" && m("numTargetRowsInserted") == "1")
     intercept[IllegalArgumentException] { t.readChanges(v0).count() }
     assert(t.readChanges(v0, includeRewrites = true).filter($"k" === 60L).count() == 1)
+  }
+
+  test("a multi-step commit records -1 for a count any step could not measure") {
+    val t = kvTable("/txunmeasured")
+    val tx = new Txn(t, t.currentVersion, t.liveEntries, t.schema, Seq.empty)
+    // the first step's written file had an unreadable footer
+    tx.stage("MERGE", Seq.empty, Seq.empty,
+      Map("numTargetRowsInserted" -> "-1", "numTargetFilesAdded" -> "1"))
+    tx.stage("MERGE", Seq.empty, Seq.empty,
+      Map("numTargetRowsInserted" -> "5", "numTargetFilesAdded" -> "2"))
+    val m = tx.entry(0L).get.operationMetrics
+    assert(m("numTargetRowsInserted") == "-1", "an unmeasured step makes the sum unmeasured")
+    assert(m("numTargetFilesAdded") == "3")
   }
 
   test("a torn newest commit: reads fall back, writes refuse, recovery unblocks") {
