@@ -1542,7 +1542,7 @@ object SparkEntry {
     // Bloom-filter point lookup (ZOrderBloomSpec proves the file pruning;
     // this proves the pruned READ PATH loses no rows): orders shuffled
     // across 8 files so min/max stats cover every key, table created with
-    // parquet blooms on o_orderkey, then readWhereEquals on a key derived
+    // parquet blooms on o_orderkey, then a read filtered by a key derived
     // from the data itself. Scale: the probe is a footer-metadata read per
     // candidate file — the only rows scanned are the bloom survivors'.
     "q61_bloom_lookup" -> ((s, dir) => {
@@ -1558,7 +1558,7 @@ object SparkEntry {
       graft.ops.Caches.registeredRelease { () =>
         deleteRec(new java.io.File(path)); ()
       }
-      t.readWhereEquals("o_orderkey", probe)
+      t.read.filter(col("o_orderkey") === probe)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 2).as("total_price"))
         .orderBy("o_orderkey")
@@ -1579,7 +1579,7 @@ object SparkEntry {
       graft.ops.Caches.registeredRelease { () =>
         deleteRec(new java.io.File(path)); ()
       }
-      t.readWhereBetweenAll(("l_partkey", 100, 300), ("l_quantity", 10, 20))
+      t.read.filter(col("l_partkey").between(100, 300) && col("l_quantity").between(10, 20))
         .agg(count(lit(1)).as("n_rows"), round(sum("l_quantity"), 2).as("sum_qty"))
     }),
 

@@ -1,14 +1,15 @@
 package graft.tables
 
-import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
+import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampNTZType}
 import org.apache.spark.storage.StorageLevel
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -512,8 +513,8 @@ class VersionedTable private (val spark: SparkSession,
   def readVersion(v: Long): DataFrame = readAt(Some(v))
 
   private def readAt(asOf: Option[Long]): DataFrame = {
-    val (files, schema, _) = snapshot(asOf)
-    val df = readFileEntries(files, schema)
+    val (files, schema, partCols) = snapshot(asOf)
+    val df = readFiles(files, schema, partCols)
     aliasName.fold(df)(df.alias)
   }
 
@@ -561,8 +562,8 @@ class VersionedTable private (val spark: SparkSession,
       }
     }
     // schema of the target version (mergeSchema may have widened it)
-    val (_, schema, _) = snapshot(Some(to))
-    readFileEntries(changeFiles, schema)
+    val (_, schema, partCols) = snapshot(Some(to))
+    readFiles(changeFiles, schema, partCols)
   }
 
   /** Commit history, newest first (reference: DeltaTable.history —
@@ -647,8 +648,7 @@ class VersionedTable private (val spark: SparkSession,
     require(!VersionedTable.isTable(spark, destPath),
       s"$destPath is already a graft table")
     val dst = new VersionedTable(spark, destPath, None)
-    val referenced = files.map(fe =>
-      fe.copy(path = fs.makeQualified(new Path(dataDir, fe.path)).toString))
+    val referenced = files.map(fe => fe.copy(path = qualified(fe).toString))
     dst.commit(LogEntry(0L, now(), "CLONE", tableSchema.json, partCols,
       referenced, Seq.empty,
       Map("sourceTable" -> fs.makeQualified(new Path(root)).toString,
@@ -926,49 +926,51 @@ class VersionedTable private (val spark: SparkSession,
   private def footerInfo(file: Path): (Option[Map[String, FileColStats]], Long) =
     VersionedTable.footerInfoAt(file, spark.sparkContext.hadoopConfiguration)
 
-  /** Parquet's stat stringifier writes timestamps as ISO 'T' forms with
-    * micros and an optional zone suffix; normalize to epoch micros. */
-  private def tsMicros(raw: String): Long = {
-    var s = raw.trim
-    if (s.endsWith("Z")) s = s.dropRight(1)
-    // strip a numeric UTC offset like +05:00 / -0800 (never before index
-    // 10: the date part is exactly 10 chars and the time part has no +/-)
-    val cut = math.max(s.lastIndexOf('+'), s.lastIndexOf('-'))
-    if (cut > 10) s = s.substring(0, cut)
-    val t = java.sql.Timestamp.valueOf(s.replace('T', ' '))
-    math.floorDiv(t.getTime, 1000L) * 1000000L + (t.getNanos / 1000L) % 1000000L
+  /** Epoch micros of a timestamp stat or bound. A string (ISO 'T' or
+    * space form) honours an offset suffix — parquet writes UTC-adjusted
+    * stats as `...+0000` — and without one is wall-clock time in
+    * [[zoneOf]] the column type, never in the JVM's default zone. */
+  private def tsMicros(b: Any, zone: ZoneId): Long = {
+    val i = b match {
+      case t: Timestamp => t.toInstant
+      case i: Instant => i
+      case l: LocalDateTime => l.atZone(zone).toInstant
+      case other => val TsForm(local, offset) = other.toString.trim
+        LocalDateTime.parse(local.replace(' ', 'T'))
+          .atZone(Option(offset).map(ZoneOffset.of).getOrElse(zone)).toInstant
+    }
+    i.getEpochSecond * 1000000L + i.getNano / 1000L
   }
-  private def boundMicros(b: Any): Long = b match {
-    case t: Timestamp =>
-      math.floorDiv(t.getTime, 1000L) * 1000000L + (t.getNanos / 1000L) % 1000000L
-    case i: java.time.Instant => i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case other => tsMicros(other.toString)
-  }
+  /** TIMESTAMP: the session zone; TIMESTAMP_NTZ: UTC on both sides. */
+  private def zoneOf(dt: DataType): ZoneId =
+    if (dt == TimestampNTZType) ZoneOffset.UTC
+    else ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
   private def boundDate(b: Any): java.time.LocalDate = b match {
     case d: java.sql.Date => d.toLocalDate
     case d: java.time.LocalDate => d
     case other => java.time.LocalDate.parse(other.toString.trim.take(10))
   }
 
-  /** Type-aware comparison of a parquet footer stat string against a
-    * caller-supplied bound, under the column's DECLARED table type.
-    * None ⇒ not comparable (unparseable form, unsupported type) — the
-    * caller must conservatively keep the file. Fixes the lexical-compare
-    * hazard where e.g. a timestamp stat "2023-01-27T10:00:00.000000"
-    * compared against the bound string "2023-01-27 10:00:00" ('T' > ' ')
-    * silently skipped files that contained matching rows. */
-  private def cmpTyped(statStr: String, bound: Any, dt: DataType): Option[Int] =
+  /** Type-aware comparison of two values — parquet footer stat strings
+    * or caller-supplied bounds, in any mix — under the column's DECLARED
+    * table type. None ⇒ not comparable (unparseable form, unsupported
+    * type) — the caller must conservatively keep the file. Fixes the
+    * lexical-compare hazard where e.g. a timestamp stat
+    * "2023-01-27T10:00:00.000000" compared against the bound string
+    * "2023-01-27 10:00:00" ('T' > ' ') silently skipped files that
+    * contained matching rows. */
+  private def cmpTyped(a: Any, b: Any, dt: DataType): Option[Int] =
     try {
       import org.apache.spark.sql.types._
       dt match {
         case ByteType | ShortType | IntegerType | LongType |
              FloatType | DoubleType | _: DecimalType =>
-          Some(BigDecimal(statStr.trim).compare(BigDecimal(bound.toString.trim)))
-        case StringType => Some(statStr.compareTo(bound.toString))
-        case DateType =>
-          Some(java.time.LocalDate.parse(statStr.trim).compareTo(boundDate(bound)))
+          Some(BigDecimal(a.toString.trim).compare(BigDecimal(b.toString.trim)))
+        case StringType => Some(a.toString.compareTo(b.toString))
+        case DateType => Some(boundDate(a).compareTo(boundDate(b)))
         case TimestampType | TimestampNTZType =>
-          Some(java.lang.Long.compare(tsMicros(statStr), boundMicros(bound)))
+          val z = zoneOf(dt)
+          Some(java.lang.Long.compare(tsMicros(a, z), tsMicros(b, z)))
         case _ => None
       }
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -989,14 +991,14 @@ class VersionedTable private (val spark: SparkSession,
       case None => true
     })
 
-  /** The data-skipping rule every file-selecting operation shares (the
-    * skipping reads, DELETE, UPDATE and MERGE, as Delta applies one
-    * stats rule to queries and DML): a file survives only if its footer
-    * stats overlap EVERY `(column, lo, hi)` bound and, for an equality
-    * bound (`lo == hi`) on a declared bloom column, its parquet bloom
-    * filter might contain the value. Stats can't prune a point lookup on
-    * a uniformly-spread key — every file's [min,max] covers it — which is
-    * exactly where the bloom bites. The bloom probe is a footer-region
+  /** The data-skipping rule every file-selecting operation shares (every
+    * filtered read through [[LogFileIndex]], DELETE, UPDATE and MERGE, as
+    * Delta applies one stats rule to queries and DML): a file survives
+    * only if its footer stats overlap EVERY `(column, lo, hi)` bound and,
+    * for an equality bound (`lo == hi`) on a declared bloom column, its
+    * parquet bloom filter might contain the value. Stats can't prune a
+    * point lookup on a uniformly-spread key — every file's [min,max]
+    * covers it — which is exactly where the bloom bites. The bloom probe is a footer-region
     * metadata read per stats candidate, driver-side here; a deployment
     * with millions of candidates would run the same probe as an
     * executor-parallel job over the file list (Hudi's bloom-index tag
@@ -1016,38 +1018,6 @@ class VersionedTable private (val spark: SparkSession,
     (statsCand.filter(fe => blooms.forall { case (c, v, t) =>
       bloomMightContain(fe, c, v, t).getOrElse(true)
     }), statsCand.size)
-  }
-
-  /** Data-skipping read: scan only files whose footer stats overlap
-    * [lo, hi] on `colName`, then apply the exact filter. Equivalent to
-    * `read.filter(col between (lo, hi))` but bounded by the candidate
-    * file set — the per-file analogue of partition pruning, for columns
-    * the table is NOT partitioned by. */
-  def readWhereBetween(colName: String, lo: Any, hi: Any): DataFrame =
-    readWhereBetweenAll((colName, lo, hi))
-
-  /** Multi-column data-skipping read: the candidate set is the files
-    * that overlap EVERY predicate, then every exact filter is applied.
-    * With a [[compact]] `zOrderBy` layout this prunes on all z dimensions
-    * at once — the point of the z-curve. */
-  def readWhereBetweenAll(preds: (String, Any, Any)*): DataFrame = {
-    require(preds.nonEmpty, "readWhereBetweenAll needs at least one predicate")
-    readPruned(preds, preds.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) })
-  }
-
-  /** Point-lookup read: min/max stats pruning first, then each surviving
-    * file's parquet BLOOM filter is probed for the literal (when the
-    * table declares `bloom.filter.columns` covering `colName`) — see
-    * [[pruneFiles]]. */
-  def readWhereEquals(colName: String, value: Any): DataFrame =
-    readPruned(Seq((colName, value, value)), Seq(col(colName) === lit(value)))
-
-  /** One snapshot, then a scan of its [[pruneFiles]] candidates under
-    * the exact `filters`. */
-  private def readPruned(bounds: Seq[(String, Any, Any)], filters: Seq[Column]): DataFrame = {
-    val (files, schema, _) = snapshot(None)
-    val df = readFileEntries(pruneFiles(files, schema, bounds)._1, schema)
-    filters.foldLeft(aliasName.fold(df)(df.alias))(_ filter _)
   }
 
   /** Probe one file's parquet bloom filter(s) for `value`. Some(false) ⇒
@@ -1082,7 +1052,7 @@ class VersionedTable private (val spark: SparkSession,
             case StringType =>
               bf.hash(org.apache.parquet.io.api.Binary.fromString(value.toString))
             case DateType => bf.hash(boundDate(value).toEpochDay.toInt)
-            case TimestampType | TimestampNTZType => bf.hash(boundMicros(value))
+            case TimestampType | TimestampNTZType => bf.hash(tsMicros(value, zoneOf(dt)))
             case _ => return None
           }
           if (bf.findHash(hash)) any = true
@@ -1103,8 +1073,9 @@ class VersionedTable private (val spark: SparkSession,
     * With `clusterBy`, rewritten data is range-partitioned and sorted on
     * those columns: each output file then covers a TIGHT min/max range on
     * the LEADING column, which is what makes footer-stats skipping
-    * ([[readWhereBetween]]) and merge-target pruning bite on non-partition
-    * columns. A linear sort leaves trailing columns' per-file ranges wide.
+    * (every filtered read, DML and merge-target pruning) bite on
+    * non-partition columns. A linear sort leaves trailing columns'
+    * per-file ranges wide.
     *
     * With `zOrderBy` (mutually exclusive), files are laid out along a
     * Z-order space-filling curve over ALL the given columns (Delta's
@@ -1136,7 +1107,7 @@ class VersionedTable private (val spark: SparkSession,
     if (toCompact.nonEmpty) {
       val totalBytes = toCompact.map(_.sizeBytes).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-      val df = readFileEntries(toCompact, tableSchema)
+      val df = readFiles(toCompact, tableSchema, partCols)
       val packed =
         if (zOrderBy.nonEmpty) {
           val ZKey = "__graft_zkey"
@@ -1291,20 +1262,26 @@ class VersionedTable private (val spark: SparkSession,
     split(spark.sessionState.sqlParser.parseExpression(condition))
   }
 
-  /** Conservative per-column bounds implied by a DML predicate's
-    * top-level conjuncts, for stats-based file skipping: `c = 5` ⇒ [5,5],
+  /** Conservative per-column bounds implied by a predicate's top-level
+    * conjuncts, for stats-based file skipping: `c = 5` ⇒ [5,5],
     * `c > 5 AND c <= 9` ⇒ [5,9] (inequality edges kept inclusive — stats
-    * pruning may only over-approximate), `c IN (…literals)` ⇒ [min,max].
-    * Any shape it doesn't recognize (OR at the top, casts, functions,
-    * non-literal operands) contributes nothing; a parse failure returns
-    * no bounds at all — pruning is an optimization, never a guess. */
-  private def predicateBounds(condition: String): Seq[(String, Any, Any)] = {
+    * pruning may only over-approximate), `c IN (…literals)` ⇒ [min,max]
+    * under `c`'s type in `schema` (a literal's own type is the parser's
+    * guess in a DML condition). Takes parsed DML conditions
+    * ([[conjunctsOf]]) and the resolved data filters Catalyst pushes into
+    * a scan ([[LogFileIndex]]) alike. Any shape it doesn't recognize (OR
+    * at the top, casts, functions, `InSet`, non-literal operands, an IN
+    * whose values don't compare under the column's type) contributes
+    * nothing — pruning is an optimization, never a guess. */
+  private[tables] def boundsOf(conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+                               schema: StructType): Seq[(String, Any, Any)] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression => CExpr,
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression => CExpr,
       GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal => CLit}
     def colOf(e: CExpr): Option[String] = e match {
       case UnresolvedAttribute(Seq(c)) => Some(c)
+      case a: AttributeReference => Some(a.name)
       case _ => None
     }
     def valOf(e: CExpr): Option[Any] = e match {
@@ -1313,7 +1290,7 @@ class VersionedTable private (val spark: SparkSession,
       case _ => None
     }
     try {
-      conjunctsOf(condition)
+      conjuncts
         .flatMap {
           case EqualTo(a, b) =>
             colOf(a).zip(valOf(b)).map { case (c, v) => (c, v, v) } ++
@@ -1331,12 +1308,13 @@ class VersionedTable private (val spark: SparkSession,
             colOf(a).zip(valOf(b)).map { case (c, v) => (c, null, v) } ++
               colOf(b).zip(valOf(a)).map { case (c, v) => (c, v, null) }
           case In(a, list) if list.nonEmpty =>
-            val vs = list.map(valOf)
-            colOf(a).filter(_ => vs.forall(_.isDefined)).map { c =>
-              val sorted = vs.flatten
-              (c, sorted.reduceLeft((x, y) => if (statOrdered(x.toString, y.toString)) x else y),
-                sorted.reduceLeft((x, y) => if (statOrdered(x.toString, y.toString)) y else x))
-            }
+            val vs = list.flatMap(valOf)
+            for {
+              c <- colOf(a) if vs.size == list.size
+              dt <- schema.fields.find(_.name == c).map(_.dataType)
+              if vs.forall(cmpTyped(_, vs.head, dt).isDefined) // every value parses
+              sorted = vs.sortWith(cmpTyped(_, _, dt).exists(_ < 0))
+            } yield (c, sorted.head, sorted.last)
           case _ => Seq.empty
         }
     } catch { case scala.util.control.NonFatal(_) => Seq.empty }
@@ -1358,7 +1336,7 @@ class VersionedTable private (val spark: SparkSession,
     *    On a 100 TB table, deleting a user's rows for a takedown request
     *    becomes a sidecar write instead of a multi-TB rewrite. Readers
     *    apply the sidecar as a broadcast anti-join (see
-    *    [[readFileEntries]]); the next merge/compact touching a file
+    *    [[readFiles]]); the next merge/compact touching a file
     *    rewrites it clean and drops its vector, and [[vacuum]] reclaims
     *    unreferenced sidecars. DVs are for SMALL deletions by contract —
     *    a delete matching most of the table should rewrite instead.
@@ -1402,7 +1380,7 @@ class VersionedTable private (val spark: SparkSession,
     * probe → touched files → rewrite → stage. The probe is ONE DV-applied
     * job over the predicate's
     * [[pruneFiles]] candidates — recognized conjunct bounds (`=`, `<`,
-    * `<=`, `>`, `>=`, `IN`, see [[predicateBounds]]) skip files whose
+    * `<=`, `>`, `>=`, `IN`, see [[boundsOf]]) skip files whose
     * footer stats (and bloom filters, for equality on a declared bloom
     * column) prove no match, so a point delete on a clustered table reads
     * candidates, not the table. It yields exact per-file match counts;
@@ -1418,17 +1396,18 @@ class VersionedTable private (val spark: SparkSession,
     transaction { tx =>
       val (files, tableSchema) = (tx.files, tx.schema)
       val rewrite = project(tableSchema)
-      val (cand, _) = pruneFiles(files, tableSchema, predicateBounds(condition))
-      val matched = readFileEntries(cand, tableSchema, keepMeta = true)
+      val (cand, _) = pruneFiles(files, tableSchema, boundsOf(conjunctsOf(condition), tableSchema))
+      // cand is this condition's pruning: the index must not re-probe blooms
+      val matched = readFiles(cand, tableSchema, tx.partCols, keepMeta = true, skipping = false)
         .filter(expr(condition))
       // the sidecar write re-reads the matched rows
       if (deletionVectors) matched.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val touched = if (files.isEmpty) Seq.empty else touchedFiles(files,
+        val touched = if (cand.isEmpty) Seq.empty else touchedFiles(files,
           matched.groupBy(col(FileCol)).agg(count(lit(1))).collect()
             .map(r => (r.getString(0), r.getLong(1))).toSeq)
-        val rows = touched.map(_._3).sum
-        val entries = touched.map(_._2)
+        val rows = touched.map(_._2).sum
+        val entries = touched.map(_._1)
         val metrics = extraMetrics ++ Map(
           rowsKey -> rows.toString,
           "numTouchedFiles" -> entries.size.toString,
@@ -1436,15 +1415,11 @@ class VersionedTable private (val spark: SparkSession,
           "numFilesSkippedByStats" -> (files.size - cand.size).toString)
         if (touched.isEmpty) () // matched nothing: stage nothing
         else if (deletionVectors) {
-          // remap the scan's qualified paths to log-relative ones through
-          // a broadcast of the probe's OWN validated keys — the join can
-          // never miss, the strings come from the same scan
+          // remap the scan paths to log paths through a broadcast of the
+          // touched entries — the join can never miss, touchedFiles
+          // matched every probe path exactly
           val lookup = spark.createDataFrame(
-            java.util.Arrays.asList(touched.map { case (scanPath, fe, _) =>
-              org.apache.spark.sql.Row(scanPath, fe.path)
-            }: _*),
-            StructType(Seq(StructField(FileCol, StringType),
-              StructField("file", StringType))))
+            touched.map { case (fe, _) => (scanPath(fe), fe.path) }).toDF(FileCol, "file")
           val dvName = s"_dv/${UUID.randomUUID()}"
           val dvDir = new Path(dataDir, dvName)
           tx.written += dvName
@@ -1455,14 +1430,14 @@ class VersionedTable private (val spark: SparkSession,
           val sidecars = fs.listStatus(dvDir).map(_.getPath.getName)
             .filter(_.endsWith(".parquet")).sorted
             .map(n => s"$dvName/$n").toSeq
-          val updated = touched.map { case (_, fe, n) =>
+          val updated = touched.map { case (fe, n) =>
             fe.copy(dv = fe.dv ++ sidecars, dvRows = fe.dvRows + n)
           }
           // add-with-same-path REPLACES the entry on replay — the data
           // file stays live, only its DV reference set changes
           tx.stage(op, updated, Seq.empty, metrics)
         } else {
-          val added = writeIn(tx, rewrite(readFileEntries(entries, tableSchema)))
+          val added = writeIn(tx, rewrite(readFiles(entries, tableSchema, tx.partCols)))
           tx.stage(op, added, entries.map(_.path),
             metrics ++ Map(
               "numTargetFilesAdded" -> added.size.toString,
@@ -1473,17 +1448,17 @@ class VersionedTable private (val spark: SparkSession,
     }
 
   /** The probe → touched-files step of DELETE, UPDATE and MERGE: maps
-    * each collected (qualified scan path, count) row to the live entry it
-    * names (see [[relativize]]).
-    * @return (scan path, entry, count) per touched file, in snapshot
-    *         order */
+    * each collected (scan path, count) row to the live entry whose
+    * [[scanPath]] it is. A path that names no live entry throws — read
+    * as untouched, its matched rows would silently survive.
+    * @return (entry, count) per touched file, in snapshot order */
   private def touchedFiles(files: Seq[FileEntry],
-                           perFile: Seq[(String, Long)]): Seq[(String, FileEntry, Long)] = {
-    val qualify = files.map(fe =>
-      fs.makeQualified(new Path(dataDir, fe.path)).toString -> fe.path).toMap
-    val known = qualify.values.toSet
-    val byRel = perFile.map { case (q, n) => relativize(q, qualify, known) -> (q, n) }.toMap
-    files.flatMap(fe => byRel.get(fe.path).map { case (q, n) => (q, fe, n) })
+                           perFile: Seq[(String, Long)]): Seq[(FileEntry, Long)] = {
+    val byScan = files.map(fe => scanPath(fe) -> fe).toMap
+    val counts = perFile.map { case (p, n) =>
+      byScan.getOrElse(p, throw new IllegalStateException(s"unknown file in scan: $p")).path -> n
+    }.toMap
+    files.flatMap(fe => counts.get(fe.path).map(n => (fe, n)))
   }
 
   // -------------------------------------------------------------- merge --
@@ -1497,7 +1472,7 @@ class VersionedTable private (val spark: SparkSession,
   private[tables] def mergeIn(tx: Txn, source: DataFrame, condition: String): MergeBuilder =
     new MergeBuilder(this, aliasName.getOrElse("existing"), source, condition, Some(tx))
   private[tables] def readIn(tx: Txn): DataFrame = {
-    val df = readFileEntries(tx.files, tx.schema)
+    val df = readFiles(tx.files, tx.schema, tx.partCols)
     aliasName.fold(df)(df.alias)
   }
 
@@ -1580,84 +1555,46 @@ class VersionedTable private (val spark: SparkSession,
     } catch { case scala.util.control.NonFatal(_) => (Seq.empty, false) }
   }
 
-  /** Read a specific live-file subset with the table schema, applying any
-    * deletion vectors the entries carry. `keepMeta=true` additionally
-    * exposes [[VersionedTable.FileCol]] (the file's `_metadata.file_path`)
-    * and [[VersionedTable.RowIdxCol]] (`_metadata.row_index`) as regular
-    * columns — callers that need row identity (the merge probe) must take
-    * them from here, because once the DV anti-join has run, `_metadata`
-    * itself no longer resolves on the returned plan.
-    *
-    * DV application is a LEFT ANTI join against the union of the scanned
-    * entries' sidecars on (relative path, row index), with the sidecar
-    * side broadcast — deletion vectors are tiny by contract (a delete
-    * touching most rows should rewrite instead). Entries without DVs pay
-    * nothing: the fast path is byte-identical to a plain parquet scan, so
-    * existing plans (pushdown, pruning, codegen) are unchanged. The
-    * relative path on the scan side is `file_path` minus the qualified
-    * data-dir prefix — the same invariant [[relativize]] (and thus MERGE
-    * correctness) already rests on. */
-  private def readFileEntries(entries: Seq[FileEntry], tableSchema: StructType,
-                              keepMeta: Boolean = false): DataFrame = {
-    if (entries.isEmpty) {
-      // keepMeta callers (DML probes) group on the file-identity columns
-      // even when pruning left zero candidates — the empty frame must
-      // still carry them
-      val sch = if (!keepMeta) tableSchema
-        else StructType(tableSchema.fields ++ Seq(
-          StructField(FileCol, StringType, nullable = true),
-          StructField(RowIdxCol, LongType, nullable = true)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-    }
-    // A shallow clone's entries reference files OUTSIDE this table's data
-    // dir by qualified URI. Each scan's basePath must be an ancestor of
-    // every file it lists (and anchor hive partition-dir inference even
-    // when all listed files share one partition value), so entries are
-    // grouped by their owning data root — recovered for absolute paths by
-    // stripping the filename plus one component per partition level — and
-    // scanned per group, unioned. Local tables stay a single scan.
-    def ownerBase(fe: FileEntry): String = {
-      val p = new Path(fe.path)
-      if (p.toUri.getScheme == null && !p.isAbsolute) dataDir.toString
-      else (0 to fe.partitionValues.size).foldLeft(p)((q, _) => q.getParent).toString
-    }
-    val dvPaths = entries.flatMap(_.dv).distinct
-    // _metadata does not propagate through a Union — project the file
-    // identity columns inside each per-base scan when they're needed
-    val needMeta = keepMeta || dvPaths.nonEmpty
-    val base = entries.groupBy(ownerBase).toSeq.sortBy(_._1)
-      .map { case (b, es) =>
-        val scan = spark.read.schema(tableSchema)
-          .option("basePath", b)
-          .parquet(es.map(fe => new Path(dataDir, fe.path).toString): _*)
-        if (!needMeta) scan
-        else scan
-          .withColumn(FileCol, col("_metadata.file_path"))
-          .withColumn(RowIdxCol, col("_metadata.row_index"))
-          .drop("_metadata")
-      }.reduce(_ unionByName _)
-    if (dvPaths.isEmpty && !keepMeta) base
-    else {
-      val withMeta = base
-      val applied =
-        if (dvPaths.isEmpty) withMeta
-        else {
-          val prefix = fs.makeQualified(dataDir).toString + "/"
-          val dv = spark.read.schema(DvSchema)
-            .parquet(dvPaths.map(p => new Path(dataDir, p).toString): _*)
-          // log-relative for files under this table's data dir; for
-          // entries referencing files OUTSIDE it (a shallow clone), the
-          // log path IS the qualified URI, so the raw scan path matches
-          val rel = when(col(FileCol).startsWith(prefix),
-            substring(col(FileCol), prefix.length + 1, Int.MaxValue))
-            .otherwise(col(FileCol))
-          withMeta.join(broadcast(dv),
-            rel === dv("file") && col(RowIdxCol) === dv("row_idx"),
-            "left_anti")
-        }
-      if (keepMeta) applied else applied.drop(FileCol, RowIdxCol)
-    }
+  /** The one read path: `entries` as ONE relation over a
+    * [[LogFileIndex]], with their deletion vectors applied. The frame has
+    * the table's columns, partition columns last and every field nullable
+    * (a parquet source's read schema). `keepMeta=true` also exposes
+    * [[VersionedTable.FileCol]] (`_metadata.file_path`, i.e. [[scanPath]])
+    * and [[VersionedTable.RowIdxCol]] (`_metadata.row_index`) as columns
+    * for the DML and merge probes: after the DV anti-join `_metadata` no
+    * longer resolves. DVs apply as a LEFT ANTI join against the entries'
+    * sidecars on (scan path, row index), the sidecar side broadcast — DVs
+    * are tiny by contract (a delete touching most rows should rewrite
+    * instead). Entries without DVs pay nothing: the plan is the bare scan.
+    * `skipping=false` lists `entries` without pruning them again, for a
+    * caller that already ran [[pruneFiles]] on the filter it applies. */
+  private def readFiles(entries: Seq[FileEntry], schema: StructType, partCols: Seq[String],
+                        keepMeta: Boolean = false, skipping: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val nullable = org.apache.spark.sql.GraftColumnBridge.asNullable(schema)
+    val partSchema = StructType(partCols.map(nullable(_)))
+    val scan = spark.baseRelationToDataFrame(HadoopFsRelation(
+      new LogFileIndex(this, entries, schema, partSchema, skipping), partSchema,
+      StructType(nullable.filterNot(f => partCols.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(spark))
+    val withDv = entries.filter(_.dv.nonEmpty)
+    if (withDv.isEmpty && !keepMeta) return scan
+    val withMeta = scan
+      .withColumn(FileCol, col("_metadata.file_path"))
+      .withColumn(RowIdxCol, col("_metadata.row_index"))
+    val applied =
+      if (withDv.isEmpty) withMeta
+      else {
+        // a sidecar row names its file by log path: join in the scan path
+        val dv = spark.read.schema(DvSchema)
+          .parquet(withDv.flatMap(_.dv).distinct.map(p => new Path(dataDir, p).toString): _*)
+          .join(spark.createDataFrame(withDv.map(fe => (fe.path, scanPath(fe))))
+            .toDF("file", "scan"), "file")
+        withMeta.join(broadcast(dv),
+          col(FileCol) === dv("scan") && col(RowIdxCol) === dv("row_idx"), "left_anti")
+      }
+    if (keepMeta) applied else applied.drop(FileCol, RowIdxCol)
   }
 
   /** Plan one MERGE step: the only place a MERGE decides anything — the
@@ -1866,8 +1803,12 @@ class VersionedTable private (val spark: SparkSession,
         // special-cases insert-only merges the same way.) The anti-join
         // reads only the stats-candidate files: rows in skipped files
         // cannot equal any source key, so they cannot absorb inserts.
-        val target = readFileEntries(plan.candidates, plan.schema).alias(alias)
-        val unmatched = src.join(target, cond, "left_anti")
+        // with every file pruned the empty target would be broadcast and
+        // each source partition write its own files; the sort-merge join
+        // shuffles the inserts by key instead, and AQE packs them
+        val target = readFiles(plan.candidates, plan.schema, tx.partCols).alias(alias)
+        val unmatched = src.join(if (plan.candidates.isEmpty) target.hint("merge") else target,
+          cond, "left_anti")
         val toInsert = m.insert.get.cond.fold(unmatched)(c => unmatched.filter(expr(c)))
         val added = labeled("merge: insert-only anti-join + write") {
           writeIn(tx, toInsert.select(dataCols.map(f => insertValue(f).as(f.name)): _*))
@@ -1894,7 +1835,7 @@ class VersionedTable private (val spark: SparkSession,
             // cannot contain matched rows and are untouched by
             // construction. keepMeta supplies file/row-index identity
             // (after a DV anti-join, _metadata no longer resolves)
-            val t = readFileEntries(plan.candidates, plan.schema, keepMeta = true).alias(alias)
+            val t = readFiles(plan.candidates, plan.schema, tx.partCols, keepMeta = true).alias(alias)
             val matched = t.join(if (plan.sourceSmall) broadcast(src) else src, cond, "inner")
             val perFile =
               if (plan.keysUnique == "unchecked") {
@@ -1914,11 +1855,11 @@ class VersionedTable private (val spark: SparkSession,
                 labeled("merge: touched-file probe") {
                   matched.select(col(FileCol)).distinct().collect()
                 }.map(r => (r.getString(0), 1L))
-            touchedFiles(files, perFile.toSeq).map(_._2)
+            touchedFiles(files, perFile.toSeq).map(_._1)
           }
 
         // --- 2. rewrite touched files + insert unmatched source rows ----
-        val t = readFileEntries(touched, plan.schema).withColumn(TPresent, lit(true)).alias(alias)
+        val t = readFiles(touched, plan.schema, tx.partCols).withColumn(TPresent, lit(true)).alias(alias)
         val s = (if (plan.rewriteBroadcast) broadcast(src) else src)
           .withColumn(SPresent, lit(true))
         val joined = t.join(s, cond, plan.joinType)
@@ -1995,39 +1936,31 @@ class VersionedTable private (val spark: SparkSession,
 
   // ------------------------------------------------------------- helpers --
 
-  private def partitionValuesOf(relPath: String): Map[String, String] =
-    relPath.split('/').dropRight(1).flatMap { seg =>
-      val i = seg.indexOf('=')
-      if (i <= 0) None
-      else Some(seg.substring(0, i) ->
-        URLDecoder.decode(seg.substring(i + 1), "UTF-8"))
-    }.toMap
+  private lazy val qualifiedDataDir = fs.makeQualified(dataDir)
 
-  /** `_metadata.file_path` yields fully-qualified URIs; log entries store
-    * paths relative to the data dir. Strip the qualified data-dir prefix —
-    * O(1) per path, no linear scan over the table's file list. The result
-    * MUST resolve to a known live file: a silently non-matching relative
-    * path (e.g. percent-encoded partition values escaping differently)
-    * would classify a matched file as untouched and keep stale rows, so
-    * unknown results are an error, after trying a URL-decoded form. */
-  private def relativize(qualified: String, map: Map[String, String],
-                         known: Set[String]): String =
-    map.getOrElse(qualified, {
-      val prefix = fs.makeQualified(dataDir).toString + "/"
-      if (qualified.startsWith(prefix)) {
-        val rel = qualified.stripPrefix(prefix)
-        if (known.contains(rel)) rel
-        else {
-          val dec = URLDecoder.decode(rel, "UTF-8")
-          if (known.contains(dec)) dec
-          else throw new IllegalStateException(s"unknown file in scan: $qualified")
-        }
-      } else throw new IllegalStateException(s"unknown file in scan: $qualified")
-    })
+  /** The fully-qualified path of `fe`: relative log paths resolve under
+    * the data dir, a shallow clone's referenced URIs stand as they are. */
+  private[tables] def qualified(fe: FileEntry): Path = new Path(qualifiedDataDir, fe.path)
+
+  /** The URI string a scan of `fe` hands Spark, exactly what its rows
+    * report as `_metadata.file_path`: the one map from scan rows to log
+    * entries (percent-encoded, unlike the log's form). */
+  private def scanPath(fe: FileEntry): String = qualified(fe).toUri.toString
 }
 
 object VersionedTable {
   private val LogDirName = "_graft_log"
+  /** Partition values of a file from its path's `k=v` dirs, unescaped as
+    * Spark's writer escaped them (a URL decode would read `+` as a
+    * space); the last of a repeated key wins, so a shallow clone's
+    * absolute path yields its own partition dirs. */
+  private[tables] def partitionValuesOf(path: String): Map[String, String] =
+    path.split('/').dropRight(1).flatMap { seg =>
+      val i = seg.indexOf('=')
+      if (i <= 0) None
+      else Some(seg.substring(0, i) ->
+        ExternalCatalogUtils.unescapePathName(seg.substring(i + 1)))
+    }.toMap
   /** Commits between snapshot checkpoints (Delta uses 10 as well). */
   private[tables] val CheckpointInterval = 10L
   /** A merge source whose cached size is at most this gets the broadcast
@@ -2069,7 +2002,8 @@ object VersionedTable {
     * [[VersionedTable#statsForMoved]]). */
   private[tables] val ExecutorStatsFileThreshold = 256
   /** Table property: comma-separated columns to write parquet bloom
-    * filters on (see [[VersionedTable.create]] / readWhereEquals). */
+    * filters on (see [[VersionedTable.create]]); an equality filter on
+    * one probes them (see pruneFiles). */
   val BloomColsProp = "bloom.filter.columns"
   /** Table property: expected distinct values per file for bloom sizing. */
   val BloomNdvProp = "bloom.filter.ndv"
@@ -2081,23 +2015,13 @@ object VersionedTable {
   private val DvSchema = StructType(Seq(
     StructField("file", StringType, nullable = false),
     StructField("row_idx", LongType, nullable = false)))
+  /** A timestamp string: the local date-time, then an optional offset. */
+  private val TsForm = """(\d{4}-\d\d-\d\d[T ][^+Z-]*)(Z|[+-]\d\d:?\d\d)?""".r
   private val TPresent = "__graft_t_present"
   private val SPresent = "__graft_s_present"
   private implicit val fmts: Formats = DefaultFormats
 
   private def now(): Long = System.currentTimeMillis()
-
-  /** "a ≤ b" under numeric comparison when both sides parse as numbers,
-    * lexical otherwise — only for merging SAME-column parquet stat
-    * strings (same stringifier on both sides; ISO date/timestamp forms
-    * are fixed-width, so lexical order is value order there). */
-  private[tables] def statOrdered(a: String, b: String): Boolean =
-    (statNum(a), statNum(b)) match {
-      case (Some(x), Some(y)) => x <= y
-      case _ => a <= b
-    }
-  private[tables] def statNum(s: String): Option[BigDecimal] =
-    try Some(BigDecimal(s)) catch { case _: Throwable => None }
 
   /** Column min/max/null stats AND row count from the parquet footer of
     * one file — metadata-only, no data read. STATIC (no session state)
@@ -2113,7 +2037,10 @@ object VersionedTable {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         var rowCount = 0L
-        val acc = scala.collection.mutable.Map[String, FileColStats]()
+        // per column: min/max merged across row groups in parquet's own
+        // column order (a string column's "10" sorts before "9"), nulls
+        val acc = scala.collection.mutable.Map[String,
+          (org.apache.parquet.column.statistics.Statistics[_], Long)]()
         // columns with any row group whose rows are NOT fully accounted
         // for (min/max present, or provably all-NULL) must carry NO stats
         // entry at all — e.g. INT96 timestamps, where parquet suppresses
@@ -2130,33 +2057,20 @@ object VersionedTable {
               (st.isNumNullsSet && st.getNumNulls == block.getRowCount))
           if (!covered) untracked += name
           else {
-            val has = st.hasNonNullValue
             // getNumNulls is -1 when the null count wasn't recorded —
             // clamp so a garbage negative never reaches the commit log
             val nulls = math.max(0L, st.getNumNulls)
-            val cur = acc.get(name)
-            val next = cur match {
-              case None =>
-                FileColStats(if (has) st.minAsString else "",
-                  if (has) st.maxAsString else "", nulls, has)
-              case Some(p) =>
-                // merge across row groups: widen min/max, add nulls
-                val mn = (p.hasMinMax, has) match {
-                  case (true, true) => if (statOrdered(st.minAsString, p.min)) st.minAsString else p.min
-                  case (true, false) => p.min
-                  case (false, _) => if (has) st.minAsString else ""
-                }
-                val mx = (p.hasMinMax, has) match {
-                  case (true, true) => if (statOrdered(p.max, st.maxAsString)) st.maxAsString else p.max
-                  case (true, false) => p.max
-                  case (false, _) => if (has) st.maxAsString else ""
-                }
-                FileColStats(mn, mx, p.nullCount + nulls, p.hasMinMax || has)
+            acc(name) = acc.get(name) match {
+              case None => (st.copy(), nulls)
+              case Some((m, n)) => m.mergeStatistics(st); (m, n + nulls)
             }
-            acc(name) = next
           }
         }
-        val ok = acc.toMap -- untracked
+        val ok = (acc.toMap -- untracked).map { case (name, (m, nulls)) =>
+          val has = m.hasNonNullValue
+          name -> FileColStats(if (has) m.minAsString else "",
+            if (has) m.maxAsString else "", nulls, has)
+        }
         (if (ok.isEmpty) None else Some(ok), rowCount)
       } finally reader.close()
     } catch { case _: Throwable => (None, -1L) }

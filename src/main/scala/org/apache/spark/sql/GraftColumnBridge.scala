@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to Spark's `private[sql]` Column ↔ Expression conversions, so
   * graft's native Catalyst expressions (graft.expressions.*) can be used
@@ -11,6 +12,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `schema` with every field nullable, nested ones included — the read
+    * schema a file source reports (`StructType.asNullable` is
+    * `private[spark]`). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
   /** Release the block-manager storage behind a `localCheckpoint`ed
     * Dataset. `Dataset.unpersist` only releases entries in the cache
@@ -32,26 +38,20 @@ object GraftColumnBridge {
     * the flag set (Spark's FileStreamSource builds
     * `LogicalRelation(..., isStreaming = true)`), which is exactly what
     * this does after the fact for a frame built through the normal
-    * reader. Handles the two leaf shapes graft change-frames produce:
-    * parquet scans (LogicalRelation, possibly several under a Union for
-    * multi-root clones) and the empty-batch frame (LogicalRDD). */
+    * reader: a graft change-frame is one file relation (LogicalRelation),
+    * empty batches included. */
   def asStreamingBatch(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.LeftAnti
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
     def retag(plan: LogicalPlan): LogicalPlan = plan match {
       case j: Join if j.joinType == LeftAnti =>
         // deletion-vector sidecars are applied as a LeftAnti against a
-        // broadcast dv scan (VersionedTable.readFileEntries): the dv
+        // broadcast dv scan (VersionedTable.readFiles): the dv
         // side must STAY a batch relation — stream-STATIC left-anti is
         // a supported streaming join, stream-stream left-anti is not
         j.copy(left = retag(j.left))
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
         if !lr.isStreaming => lr.copy(isStreaming = true)
-      case rdd: org.apache.spark.sql.execution.LogicalRDD
-        if !rdd.isStreaming && rdd.rdd.partitions.isEmpty =>
-        // the empty-batch frame: an empty streaming LocalRelation with
-        // the same output is the identical relation, flag included
-        LocalRelation(rdd.output, Seq.empty, isStreaming = true)
       case other => other.mapChildren(retag)
     }
     classic.Dataset.ofRows(

@@ -42,6 +42,19 @@ class KnobCensusSpec extends AnyFunSuite {
       assert(text.split(java.util.regex.Pattern.quote(s"\"$k\" ->"), -1).length == 2, k)
   }
 
+  test("table data files are read only through the log's file index") {
+    // the one parquet read left in the table layer is the deletion-vector
+    // sidecar's; the readWhere* helpers are gone — a filter prunes
+    val tables = root.resolve("graft").resolve("tables")
+    val reads = mainSources.filter(_.startsWith(tables))
+      .map(f => "spark\\.read".r.findAllIn(Files.readString(f)).size).sum
+    assert(reads == 1)
+    val main = root.getParent
+    val helpers = Files.walk(main).iterator().asScala.filter(Files.isRegularFile(_))
+      .filter(f => Files.readString(f).contains("readWhere")).toSeq
+    assert(helpers.isEmpty, helpers.mkString(", "))
+  }
+
   test("log entries are built only by the transaction publish, append, create and clone") {
     // every other writer stages into VersionedTable.transaction, the one
     // place that pins, publishes, cleans up and retries

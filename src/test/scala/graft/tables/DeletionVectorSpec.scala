@@ -58,6 +58,19 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(t.history().select("operation").as[String].collect().head === "DELETE")
   }
 
+  test("dv delete applies on escaped partition values") {
+    // p = 'a:0' is written as the directory p=a%3A0, whose scan path
+    // encodes the '%' again
+    val root = tmpDir() + "/t"
+    val t = VersionedTable.create(spark,
+      baseDf.withColumn("p", concat(lit("a:"), col("id") % 2)).repartition(4), root, Seq("p"))
+    assert(new java.io.File(root, "data/p=a%3A0").isDirectory)
+    assert(t.delete("grp = 7", deletionVectors = true) === 100)
+    assert(t.read.count() === 1900)
+    assert(t.read.filter(col("grp") === 7).count() === 0)
+    assert(t.read.filter(col("p") === "a:1").count() === 900)
+  }
+
   test("dv deletes accumulate; re-deleting dead rows is a no-op") {
     val t = VersionedTable.create(spark, baseDf.repartition(4), tmpDir() + "/t")
     assert(t.delete("grp = 1", deletionVectors = true) === 100)
@@ -73,9 +86,10 @@ class DeletionVectorSpec extends AnyFunSuite {
     val t = VersionedTable.create(spark, baseDf.repartition(4), root,
       properties = Map(VersionedTable.BloomColsProp -> "id"))
     t.delete("id = 500", deletionVectors = true)
-    assert(t.readWhereEquals("id", 500L).count() === 0)
-    assert(t.readWhereBetween("id", 490, 510).count() === 20)
-    assert(t.readWhereBetweenAll(("id", 490L, 510L), ("v", 0L, 99999L)).count() === 20)
+    assert(t.read.filter(col("id") === 500L).count() === 0)
+    assert(t.read.filter(col("id").between(490, 510)).count() === 20)
+    assert(t.read.filter(col("id").between(490L, 510L) && col("v").between(0L, 99999L))
+      .count() === 20)
   }
 
   test("merge rewrite of a dv'd file drops the vector and resurrects nothing") {

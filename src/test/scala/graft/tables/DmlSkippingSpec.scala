@@ -62,6 +62,30 @@ class DmlSkippingSpec extends AnyFunSuite {
     assert(t.read.count() === 19997)
   }
 
+  test("IN bounds order their values under the column's type") {
+    // string keys clustered lexically: one file holds "10".."19", whose
+    // max "19" sorts below "9" — a numeric [9, 10] bound would skip it
+    val keys = (0 until 100).map(_.toString) ++ Seq("-1", "-2", "-10")
+    val t = VersionedTable.create(spark,
+      keys.toDF("s").repartitionByRange(8, $"s"), tmpDir() + "/t")
+    assert(t.liveEntries.size >= 4, s"need a multi-file layout: ${t.liveEntries.size}")
+    for (vs <- Seq(Seq("10", "9"), Seq("-1", "-2"), Seq("19", "2", "-10"))) {
+      val read = t.read.filter($"s".isin(vs: _*))
+      assert(read.as[String].collect().toSet == vs.toSet, vs)
+      val (lo, hi) = (vs.min, vs.max) // text order, as the column compares
+      assert(Candidates.scanned(read) == Candidates(t, "s", lo, hi)._1.size, vs)
+    }
+    assert(t.delete("s IN ('10', '9')") === 2L)
+    assert(t.delete("s IN ('-1', '-2')", deletionVectors = true) === 2L)
+    assert(t.read.count() === keys.size - 4)
+
+    // a numeric column with string literals: the parser's type is a guess
+    val n = VersionedTable.create(spark, baseDf.repartition(8), tmpDir() + "/n")
+    n.compact(targetBytes = 48 * 1024, clusterBy = Seq("id"))
+    assert(n.delete("id IN ('10', '9', '12000')") === 3L)
+    assert(lastMetrics(n)("numFilesSkippedByStats").toInt > 0)
+  }
+
   test("bloom equality prunes what min/max cannot (shuffled layout)") {
     // shuffled: every file's [min,max] spans the whole id range, so only
     // the bloom can skip
@@ -99,7 +123,9 @@ class DmlSkippingSpec extends AnyFunSuite {
     t.compact(targetBytes = 16 * 1024, clusterBy = Seq("id"))
     val (readCand, _, total) = Candidates(t, "id", 12345L, 12345L)
     assert(readCand.size < total, s"the read must prune: ${readCand.size} of $total")
-    assert(t.readWhereEquals("id", 12345L).count() === 1L)
+    val lookup = t.read.filter(col("id") === 12345L)
+    assert(lookup.count() === 1L)
+    assert(Candidates.scanned(lookup) === readCand.size)
     assert(t.delete("id = 12345") === 1L)
     assert(lastMetrics(t)("numFilesSkippedByStats").toInt === total - readCand.size)
     assert(t.read.count() === 19999)

@@ -363,8 +363,9 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(total >= 8, s"expected >=8 files, got $total")
     assert(cand.size < total,
       s"stats should prune files: kept ${cand.size} of $total")
-    // pruned read ≡ full filter
-    val pruned = t.readWhereBetween("id", 100, 200)
+    // pruned read ≡ full filter, and the scan reads exactly the candidates
+    val pruned = t.read.filter($"id".between(100, 200))
+    assert(Candidates.scanned(pruned) == cand.size)
     assert(pruned.count() == 101)
     assert(pruned.agg(org.apache.spark.sql.functions.min("id"),
       org.apache.spark.sql.functions.max("id")).collect()(0).toSeq == Seq(100L, 200L))
@@ -393,26 +394,188 @@ class VersionedTableSpec extends AnyFunSuite {
     // timestamp bounds as string, java.sql.Timestamp, and Instant
     val lo = "2023-01-10 00:00:00"
     val hi = "2023-01-12 23:00:00"
-    val expected = t.read.filter($"ts".between(lo, hi)).count()
+    // expected counts come from the source frame: every table read prunes
+    val expected = df.filter($"ts".between(lo, hi)).count()
     assert(expected == 72)
-    assert(t.readWhereBetween("ts", lo, hi).count() == expected)
-    assert(t.readWhereBetween("ts",
-      java.sql.Timestamp.valueOf(lo), java.sql.Timestamp.valueOf(hi)).count() == expected)
+    assert(t.read.filter($"ts".between(lo, hi)).count() == expected)
+    assert(t.read.filter($"ts".between(
+      java.sql.Timestamp.valueOf(lo), java.sql.Timestamp.valueOf(hi))).count() == expected)
 
     // date bounds
-    val dExpected = t.read.filter($"d".between("2023-01-10", "2023-01-12")).count()
-    assert(t.readWhereBetween("d", "2023-01-10", "2023-01-12").count() == dExpected)
-    assert(t.readWhereBetween("d",
-      java.sql.Date.valueOf("2023-01-10"), java.sql.Date.valueOf("2023-01-12")).count() == dExpected)
+    val dExpected = df.filter($"d".between("2023-01-10", "2023-01-12")).count()
+    assert(t.read.filter($"d".between("2023-01-10", "2023-01-12")).count() == dExpected)
+    assert(t.read.filter($"d".between(
+      java.sql.Date.valueOf("2023-01-10"), java.sql.Date.valueOf("2023-01-12"))).count() == dExpected)
 
     // decimal bounds
-    val aExpected = t.read.filter($"amt".between(1.0, 2.0)).count()
-    assert(t.readWhereBetween("amt", "1.00", "2.00").count() == aExpected)
+    val aExpected = df.filter($"amt".between(1.0, 2.0)).count()
+    assert(t.read.filter($"amt".between("1.00", "2.00")).count() == aExpected)
 
     // and skipping still actually prunes on the typed column when stats
     // are usable (conservative keep-all is correct but notes the miss)
     val (cand, _, total) = Candidates(t, "ts", lo, hi)
     assert(cand.size <= total)
+  }
+
+  test("timestamp stats are compared as instants, whatever the JVM's default zone") {
+    val path = tmpDir() + "/ttz"
+    val df = spark.range(0, 48).selectExpr("id",
+      "timestamp'2023-01-01 00:00:00' + make_interval(0,0,0,0,cast(id AS int),0,0) AS ts")
+      .repartitionByRange(4, $"id")
+    val t = VersionedTable.create(spark, df, path)
+    // footer stats carry a +0000 offset: read as wall-clock time eight
+    // hours west, every file's range would shift past rows it holds
+    val jvm = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/Los_Angeles"))
+    try {
+      for (bound <- Seq("2023-01-01 03:00:00", "2023-01-01 13:00:00", "2023-01-02 20:00:00")) {
+        val lookup = t.read.filter($"ts" <= bound)
+        assert(lookup.count() == df.filter($"ts" <= bound).count(), bound)
+      }
+      // a DML bound is a typed literal: the first file must not be skipped
+      assert(t.delete("ts <= timestamp'2023-01-01 03:00:00'") == 4)
+    } finally java.util.TimeZone.setDefault(jvm)
+  }
+
+  test("partitioned reads: partition-only, mixed and NULL partition filters prune from the log") {
+    val path = tmpDir() + "/tpart"
+    // 3 partition values (one NULL, two with a '+' the writer leaves
+    // unescaped) × 4 id-range files each
+    val df = spark.range(0, 600).selectExpr("id",
+      "cast(id AS string) AS s",
+      "CASE WHEN id % 3 = 0 THEN NULL ELSE concat('a+', id % 3) END AS p")
+    val t = VersionedTable.create(spark, df.repartitionByRange(4, $"id"), path, Seq("p"))
+    val byPart = t.liveEntries.groupBy(_.partitionValues("p"))
+    assert(byPart.keySet == Set("a+1", "a+2", "__HIVE_DEFAULT_PARTITION__"))
+    assert(byPart.values.forall(_.size == 4))
+
+    // partition-only: the other partitions' files are never listed
+    val onlyA1 = t.read.filter($"p" === "a+1")
+    assert(Candidates.scanned(onlyA1) == 4)
+    assert(onlyA1.collect().toSet == df.filter($"p" === "a+1").collect().toSet)
+
+    // mixed: partition filter, then stats pruning inside the partition
+    val mixed = t.read.filter($"p" === "a+1" && $"id" < 100)
+    val statsCand = t.pruneFiles(byPart("a+1"), t.schema, Seq(("id", null, 99L)))._1
+    assert(statsCand.size < 4, s"id < 100 must prune inside the partition: ${statsCand.size}")
+    assert(Candidates.scanned(mixed) == statsCand.size)
+    assert(mixed.collect().toSet == df.filter($"p" === "a+1" && $"id" < 100).collect().toSet)
+
+    // NULL partition value: reads as NULL, selected only by IS NULL
+    val nulls = t.read.filter($"p".isNull)
+    assert(Candidates.scanned(nulls) == 4)
+    assert(nulls.count() == 200)
+    assert(t.read.filter($"id" === 3).select("p").head().isNullAt(0))
+    assert(t.read.select("p").distinct().collect().map(r => Option(r.getString(0))).toSet ==
+      Set(None, Some("a+1"), Some("a+2")))
+  }
+
+  test("partition values come from the file paths, not an older log's URL-decoded map") {
+    val path = tmpDir() + "/toldlog"
+    val t0 = VersionedTable.create(spark,
+      spark.range(0, 40).selectExpr("id", "concat('a+', id % 2) AS p"), path, Seq("p"))
+    assert(t0.liveEntries.map(_.partitionValues("p")).toSet == Set("a+0", "a+1"))
+    // logs written before partition dirs were unescaped hold `a+1` as `a 1`
+    val log = java.nio.file.Paths.get(path, "_graft_log", f"${0L}%020d.json")
+    val json = new String(Files.readAllBytes(log), "UTF-8")
+    val old = json.replace("\"p\":\"a+", "\"p\":\"a ")
+    assert(old != json)
+    Files.write(log, old.getBytes("UTF-8"))
+    val t = VersionedTable.forPath(spark, path)
+    assert(t.liveEntries.map(_.partitionValues("p")).toSet == Set("a 0", "a 1"))
+
+    assert(t.read.select("p").distinct().as[String].collect().toSet == Set("a+0", "a+1"))
+    assert(t.read.filter($"p" === "a+1").count() == 20)
+    assert(t.read.filter($"p" === "a 1").count() == 0)
+    assert(t.delete("p = 'a+1' AND id < 10") == 5)
+    assert(t.update("p = 'a+0'", Map("id" -> "id + 100")) == 20)
+    assert(t.read.filter($"p" === "a+0").agg(min("id")).as[Long].head() == 100L)
+    assert(t.read.count() == 35)
+  }
+
+  test("a file's stats merge its row groups in the column's order") {
+    val path = tmpDir() + "/trowgroups"
+    // one file, two row groups: "2".."101", then "102".."199". As numbers
+    // "199" is the larger max; as the strings they are, "99" is
+    val keys = (2 until 200).map(_.toString)
+    spark.conf.set("parquet.block.size", "1") // a row group per size check (100 rows)
+    val t = try VersionedTable.create(spark, keys.toDF("s").coalesce(1), path)
+      finally spark.conf.unset("parquet.block.size")
+    assert(t.liveEntries.size == 1)
+    val fe = t.liveEntries.head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        t.qualified(fe), spark.sparkContext.hadoopConfiguration))
+    try assert(reader.getFooter.getBlocks.size == 2) finally reader.close()
+    val st = fe.stats.get("s")
+    assert((st.min, st.max, st.nullCount) == ("10", "99", 0L))
+    assert(t.read.filter($"s" === "99").count() == 1)
+    assert(t.delete("s = '99'") == 1)
+    assert(t.read.count() == keys.size - 1)
+  }
+
+  test("read schema: partition columns last, every field nullable, empty reads included") {
+    val path = tmpDir() + "/tschema"
+    val df = Seq((1, 10L, "a"), (2, 20L, "b")).toDF("p", "id", "s")
+    assert(!df.schema("id").nullable)
+    val t = VersionedTable.create(spark, df, path, Seq("p"))
+    assert(t.schema.fieldNames.toSeq == Seq("p", "id", "s"))
+    val read = t.read.schema
+    assert(read.fieldNames.toSeq == Seq("id", "s", "p"))
+    assert(read.forall(_.nullable))
+    assert(read("p").dataType == t.schema("p").dataType)
+    // a read of no files has the same columns
+    assert(t.readChanges(t.currentVersion).schema == read)
+    assert(t.readChanges(t.currentVersion).count() == 0)
+  }
+
+  test("readVersion of vacuumed files throws at the action, never returns partial rows") {
+    val path = tmpDir() + "/tvac"
+    val t = VersionedTable.create(spark,
+      spark.range(0, 100).repartitionByRange(2, $"id").selectExpr("id"), path)
+    assert(t.liveEntries.size == 2)
+    // rewrites only the file holding ids < 10; vacuum then deletes it
+    assert(t.delete("id < 10") == 10)
+    assert(t.vacuum(retainVersions = 1) == 1)
+    val old = t.readVersion(0) // planning reads only the log
+    val e = intercept[Exception](old.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]) ||
+      e.getMessage.contains("FILE_NOT_EXIST"), e.toString)
+    intercept[Exception](old.count())
+    assert(t.read.count() == 90)
+  }
+
+  test("DELETE, UPDATE and MERGE on a table whose root path contains a space") {
+    val root = Files.createTempDirectory("graft sp").toString
+    val t = VersionedTable.create(spark,
+      spark.range(0, 200).selectExpr("id", "id % 10 AS grp", "id AS v").repartition(2),
+      root + "/t").as("t")
+    assert(t.delete("grp = 7") == 20)
+    assert(t.update("grp = 3", Map("v" -> "-1")) == 20)
+    t.merge(Seq((5L, -5L)).toDF("id", "v").as("s"), "t.id = s.id")
+      .whenMatchedUpdate(Map("v" -> "s.v")).execute()
+    assert(t.read.count() == 180)
+    assert(t.read.filter($"v" === -1).count() == 20)
+    assert(t.read.filter($"id" === 5).select("v").as[Long].head() == -5L)
+  }
+
+  test("an insert-only merge whose stats prune every target file packs its inserts") {
+    // the header job's daily insert shape: a cached batch of new keys past
+    // every file's range, so no candidate file remains; its 4 partitions
+    // must not become 4 files per table partition
+    val t = VersionedTable.create(spark,
+      spark.range(0, 5000).selectExpr("id", "cast(id % 3 AS int) AS y").repartition(3),
+      tmpDir() + "/tpack", Seq("y")).as("e")
+    val batch = spark.range(10000, 10500).selectExpr("id", "cast(id % 3 AS int) AS y")
+      .repartition(4).cache()
+    try {
+      val m = t.merge(batch.as("s"), "e.id = s.id")
+        .whenNotMatchedInsert(Map("id" -> "s.id", "y" -> "s.y")).execute()
+      assert(m("numTargetFilesSkippedByStats").toInt == m("numTargetFilesUntouched").toInt)
+      assert(m("numTargetFilesAdded") == "3")
+      assert(t.read.count() == 5500)
+    } finally batch.unpersist()
   }
 
   test("merge prunes target files by source key-range stats") {
@@ -509,8 +672,10 @@ class VersionedTableSpec extends AnyFunSuite {
       s"clustered files must prune: ${candAfter.size} of $totalAfter")
     // data unchanged
     assert(t.read.count() == 6000)
-    assert(t.readWhereBetween("id", 100, 150).count() ==
-      t.read.filter($"id".between(100, 150)).count())
+    val band = t.read.filter($"id".between(100, 150))
+    assert(Candidates.scanned(band) == candAfter.size)
+    assert(band.count() == 6 * spark.range(0, 1000)
+      .selectExpr("id * 7919 % 6000 AS id").filter($"id".between(100, 150)).count())
   }
 
   test("readChanges returns exactly the rows added since a version") {

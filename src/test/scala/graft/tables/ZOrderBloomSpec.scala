@@ -56,15 +56,15 @@ class ZOrderBloomSpec extends AnyFunSuite {
     val path = tmpDir() + "/tz2"
     val t = VersionedTable.create(spark, xyDf.repartition(8), path)
     t.compact(targetBytes = 64 * 1024, zOrderBy = Seq("x", "y"))
-    val expected = t.read
-      .filter(col("x").between(100, 160) && col("y").between(500, 560)).count()
-    val pruned = t.readWhereBetweenAll(("x", 100, 160), ("y", 500, 560))
+    // the reference is the source frame: every table read prunes
+    val band = col("x").between(100, 160) && col("y").between(500, 560)
+    val expected = xyDf.filter(band).count()
+    val pruned = t.read.filter(band)
     assert(pruned.count() == expected)
     assert(expected > 0, "band must be non-empty for the test to mean anything")
     // row content identical, not just counts
     val a = pruned.orderBy("id").collect().toSeq
-    val b = t.read.filter(col("x").between(100, 160) && col("y").between(500, 560))
-      .orderBy("id").collect().toSeq
+    val b = xyDf.filter(band).orderBy("id").collect().toSeq
     assert(a == b)
   }
 
@@ -97,15 +97,20 @@ class ZOrderBloomSpec extends AnyFunSuite {
     assert(cand.size < afterStats,
       s"bloom should prune below the ${afterStats} stats candidates, got ${cand.size}")
 
-    // correctness: the pruned read returns exactly the full-scan rows
-    val expected = t.read.filter(col("k") === probe).orderBy("v").collect().toSeq
+    // correctness: the pruned read returns exactly the source rows, and
+    // scans exactly the bloom candidates
+    val expected = df.filter(col("k") === probe).orderBy("v").collect().toSeq
     assert(expected.nonEmpty)
-    assert(t.readWhereEquals("k", probe).orderBy("v").collect().toSeq == expected)
+    val lookup = t.read.filter(col("k") === probe)
+    assert(lookup.orderBy("v").collect().toSeq == expected)
+    assert(Candidates.scanned(lookup) == cand.size)
 
     // absent key: no false rows, and the bloom prunes (near-)everything
-    assert(t.readWhereEquals("k", 999999L).count() == 0)
+    val absent = t.read.filter(col("k") === 999999L)
+    assert(absent.count() == 0)
     val (candAbsent, _, _) = Candidates(t, "k", 999999L, 999999L)
     assert(candAbsent.size <= 2, s"absent key kept ${candAbsent.size} of $total files")
+    assert(Candidates.scanned(absent) == candAbsent.size)
   }
 
   test("bloom pruning survives merge rewrites and degrades safely without the property") {
@@ -123,13 +128,17 @@ class ZOrderBloomSpec extends AnyFunSuite {
     val (cand, afterStats, total) = Candidates(t, "k", 7L, 7L)
     assert(cand.size < afterStats || afterStats < total,
       s"post-merge lookup still prunes: $total -> $afterStats -> ${cand.size}")
-    assert(t.readWhereEquals("k", 7L).count() == 1)
+    val lookup = t.read.filter(col("k") === 7L)
+    assert(lookup.count() == 1)
+    assert(Candidates.scanned(lookup) == cand.size)
 
     // no property ⇒ no bloom ⇒ candidates == stats candidates, results exact
     val plainPath = tmpDir() + "/tb3"
     val tp = VersionedTable.create(spark, df.repartition(4), plainPath)
     val (pc, ps, _) = Candidates(tp, "k", 7L, 7L)
     assert(pc.size == ps, "without the property bloom must be a no-op")
-    assert(tp.readWhereEquals("k", 7L).count() == 1)
+    val plainLookup = tp.read.filter(col("k") === 7L)
+    assert(plainLookup.count() == 1)
+    assert(Candidates.scanned(plainLookup) == pc.size)
   }
 }
