@@ -50,17 +50,15 @@ case class LogEntry(version: Long,
                     remove: Seq[String],
                     operationMetrics: Map[String, String])
 
-/** Materialized snapshot of the live file set at `version`, written every
-  * [[VersionedTable.CheckpointInterval]] commits so that computing a
-  * snapshot replays O(interval) JSON files instead of O(versions) — the
-  * same role Delta's parquet checkpoints play. `txns` carries the
-  * per-appId transaction watermark (max committed txnBatchId) as of
-  * `version` — the analog of Delta folding SetTransaction actions into
-  * its checkpoints — so [[VersionedTable.lastTxnBatchId]]'s backward scan
-  * stops at the newest checkpoint instead of walking the whole log for an
-  * appId with no commits. `Option` for back-compat: checkpoints written
-  * before the field existed deserialize as None and simply don't bound
-  * the scan. */
+/** A table state at `version`: the live file set, schema, partitioning
+  * and per-appId transaction watermarks (the newest committed txnBatchId,
+  * Delta's SetTransaction folded in). Written every
+  * [[VersionedTable.CheckpointInterval]] commits so that a replay reads
+  * O(interval) JSON files instead of O(versions) — the role Delta's
+  * parquet checkpoints play — and the shape every replay returns.
+  * `txns` is an `Option` for back-compat: checkpoints written before the
+  * field existed deserialize as None, and a replay from one folds the
+  * older commits for watermarks. */
 case class Checkpoint(version: Long,
                       schemaJson: String,
                       partitionColumns: Seq[String],
@@ -75,8 +73,8 @@ case class Checkpoint(version: Long,
   * `mergeSchema` append.
   *
   * Scale design notes:
-  *  - Snapshots are computed by replaying add/remove actions on the
-  *    driver — O(versions × files) of pure metadata, no data read.
+  *  - A table state is one replay on the driver ([[replay]]): the newest
+  *    checkpoint plus the commits after it — pure metadata, no data read.
   *  - MERGE prunes to *touched files* first (inner join source×target on
   *    the merge condition, collecting only distinct file names), then
   *    rewrites just those files plus new-row files — the same bounded-work
@@ -137,98 +135,131 @@ class VersionedTable private (val spark: SparkSession,
 
   // ---------------------------------------------------------------- log --
 
-  /** Log-dir listing split into (commit files, checkpoint files), each as
-    * (version, path) sorted by version. One filesystem LIST; versions come
-    * from file names, so no JSON is parsed here. */
-  private def listLog(): (Seq[(Long, Path)], Seq[(Long, Path)]) = {
+  /** The log dir in one filesystem LIST; versions come from file names,
+    * so no JSON is parsed here. */
+  private def listLog(): Log = {
     val f = fs
-    if (!f.exists(logDir)) return (Seq.empty, Seq.empty)
-    val paths = f.listStatus(logDir).map(_.getPath)
-    val commits = paths.toSeq
-      .filter(_.getName.matches("""\d{20}\.json"""))
-      .map(p => (p.getName.stripSuffix(".json").toLong, p)).sortBy(_._1)
-    val cps = paths.toSeq
-      .filter(_.getName.matches("""\d{20}\.checkpoint\.json"""))
-      .map(p => (p.getName.stripSuffix(".checkpoint.json").toLong, p)).sortBy(_._1)
-    (commits, cps)
+    if (!f.exists(logDir)) return Log(Seq.empty, Seq.empty)
+    val paths = f.listStatus(logDir).map(_.getPath).toSeq
+    def versions(suffix: String) = paths
+      .filter(_.getName.matches("""\d{20}""" + java.util.regex.Pattern.quote(suffix)))
+      .map(p => (p.getName.stripSuffix(suffix).toLong, p)).sortBy(_._1)
+    Log(versions(".json"), versions(".checkpoint.json"))
   }
 
-  private[tables] def entries: Seq[LogEntry] = parsedLog(newestFirst = false).toSeq
-
-  /** The log's commits, parsed lazily one file at a time as the iterator
-    * is consumed. Same tolerance as snapshot(): a torn NEWEST commit is
-    * aborted-publish debris, not history — history()/readChanges() keep
-    * working on the parsable prefix; torn anywhere else is corruption and
-    * throws. */
-  private def parsedLog(newestFirst: Boolean): Iterator[LogEntry] = {
+  /** `commits` parsed one file at a time as the iterator is consumed — the
+    * one place a commit file is parsed. A torn commit is skipped only when
+    * its version is `skippable`: the newest listed commit, which an
+    * implicit (latest) read treats as an aborted publish. Torn anywhere
+    * else, it is corruption and throws. */
+  private def commitsOf(commits: Iterator[(Long, Path)],
+                        skippable: Long = NoVersion): Iterator[LogEntry] = {
     val f = fs
-    val commits = listLog()._1
-    val newest = commits.lastOption.fold(-1L)(_._1)
-    (if (newestFirst) commits.reverseIterator else commits.iterator).flatMap { case (v, p) =>
+    commits.flatMap { case (v, p) =>
       try Some(parseEntry(readFully(f, p)))
-      catch { case scala.util.control.NonFatal(_) if v == newest => None }
-    }
-  }
-
-  def currentVersion: Long = {
-    val (commits, _) = listLog()
-    if (commits.isEmpty) -1L else commits.last._1
-  }
-
-  /** Live file set at `asOf` (inclusive), with the schema of that version.
-    * Starts from the newest checkpoint ≤ target and replays only the
-    * commits after it — O(CheckpointInterval) JSON reads, not O(versions). */
-  private def snapshot(asOf: Option[Long]): (Seq[FileEntry], StructType, Seq[String]) = {
-    val f = fs
-    val (commits, cps) = listLog()
-    require(commits.nonEmpty, s"$root is not a graft table (empty log)")
-    val target = asOf match {
-      case Some(v) =>
-        require(commits.exists(_._1 == v),
-          s"version $v not found in $root (latest=${commits.last._1})")
-        v
-      case None => commits.last._1
-    }
-    val cp = cps.filter(_._1 <= target).lastOption
-      .map { case (_, p) => parseCheckpoint(readFully(f, p)) }
-    val files = scala.collection.mutable.LinkedHashMap[String, FileEntry]()
-    cp.foreach(_.files.foreach(fe => files(fe.path) = fe))
-    val fromV = cp.map(_.version).getOrElse(-1L)
-    // An unparsable NEWEST commit on an implicit (latest) read is treated
-    // as an aborted publish and skipped — the reader sees the previous
-    // version instead of failing every query until recovery. Possible only
-    // through store-level corruption or a crashed writer on a store
-    // without an atomic publish; anywhere else in the log an unparsable
-    // commit is real corruption and still throws, as does a time-travel
-    // read that targets the torn version EXPLICITLY (silently answering
-    // with different-version data would be worse than failing).
-    val replayed = commits
-      .filter { case (v, _) => v > fromV && v <= target }
-      .flatMap { case (v, p) =>
-        try Some(parseEntry(readFully(f, p)))
-        catch {
-          case scala.util.control.NonFatal(_)
-            if asOf.isEmpty && v == commits.last._1 => None
-        }
+      catch {
+        case scala.util.control.NonFatal(_) if v == skippable => None
+        case scala.util.control.NonFatal(e) =>
+          throw new IllegalStateException(s"commit $v at $root is unparsable (torn or corrupt)", e)
       }
-    if (replayed.isEmpty && cp.isEmpty)
-      throw new IllegalStateException(
-        s"$root has no parsable commit (newest is torn/corrupt and no " +
-          "checkpoint exists) — recoverAbortedCommit() after inspection")
-    replayed.foreach { e =>
+    }
+  }
+
+  /** The checkpoint at `p`, or None when it does not parse (a torn write):
+    * a checkpoint is an optimization, so a replay falls back past it. */
+  private def readCheckpoint(p: Path): Option[Checkpoint] =
+    try Some(parseCheckpoint(readFully(fs, p)))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  private[tables] def entries: Seq[LogEntry] = {
+    val log = listLog()
+    commitsOf(log.commits.iterator, log.newest).toSeq
+  }
+
+  def currentVersion: Long = listLog().newest
+
+  /** The table state at `asOf` (default: the newest parsable commit) — the
+    * ONE log replay that reads, writers, checkpoints, txn watermarks, CDC
+    * and vacuum share, Delta's snapshot: the newest checkpoint at or below
+    * the target that parses, then the commits after it folded in version
+    * order (adds and removes, the last schema and partitioning, txn
+    * watermarks last-write-wins) — O(CheckpointInterval) JSON reads. With
+    * `from`, the fold starts from a state already in hand instead, so a
+    * writer that lost a CAS reads only the commits it has not seen.
+    *
+    * Torn files: a torn NEWEST commit is skipped by an implicit read and
+    * reported as `newestTorn` (writers refuse it: [[writable]]); an
+    * explicit read of it, or a torn commit anywhere else, throws. A torn
+    * checkpoint falls back to the next older one, or to version −1, as
+    * long as the commits after it survive; when [[cleanLog]] has deleted
+    * them the replay throws, naming the checkpoint.
+    *
+    * A checkpoint without `txns` (written before the field existed)
+    * carries no watermarks: `withTxns` then also folds the commits at and
+    * below it, and the map is complete only when that prefix reaches
+    * version 0 (after a truncation, an app whose only record was below it
+    * is gone). Plain reads skip that fold. */
+  private def replay(asOf: Option[Long], withTxns: Boolean = false,
+                     from: Option[Checkpoint] = None, log: Log = listLog()): Replayed = {
+    val commits = log.commits
+    require(commits.nonEmpty, s"$root is not a graft table (empty log)")
+    val target = asOf.getOrElse(log.newest)
+    require(commits.exists(_._1 == target),
+      s"version $target not found in $root (oldest=${log.oldest}, latest=${log.newest})")
+    val base = from.orElse(log.checkpoints.filter(_._1 <= target).reverseIterator
+      .flatMap { case (_, p) => readCheckpoint(p) }.nextOption())
+    val fromV = base.fold(-1L)(_.version)
+    val todo = commits.filter { case (v, _) => v > fromV && v <= target }
+    if (todo.size != target - fromV) {
+      val torn = log.checkpoints.filter { case (v, _) => v > fromV && v <= target }
+      throw new IllegalStateException(s"cannot replay $root to version $target: " +
+        torn.lastOption.fold("")(c => s"checkpoint ${c._2.getName} is unreadable and ") +
+        s"the commits after version $fromV are not all in the log (oldest is ${log.oldest})")
+    }
+    val files = scala.collection.mutable.LinkedHashMap[String, FileEntry]()
+    base.foreach(_.files.foreach(fe => files(fe.path) = fe))
+    val txns = scala.collection.mutable.Map[String, Long]()
+    def foldTxn(e: LogEntry): Unit =
+      for (app <- e.operationMetrics.get("txnAppId");
+           b <- e.operationMetrics.get("txnBatchId"))
+        txns(app) = b.toLong
+    val legacy = base.exists(_.txns.isEmpty)
+    if (legacy && withTxns) commitsOf(commits.iterator.filter(_._1 <= fromV)).foreach(foldTxn)
+    base.flatMap(_.txns).foreach(txns ++= _)
+    var last: Option[LogEntry] = None
+    commitsOf(todo.iterator, if (asOf.isEmpty) log.newest else NoVersion).foreach { e =>
       e.remove.foreach(files.remove)
       e.add.foreach(a => files(a.path) = a)
+      foldTxn(e)
+      last = Some(e)
     }
-    val (schemaJson, partCols) = replayed.lastOption
-      .map(e => (e.schemaJson, e.partitionColumns))
-      .getOrElse((cp.get.schemaJson, cp.get.partitionColumns))
-    (files.values.toSeq,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      partCols)
+    val version = last.fold(fromV)(_.version)
+    if (version < 0) throw new IllegalStateException(
+      s"$root has no parsable commit (newest is torn/corrupt and no " +
+        "checkpoint exists) — recoverAbortedCommit() after inspection")
+    val (schemaJson, partCols) = last.map(e => (e.schemaJson, e.partitionColumns))
+      .getOrElse((base.get.schemaJson, base.get.partitionColumns))
+    Replayed(Checkpoint(version, schemaJson, partCols, files.values.toSeq, Some(txns.toMap)),
+      newestTorn = version != target, txnsComplete = !legacy || (withTxns && log.oldest == 0))
+  }
+
+  /** `r`, unless its newest commit is torn. With the atomic publish a torn
+    * commit "cannot happen", so one IS evidence of corruption or a crashed
+    * legacy writer: committing N+1 past a torn N would bake the hole into
+    * the log. Readers skip it; every writer stops here, from the state it
+    * pinned, and points at the explicit recovery path. */
+  private def writable(r: Replayed): Replayed = {
+    if (r.newestTorn) throw new IllegalStateException(
+      s"newest commit ${r.state.version + 1} at $root is unparsable (torn or corrupt); " +
+        "refusing to commit past it — inspect it, then recoverAbortedCommit() " +
+        "to discard it if it is aborted-publish debris")
+    r
   }
 
   // private[tables] (not private) so the log-stress spec can drive
-  // metadata-only commits without paying a parquet write per version
+  // metadata-only commits without paying a parquet write per version.
+  // Callers other than create and clone (a new log) have refused a torn
+  // newest commit from their state ([[writable]]).
   private[tables] def commit(entry: LogEntry): Unit = {
     val f = fs
     f.mkdirs(logDir)
@@ -236,29 +267,8 @@ class VersionedTable private (val spark: SparkSession,
     // cheap pre-check; the real guard is the atomic publish below (two
     // writers can both pass an exists() probe in the race window)
     if (f.exists(target)) throw conflict(entry.version)
-    // never build version N+1 on an unparsable newest commit N: with the
-    // rename/link publish a torn target file "cannot happen", so one IS
-    // evidence of corruption or a crashed legacy writer — committing past
-    // it would bake the hole into the log forever. Readers tolerate it
-    // (snapshot treats it as aborted); writers stop and point at the
-    // explicit recovery path.
-    newestUnparsable().foreach { case (v, _) =>
-      throw new IllegalStateException(
-        s"newest commit $v at $root is unparsable (torn or corrupt); " +
-          "refusing to commit past it — inspect it, then recoverAbortedCommit() " +
-          "to discard it if it is aborted-publish debris")
-    }
     casPublish(f, target, renderEntry(entry), entry.version)
     maybeCheckpoint(entry.version)
-  }
-
-  /** The newest commit's (version, path) if its JSON does not parse. */
-  private def newestUnparsable(): Option[(Long, Path)] = {
-    val (commits, _) = listLog()
-    commits.lastOption.flatMap { case (v, p) =>
-      try { parseEntry(readFully(fs, p)); None }
-      catch { case scala.util.control.NonFatal(_) => Some((v, p)) }
-    }
   }
 
   /** Explicit recovery from a torn/corrupt NEWEST commit file (possible
@@ -269,9 +279,8 @@ class VersionedTable private (val spark: SparkSession,
     * implicitly, because on a store with a non-atomic publish the
     * "corrupt" file could be a concurrent writer's in-flight copy. */
   def recoverAbortedCommit(): Boolean =
-    newestUnparsable() match {
-      case Some((_, p)) => fs.delete(p, false)
-      case None => false
+    listLog().commits.lastOption.exists { case (v, p) =>
+      commitsOf(Iterator((v, p)), skippable = v).isEmpty && fs.delete(p, false)
     }
 
   private def conflict(version: Long) =
@@ -326,17 +335,15 @@ class VersionedTable private (val spark: SparkSession,
     * one's rows; readers of the table see all of them or none — the
     * multi-action commit Delta's log publishes atomically.
     *
-    * The pin: the commit must land at exactly the read version + 1, so
-    * any commit after that read loses the CAS and the body re-runs on
-    * fresh state. An unpinned `currentVersion + 1` evaluated at COMMIT
-    * time would publish a rewrite of a STALE file set as the next free
-    * version — a silent lost update: two concurrent disjoint-key merges
-    * that each rewrite the same base file would BOTH land, duplicating
-    * every row of that file (caught by the q92 oracle). Reading the
-    * version first and the state AT that version is safe in the only
-    * racy direction: a commit between the two reads makes the pinned CAS
-    * fail spuriously (retry), never succeed wrongly. Add-only appends
-    * stay unpinned by design — see [[append]].
+    * The pin: one [[replay]] gives the version and the state at it, and
+    * the commit must land at exactly that version + 1, so any commit
+    * after the replay loses the CAS and the body re-runs on fresh state.
+    * An unpinned `currentVersion + 1` evaluated at COMMIT time would
+    * publish a rewrite of a STALE file set as the next free version — a
+    * silent lost update: two concurrent disjoint-key merges that each
+    * rewrite the same base file would BOTH land, duplicating every row of
+    * that file (caught by the q92 oracle). A torn newest commit refuses
+    * the transaction before its body runs ([[writable]]).
     *
     * The entry adds the working entries that differ from the pinned ones
     * and removes the pinned paths no longer live. One step commits under
@@ -348,9 +355,8 @@ class VersionedTable private (val spark: SparkSession,
     * after a publish, files one step wrote and a later step replaced are
     * deleted too — no version ever referenced them. */
   def transaction[T](body: Txn => T): T = withCommitRetry {
-    val v = currentVersion
-    val (files, schema, partCols) = snapshot(Some(v))
-    val tx = new Txn(this, v, files, schema, partCols)
+    val r = writable(replay(None))
+    val tx = new Txn(this, r.state.version, r.state.files, r.schema, r.state.partitionColumns)
     val out =
       try {
         val o = body(tx)
@@ -419,80 +425,24 @@ class VersionedTable private (val spark: SparkSession,
     }
   }
 
-  /** Every CheckpointInterval commits, materialize the live file set so
-    * later snapshots replay a bounded number of commit files. Failure here
-    * never fails the commit — a checkpoint is an optimization, not state. */
+  /** Every CheckpointInterval commits, materialize the replayed state so
+    * later replays read a bounded number of commit files. Failure here
+    * never fails the commit — a checkpoint is an optimization, not state:
+    * a torn commit makes the replay throw and this checkpoint is skipped,
+    * and a torn checkpoint is passed over by every later replay.
+    * Watermarks are published only when complete ([[replay]]): an
+    * incomplete map would be taken as the whole truth by every later
+    * replay and by [[cleanLog]], and a replayed batch could commit twice;
+    * without it, the next checkpoint folds the older commits again. */
   private def maybeCheckpoint(version: Long): Unit =
     if (version > 0 && version % CheckpointInterval == 0) {
       try {
         val cpPath = new Path(logDir, f"$version%020d.checkpoint.json")
-        atomicWrite(fs, cpPath, renderCheckpoint(buildCheckpoint(version)))
+        val r = replay(Some(version), withTxns = true)
+        val cp = if (r.txnsComplete) r.state else r.state.copy(txns = None)
+        atomicWrite(fs, cpPath, renderCheckpoint(cp))
       } catch { case scala.util.control.NonFatal(_) => }
     }
-
-  /** ONE replay pass building the checkpoint at `target`: the previous
-    * checkpoint (file set + txn-watermark base) plus the interval's
-    * commits, each parsed once, accumulating files, schema, partitioning
-    * AND per-app txn watermarks together (a snapshot() + separate
-    * txn-map pass would read the same prev checkpoint and the same
-    * ~interval commits twice per checkpoint).
-    *
-    * An unparsable commit THROWS — never skipped: folding a checkpoint
-    * past a corrupt commit would silently freeze an app's watermark
-    * below its true value and let a replayed batch commit twice (the
-    * exact failure [[lastTxnBatchId]]'s fail-loud contract exists to
-    * prevent). [[maybeCheckpoint]]'s catch then skips this checkpoint;
-    * the log's ground truth stays intact and readers keep working.
-    *
-    * A previous checkpoint that predates the `txns` field rebuilds the
-    * watermark map from the WHOLE log prefix once (the self-heal
-    * moment): folding only the interval would publish an INCOMPLETE map
-    * that later truncation/bounded probes would treat as authoritative.
-    * The rebuild only publishes `Some(txns)` when the physical prefix is
-    * actually complete (the commit log reaches version 0): after a
-    * cleanLog truncation, a legacy (pre-txns) checkpoint can sit above
-    * physically-deleted commits, and folding the surviving suffix would
-    * publish a map silently missing any app whose only record was below
-    * the truncation point — a replayed batch would then commit twice.
-    * Emitting txns=None instead keeps probes on their fallback scan and
-    * keeps cleanLog refusing to anchor, exactly the legacy behavior. */
-  private def buildCheckpoint(target: Long): Checkpoint = {
-    val f = fs
-    val (commits, cps) = listLog()
-    val prev = cps.filter(_._1 < target).lastOption
-      .map { case (_, p) => parseCheckpoint(readFully(f, p)) }
-    val files = scala.collection.mutable.LinkedHashMap[String, FileEntry]()
-    prev.foreach(_.files.foreach(fe => files(fe.path) = fe))
-    val txns = scala.collection.mutable.Map[String, Long]()
-    prev.flatMap(_.txns).foreach(txns ++= _)
-    val fromV = prev.map(_.version).getOrElse(-1L)
-    // last-write-wins BY VERSION (folds run in ascending commit order),
-    // matching lastTxnBatchId's live scan, which answers with the NEWEST
-    // commit's batchId for the app — a max() here would diverge from the
-    // scan if an appId were ever reused with reset batchIds (a deleted-
-    // and-recreated streaming checkpoint), making the answer depend on
-    // whether a checkpoint had folded since
-    def foldTxn(e: LogEntry): Unit =
-      for (app <- e.operationMetrics.get("txnAppId");
-           b <- e.operationMetrics.get("txnBatchId"))
-        txns(app) = b.toLong
-    val prefixComplete = commits.headOption.exists(_._1 == 0L)
-    val txnsComplete = prev.exists(_.txns.isDefined) || prefixComplete
-    if (prev.isDefined && prev.get.txns.isEmpty && prefixComplete)
-      commits.filter(_._1 <= fromV)
-        .foreach { case (_, p) => foldTxn(parseEntry(readFully(f, p))) }
-    val replayed = commits
-      .filter { case (v, _) => v > fromV && v <= target }
-      .map { case (_, p) => parseEntry(readFully(f, p)) }
-    require(replayed.nonEmpty, s"no commits to replay for checkpoint $target")
-    replayed.foreach { e =>
-      e.remove.foreach(files.remove)
-      e.add.foreach(a => files(a.path) = a)
-      foldTxn(e)
-    }
-    Checkpoint(target, replayed.last.schemaJson, replayed.last.partitionColumns,
-      files.values.toSeq, if (txnsComplete) Some(txns.toMap) else None)
-  }
 
   private def atomicWrite(f: FileSystem, target: Path, content: String): Unit = {
     val tmp = new Path(target.getParent, s".tmp-${UUID.randomUUID()}.json")
@@ -513,8 +463,8 @@ class VersionedTable private (val spark: SparkSession,
   def readVersion(v: Long): DataFrame = readAt(Some(v))
 
   private def readAt(asOf: Option[Long]): DataFrame = {
-    val (files, schema, partCols) = snapshot(asOf)
-    val df = readFiles(files, schema, partCols)
+    val r = replay(asOf)
+    val df = readFiles(r.state.files, r.schema, r.state.partitionColumns)
     aliasName.fold(df)(df.alias)
   }
 
@@ -531,14 +481,20 @@ class VersionedTable private (val spark: SparkSession,
     * files (an SCD2 header batch, whose Phase A closes open rows, is one)
     * adds files mixing updated, inserted AND copied rows; such commits
     * throw unless `includeRewrites = true`, which returns the added files
-    * with that documented coarseness.
+    * with that documented coarseness. Parses only the commits in the
+    * range; a range reaching below [[cleanLog]]'s truncation point throws.
     * @param fromVersion last version the consumer has seen (exclusive) */
   def readChanges(fromVersion: Long,
                   toVersion: Option[Long] = None,
                   includeRewrites: Boolean = false): DataFrame = {
-    val to = toVersion.getOrElse(currentVersion)
+    val log = listLog()
+    val to = toVersion.getOrElse(log.newest)
     require(to >= fromVersion, s"toVersion $to < fromVersion $fromVersion")
-    val range = entries.filter(e => e.version > fromVersion && e.version <= to)
+    require(fromVersion + 1 >= log.oldest,
+      s"cannot read changes after version $fromVersion of $root: the oldest " +
+        s"readable version is ${log.oldest} (cleanLog removed the commits before it)")
+    val range = commitsOf(log.commits.iterator.filter { case (v, _) => v > fromVersion && v <= to },
+      if (toVersion.isEmpty) to else NoVersion).toSeq
     val changeFiles = range.flatMap { e =>
       e.operation match {
         case "OPTIMIZE" => Seq.empty // bin-packing: no logical change
@@ -561,9 +517,12 @@ class VersionedTable private (val spark: SparkSession,
         case _ => e.add
       }
     }
-    // schema of the target version (mergeSchema may have widened it)
-    val (_, schema, partCols) = snapshot(Some(to))
-    readFiles(changeFiles, schema, partCols)
+    // the target version's schema (mergeSchema may have widened it): its
+    // commit's, or a replay's when the range is empty or misses it
+    val (schemaJson, partCols) = range.lastOption.filter(_.version == to)
+      .map(e => (e.schemaJson, e.partitionColumns))
+      .getOrElse { val at = replay(toVersion, log = log).state; (at.schemaJson, at.partitionColumns) }
+    readFiles(changeFiles, DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols)
   }
 
   /** Commit history, newest first (reference: DeltaTable.history —
@@ -571,7 +530,7 @@ class VersionedTable private (val spark: SparkSession,
     * commit files (one more when the newest is torn and skipped). */
   def history(limit: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    parsedLog(newestFirst = true).take(limit).toSeq
+    newestFirst().take(limit).toSeq
       .map(e => (e.version, new Timestamp(e.timestampMs), e.operation,
         e.operationMetrics, e.add.size.toLong, e.remove.size.toLong))
       .toDF("version", "timestamp", "operation", "operationMetrics",
@@ -581,12 +540,18 @@ class VersionedTable private (val spark: SparkSession,
   /** One operationMetrics value of the newest commit; -1 when that
     * commit does not record it. Parses one commit file. */
   def lastMetric(key: String): Long =
-    parsedLog(newestFirst = true).nextOption().flatMap(_.operationMetrics.get(key))
+    newestFirst().nextOption().flatMap(_.operationMetrics.get(key))
       .map(_.toLong).getOrElse(-1L)
 
-  def schema: StructType = snapshot(None)._2
-  def partitionColumns: Seq[String] = snapshot(None)._3
-  private[tables] def liveEntries: Seq[FileEntry] = snapshot(None)._1
+  /** The commits newest first, skipping a torn newest one. */
+  private def newestFirst(): Iterator[LogEntry] = {
+    val log = listLog()
+    commitsOf(log.commits.reverseIterator, log.newest)
+  }
+
+  def schema: StructType = replay(None).schema
+  def partitionColumns: Seq[String] = replay(None).state.partitionColumns
+  private[tables] def liveEntries: Seq[FileEntry] = replay(None).state.files
 
   /** RESTORE: make the table's CURRENT state equal its state at `version`,
     * as a NEW commit — history is preserved, so a restore is itself
@@ -602,7 +567,8 @@ class VersionedTable private (val spark: SparkSession,
     * newly live, which is exactly what an incremental reader must apply.
     * @return (filesReAdded, filesRemoved) as recorded by the commit */
   def restoreToVersion(version: Long): (Int, Int) = transaction { tx =>
-    val (targetFiles, targetSchema, _) = snapshot(Some(version))
+    val target = replay(Some(version))
+    val targetFiles = target.state.files
     // compare full entries, not just paths: a deletion-vector DELETE
     // changes an entry's dv refs while the data file path stays the same —
     // restoring past it must re-commit the old entry (replay's add
@@ -620,7 +586,7 @@ class VersionedTable private (val spark: SparkSession,
     tx.stage("RESTORE", toAdd, toRemove,
       Map("restoredVersion" -> version.toString,
         "numRestoredFiles" -> toAdd.size.toString,
-        "numRemovedFiles" -> toRemove.size.toString), targetSchema)
+        "numRemovedFiles" -> toRemove.size.toString), target.schema)
     (toAdd.size, toRemove.size)
   }
 
@@ -640,7 +606,8 @@ class VersionedTable private (val spark: SparkSession,
     * and a table with LIVE deletion vectors refuses to clone — compact()
     * first to materialize the deletes. */
   def shallowCloneTo(destPath: String): VersionedTable = {
-    val (files, tableSchema, partCols) = snapshot(None)
+    val r = replay(None)
+    val files = r.state.files
     val withDv = files.count(_.dv.nonEmpty)
     require(withDv == 0,
       s"cannot shallow-clone: $withDv file(s) carry live deletion vectors; " +
@@ -649,10 +616,10 @@ class VersionedTable private (val spark: SparkSession,
       s"$destPath is already a graft table")
     val dst = new VersionedTable(spark, destPath, None)
     val referenced = files.map(fe => fe.copy(path = qualified(fe).toString))
-    dst.commit(LogEntry(0L, now(), "CLONE", tableSchema.json, partCols,
+    dst.commit(LogEntry(0L, now(), "CLONE", r.state.schemaJson, r.state.partitionColumns,
       referenced, Seq.empty,
       Map("sourceTable" -> fs.makeQualified(new Path(root)).toString,
-        "sourceVersion" -> currentVersion.toString,
+        "sourceVersion" -> r.state.version.toString,
         "numReferencedFiles" -> referenced.size.toString,
         "numCopiedFiles" -> "0")))
     dst
@@ -670,11 +637,11 @@ class VersionedTable private (val spark: SparkSession,
     * appId is silently skipped.
     *
     * Concurrency (Delta's blind-append protocol): the commit is PINNED
-    * to the version the snapshot/watermark was read at, so a concurrent
-    * commit always surfaces as a CAS loss — then, because an append
-    * only ADDS files, the loss is resolved by a LOGICAL conflict check
-    * over the intervening commits instead of a full re-run: if none of
-    * them changed the table schema or partitioning (and, for txn
+    * to the version the state and watermark were replayed at, so a
+    * concurrent commit always surfaces as a CAS loss — then, because an
+    * append only ADDS files, the loss is resolved by a LOGICAL conflict
+    * check over the intervening commits instead of a full re-run: if they
+    * left the table schema and partitioning as they were (and, for txn
     * appends, none landed this very (appId, batchId) — a zombie replay,
     * which makes this append a silent skip), the already-written data
     * files are re-committed at the next version, metadata-only. Only a
@@ -683,18 +650,11 @@ class VersionedTable private (val spark: SparkSession,
     * the new schema. */
   def append(df: DataFrame, mergeSchema: Boolean = false,
              txn: Option[(String, Long)] = None): Unit = withCommitRetry {
-    // The pin reads the log listing BEFORE the watermark check (a torn
-    // newest file still claims its slot — committing past it must keep
-    // refusing with the recovery guidance); the data snapshot stays the
-    // tolerant default. Any commit landing after this read loses the
-    // pinned CAS; slideAppendCommit then re-checks the watermark and
-    // the schema against the actual intervening commits.
-    val v0 = currentVersion
-    val alreadyCommitted = txn.exists { case (app, b) =>
-      lastTxnBatchId(app).exists(_ >= b)
-    }
-    if (!alreadyCommitted) {
-      val (_, cur, partCols) = snapshot(None)
+    // one replay: the pin, the schema and the watermark
+    val r = replay(None, withTxns = txn.isDefined)
+    if (!txn.exists(landed(r.state, _))) {
+      val cur = writable(r).schema
+      val partCols = r.state.partitionColumns
       val newSchema =
         if (mergeSchema) widenSchema(cur, df.schema)
         else {
@@ -710,37 +670,43 @@ class VersionedTable private (val spark: SparkSession,
         else lit(null).cast(newSchema(n).dataType).as(n)
       }: _*)
       val added = writeFiles(aligned, partCols)
-      slideAppendCommit(LogEntry(v0 + 1, now(), "WRITE",
+      slideAppendCommit(LogEntry(r.state.version + 1, now(), "WRITE",
         newSchema.json, partCols, added, Seq.empty,
         Map("numFiles" -> added.size.toString, "mode" -> "Append",
           "mergeSchema" -> mergeSchema.toString) ++
           txn.map { case (app, b) =>
             Map("txnAppId" -> app, "txnBatchId" -> b.toString)
-          }.getOrElse(Map.empty)), added, baseSchemaJson = cur.json, txn)
+          }.getOrElse(Map.empty)), added, r.state, txn)
     }
   }
 
+  /** Did `state` already land `txn`'s batch (or a later one) for its app? */
+  private def landed(state: Checkpoint, txn: (String, Long)): Boolean =
+    state.txns.flatMap(_.get(txn._1)).exists(_ >= txn._2)
+
   /** Commit an append entry, resolving CAS losses with Delta's
-    * blind-append logic: an append removes nothing, so a concurrent
-    * commit only LOGICALLY conflicts when it changed the schema (to
-    * something other than this append's base or target schema) or the
-    * partition columns — anything else (another append, a merge, DML,
-    * OPTIMIZE) commutes, and the entry is simply re-attempted at the
-    * next version with the SAME data files: no rewrite, no re-read.
-    * Txn appends re-check the watermark on every slide — if the
-    * intervening commit landed this (appId, batchId) (a zombie replay
-    * racing this writer), the append becomes a silent skip and this
-    * attempt's files are deleted: exactly-once holds because the CAS
-    * serializes the zombies and every loser re-reads the log before
-    * deciding. A genuine conflict (or slide-budget exhaustion under
-    * pathological contention) deletes this attempt's files and rethrows
-    * for [[withCommitRetry]]'s full-body re-run. */
+    * blind-append logic: an append removes nothing, so concurrent commits
+    * only LOGICALLY conflict when they changed the schema (to something
+    * other than this append's base or target schema) or the partition
+    * columns — anything else (another append, a merge, DML, OPTIMIZE)
+    * commutes, and the entry is simply re-attempted at the next version
+    * with the SAME data files: no rewrite, no re-read. Each slide folds
+    * only the commits after the state it last saw ([[replay]]'s `from`)
+    * and checks the result. Txn appends re-check the watermark on every
+    * slide — if an intervening commit landed this (appId, batchId) (a
+    * zombie replay racing this writer), the append becomes a silent skip
+    * and this attempt's files are deleted: exactly-once holds because the
+    * CAS serializes the zombies and every loser re-reads the log before
+    * deciding. A genuine conflict, a torn newest commit or slide-budget
+    * exhaustion under pathological contention deletes this attempt's
+    * files and rethrows (a conflict for [[withCommitRetry]]'s full-body
+    * re-run). */
   private def slideAppendCommit(entry: LogEntry, wrote: Seq[FileEntry],
-                                baseSchemaJson: String,
+                                base: Checkpoint,
                                 txn: Option[(String, Long)]): Unit = {
-    val f = fs
     def cleanup(): Unit = deleteData(wrote.map(_.path))
     var e = entry
+    var seen = base
     var slides = 0
     val maxSlides = 20
     while (true) {
@@ -749,79 +715,30 @@ class VersionedTable private (val spark: SparkSession,
         case ex: ConcurrentCommitException =>
           slides += 1
           if (slides > maxSlides) { cleanup(); throw ex }
-          if (txn.exists { case (app, b) =>
-            lastTxnBatchId(app).exists(_ >= b) }) {
+          val r = replay(None, from = Some(seen))
+          if (r.newestTorn) { cleanup(); writable(r) }
+          seen = r.state
+          if (txn.exists(landed(seen, _))) {
             // a racing zombie landed this very batch first: this append
             // is a replay — drop its files, commit nothing
             cleanup(); return
           }
-          val (commits, _) = listLog()
-          val intervening = commits.filter(_._1 >= e.version).map { case (_, p) =>
-            try Some(parseEntry(readFully(f, p)))
-            catch { case scala.util.control.NonFatal(_) => None }
-          }
-          val conflicting = intervening.exists {
-            case None => true // unparsable newest: let commit() diagnose
-            case Some(le) =>
-              (le.schemaJson != baseSchemaJson && le.schemaJson != e.schemaJson) ||
-                le.partitionColumns != e.partitionColumns
-          }
-          if (conflicting) { cleanup(); throw ex }
-          e = e.copy(version = commits.last._1 + 1)
+          if ((seen.schemaJson != base.schemaJson && seen.schemaJson != e.schemaJson) ||
+              seen.partitionColumns != e.partitionColumns) { cleanup(); throw ex }
+          e = e.copy(version = seen.version + 1)
       }
     }
   }
 
-  /** BatchId of the NEWEST commit carrying [[append]]'s `txn` for
+  /** BatchId of the newest commit carrying [[append]]'s `txn` for
     * `appId`, or None — the idempotence watermark a restarted writer
-    * consults. Both answer sources agree on that semantic: the live
-    * scan stops at the newest matching commit, and the checkpoint's
-    * folded map is last-write-wins by version ([[buildCheckpoint]]) —
-    * under the streaming contract (batchIds monotone per appId) this is
-    * also the highest batchId.
-    * Scans commit files NEWEST-FIRST and stops at the first match, so
-    * for a live streaming sink (whose own previous batch is usually the
-    * newest commit) the steady-state cost is one or two JSON reads, not
-    * the whole log; an appId with NO commits stops at the newest
-    * checkpoint's folded `txns` watermark map (Delta's SetTransaction-in-
-    * checkpoint shape), so even the miss path is O(CheckpointInterval)
-    * reads — a full backward scan only ever happens on a legacy table
-    * whose newest checkpoint predates the `txns` field (and self-heals at
-    * its next checkpoint). */
-  def lastTxnBatchId(appId: String): Option[Long] = {
-    val f = fs
-    val (commits, cps) = listLog()
-    val newest = commits.lastOption.map(_._1)
-    def scan(range: Iterator[(Long, Path)]): Option[Long] = range
-      .flatMap { case (v, p) =>
-        // a torn NEWEST commit is aborted-publish debris (same tolerance
-        // as entries/snapshot); an unparsable OLDER file is corruption —
-        // skipping it could hide this app's true watermark and let a
-        // replayed batch commit twice, so fail loudly instead
-        try Some(parseEntry(readFully(f, p)))
-        catch {
-          case scala.util.control.NonFatal(_) if newest.contains(v) => None
-        }
-      }
-      .find(_.operationMetrics.get("txnAppId").contains(appId))
-      .flatMap(_.operationMetrics.get("txnBatchId")).map(_.toLong)
-    // the newest checkpoint's VERSION comes free from its filename; its
-    // BODY (the full live file set — large) is only parsed when the
-    // backward scan above it misses, so a live sink's steady state (own
-    // previous batch = the newest commit) stays 1-2 small commit reads
-    val floor = cps.lastOption.map(_._1).getOrElse(-1L)
-    scan(commits.reverseIterator.takeWhile(_._1 > floor)).orElse {
-      val cp = cps.lastOption.map { case (_, p) => parseCheckpoint(readFully(f, p)) }
-      cp.flatMap(_.txns) match {
-        case Some(txns) => txns.get(appId) // folded watermark (may miss)
-        case None =>
-          // legacy checkpoint without txns can't bound the scan: keep
-          // walking the rest of the log (self-heals at the next
-          // checkpoint, which folds the map)
-          scan(commits.reverseIterator.filter(_._1 <= floor))
-      }
-    }
-  }
+    * consults, read from the replayed state (last-write-wins by version;
+    * under the streaming contract, batchIds monotone per appId, also the
+    * highest). O(CheckpointInterval) reads, hit or miss, except behind a
+    * legacy checkpoint without `txns`, whose older commits are folded
+    * too (self-heals at the next checkpoint). */
+  def lastTxnBatchId(appId: String): Option[Long] =
+    replay(None, withTxns = true).state.txns.flatMap(_.get(appId))
 
   /** Physically write `df` partitioned by `partCols` into the data dir via
     * a staging dir + per-file rename; returns the added FileEntries. */
@@ -1185,13 +1102,16 @@ class VersionedTable private (val spark: SparkSession,
     * @return number of files deleted */
   def vacuum(retainVersions: Int = 2): Int = {
     require(retainVersions >= 1, "must retain at least the current version")
-    val (commits, _) = listLog()
-    if (commits.isEmpty) return 0
-    val retained = commits.map(_._1).takeRight(retainVersions)
-    // dv sidecars live under data/_dv/ — referenced ones are as live as
-    // the data files themselves; unreferenced ones get reclaimed here
-    val live: Set[String] = retained
-      .flatMap(v => snapshot(Some(v))._1.flatMap(fe => fe.path +: fe.dv)).toSet
+    val log = listLog()
+    if (log.commits.isEmpty) return 0
+    // the retained versions' files, in one fold: the oldest one's state,
+    // plus every file a later commit adds. dv sidecars live under
+    // data/_dv/ — referenced ones are as live as the data files
+    // themselves; unreferenced ones get reclaimed here
+    val oldest = log.commits.takeRight(retainVersions).head._1
+    val live: Set[String] = (replay(Some(oldest), log = log).state.files ++
+      commitsOf(log.commits.iterator.filter(_._1 > oldest)).flatMap(_.add))
+      .flatMap(fe => fe.path +: fe.dv).toSet
     val f = fs
     if (!f.exists(dataDir)) return 0
     var deleted = 0
@@ -1223,7 +1143,7 @@ class VersionedTable private (val spark: SparkSession,
   def cleanLog(retainVersions: Int = 2 * CheckpointInterval.toInt): Int = {
     require(retainVersions >= 1, "must retain at least the current version")
     val f = fs
-    val (commits, cps) = listLog()
+    val Log(commits, cps) = listLog()
     if (commits.isEmpty) return 0
     val floor = commits.last._1 - retainVersions + 1
     // The anchor must PROVE it can replace the commits being deleted:
@@ -1233,10 +1153,7 @@ class VersionedTable private (val spark: SparkSession,
     // whose only record is a commit below it — wait one more checkpoint,
     // which self-heals the map, then truncate).
     val base = cps.filter(_._1 <= floor).lastOption
-      .filter { case (_, p) =>
-        try parseCheckpoint(readFully(f, p)).txns.isDefined
-        catch { case scala.util.control.NonFatal(_) => false }
-      }
+      .filter { case (_, p) => readCheckpoint(p).exists(_.txns.isDefined) }
       .map(_._1) match {
       case None => return 0 // no safe anchor below the floor — drop nothing
       case Some(v) => v
@@ -1963,6 +1880,26 @@ object VersionedTable {
     }.toMap
   /** Commits between snapshot checkpoints (Delta uses 10 as well). */
   private[tables] val CheckpointInterval = 10L
+  /** No commit has this version: [[commitsOf]]'s skippable for a read
+    * that tolerates no torn commit. */
+  private val NoVersion = Long.MinValue
+
+  /** One LIST of a log dir: commit and checkpoint files as (version,
+    * path), each sorted by version. */
+  private final case class Log(commits: Seq[(Long, Path)], checkpoints: Seq[(Long, Path)]) {
+    def newest: Long = commits.lastOption.fold(-1L)(_._1)
+    def oldest: Long = commits.headOption.fold(-1L)(_._1)
+  }
+
+  /** A replayed table state ([[VersionedTable#replay]]). `state.txns` holds
+    * every watermark the replay saw; `txnsComplete` says whether that is
+    * all of them (false after a legacy checkpoint whose older commits were
+    * not folded or are gone). `newestTorn`: the newest listed commit did
+    * not parse and `state` is the version before it. */
+  private final case class Replayed(state: Checkpoint, newestTorn: Boolean,
+                                    txnsComplete: Boolean) {
+    def schema: StructType = DataType.fromJson(state.schemaJson).asInstanceOf[StructType]
+  }
   /** A merge source whose cached size is at most this gets the broadcast
     * hint on its probe and left-outer rewrite joins. */
   private val MergeBroadcastSourceBytes = 128L * 1024 * 1024
@@ -2137,7 +2074,7 @@ object VersionedTable {
 
   /** Diagnostic counter over the ONE funnel every log/checkpoint JSON
     * read passes through — lets specs assert the O(CheckpointInterval)
-    * bound on snapshot/lastTxnBatchId cost empirically (count reads
+    * bound on replay cost empirically (count reads
     * around an operation) instead of trusting the comment. Zero-cost in
     * production paths (one atomic add per metadata file read). */
   private[tables] val logJsonReads = new java.util.concurrent.atomic.AtomicLong(0)

@@ -65,4 +65,16 @@ class KnobCensusSpec extends AnyFunSuite {
     assert(sites.size == owners.size && owners.forall(o => sites.exists(_.contains(o))),
       sites.mkString("\n"))
   }
+
+  test("the log is parsed in one place: one call site each for parseEntry and parseCheckpoint") {
+    // every reader and writer goes through the one replay and its commit
+    // iterator, so there is one rule for a torn file
+    val code = mainSources.flatMap(f => Files.readAllLines(f).asScala.map(_.trim))
+      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
+    for (fn <- Seq("parseEntry(", "parseCheckpoint(")) {
+      val calls = code.filter(l => l.contains(fn) && !l.contains(s"def $fn"))
+      assert(calls.map(_.split(java.util.regex.Pattern.quote(fn), -1).length - 1).sum == 1,
+        s"$fn call sites:\n${calls.mkString("\n")}")
+    }
+  }
 }

@@ -93,6 +93,18 @@ class GraftStreamSourceSpec extends AnyFunSuite {
     assert(coarse.filter($"v" === "updated").count() == 10)
   }
 
+  test("a stream starting below the cleanLog truncation point fails, naming the oldest readable version") {
+    val dir = freshDir("cdc-trunc")
+    val t = VersionedTable.create(spark, rows(0, 5), dir + "/t") // v0
+    (1 to 10).foreach(i => t.append(rows(5L * i, 5L * i + 5)))   // v1..v10, checkpoint 10
+    assert(t.cleanLog(retainVersions = 1) == 10, "commits 0..9 are truncated")
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(dir + "/t", dir + "/ckpt", dir + "/out", phase = 1)
+    }
+    assert(err.getMessage.contains("oldest readable version is 10"),
+      s"should surface readChanges's error, got: ${err.getMessage}")
+  }
+
   test("user-supplied schema is rejected; stream schema is the table's") {
     val dir = freshDir("cdc-sch")
     VersionedTable.create(spark, rows(0, 5), dir + "/t")

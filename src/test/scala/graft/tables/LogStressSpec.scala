@@ -58,6 +58,12 @@ class LogStressSpec extends AnyFunSuite {
     assert(missReads <= 30,
       s"txn watermark MISS cost $missReads reads — not bounded by the checkpoint")
 
+    // a change read parses only the commits in its range
+    val (changes, changeReads) = counted(t.readChanges(t.currentVersion - 1))
+    assert(changes.count() == 0L)
+    assert(changeReads <= 30,
+      s"readChanges of the newest commit cost $changeReads reads — it parsed the whole log")
+
     // ---- cleanLog: metadata truncation keeps the dir bounded ----------
     val logDir = new java.io.File(s"$dir/t/_graft_log")
     def logFiles() = logDir.listFiles().count(_.getName.endsWith(".json"))
@@ -76,6 +82,11 @@ class LogStressSpec extends AnyFunSuite {
       "txn watermark must survive log truncation via the checkpoint txns map")
     // below the truncation point time travel is GONE, loudly (Delta shape)
     intercept[IllegalArgumentException](t2.readVersion(100L).count())
+
+    // a txn append takes its pin, schema and watermark from one replay
+    val (_, appendReads) = counted(t2.append(s.range(1).toDF("id"), txn = Some(("appB", 1L))))
+    assert(t2.lastTxnBatchId("appB").contains(1L) && t2.read.count() == 12L)
+    assert(appendReads <= 30, s"a txn append cost $appendReads metadata reads")
 
     graft.GraftSession.deleteRec(new java.io.File(dir))
   }

@@ -1079,12 +1079,90 @@ class VersionedTableSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("recoverAbortedCommit"),
       s"commit failure must point at the recovery path: ${e.getMessage}")
+    // every transactional writer refuses the same way, before writing
+    val files = dataFiles(path)
+    val writers: Seq[(String, () => Any)] = Seq(
+      "delete" -> (() => t.delete("k = 1")),
+      "update" -> (() => t.update("k = 1", Map("v" -> "'z'"))),
+      "merge" -> (() => t.alias("t").merge(Seq((1L, "m")).toDF("k", "v").alias("s"), "t.k = s.k")
+        .whenMatchedUpdate(Map("v" -> "s.v")).execute()),
+      "compact" -> (() => t.compact(clusterBy = Seq("k"))),
+      "restoreToVersion" -> (() => t.restoreToVersion(0L)))
+    writers.foreach { case (name, write) =>
+      val w = intercept[IllegalStateException](write())
+      assert(w.getMessage.contains("recoverAbortedCommit"),
+        s"$name must point at the recovery path: ${w.getMessage}")
+      assert(dataFiles(path) == files, s"$name wrote a data file")
+    }
     // recovery deletes the torn file; the version is re-claimable
     assert(t.recoverAbortedCommit(), "torn newest commit must be recoverable")
     assert(!t.recoverAbortedCommit(), "a parsable newest commit is never touched")
     t.append(Seq((3L, "c")).toDF("k", "v"))
     assert(t.currentVersion == 1L && t.read.count() == 2,
       "the recovered version slot is reused by the next commit")
+  }
+
+  test("a torn checkpoint: reads, writers, watermarks and vacuum fall back to the commits") {
+    // 13 commits (0..12) of appends, a DELETE and an UPDATE; checkpoint 10
+    // holds the file set and the txn watermark
+    val intact = tmpDir() + "/tcp"
+    VersionedTable.create(spark, Seq((0L, "a")).toDF("k", "v"), intact)
+    val built = VersionedTable.forPath(spark, intact)
+    (1L to 12L).foreach {
+      case 4L => built.delete("k = 1")
+      case 7L => built.update("k = 2", Map("v" -> "'u'"))
+      case i => built.append(Seq((i, s"v$i")).toDF("k", "v"), txn = Some(("app", i)))
+    }
+    val cp = java.nio.file.Paths.get("_graft_log", f"${10L}%020d.checkpoint.json")
+    assert(Files.isRegularFile(java.nio.file.Paths.get(intact).resolve(cp)))
+    val torn = tmpDir() + "/tcp-torn"
+    val src = java.nio.file.Paths.get(intact)
+    Files.walk(src).forEach(p => Files.copy(p, java.nio.file.Paths.get(torn).resolve(src.relativize(p).toString)))
+    def tear(root: String): Unit = {
+      val f = java.nio.file.Paths.get(root).resolve(cp)
+      val bytes = Files.readAllBytes(f)
+      Files.write(f, bytes.take(bytes.length / 2))
+    }
+    tear(torn)
+    val (a, b) = (VersionedTable.forPath(spark, intact), VersionedTable.forPath(spark, torn))
+    def versionRows(t: VersionedTable, v: Long) =
+      t.readVersion(v).collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(rows(b) == rows(a) && rows(a).size == 10)
+    assert(versionRows(b, 11L) == versionRows(a, 11L))
+    assert(versionRows(b, 5L) == versionRows(a, 5L))
+    assert(b.history().count() == a.history().count())
+    assert(b.lastTxnBatchId("app") == a.lastTxnBatchId("app") && a.lastTxnBatchId("app").contains(12L))
+    Seq(a, b).foreach(_.append(Seq((13L, "v13")).toDF("k", "v"), txn = Some(("app", 13L))))
+    assert(rows(b) == rows(a) && b.currentVersion == 13L)
+    val (va, vb) = (a.vacuum(retainVersions = 2), b.vacuum(retainVersions = 2))
+    assert(vb == va && va > 0, s"vacuum deleted $vb files on the torn copy, $va on the intact one")
+    assert(rows(b) == rows(a))
+    Seq(a, b).foreach(t => assert(dataFiles(t.root) == t.liveEntries.map(_.path).toSet))
+    // once cleanLog has deleted the commits below it, a torn checkpoint
+    // cannot be replaced: the read names it
+    assert(a.cleanLog(retainVersions = 2) == 10)
+    tear(intact)
+    val e = intercept[IllegalStateException](VersionedTable.forPath(spark, intact).read)
+    assert(e.getMessage.contains(cp.getFileName.toString), e.getMessage)
+  }
+
+  test("readChanges below the cleanLog truncation point throws, naming the oldest readable version") {
+    val path = tmpDir() + "/tchg"
+    VersionedTable.create(spark, Seq((0L, "a")).toDF("k", "v"), path)
+    val t = VersionedTable.forPath(spark, path)
+    val schemaJson = t.schema.json
+    // metadata-only commits 1..35, then five one-row appends 36..40
+    (1L to 35L).foreach { v =>
+      t.commit(LogEntry(v, System.currentTimeMillis(), "WRITE", schemaJson,
+        Seq.empty, Seq.empty, Seq.empty, Map("numFiles" -> "0")))
+    }
+    (36L to 40L).foreach(i => t.append(Seq((i, s"v$i")).toDF("k", "v")))
+    assert(t.cleanLog(retainVersions = 5) > 0) // anchor: checkpoint 30
+    for (from <- Seq(-1L, 5L, 28L)) {
+      val e = intercept[IllegalArgumentException](t.readChanges(from))
+      assert(e.getMessage.contains("oldest readable version is 30"), e.getMessage)
+    }
+    assert(t.readChanges(29L).count() == 5L && t.readChanges(35L).count() == 5L)
   }
 
   test("executor-side footer stats equal the driver path exactly") {
