@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.core.Schemas
 import graft.tables.VersionedTable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
@@ -54,6 +54,47 @@ object ItemsEtlJob {
     "product_code", "quantity", "causale_annullamento", "data_annullamento",
     "status_item", "creazione_dta", "valid_from", "valid_from_year",
     "valid_from_month", "valid_from_day", "valid_to")
+
+  /** The SCD2 merge of one transformed batch into the items table
+    * (reference: src/items_etl.py:86-143), in ONE
+    * [[VersionedTable.transaction]]: the change detection joins the
+    * batch with the transaction's pinned state (`tx.read`), so a commit
+    * that lands before this one publishes makes the body re-run on the
+    * new state — the insert arm is never computed from stale open rows.
+    * @return (rows inserted, rows closed), from the merge's metrics */
+  private[jobs] def scd2Merge(table: VersionedTable, dfTransformed: DataFrame): (Long, Long) =
+    table.alias("existing").transaction { tx =>
+      // open rows whose tracked values differ from this batch's updates
+      // — `<>` non-null-safe, as in the reference
+      val newItemsToInsert = dfTransformed.alias("updates")
+        .join(tx.read, Schemas.ItemsDedupKeys)
+        .where("existing.valid_to = date('9999-12-31') AND (" +
+          "updates.contracted_price <> existing.contracted_price OR " +
+          "updates.total_discount <> existing.total_discount OR " +
+          "updates.data_fine_prestazione <> existing.data_fine_prestazione)")
+
+      // staged union: NULL-mergeKey rows can never match → always inserted
+      // (the new open versions); keyed rows close their open predecessor
+      // (reference: src/items_etl.py:106-110)
+      val stagedUpdates = newItemsToInsert
+        .selectExpr("NULL as mergeKey", "NULL as mergeKey2", "updates.*")
+        .union(dfTransformed.selectExpr(
+          "contratto_cod as mergeKey", "numero_annuncio as mergeKey2", "*"))
+
+      val m = tx
+        .merge(stagedUpdates.alias("staged_updates"),
+          "existing.contratto_cod = mergeKey AND existing.numero_annuncio = mergeKey2")
+        .whenMatchedUpdate(
+          condition = "existing.valid_to = date('9999-12-31') AND (" +
+            "staged_updates.contracted_price <> existing.contracted_price OR " +
+            "staged_updates.total_discount <> existing.total_discount OR " +
+            "staged_updates.data_fine_prestazione <> existing.data_fine_prestazione)",
+          set = Map("valid_to" -> "staged_updates.valid_from"))
+        .whenNotMatchedInsert(values =
+          InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
+        .execute()
+      (m("numTargetRowsInserted").toLong, m("numTargetRowsUpdated").toLong)
+    }
 
   /** @return number of duplicated rows dropped by the dedup step (the
     *         reference logs this count — src/items_etl.py:57-61). */
@@ -131,44 +172,10 @@ object ItemsEtlJob {
     val tMerge0 = System.nanoTime()
     val (insertedCount, closedCount) =
       if (!VersionedTable.isTable(spark, writePath)) {
-      // ---- INIT (reference: src/items_etl.py:79-81) --------------------
-      (VersionedTable.create(spark, dfTransformed, writePath, Schemas.PartitionColumns)
-        .lastMetric("numOutputRows"), 0L)
-    } else {
-      // ---- SCD2 MERGE (reference: src/items_etl.py:86-143) -------------
-      val table = VersionedTable.forPath(spark, writePath)
-
-      // open rows whose tracked values differ from this batch's updates
-      // — `<>` non-null-safe, as in the reference
-      val newItemsToInsert = dfTransformed.alias("updates")
-        .join(table.read.alias("existing"), Schemas.ItemsDedupKeys)
-        .where("existing.valid_to = date('9999-12-31') AND (" +
-          "updates.contracted_price <> existing.contracted_price OR " +
-          "updates.total_discount <> existing.total_discount OR " +
-          "updates.data_fine_prestazione <> existing.data_fine_prestazione)")
-
-      // staged union: NULL-mergeKey rows can never match → always inserted
-      // (the new open versions); keyed rows close their open predecessor
-      // (reference: src/items_etl.py:106-110)
-      val stagedUpdates = newItemsToInsert
-        .selectExpr("NULL as mergeKey", "NULL as mergeKey2", "updates.*")
-        .union(dfTransformed.selectExpr(
-          "contratto_cod as mergeKey", "numero_annuncio as mergeKey2", "*"))
-
-      val m = table.alias("existing")
-        .merge(stagedUpdates.alias("staged_updates"),
-          "existing.contratto_cod = mergeKey AND existing.numero_annuncio = mergeKey2")
-        .whenMatchedUpdate(
-          condition = "existing.valid_to = date('9999-12-31') AND (" +
-            "staged_updates.contracted_price <> existing.contracted_price OR " +
-            "staged_updates.total_discount <> existing.total_discount OR " +
-            "staged_updates.data_fine_prestazione <> existing.data_fine_prestazione)",
-          set = Map("valid_to" -> "staged_updates.valid_from"))
-        .whenNotMatchedInsert(values =
-          InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
-        .execute()
-      (m("numTargetRowsInserted").toLong, m("numTargetRowsUpdated").toLong)
-    }
+        // ---- INIT (reference: src/items_etl.py:79-81) ------------------
+        (VersionedTable.create(spark, dfTransformed, writePath, Schemas.PartitionColumns)
+          .lastMetric("numOutputRows"), 0L)
+      } else scd2Merge(VersionedTable.forPath(spark, writePath), dfTransformed)
     val durMerge = secondsSince(tMerge0)
 
     val metrics = ItemsRunMetrics(

@@ -219,10 +219,7 @@ class VersionedTable private (val spark: SparkSession,
     val files = scala.collection.mutable.LinkedHashMap[String, FileEntry]()
     base.foreach(_.files.foreach(fe => files(fe.path) = fe))
     val txns = scala.collection.mutable.Map[String, Long]()
-    def foldTxn(e: LogEntry): Unit =
-      for (app <- e.operationMetrics.get("txnAppId");
-           b <- e.operationMetrics.get("txnBatchId"))
-        txns(app) = b.toLong
+    def foldTxn(e: LogEntry): Unit = txns ++= txnOf(e.operationMetrics)
     val legacy = base.exists(_.txns.isEmpty)
     if (legacy && withTxns) commitsOf(commits.iterator.filter(_._1 <= fromV)).foreach(foldTxn)
     base.flatMap(_.txns).foreach(txns ++= _)
@@ -288,86 +285,104 @@ class VersionedTable private (val spark: SparkSession,
       s"concurrent commit detected: version $version already exists at $root — " +
         "another writer won this version; re-read the table and retry the operation")
 
-  /** Delta-style optimistic-concurrency loop around a whole write
-    * operation — [[transaction]] or [[append]]: the body re-reads the
-    * snapshot at its start and CAS-publishes at its end, so on a
-    * [[ConcurrentCommitException]] the operation is simply re-run against
-    * the winner's new table state — re-snapshot, re-rewrite, re-CAS — up
-    * to `spark.graft.commit.maxRetries` times (default 10, 0 disables).
-    * Physically-conflicting writers (same keys, same files) stay correct
-    * under this loop because each retry rewrites from the committed
-    * state; it is the CONCURRENCY discipline that is optimistic, not the
-    * correctness. Both callers delete the losing attempt's data files
-    * before rethrowing, so retries don't accumulate garbage. */
-  private def withCommitRetry[T](body: => T): T = {
-    // 10 retries (was 3): txn-pinned appends turn EVERY intervening
-    // commit into a CAS loss by design (the pin is what makes replays
-    // exactly-once), so the budget must absorb a burst of interleaved
-    // writers, not just a rare collision. Linear backoff staggers the
-    // herd; each retry re-reads table state, so waiting is cheap and
-    // correct.
-    val maxRetries =
-      spark.conf.get("spark.graft.commit.maxRetries", "10").trim.toInt
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          // linear backoff + uniform jitter: symmetric writers that
-          // collide on attempt N would otherwise sleep identical
-          // durations and re-collide in lockstep, burning the whole
-          // retry budget under contention
-          Thread.sleep(13L * attempt +
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(25L * attempt + 1))
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** The one commit path for every write that REMOVES or REPLACES files
-    * (MERGE, UPDATE, DELETE, OPTIMIZE, RESTORE): pin a version, run
-    * `body`'s steps against a working copy of that snapshot, publish ONE
-    * [[LogEntry]] at pinned + 1, retry through [[withCommitRetry]] on a
-    * lost CAS. Steps plan against `tx.files`/`tx.schema` and read the
+  /** The one commit path for every table write (MERGE, UPDATE, DELETE,
+    * OPTIMIZE, RESTORE and append): pin a version, run `body`'s steps
+    * against a working copy of that snapshot, publish ONE [[LogEntry]] at
+    * pinned + 1. Steps plan against `tx.files`/`tx.schema` and read the
     * working state through [[Txn.read]], so a later step sees an earlier
     * one's rows; readers of the table see all of them or none — the
     * multi-action commit Delta's log publishes atomically.
     *
     * The pin: one [[replay]] gives the version and the state at it, and
     * the commit must land at exactly that version + 1, so any commit
-    * after the replay loses the CAS and the body re-runs on fresh state.
-    * An unpinned `currentVersion + 1` evaluated at COMMIT time would
-    * publish a rewrite of a STALE file set as the next free version — a
-    * silent lost update: two concurrent disjoint-key merges that each
-    * rewrite the same base file would BOTH land, duplicating every row of
-    * that file (caught by the q92 oracle). A torn newest commit refuses
-    * the transaction before its body runs ([[writable]]).
+    * after the replay loses the CAS. An unpinned `currentVersion + 1`
+    * evaluated at COMMIT time would publish a rewrite of a STALE file set
+    * as the next free version — a silent lost update: two concurrent
+    * disjoint-key merges that each rewrite the same base file would BOTH
+    * land, duplicating every row of that file (caught by the q92 oracle).
+    * A torn newest commit refuses the transaction before its body runs
+    * ([[writable]]).
+    *
+    * A lost CAS (Delta's optimistic concurrency): an attempt whose only
+    * step is an append's `WRITE` is BLIND — it read nothing but the
+    * pinned schema and partitioning, and it removes nothing — so it folds
+    * only the winners' commits ([[replay]]'s `from`) and then
+    *  - refuses a torn newest commit;
+    *  - publishes nothing when the winners landed its (txnAppId,
+    *    txnBatchId): a zombie replay of the same batch won;
+    *  - re-runs its body when the winners changed the schema to something
+    *    other than its base or target schema, or the partitioning;
+    *  - otherwise re-publishes the same entry at the next version: the
+    *    same data files, no rewrite, no wait.
+    * Every other attempt re-runs its body against the winners' state,
+    * after a linear backoff; each re-run rewrites from the committed
+    * state, so physically conflicting writers stay correct. Every CAS
+    * loss, slide or re-run, counts against `spark.graft.commit.maxRetries`
+    * (default 10); 0 surfaces the first one.
     *
     * The entry adds the working entries that differ from the pinned ones
     * and removes the pinned paths no longer live. One step commits under
     * its own operation and metrics; several commit as `MERGE` with
     * numeric metrics summed (`-1`, "not measured", in any step makes the
     * sum `-1`) and other values joined by `,` in step order. A body that
-    * stages no step publishes nothing. If anything throws (a lost CAS
-    * included) every file and sidecar dir the attempt wrote is deleted;
+    * stages no step publishes nothing. If anything throws or the body
+    * re-runs, every file and sidecar dir the attempt wrote is deleted;
     * after a publish, files one step wrote and a later step replaced are
     * deleted too — no version ever referenced them. */
-  def transaction[T](body: Txn => T): T = withCommitRetry {
-    val r = writable(replay(None))
-    val tx = new Txn(this, r.state.version, r.state.files, r.schema, r.state.partitionColumns)
-    val out =
+  def transaction[T](body: Txn => T): T = transact(None)(body).get
+
+  /** [[transaction]] for an append carrying `txn`: the pin also replays
+    * the txn watermarks, and a batch that already landed runs no body and
+    * publishes nothing (None), even past a torn newest commit. */
+  private def transact[T](txn: Option[(String, Long)])(body: Txn => T): Option[T] = {
+    // 10: txn-pinned appends turn every intervening commit into a CAS
+    // loss by design (the pin is what makes replays exactly-once), so the
+    // budget must absorb a burst of interleaved writers
+    val maxRetries = spark.conf.get("spark.graft.commit.maxRetries", "10").trim.toInt
+    var losses = 0
+    while (true) {
+      val r = replay(None, withTxns = txn.isDefined)
+      if (txn.exists(landed(r.state, _))) return None
+      val tx = new Txn(this, r.state.version, r.state.files, writable(r).schema, r.state.partitionColumns)
+      var rerun = false
       try {
-        val o = body(tx)
-        tx.entry(now()).foreach(commit)
-        o
-      } catch {
-        case e: Throwable => deleteData(tx.written); throw e
-      }
-    val live = tx.files.flatMap(fe => fe.path +: fe.dv.map(d => d.take(d.lastIndexOf('/')))).toSet
-    deleteData(tx.written.filterNot(live))
-    out
+        val out = body(tx)
+        var seen = r.state
+        var next = tx.entry(now())
+        while (next.nonEmpty) {
+          val e = next.get
+          next = None
+          try commit(e)
+          catch {
+            case lost: ConcurrentCommitException =>
+              losses += 1
+              if (losses > maxRetries) throw lost
+              if (tx.blind) {
+                seen = writable(replay(None, from = Some(seen))).state
+                if (txnOf(e.operationMetrics).exists(landed(seen, _))) {
+                  deleteData(tx.written)
+                  return Some(out)
+                }
+                rerun = (seen.schemaJson != r.state.schemaJson && seen.schemaJson != e.schemaJson) ||
+                  seen.partitionColumns != e.partitionColumns
+                if (!rerun) next = Some(e.copy(version = seen.version + 1))
+              } else rerun = true
+          }
+        }
+        if (!rerun) {
+          val live = tx.files.flatMap(fe => fe.path +: fe.dv.map(d => d.take(d.lastIndexOf('/')))).toSet
+          deleteData(tx.written.filterNot(live))
+          return Some(out)
+        }
+      } catch { case e: Throwable => deleteData(tx.written); throw e }
+      deleteData(tx.written)
+      // linear backoff + uniform jitter: symmetric writers that collide
+      // would otherwise sleep identical durations and re-collide in
+      // lockstep, burning the whole budget under contention
+      Thread.sleep(13L * losses +
+        java.util.concurrent.ThreadLocalRandom.current().nextLong(25L * losses + 1))
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Best-effort recursive delete of data-dir relative paths. */
@@ -627,8 +642,9 @@ class VersionedTable private (val spark: SparkSession,
 
   // -------------------------------------------------------------- write --
 
-  /** Append `df`. With `mergeSchema=true`, new nullable columns widen the
-    * table schema (reference: schema_evolution_step1.py:139-144).
+  /** Append `df`: a one-step [[transaction]] staging a `WRITE`. With
+    * `mergeSchema=true`, new nullable columns widen the table schema
+    * (reference: schema_evolution_step1.py:139-144).
     *
     * `txn = Some((appId, batchId))` makes the append IDEMPOTENT per
     * writer application (Delta's SetTransaction shape, used by the
@@ -636,99 +652,39 @@ class VersionedTable private (val spark: SparkSession,
     * an append whose batchId is ≤ the last recorded one for the same
     * appId is silently skipped.
     *
-    * Concurrency (Delta's blind-append protocol): the commit is PINNED
-    * to the version the state and watermark were replayed at, so a
-    * concurrent commit always surfaces as a CAS loss — then, because an
-    * append only ADDS files, the loss is resolved by a LOGICAL conflict
-    * check over the intervening commits instead of a full re-run: if they
-    * left the table schema and partitioning as they were (and, for txn
-    * appends, none landed this very (appId, batchId) — a zombie replay,
-    * which makes this append a silent skip), the already-written data
-    * files are re-committed at the next version, metadata-only. Only a
-    * genuine logical conflict (concurrent schema evolution) pays the
-    * data rewrite, via the outer retry loop re-running the body against
-    * the new schema. */
+    * The append is blind, so a lost CAS costs no rewrite unless the
+    * winners changed the schema or partitioning: the transaction
+    * re-commits the written files at the next version, or skips them
+    * when a racing zombie landed this very (appId, batchId) first. */
   def append(df: DataFrame, mergeSchema: Boolean = false,
-             txn: Option[(String, Long)] = None): Unit = withCommitRetry {
-    // one replay: the pin, the schema and the watermark
-    val r = replay(None, withTxns = txn.isDefined)
-    if (!txn.exists(landed(r.state, _))) {
-      val cur = writable(r).schema
-      val partCols = r.state.partitionColumns
+             txn: Option[(String, Long)] = None): Unit =
+    transact(txn) { tx =>
       val newSchema =
-        if (mergeSchema) widenSchema(cur, df.schema)
+        if (mergeSchema) widenSchema(tx.schema, df.schema)
         else {
-          val missing = cur.fieldNames.toSet -- df.schema.fieldNames.toSet
-          val extra = df.schema.fieldNames.toSet -- cur.fieldNames.toSet
+          val missing = tx.schema.fieldNames.toSet -- df.schema.fieldNames.toSet
+          val extra = df.schema.fieldNames.toSet -- tx.schema.fieldNames.toSet
           require(extra.isEmpty, s"append schema has extra columns $extra (use mergeSchema)")
           require(missing.isEmpty, s"append schema is missing columns $missing")
-          cur
+          tx.schema
         }
       val aligned = df.select(newSchema.fieldNames.toSeq.map { n =>
         if (df.schema.fieldNames.contains(n))
           col(n).cast(newSchema(n).dataType).as(n)
         else lit(null).cast(newSchema(n).dataType).as(n)
       }: _*)
-      val added = writeFiles(aligned, partCols)
-      slideAppendCommit(LogEntry(r.state.version + 1, now(), "WRITE",
-        newSchema.json, partCols, added, Seq.empty,
+      val added = writeIn(tx, aligned)
+      tx.stage("WRITE", added, Seq.empty,
         Map("numFiles" -> added.size.toString, "mode" -> "Append",
           "mergeSchema" -> mergeSchema.toString) ++
           txn.map { case (app, b) =>
             Map("txnAppId" -> app, "txnBatchId" -> b.toString)
-          }.getOrElse(Map.empty)), added, r.state, txn)
+          }.getOrElse(Map.empty), newSchema)
     }
-  }
 
   /** Did `state` already land `txn`'s batch (or a later one) for its app? */
   private def landed(state: Checkpoint, txn: (String, Long)): Boolean =
     state.txns.flatMap(_.get(txn._1)).exists(_ >= txn._2)
-
-  /** Commit an append entry, resolving CAS losses with Delta's
-    * blind-append logic: an append removes nothing, so concurrent commits
-    * only LOGICALLY conflict when they changed the schema (to something
-    * other than this append's base or target schema) or the partition
-    * columns — anything else (another append, a merge, DML, OPTIMIZE)
-    * commutes, and the entry is simply re-attempted at the next version
-    * with the SAME data files: no rewrite, no re-read. Each slide folds
-    * only the commits after the state it last saw ([[replay]]'s `from`)
-    * and checks the result. Txn appends re-check the watermark on every
-    * slide — if an intervening commit landed this (appId, batchId) (a
-    * zombie replay racing this writer), the append becomes a silent skip
-    * and this attempt's files are deleted: exactly-once holds because the
-    * CAS serializes the zombies and every loser re-reads the log before
-    * deciding. A genuine conflict, a torn newest commit or slide-budget
-    * exhaustion under pathological contention deletes this attempt's
-    * files and rethrows (a conflict for [[withCommitRetry]]'s full-body
-    * re-run). */
-  private def slideAppendCommit(entry: LogEntry, wrote: Seq[FileEntry],
-                                base: Checkpoint,
-                                txn: Option[(String, Long)]): Unit = {
-    def cleanup(): Unit = deleteData(wrote.map(_.path))
-    var e = entry
-    var seen = base
-    var slides = 0
-    val maxSlides = 20
-    while (true) {
-      try { commit(e); return }
-      catch {
-        case ex: ConcurrentCommitException =>
-          slides += 1
-          if (slides > maxSlides) { cleanup(); throw ex }
-          val r = replay(None, from = Some(seen))
-          if (r.newestTorn) { cleanup(); writable(r) }
-          seen = r.state
-          if (txn.exists(landed(seen, _))) {
-            // a racing zombie landed this very batch first: this append
-            // is a replay — drop its files, commit nothing
-            cleanup(); return
-          }
-          if ((seen.schemaJson != base.schemaJson && seen.schemaJson != e.schemaJson) ||
-              seen.partitionColumns != e.partitionColumns) { cleanup(); throw ex }
-          e = e.copy(version = seen.version + 1)
-      }
-    }
-  }
 
   /** BatchId of the newest commit carrying [[append]]'s `txn` for
     * `appId`, or None — the idempotence watermark a restarted writer
@@ -2044,10 +2000,12 @@ object VersionedTable {
     val added = t.writeFiles(df, partitionBy)
     val rows =
       if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
-    t.commit(LogEntry(0L, now(), "CREATE TABLE AS SELECT",
+    // a create that loses the publish to a concurrent one leaves no file
+    try t.commit(LogEntry(0L, now(), "CREATE TABLE AS SELECT",
       df.schema.json, partitionBy, added, Seq.empty,
       Map("numFiles" -> added.size.toString,
         "numOutputRows" -> rows.toString)))
+    catch { case e: Throwable => t.deleteData(added.map(_.path)); throw e }
     t
   }
 
@@ -2062,6 +2020,10 @@ object VersionedTable {
     }
     StructType(cur.fields ++ extras)
   }
+
+  /** The (txnAppId, txnBatchId) an append's commit records, if any. */
+  private def txnOf(metrics: Map[String, String]): Option[(String, Long)] =
+    for (app <- metrics.get("txnAppId"); b <- metrics.get("txnBatchId")) yield (app, b.toLong)
 
   private def parseEntry(json: String): LogEntry =
     Serialization.read[LogEntry](json)
@@ -2110,6 +2072,10 @@ final class Txn private[tables] (table: VersionedTable,
   private[tables] var files: Seq[FileEntry] = pinnedFiles
   private[tables] val written = scala.collection.mutable.ArrayBuffer[String]()
   private val steps = scala.collection.mutable.ArrayBuffer[(String, Map[String, String])]()
+
+  /** The attempt only appends: its one step is a `WRITE`, which removes
+    * nothing and read only the pinned schema and partitioning. */
+  private[tables] def blind: Boolean = steps.map(_._1) == Seq("WRITE")
 
   /** A MERGE into the working state, staged into this transaction. */
   def merge(source: DataFrame, condition: String): MergeBuilder =

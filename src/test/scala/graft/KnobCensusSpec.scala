@@ -56,12 +56,13 @@ class KnobCensusSpec extends AnyFunSuite {
   }
 
   test("log entries are built only by the transaction publish, append, create and clone") {
-    // every other writer stages into VersionedTable.transaction, the one
-    // place that pins, publishes, cleans up and retries
+    // every writer but create and clone (version 0 of a new log) stages
+    // into VersionedTable.transaction, the one place that pins,
+    // publishes, cleans up and retries — an append is a one-step WRITE
     val sites = mainSources.flatMap(f => Files.readAllLines(f).asScala.map(_.trim))
       .filter(l => l.contains("LogEntry(") && !l.startsWith("case class") &&
         !l.startsWith("//") && !l.startsWith("*"))
-    val owners = Seq("pinned + 1", "\"WRITE\"", "\"CREATE TABLE AS SELECT\"", "\"CLONE\"")
+    val owners = Seq("pinned + 1", "\"CREATE TABLE AS SELECT\"", "\"CLONE\"")
     assert(sites.size == owners.size && owners.forall(o => sites.exists(_.contains(o))),
       sites.mkString("\n"))
   }
@@ -76,5 +77,15 @@ class KnobCensusSpec extends AnyFunSuite {
       assert(calls.map(_.split(java.util.regex.Pattern.quote(fn), -1).length - 1).sum == 1,
         s"$fn call sites:\n${calls.mkString("\n")}")
     }
+  }
+
+  test("a lost CAS is caught in one place under graft/tables: the transaction's loop") {
+    // blind-append slides and body re-runs share one handler and one budget
+    val tables = root.resolve("graft").resolve("tables")
+    val catches = mainSources.filter(_.startsWith(tables))
+      .flatMap(f => Files.readAllLines(f).asScala.map(_.trim))
+      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
+      .filter(l => """:\s*ConcurrentCommitException\b""".r.findFirstIn(l).isDefined)
+    assert(catches.size == 1, catches.mkString("\n"))
   }
 }

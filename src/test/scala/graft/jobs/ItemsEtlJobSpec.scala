@@ -175,4 +175,65 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     // NULL <> 200.00 is NULL → not a change → still a single open version
     assert(df.filter(col("contratto_cod") === "Y5").count() == 1)
   }
+
+  test("two concurrent runs of one day's batch land it once: change detection reads the merge's pinned state") {
+    val dir = Files.createTempDirectory("graft-items-race").toString
+    val (race, serial) = (s"$dir/landing/race", s"$dir/landing/serial")
+    val d1 = s"$dir/crm/items_20230301.txt"
+    TestCsv.write(d1, header, Seq(
+      item("R1", "10", "100.00"), item("R1", "11", "200.00"), item("R2", "10", "50.00")))
+    Seq(race, serial).foreach(ItemsEtlJob.run(spark, d1, _))
+    val d2 = s"$dir/crm/items_20230302.txt"
+    TestCsv.write(d2, header, Seq(
+      item("R1", "10", "150.00"), // changed → close + insert
+      item("R1", "11", "200.00"), // unchanged → no-op
+      item("R3", "10", "70.00"))) // new key → insert
+    // the day's batch as the job's transform shapes it, held back in its
+    // first materialization — after the slow run's merge pinned the table
+    val batch = spark.read.option("header", "true").option("sep", "|")
+      .schema(graft.core.Schemas.Items).csv(d2)
+      .withColumn("valid_from", to_date(lit("20230302"), "yyyyMMdd"))
+      .withColumn("valid_to", to_date(lit(graft.core.Schemas.MaxDate), "yyyyMMdd"))
+      .withColumn("valid_from_year", year(col("valid_from")))
+      .withColumn("valid_from_month", month(col("valid_from")))
+      .withColumn("valid_from_day", dayofmonth(col("valid_from")))
+    val held = spark.createDataFrame(
+      spark.sparkContext.parallelize(batch.collect().toSeq, 1).mapPartitions { it =>
+        ItemsEtlJobSpec.raceEntered.countDown()
+        ItemsEtlJobSpec.raceResume.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        it
+      }, batch.schema)
+    val slowOut = new java.util.concurrent.atomic.AtomicReference[Any]
+    val slow = new Thread(() => {
+      slowOut.set(try ItemsEtlJob.scd2Merge(VersionedTable.forPath(spark, race), held)
+                  catch { case e: Throwable => e })
+    })
+    slow.start()
+    assert(ItemsEtlJobSpec.raceEntered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "the slow run never started materializing its batch")
+    val fast = ItemsEtlJob.runWithMetrics(spark, d2, race)
+    ItemsEtlJobSpec.raceResume.countDown()
+    slow.join(120000)
+    val once = ItemsEtlJob.runWithMetrics(spark, d2, serial)
+    assert((once.inserted_count, once.closed_count) == ((2L, 1L)))
+    assert((fast.inserted_count, fast.closed_count) == ((once.inserted_count, once.closed_count)))
+    def state(path: String) =
+      VersionedTable.forPath(spark, path).read.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val open = VersionedTable.forPath(spark, race).read
+      .filter(col("valid_to") === lit(java.sql.Date.valueOf("9999-12-31")))
+      .groupBy("contratto_cod", "numero_annuncio").count()
+    val twice = open.filter(col("count") =!= 1).collect()
+    assert(twice.isEmpty, s"every key keeps exactly one open row: ${twice.mkString(", ")}")
+    assert(open.count() == 4)
+    assert(state(race) == state(serial), "two concurrent runs leave the state of one")
+    assert(slowOut.get == ((0L, 0L)), s"the slow run re-runs on the fast run's state: ${slowOut.get}")
+  }
+}
+
+/** Latches for the concurrent-rerun test: a top-level object, so the
+  * executor-side closure (same JVM under local[*]) and the driver
+  * coordinate without capturing test state. */
+object ItemsEtlJobSpec {
+  val raceEntered = new java.util.concurrent.CountDownLatch(1)
+  val raceResume = new java.util.concurrent.CountDownLatch(1)
 }

@@ -935,6 +935,63 @@ class VersionedTableSpec extends AnyFunSuite {
       s"slow row reads NULL for the evolved column, got $rows")
   }
 
+  test("commit.maxRetries = 0 surfaces an append's first CAS loss and leaves no data file") {
+    // the budget bounds every CAS loss, a blind append's slide included
+    val path = tmpDir() + "/t15zero"
+    VersionedTable.create(spark, Seq((1L, "a")).toDF("k", "v"), path)
+    spark.conf.set("spark.graft.commit.maxRetries", "0")
+    try {
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val slowDf = Seq((2L, "slow")).toDS()
+        .mapPartitions { it =>
+          VersionedTableSpec.zeroEntered.countDown()
+          VersionedTableSpec.zeroResume.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          it
+        }.toDF("k", "v")
+      val slow = new Thread(() => {
+        try VersionedTable.forPath(spark, path).append(slowDf)
+        catch { case e: Throwable => failure.set(e) }
+      })
+      slow.start()
+      assert(VersionedTableSpec.zeroEntered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      VersionedTable.forPath(spark, path).append(Seq((3L, "fast")).toDF("k", "v"))
+      VersionedTableSpec.zeroResume.countDown()
+      slow.join(120000)
+      assert(failure.get.isInstanceOf[ConcurrentCommitException],
+        s"the slow append must surface its CAS loss, got ${failure.get}")
+      val t = VersionedTable.forPath(spark, path)
+      assert(t.currentVersion == 1)
+      assert(rows(t) == Seq((1L, "a"), (3L, "fast")))
+      assert(dataFiles(path) == t.liveEntries.map(_.path).toSet,
+        "the losing append's files must be deleted")
+    } finally spark.conf.unset("spark.graft.commit.maxRetries")
+  }
+
+  test("a create that loses the publish to a concurrent create leaves no data file") {
+    val path = tmpDir() + "/t16create"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val slowDf = Seq((1L, "slow")).toDS()
+      .mapPartitions { it =>
+        VersionedTableSpec.createEntered.countDown()
+        VersionedTableSpec.createResume.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        it
+      }.toDF("k", "v")
+    val slow = new Thread(() => {
+      try VersionedTable.create(spark, slowDf, path)
+      catch { case e: Throwable => failure.set(e) }
+    })
+    slow.start()
+    assert(VersionedTableSpec.createEntered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val t = VersionedTable.create(spark, Seq((2L, "fast")).toDF("k", "v"), path)
+    VersionedTableSpec.createResume.countDown()
+    slow.join(120000)
+    assert(failure.get.isInstanceOf[ConcurrentCommitException],
+      s"the slow create must lose the publish, got ${failure.get}")
+    assert(t.currentVersion == 0 && rows(t) == Seq((2L, "fast")))
+    assert(dataFiles(path) == t.liveEntries.map(_.path).toSet,
+      "the losing create's files must be deleted")
+  }
+
   /** Data-dir-relative paths of the parquet files under `<path>/data`. */
   private def dataFiles(path: String): Set[String] = {
     val data = java.nio.file.Paths.get(path, "data")
@@ -1214,4 +1271,8 @@ object VersionedTableSpec {
   val evoEntered = new java.util.concurrent.CountDownLatch(1)
   val evoResume = new java.util.concurrent.CountDownLatch(1)
   val evoCount = new java.util.concurrent.atomic.AtomicInteger
+  val zeroEntered = new java.util.concurrent.CountDownLatch(1)
+  val zeroResume = new java.util.concurrent.CountDownLatch(1)
+  val createEntered = new java.util.concurrent.CountDownLatch(1)
+  val createResume = new java.util.concurrent.CountDownLatch(1)
 }
