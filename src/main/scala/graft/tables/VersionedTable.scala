@@ -1353,8 +1353,8 @@ class VersionedTable private (val spark: SparkSession,
     * [[transaction]] of its own.
     * @return the step's operation metrics */
   private[tables] def executeMerge(txn: Option[Txn], m: MergeBuilder): Map[String, String] = {
-    // The source is consumed 2-3 times (stats/cardinality agg, file-prune
-    // join, then the rewrite or anti join) — persist it so the lineage
+    // The source is consumed 2-3 times (the stats pass, the file-prune
+    // probe, then the rewrite or anti join) — persist it so the lineage
     // runs once. SCD2 merge sources are typically a join/aggregate over
     // the TARGET TABLE itself (HeaderEtlJob Phase A's first-change frame,
     // ItemsEtlJob's staged union): unpersisted, every evaluation replays
@@ -1473,8 +1473,8 @@ class VersionedTable private (val spark: SparkSession,
   /** Plan one MERGE step: the only place a MERGE decides anything — the
     * evolved schema, the candidate files, what proves the source keys
     * unique, the join that writes the new files and the broadcast test.
-    * Runs at most one Spark job (the source stats/cardinality agg), writes
-    * no file and stages nothing. */
+    * Runs at most one query (the source stats pass, map-only, no
+    * aggregate), writes no file and stages nothing. */
   private[tables] def planMerge(tx: Txn, m: MergeBuilder, src: DataFrame): MergePlan = {
     val files = tx.files
     // Merge-time schema evolution (the reference's autoMerge case,
@@ -1506,40 +1506,109 @@ class VersionedTable private (val spark: SparkSession,
       if (evolvedCols.isEmpty) tx.schema
       else StructType(tx.schema.fields ++ evolvedCols)
 
-    // --- stats pruning + cardinality fast path: ONE source-side agg -----
-    // For each conjunctive equi-key, the agg computes its min/max — files
+    // --- stats pruning: ONE observed, map-only pass over the source -----
+    // For each conjunctive equi-key the pass observes its min/max — files
     // that [[pruneFiles]] rules out for those key ranges (stats, and the
     // bloom filter when a key's range is one value) cannot contain
     // matched rows and are skipped by both the insert-only anti-join and
     // the touched-file probe (the same role Delta's file stats play in
-    // MERGE). When the condition is a PURE equi-conjunction, the same agg
-    // also checks whether the source keys are unique: if they are, no
-    // target row can possibly be matched by two source rows, so the
-    // per-target-row cardinality grouping in the probe is provably
-    // unnecessary (the common case — e.g. a deduped batch). Conservative
-    // on every failure path: unknown shapes prune nothing and keep the
-    // exact check.
+    // MERGE). The pass writes to the `noop` sink, so it is the action that
+    // fills a persisted source's cache, and its min/max ride accumulators
+    // instead of a global aggregate behind a single-partition exchange.
+    // Conservative on every failure path: unknown shapes prune nothing.
     val (pairs, pureEqui) = equiPairs(m.condition, m.targetAlias)
-    // ≤2 files: the min/max agg costs more than scanning them
-    val wantStats = pairs.nonEmpty && files.size > 2
-    // Key uniqueness FROM THE PLAN, before paying any job for it: a source
-    // whose optimized plan is an Aggregate grouped exactly by (a subset
-    // of) the join-key attributes is unique on those keys by construction
-    // (groupBy output has one row per grouping-key tuple; if every
-    // grouping column is a join key, two source rows can never share the
-    // full key). The canonical SCD2 close source — groupBy(key).agg(min)
-    // — hits this, which previously paid a countDistinct whose partial-
-    // distinct plan adds two exchanges to the stats agg. Conservative:
-    // any other plan shape (projections that could duplicate, unions,
-    // joins) falls through to the measured check.
+    val candidates: Seq[FileEntry] =
+      // ≤2 files: the pass costs more than scanning them
+      if (pairs.isEmpty || files.size <= 2) files
+      else try {
+        val obs = org.apache.spark.sql.Observation()
+        val bounds = pairs.indices.flatMap { i =>
+          Seq(min(expr(pairs(i)._2)).as(s"__graft_lo$i"), max(expr(pairs(i)._2)).as(s"__graft_hi$i"))
+        }
+        labeled("merge: source stats/cardinality agg") {
+          src.observe(obs, bounds.head, bounds.tail: _*).write.format("noop").mode("overwrite").save()
+        }
+        val row = obs.get
+        pruneFiles(files, schema, pairs.indices.map { i =>
+          (pairs(i)._1, row(s"__graft_lo$i"), row(s"__graft_hi$i"))
+        })._1
+      } catch { case scala.util.control.NonFatal(_) => files }
+
+    // Key uniqueness FROM THE PLAN: when the condition is a PURE
+    // equi-conjunction and no two source rows that can match share a
+    // key, no target row can be matched by two source rows, so the
+    // probe's per-target-row cardinality grouping is provably unnecessary.
+    // A source row with a NULL key can never equi-match. Exact rules over
+    // the analyzed source, followed through aliases and key-preserving
+    // projections (identity column mappings only):
+    //  - an Aggregate grouped exactly by (a subset of) the keys — the
+    //    canonical SCD2 close source, groupBy(key).agg(min);
+    //  - a Filter keeps its child's uniqueness;
+    //  - a Filter keeping one row per window partition over (a subset of)
+    //    the keys: `count(1) = 1` over the whole unordered partition, or
+    //    `row_number() = 1` — the items batch's dedup;
+    //  - a Union whose arms all project a NULL key but one, that one
+    //    unique — the items job's staged union.
+    // Every other shape (joins, generators, overlapping union arms) is
+    // unproven and takes the probe's cardinality check.
     def keysUniqueByPlan: Boolean =
       pureEqui && pairs.nonEmpty && {
         import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-        import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet}
-        import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, SubqueryAlias}
+        import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeSet, Cast, EqualTo,
+          Expression => CExpr, RowNumber, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding,
+          WindowExpression}
+        import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
+        import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project,
+          SubqueryAlias, Union, Window => LWindow}
         try {
-          // walk through alias/key-preserving-projection wrappers down to
-          // an Aggregate; only identity column mappings are followed
+          // the expression defining `a` below `p` and the plan it reads,
+          // followed through plain renames and operators that only drop
+          // rows or add columns
+          def origin(p: LogicalPlan, a: Attribute): Option[(CExpr, LogicalPlan)] = p match {
+            case SubqueryAlias(_, child) => origin(child, a)
+            case Filter(_, child) => origin(child, a)
+            case Project(list, child) => list.find(_.exprId == a.exprId).flatMap {
+              case b: Attribute => origin(child, b)
+              case Alias(b: Attribute, _) => origin(child, b)
+              case Alias(e, _) => Some((e, child))
+              case _ => None
+            }
+            case w: LWindow => w.windowExpressions.collectFirst {
+              case al: Alias if al.exprId == a.exprId => (al.child, w.child)
+            }.orElse(origin(w.child, a))
+            case _ => None
+          }
+          // `a` is NULL in every row `p` produces
+          def isNull(p: LogicalPlan, a: Attribute): Boolean = origin(p, a).exists {
+            case (e, _) if e.foldable => e.eval() == null
+            case (c: Cast, child) => c.child match {
+              case b: Attribute => isNull(child, b)
+              case _ => false
+            }
+            case _ => false
+          }
+          def isOne(e: CExpr): Boolean = e.foldable && (e.eval() match {
+            case n: java.lang.Long => n == 1L
+            case n: java.lang.Integer => n == 1
+            case _ => false
+          })
+          // `w = 1` keeps exactly one row per partition of w
+          def onePerPartition(w: WindowExpression, keys: AttributeSet): Boolean = {
+            val spec = w.windowSpec
+            spec.partitionSpec.forall {
+              case a: Attribute => keys.contains(a)
+              case _ => false
+            } && (w.windowFunction match {
+              case _: RowNumber => true
+              case AggregateExpression(Count(cs), _, false, None, _) =>
+                spec.orderSpec.isEmpty && cs.forall(c => c.foldable && c.eval() != null) &&
+                  (spec.frameSpecification match {
+                    case SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing) => true
+                    case _ => false
+                  })
+              case _ => false
+            })
+          }
           def dig(p: LogicalPlan, keys: AttributeSet): Boolean = p match {
             case SubqueryAlias(_, child) => dig(child, keys)
             case Project(projList, child) =>
@@ -1548,6 +1617,24 @@ class VersionedTable private (val spark: SparkSession,
                 case al @ Alias(c: Attribute, _) if keys.contains(al.toAttribute) => c
               }
               mapped.size == keys.size && dig(child, AttributeSet(mapped))
+            case Filter(cond, child) =>
+              // only a top-level conjunct binds every kept row
+              def conjuncts(e: CExpr): Seq[CExpr] = e match {
+                case And(l, r) => conjuncts(l) ++ conjuncts(r)
+                case _ => Seq(e)
+              }
+              val onePerKey = conjuncts(cond).collect {
+                case EqualTo(a: Attribute, v) if isOne(v) => a
+                case EqualTo(v, a: Attribute) if isOne(v) => a
+              }.exists(a => origin(child, a).exists {
+                case (w: WindowExpression, _) => onePerPartition(w, keys)
+                case _ => false
+              })
+              onePerKey || dig(child, keys)
+            case u: Union =>
+              val at = u.output.indices.filter(i => keys.contains(u.output(i)))
+              val keyed = u.children.filterNot(c => at.exists(i => isNull(c, c.output(i))))
+              keyed.size <= 1 && keyed.forall(c => dig(c, AttributeSet(at.map(c.output))))
             case agg: Aggregate =>
               val groupAttrs = agg.groupingExpressions.flatMap {
                 case a: Attribute => Some(a)
@@ -1576,43 +1663,6 @@ class VersionedTable private (val spark: SparkSession,
         } catch { case scala.util.control.NonFatal(_) => false }
       }
     val anyMatchedClause = m.update.isDefined || m.delete.isDefined
-    val uniqueByPlan = keysUniqueByPlan
-    // dup check only matters on the rewrite path (insert-only merges
-    // never probe and never rewrite matched rows)
-    val wantDupCheck = !uniqueByPlan && pureEqui && pairs.nonEmpty && anyMatchedClause
-    var uniqueByCount = false
-    val candidates: Seq[FileEntry] =
-      try {
-        if (!wantStats && !wantDupCheck) files
-        else {
-          val statAggs = if (!wantStats) Seq.empty else
-            pairs.zipWithIndex.flatMap { case ((_, sexpr), i) =>
-              Seq(min(expr(sexpr)).as(s"__graft_lo$i"),
-                max(expr(sexpr)).as(s"__graft_hi$i"))
-            }
-          val keyExprs = pairs.map(p => expr(p._2))
-          val dupAggs = if (!wantDupCheck) Seq.empty else Seq(
-            sum(when(keyExprs.map(_.isNotNull).reduce(_ && _), 1L).otherwise(0L))
-              .as("__graft_nn"),
-            countDistinct(keyExprs.head, keyExprs.tail: _*).as("__graft_nd"))
-          val aggs = statAggs ++ dupAggs
-          val row = labeled("merge: source stats/cardinality agg") {
-            src.agg(aggs.head, aggs.tail: _*).collect()(0)
-          }
-          if (wantDupCheck) {
-            // rows with a NULL key can never equi-match a target row;
-            // countDistinct skips them too, so compare against the
-            // non-null-key row count
-            val nn = if (row.isNullAt(statAggs.size)) 0L else row.getLong(statAggs.size)
-            val nd = row.getLong(statAggs.size + 1)
-            uniqueByCount = nn == nd
-          }
-          if (!wantStats) files
-          else pruneFiles(files, schema, pairs.zipWithIndex.map { case ((tcol, _), i) =>
-            (tcol, row.get(i * 2), row.get(i * 2 + 1))
-          })._1
-        }
-      } catch { case scala.util.control.NonFatal(_) => files }
 
     // An update/delete-only merge (no insert clause) preserves every
     // target row and adds none, so a LEFT join is exactly equivalent to
@@ -1631,25 +1681,25 @@ class VersionedTable private (val spark: SparkSession,
     // MATERIALIZED (cached) size is provably small: the other side is the
     // table — at 100 TB the only sane plan ships the source to the data,
     // never the reverse (guide §3.1). The size comes from the cache's own
-    // stats (exact once the stats agg above materialized it), never from
+    // stats (exact once the stats pass above materialized it), never from
     // a pre-execution estimate; an unpersisted or unmaterialized source
     // conservatively stays un-hinted and Catalyst/AQE decides. Full-outer
     // rewrites (update+insert merges) are excluded by
     // [[MergePlan.rewriteBroadcast]] — broadcast hash join does not
     // support full-outer and the hint would be dead weight.
     // `src.storageLevel != NONE` covers both a source executeMerge
-    // persisted and one the caller cached. Read strictly after the
-    // stats/cardinality agg above ran its collect and filled the cache,
-    // so the InMemoryRelation stats read here are the exact materialized
-    // bytes (on the no-stats ≤2-file path the cache may be cold and this
-    // reads the estimate — a ≤2-file table is fixture scale, where either
-    // join strategy is fine). The anti-join path never reads it.
+    // persisted and one the caller cached. Read strictly after the stats
+    // pass above filled the cache, so the InMemoryRelation stats read
+    // here are the exact materialized bytes (on the no-stats ≤2-file
+    // path the cache may be cold and this reads the estimate — a ≤2-file
+    // table is fixture scale, where either join strategy is fine). The
+    // anti-join path never reads it.
     val sourceSmall = joinType != "left_anti" && src.storageLevel != StorageLevel.NONE && (try {
       src.queryExecution.optimizedPlan.stats.sizeInBytes <= MergeBroadcastSourceBytes
     } catch { case scala.util.control.NonFatal(_) => false })
 
     MergePlan(schema, evolvedCols.size, candidates, files.size - candidates.size,
-      if (uniqueByPlan) "plan" else if (uniqueByCount) "count" else "unchecked",
+      if (keysUniqueByPlan) "plan" else "unchecked",
       joinType, src.storageLevel != StorageLevel.NONE, sourceSmall)
   }
 
@@ -1791,8 +1841,16 @@ class VersionedTable private (val spark: SparkSession,
           val touchedRows =
             if (touched.forall(_.rows >= 0)) touched.map(fe => fe.rows - fe.dvRows).sum
             else -1L
-          (added, touched, cnt("u"), cnt("i"),
-            if (m.delete.isEmpty) 0L else if (touchedRows >= 0) touchedRows - cnt("t") else -1L)
+          val deleted =
+            if (m.delete.isEmpty) 0L else if (touchedRows >= 0) touchedRows - cnt("t") else -1L
+          // a rewrite measured to change nothing (every matched row failed
+          // its clause conditions: e.g. a replayed batch) wrote exact copies
+          // of the touched files; swapping them in would only churn the
+          // file set, so stage no file action — the transaction deletes
+          // the written files no version references
+          if (cnt("u") == 0 && cnt("i") == 0 && deleted == 0 && plan.evolved == 0)
+            (Seq.empty, Seq.empty, 0L, 0L, 0L)
+          else (added, touched, cnt("u"), cnt("i"), deleted)
         }
       }
 
@@ -2189,10 +2247,11 @@ private[tables] final case class Clause(cond: Option[String], set: Map[String, S
   * ([[VersionedTable#planMerge]]); the executor only carries it out.
   * @param evolved    columns the step's schema evolution added
   * @param candidates target files that may hold matched rows
-  * @param keysUnique what proved the source keys unique: "plan" (a
-  *                   groupBy on the keys), "count" (the stats agg's
-  *                   countDistinct) or "unchecked" (neither; the probe's
-  *                   per-row cardinality check runs)
+  * @param keysUnique "plan" when the source plan proves its keys unique
+  *                   (a groupBy on the keys, a one-row-per-key window
+  *                   filter, a union whose other arms have NULL keys),
+  *                   else "unchecked" (the probe's per-row cardinality
+  *                   check runs)
   * @param joinType   the join that writes the new files: `left_anti` on
   *                   the insert-only path, else `left_outer`/`full_outer`
   * @param sourceSmall the cached source is small enough to broadcast */

@@ -176,6 +176,98 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     assert(df.filter(col("contratto_cod") === "Y5").count() == 1)
   }
 
+  test("replaying an items batch that changes nothing swaps no data file") {
+    val dir = Files.createTempDirectory("graft-items-replay").toString
+    val table = s"$dir/landing/items"
+    def day(file: String, price: String): String = {
+      val path = s"$dir/crm/$file"
+      TestCsv.write(path, header, Seq(item("P1", "10", price)))
+      path
+    }
+    // file names: the index reports URIs, the data dir holds paths
+    def live(): Set[String] = VersionedTable.forPath(spark, table).read.inputFiles
+      .map(u => new java.io.File(new java.net.URI(u)).getName).toSet
+    def dataFiles(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(table, "data")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    }
+    def lastCommit() = {
+      val r = VersionedTable.forPath(spark, table).history(1).head()
+      (r.getAs[scala.collection.Map[String, String]]("operationMetrics"),
+        r.getAs[Long]("numAddedFiles"), r.getAs[Long]("numRemovedFiles"))
+    }
+    ItemsEtlJob.run(spark, day("items_20230401.txt", "100.00"), table)
+    val d2 = day("items_20230402.txt", "150.00")
+    val changed = ItemsEtlJob.runWithMetrics(spark, d2, table)
+    assert((changed.inserted_count, changed.closed_count) == ((1L, 1L)))
+    // the staged union (a NULL-key arm over the deduped batch) is unique by plan
+    assert(lastCommit()._1("sourceKeysUnique") == "plan")
+    val (before, onDisk) = (live(), dataFiles())
+
+    val replay = ItemsEtlJob.runWithMetrics(spark, d2, table)
+    assert((replay.inserted_count, replay.closed_count) == ((0L, 0L)))
+    val (metrics, added, removed) = lastCommit()
+    assert((added, removed) == ((0L, 0L)), s"the replay's commit swapped files: $metrics")
+    assert(metrics("numTargetFilesAdded") == "0" && metrics("numTargetFilesRemoved") == "0")
+    assert(live() == before, "the live file set is unchanged")
+    assert(dataFiles() == onDisk, "the rewrite's copies are deleted")
+  }
+
+  test("merge planning runs no aggregate query: Phase A, Phase B and the items merge") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft-items-planning").toString
+    // a planning query names each merge key's lower bound __graft_lo<i>
+    def planning(p: LogicalPlan): Boolean = p.exists(_.expressions.exists(_.exists {
+      case a: Alias => a.name.startsWith("__graft_lo")
+      case _ => false
+    }))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (planning(qe.analyzed)) seen.add(qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // three live files per table before the measured day, so every merge
+    // of that day runs its stats pass
+    val headerCols = Seq("contratto_cod", "codice_ordine_sap",
+      "tipo_contratto", "codice_opec", "data_firma", "net_amount",
+      "causale_annullamento", "data_annullamento", "codice_agente",
+      "status_quote", "creazione_dta", "event_time")
+    def headerRow(cod: String, status: String, at: String): Seq[String] =
+      Seq(cod, "3000000001", "365", "OPEC0001", "2023-01-01", "1500.00",
+        "", "", "10001", status, "2023-01-01", at)
+    def headerDay(file: String, rows: Seq[Seq[String]]): Unit = {
+      val path = s"$dir/crm/header/$file"
+      TestCsv.write(path, headerCols, rows)
+      HeaderEtlJob.run(spark, path, s"$dir/landing/header", s"$dir/discarded", s"$dir/metrics")
+    }
+    def itemsDay(file: String, price: String): Unit = {
+      val path = s"$dir/crm/items/$file"
+      TestCsv.write(path, header, Seq(item("Q1", "10", price), item("Q2", "10", "5.00")))
+      ItemsEtlJob.run(spark, path, s"$dir/landing/items")
+    }
+    Seq("01" -> "100.00", "02" -> "110.00", "03" -> "120.00").foreach { case (d, p) =>
+      headerDay(s"header_202305$d.csv", Seq(headerRow(s"H$d", "Accepted", s"2023-05-$d 10:00:00")))
+      itemsDay(s"items_202305$d.txt", p)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      headerDay("header_20230504.csv", Seq(headerRow("H01", "Rejected", "2023-05-04 10:00:00"),
+        headerRow("H4", "Accepted", "2023-05-04 11:00:00")))
+      itemsDay("items_20230504.txt", "130.00")
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = seen.asScala.toSeq
+    assert(plans.size >= 3, s"one planning query per merge, saw ${plans.size}")
+    val withAgg = plans.filter(_.exists(_.isInstanceOf[Aggregate]))
+    assert(withAgg.isEmpty, s"planning queries with an Aggregate:\n${withAgg.mkString("\n")}")
+  }
+
   test("two concurrent runs of one day's batch land it once: change detection reads the merge's pinned state") {
     val dir = Files.createTempDirectory("graft-items-race").toString
     val (race, serial) = (s"$dir/landing/race", s"$dir/landing/serial")

@@ -234,7 +234,7 @@ class VersionedTableSpec extends AnyFunSuite {
       assert(t.currentVersion == v && dataFiles(t.root) == files)
       p
     }
-    // three files, so the source stats agg runs and fills the cache
+    // three files, so the source stats pass runs and fills the cache
     // before the broadcast decision reads its size
     val t = VersionedTable.create(spark,
       (1 to 30).map(i => (s"k$i", i)).toDF("key", "val").repartition(3),
@@ -259,7 +259,8 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.read.filter($"key" === "k1").select("val").as[Int].head() == 7)
 
     // update + insert from a plain frame: full-outer rewrite, which a
-    // broadcast hash join cannot run, and uniqueness from the count
+    // broadcast hash join cannot run; nothing in a local relation's plan
+    // proves its keys unique, so the probe checks per target row
     val plain = Seq(("k2", 20), ("k99", 99)).toDF("key", "v").alias("s")
     val upsert = t.alias("e").merge(plain, "e.key = s.key")
       .whenMatchedUpdate(set = Map("val" -> "s.v"))
@@ -271,7 +272,9 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(m2("rewriteJoinType") == "full_outer")
     assert(m2("sourceBroadcast") == "false")
     assert(m2("sourceCached") == "false")
-    assert(m2("sourceKeysUnique") == "count")
+    assert(m2("sourceKeysUnique") == "unchecked")
+    assert(t.read.filter($"key".isin("k2", "k99")).orderBy("key").select("val").as[Int]
+      .collect().toSeq == Seq(20, 99))
 
     // insert-only: the anti-join path records its own join
     val one = Seq(("k100", 100)).toDF("key", "v").alias("s")
@@ -292,18 +295,73 @@ class VersionedTableSpec extends AnyFunSuite {
       .whenMatchedUpdate(set = Map("val" -> "s.v")), plain)
     assert(theta.candidates == live && theta.skippedByStats == 0)
     assert(theta.keysUnique == "unchecked" && theta.joinType == "left_outer")
-    // a duplicate key: the count sees it, so the probe must check per row
+    // a duplicate key: unproven, so the probe must check per row
     val dup = Seq(("k1", 1), ("k1", 2)).toDF("key", "v").alias("s")
     val dupPlan = plan(t, t.alias("e").merge(dup, "e.key = s.key")
       .whenMatchedUpdate(set = Map("val" -> "s.v")), dup)
     assert(dupPlan.keysUnique == "unchecked")
-    // ≤2 files: no stats agg runs, so nothing is skipped or counted
+    // ≤2 files: no stats pass runs, so nothing is skipped
     val small = VersionedTable.create(spark,
       Seq(("k1", 1), ("k2", 2)).toDF("key", "val").coalesce(1), tmpDir() + "/tdecide2")
     val tiny = plan(small, small.alias("e").merge(one, "e.key = s.key")
       .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v")), one)
     assert(tiny.candidates == small.liveEntries && tiny.skippedByStats == 0)
     assert(tiny.keysUnique == "unchecked" && tiny.joinType == "left_anti")
+  }
+
+  test("merge key uniqueness from the plan: filters, one-row-per-key windows and NULL-key union arms") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    val t = VersionedTable.create(spark,
+      Seq(("k1", 1), ("k2", 2), ("k3", 3)).toDF("key", "val").repartition(3), tmpDir() + "/tuniq")
+    def upsert(src: DataFrame) = t.alias("e").merge(src.alias("s"), "e.key = s.key")
+      .whenMatchedUpdate(set = Map("val" -> "s.v"))
+      .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v"))
+    def unique(src: DataFrame): String =
+      t.transaction(tx => t.planMerge(tx, upsert(src), src.alias("s"))).keysUnique
+    val rows = Seq(("k1", 10), ("k1", 11), ("k2", 20), ("k4", 40)).toDF("key", "v")
+    val byKey = Window.partitionBy("key")
+    val grouped = rows.groupBy("key").agg(max("v").as("v"))
+    val nullKeyed = rows.select(lit(null).cast("string").as("key"), col("v"))
+
+    // proven: the probe skips the per-row check
+    assert(unique(grouped.filter($"v" > 0)) == "plan", "a filter keeps its child's uniqueness")
+    val onlyOnce = rows.withColumn("c", count(lit(1)).over(byKey)).filter($"c" === 1).drop("c")
+    assert(unique(onlyOnce) == "plan", "count(1) = 1 over the whole key partition")
+    val firstPerKey = rows.withColumn("rn", row_number().over(byKey.orderBy($"v".desc)))
+      .filter($"rn" === 1).drop("rn")
+    assert(unique(firstPerKey) == "plan", "row_number() = 1 per key")
+    assert(unique(nullKeyed.union(grouped)) == "plan", "NULL-key arms never match")
+    assert(unique(rows.selectExpr("NULL as key", "v").union(onlyOnce)) == "plan",
+      "the items staged union: a NULL-literal arm and a deduped arm")
+    // a proven source merges correctly: k1 dropped by the dedup,
+    // k2 updated, k4 inserted, the NULL-key rows all inserted
+    upsert(nullKeyed.union(onlyOnce)).execute()
+    assert(t.history(1).select("operationMetrics").as[Map[String, String]]
+      .head()("sourceKeysUnique") == "plan")
+    assert(t.read.filter($"key".isNotNull).orderBy("key").as[(String, Int)].collect().toSeq ==
+      Seq(("k1", 1), ("k2", 20), ("k3", 3), ("k4", 40)))
+    assert(t.read.filter($"key".isNull).count() == rows.count())
+
+    // unproven: each takes the probe's cardinality check, which rejects
+    // the duplicate key k1 the shape lets through
+    val dupArms = grouped.union(grouped)
+    val twoPerKey = rows.withColumn("c", count(lit(1)).over(byKey)).filter($"c" === 2).drop("c")
+    val byNonKey = rows.withColumn("c", count(lit(1)).over(Window.partitionBy("v")))
+      .filter($"c" === 1).drop("c")
+    val perRow = rows.withColumn("c", count(lit(1)).over(byKey.rowsBetween(0, 0)))
+      .filter($"c" === 1).drop("c")
+    val orOnce = rows.withColumn("c", count(lit(1)).over(byKey))
+      .filter($"c" === 1 || $"v" > 0).drop("c")
+    for ((name, src) <- Seq("two unique arms with overlapping keys" -> dupArms,
+                            "count(1) = 2" -> twoPerKey,
+                            "a window partitioned by a non-key" -> byNonKey,
+                            "a one-row frame" -> perRow,
+                            "count(1) = 1 under an OR" -> orOnce)) {
+      assert(unique(src) == "unchecked", name)
+      val e = intercept[IllegalStateException](upsert(src).execute())
+      assert(e.getMessage.contains("multiple source rows matched the same target row"), name)
+    }
   }
 
   test("an expensive merge source is unpersisted after the merge, also when it throws") {
@@ -318,8 +376,8 @@ class VersionedTableSpec extends AnyFunSuite {
       .head()("sourceCached") == "true", "the aggregate source must be persisted")
     assert(agg.storageLevel == StorageLevel.NONE)
 
-    // grouped by more than the join key: not unique by plan, the count
-    // sees the duplicate, and the probe's cardinality check throws
+    // grouped by more than the join key: not unique by plan, and the
+    // probe's cardinality check throws on the duplicate
     val dup = Seq(("k1", "x", 1), ("k1", "y", 2)).toDF("key", "g", "v")
       .groupBy("key", "g").agg(max("v").as("v")).alias("s")
     val e = intercept[IllegalStateException] {
