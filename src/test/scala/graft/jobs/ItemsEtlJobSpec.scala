@@ -263,7 +263,7 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val plans = seen.asScala.toSeq
-    assert(plans.size >= 3, s"one planning query per merge, saw ${plans.size}")
+    assert(plans.size == 3, s"one planning query per merge (Phase A, Phase B, items), saw ${plans.size}")
     val withAgg = plans.filter(_.exists(_.isInstanceOf[Aggregate]))
     assert(withAgg.isEmpty, s"planning queries with an Aggregate:\n${withAgg.mkString("\n")}")
   }
