@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.core.Schemas
+import graft.expressions.BatchValue
 import graft.ops.{DqMetrics, Validation}
 import graft.tables.{Txn, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -99,7 +100,9 @@ object HeaderEtlJob {
       .csv(readPath)
       .withColumn("closed_by_batch", lit(null).cast(StringType))
       .withColumn("source_file", lit(filename))
-      .withColumn("ingest_ts", current_timestamp())
+      // the run's start, held by reference: a folded current_timestamp()
+      // would inline a new literal into every batch's generated code
+      .withColumn("ingest_ts", BatchValue.timestamp(java.time.Instant.now()))
       .withColumn("batch_id", lit(batchId))
     val durExtract = secondsSince(tExtract0)
 

@@ -4,7 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DateType, StructType}
+
+import graft.expressions.BatchValue
 
 /** Data-quality counters of one validated batch.
   * Reference: src/utils/validations_utils.py:124-132. */
@@ -76,7 +78,11 @@ object Validation {
     val batchDateStr = m.group(1)
     val batchDateIso =
       s"${batchDateStr.substring(0, 4)}-${batchDateStr.substring(4, 6)}-${batchDateStr.substring(6, 8)}"
-    val batchDateLit = to_date(lit(batchDateIso), "yyyy-MM-dd")
+    // held by reference, not inlined: the validation's generated code is
+    // the same for every batch (a file-name date that is no calendar day
+    // compares as NULL, as `to_date` would parse it)
+    val batchDateLit = scala.util.Try(java.time.LocalDate.parse(batchDateIso))
+      .fold(_ => lit(null).cast(DateType), BatchValue.date)
 
     // 3) discard conditions (reference: validations_utils.py:68-69)
     val nullCondition = dedupKeys.map(col(_).isNull).reduce(_ || _)
@@ -87,27 +93,33 @@ object Validation {
     //    the priority when-chain assigned it no discard reason
     val wDedup = Window.partitionBy(dedupKeys.map(col): _*)
       .orderBy(col("event_time_ts").desc_nulls_last)
-    val tagged = df0
-      .withColumn("rn", row_number().over(wDedup))
-      .withColumn("discard_reason",
-        when(nullCondition, lit("NULL_KEY"))
-          .when(mismatchCondition, lit("BATCH_DATE_MISMATCH"))
-          .when(col("rn") > 1, lit("DUPLICATE_OLDER"))
-          .otherwise(lit(null)))
+    val reason = when(nullCondition, lit("NULL_KEY"))
+      .when(mismatchCondition, lit("BATCH_DATE_MISMATCH"))
+      .when(col("rn") > 1, lit("DUPLICATE_OLDER"))
+      .otherwise(lit(null))
 
     // 5+6) ONE job: write the tagged batch split by the discard flag, with
     //    every DQ counter observed during the same pass
     //    (reference: validations_utils.py:102-120 — Delta write + a count()
-    //    per counter there)
+    //    per counter there). The counters observe the window's output, so
+    //    the reason, the split flag and the writer's sort are one generated
+    //    stage above them instead of two around them.
     val obs = Observation()
     val stagingPath = s"$discardedPath/.validation_staging_$batchDateStr"
-    tagged.observe(obs,
+    // a running count over the ordered rows is the row number; counting
+    // runs the same generated aggregate as the items job's dedup window
+    val tagged = df0
+      .withColumn("rn", count(lit(1)).over(wDedup.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .observe(obs,
         count(lit(1)).as("total"),
-        sum(when(col("discard_reason").isNull, 1).otherwise(0)).as("kept"),
-        sum(when(col("discard_reason").isNotNull, 1).otherwise(0)).as("discarded"),
-        sum(when(col("discard_reason") === "DUPLICATE_OLDER", 1).otherwise(0)).as("duplicates_older"),
-        sum(when(col("discard_reason") === "NULL_KEY", 1).otherwise(0)).as("null_key"),
-        sum(when(col("discard_reason") === "BATCH_DATE_MISMATCH", 1).otherwise(0)).as("batch_date_mismatch"))
+        sum(when(reason.isNull, 1).otherwise(0)).as("kept"),
+        sum(when(reason.isNotNull, 1).otherwise(0)).as("discarded"),
+        sum(when(reason === "DUPLICATE_OLDER", 1).otherwise(0)).as("duplicates_older"),
+        sum(when(reason === "NULL_KEY", 1).otherwise(0)).as("null_key"),
+        sum(when(reason === "BATCH_DATE_MISMATCH", 1).otherwise(0)).as("batch_date_mismatch"))
+      .withColumn("discard_reason", reason)
+      .withColumn("rn", col("rn").cast("int"))
+    tagged
       .withColumn("__discarded", col("discard_reason").isNotNull)
       .write.mode("overwrite").partitionBy("__discarded").parquet(stagingPath)
 

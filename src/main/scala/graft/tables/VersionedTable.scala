@@ -713,7 +713,13 @@ class VersionedTable private (val spark: SparkSession,
     // "previous" value and leak it into the session permanently.
     VersionedTable.enterMicrosTsScope(spark)
     try {
-      var writer = df.write.mode("overwrite")
+      // partition columns first: the writer's sort, its partition-value
+      // projection and its path expression then read the same ordinals in
+      // every table laid out by the same partition types, so they share
+      // generated classes; the files hold the data columns either way
+      val cols = partCols ++ df.columns.filterNot(partCols.contains)
+      var writer = df.select(cols.map(c => df.col(s"`${c.replace("`", "``")}`")): _*)
+        .write.mode("overwrite")
       // per-column parquet bloom filters (table property): written into
       // the file footer region by parquet-mr itself — no extra data pass,
       // nothing stored in the commit log. Probed by pruneFiles.
@@ -1473,7 +1479,7 @@ class VersionedTable private (val spark: SparkSession,
   /** Plan one MERGE step: the only place a MERGE decides anything — the
     * evolved schema, the candidate files, what proves the source keys
     * unique, the join that writes the new files and the broadcast test.
-    * Runs at most one query (the source stats pass, map-only, no
+    * Runs at most one job (the source stats pass, map-only, no
     * aggregate), writes no file and stages nothing. */
   private[tables] def planMerge(tx: Txn, m: MergeBuilder, src: DataFrame): MergePlan = {
     val files = tx.files
@@ -1506,32 +1512,22 @@ class VersionedTable private (val spark: SparkSession,
       if (evolvedCols.isEmpty) tx.schema
       else StructType(tx.schema.fields ++ evolvedCols)
 
-    // --- stats pruning: ONE observed, map-only pass over the source -----
-    // For each conjunctive equi-key the pass observes its min/max — files
+    // --- stats pruning: ONE pass over the source --------------------------
+    // For each conjunctive equi-key the pass finds its min/max — files
     // that [[pruneFiles]] rules out for those key ranges (stats, and the
     // bloom filter when a key's range is one value) cannot contain
     // matched rows and are skipped by both the insert-only anti-join and
     // the touched-file probe (the same role Delta's file stats play in
-    // MERGE). The pass writes to the `noop` sink, so it is the action that
-    // fills a persisted source's cache, and its min/max ride accumulators
-    // instead of a global aggregate behind a single-partition exchange.
-    // Conservative on every failure path: unknown shapes prune nothing.
+    // MERGE). See [[keyBounds]]: the pass is the action that fills a
+    // persisted source's cache. Conservative on every failure path:
+    // unknown shapes prune nothing.
     val (pairs, pureEqui) = equiPairs(m.condition, m.targetAlias)
     val candidates: Seq[FileEntry] =
       // ≤2 files: the pass costs more than scanning them
       if (pairs.isEmpty || files.size <= 2) files
       else try {
-        val obs = org.apache.spark.sql.Observation()
-        val bounds = pairs.indices.flatMap { i =>
-          Seq(min(expr(pairs(i)._2)).as(s"__graft_lo$i"), max(expr(pairs(i)._2)).as(s"__graft_hi$i"))
-        }
-        labeled("merge: source stats/cardinality agg") {
-          src.observe(obs, bounds.head, bounds.tail: _*).write.format("noop").mode("overwrite").save()
-        }
-        val row = obs.get
-        pruneFiles(files, schema, pairs.indices.map { i =>
-          (pairs(i)._1, row(s"__graft_lo$i"), row(s"__graft_hi$i"))
-        })._1
+        val bounds = labeled("merge: source stats/cardinality agg") { keyBounds(src, pairs.map(_._2)) }
+        pruneFiles(files, schema, pairs.indices.map(i => (pairs(i)._1, bounds(i)._1, bounds(i)._2)))._1
       } catch { case scala.util.control.NonFatal(_) => files }
 
     // Key uniqueness FROM THE PLAN: when the condition is a PURE
@@ -1703,6 +1699,69 @@ class VersionedTable private (val spark: SparkSession,
       joinType, src.storageLevel != StorageLevel.NONE, sourceSmall)
   }
 
+  /** Min and max of each source key expression (NULL for a key with no
+    * non-NULL value), as the values an aggregate returns. When every key
+    * is a column of the cache the source is or projects, of a type whose
+    * cached batch statistics are exact bounds, they come from those
+    * statistics: one RDD job over the batches, which fills a cold cache
+    * and runs no generated code of its own. Otherwise they are observed
+    * during a write of the source to the `noop` sink — still map-only,
+    * min/max riding accumulators. */
+  private def keyBounds(src: DataFrame, keys: Seq[String]): Seq[(Any, Any)] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.columnar.SimpleMetricsCachedBatch
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types._
+    def exact(dt: DataType): Boolean = dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType | DateType |
+           TimestampType | TimestampNTZType | _: DecimalType => true
+      case _ => dt == StringType
+    }
+    // a fresh plan over the source sees a cache registered after its own
+    val cache = (src.select(keys.map(expr): _*).queryExecution.optimizedPlan match {
+      case rel: InMemoryRelation => Some((rel, rel.output))
+      case Project(cols, rel: InMemoryRelation) => Some((rel, cols))
+      case _ => None
+    }).map { case (rel, cols) =>
+      (rel, cols.map {
+        case a: Attribute => rel.output.indexWhere(_.exprId == a.exprId)
+        case Alias(a: Attribute, _) => rel.output.indexWhere(_.exprId == a.exprId)
+        case _ => -1
+      })
+    }.filter { case (rel, ords) => ords.forall(o => o >= 0 && exact(rel.output(o).dataType)) }
+
+    val fromCache = cache.flatMap { case (rel, ords) =>
+      val types = ords.map(rel.output(_).dataType)
+      // a batch's stats hold (lower, upper, nulls, count, bytes) per column
+      val perBatch = rel.cacheBuilder.cachedColumnBuffers.map {
+        case b: SimpleMetricsCachedBatch =>
+          Some(ords.zip(types).map { case (o, dt) => (b.stats.get(5 * o, dt), b.stats.get(5 * o + 1, dt)) })
+        case _ => None
+      }.collect()
+      if (perBatch.exists(_.isEmpty)) None
+      else Some(types.indices.map { i =>
+        val ord = TypeUtils.getInterpretedOrdering(types(i))
+        def bound(side: ((Any, Any)) => Any, pick: Seq[Any] => Any) =
+          perBatch.flatMap(b => Option(side(b.get(i)))).toSeq match {
+            case Seq() => null
+            case vs => CatalystTypeConverters.convertToScala(pick(vs), types(i))
+          }
+        (bound(_._1, _.min(ord)), bound(_._2, _.max(ord)))
+      })
+    }
+    fromCache.getOrElse {
+      val obs = org.apache.spark.sql.Observation()
+      val aggs = keys.indices.flatMap(i =>
+        Seq(min(expr(keys(i))).as(s"__graft_lo$i"), max(expr(keys(i))).as(s"__graft_hi$i")))
+      src.observe(obs, aggs.head, aggs.tail: _*).write.format("noop").mode("overwrite").save()
+      val row = obs.get
+      keys.indices.map(i => (row(s"__graft_lo$i"), row(s"__graft_hi$i")))
+    }
+  }
+
   /** Execute a [[MergePlan]]: write the step's files and stage them into
     * `tx` as one MERGE step carrying the plan's metrics and the measured
     * counts. Decides nothing — it branches once, on the plan's join type:
@@ -1733,59 +1792,16 @@ class VersionedTable private (val spark: SparkSession,
         val unmatched = src.join(if (plan.candidates.isEmpty) target.hint("merge") else target,
           cond, "left_anti")
         val toInsert = m.insert.get.cond.fold(unmatched)(c => unmatched.filter(expr(c)))
+        // a file whose footer counts no row (the writer's one file for an
+        // empty result) is not staged; the transaction deletes it
         val added = labeled("merge: insert-only anti-join + write") {
           writeIn(tx, toInsert.select(dataCols.map(f => insertValue(f).as(f.name)): _*))
-        }
+        }.filter(_.rows != 0)
         // inserted rows come free from the written files' footer counts —
         // callers never need a post-merge table scan for accounting
         (added, Seq.empty[FileEntry], 0L,
           if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L, 0L)
       } else {
-        // --- 1. prune + cardinality, ONE job: which existing files
-        // contain rows matched by source, and does any target row match >1
-        // source rows? The probe joins the candidate files with the source
-        // on the merge condition. When the plan did NOT prove the source
-        // keys unique, grouping by (file, _metadata.row_index) folds
-        // Delta's merge-cardinality check into the SAME job that collects
-        // touched file names; otherwise the probe stays a cheap distinct
-        // over file names (the per-row grouping would push every matched
-        // row through a wide hash aggregate for nothing). The collect is
-        // bounded by file count, never by row count.
-        val touched: Seq[FileEntry] =
-          if (plan.candidates.isEmpty) Seq.empty
-          else {
-            // probe scans only the stats-candidate files — skipped files
-            // cannot contain matched rows and are untouched by
-            // construction. keepMeta supplies file/row-index identity
-            // (after a DV anti-join, _metadata no longer resolves)
-            val t = readFiles(plan.candidates, plan.schema, tx.partCols, keepMeta = true).alias(alias)
-            val matched = t.join(if (plan.sourceSmall) broadcast(src) else src, cond, "inner")
-            val perFile =
-              if (plan.keysUnique == "unchecked") {
-                val maxMatches = labeled("merge: touched-file probe + cardinality") {
-                  matched
-                    .groupBy(col(FileCol), col(RowIdxCol))
-                    .agg(count(lit(1)).as("__graft_m"))
-                    .groupBy(col(FileCol))
-                    .agg(max("__graft_m").as("__graft_maxm"))
-                    .collect()
-                }
-                if (maxMatches.exists(_.getLong(1) > 1))
-                  throw new IllegalStateException(
-                    "MERGE: multiple source rows matched the same target row")
-                maxMatches.map(r => (r.getString(0), r.getLong(1)))
-              } else
-                labeled("merge: touched-file probe") {
-                  matched.select(col(FileCol)).distinct().collect()
-                }.map(r => (r.getString(0), 1L))
-            touchedFiles(files, perFile.toSeq).map(_._1)
-          }
-
-        // --- 2. rewrite touched files + insert unmatched source rows ----
-        val t = readFiles(touched, plan.schema, tx.partCols).withColumn(TPresent, lit(true)).alias(alias)
-        val s = (if (plan.rewriteBroadcast) broadcast(src) else src)
-          .withColumn(SPresent, lit(true))
-        val joined = t.join(s, cond, plan.joinType)
         val tPresent = col(TPresent) === lit(true)
         val sPresent = col(SPresent) === lit(true)
         val (upd, del) = (m.update.fold(lit(false))(_.guard), m.delete.fold(lit(false))(_.guard))
@@ -1800,57 +1816,114 @@ class VersionedTable private (val spark: SparkSession,
         val updCond = if (m.deleteFirst && m.delete.isDefined) upd && !coalesce(del, lit(false)) else upd
         val delCond = if (!m.deleteFirst && m.update.isDefined) del && !coalesce(upd, lit(false)) else del
         val insCond = m.insert.fold(lit(false))(_.guard)
+        val updatedRow = when(sPresent && updCond, 1L).otherwise(0L)
+        def sourceSide(broadcastIt: Boolean) =
+          (if (broadcastIt) broadcast(src) else src).withColumn(SPresent, lit(true))
 
-        // Row-level merge metrics (the numbers Delta reports as
-        // numTargetRowsUpdated/Inserted/Deleted) ride the rewrite write as
-        // an Observation — no extra job, no persisted join; callers can
-        // account for a merge without re-scanning the table afterwards.
+        // --- 1. prune + cardinality, ONE job: which existing files
+        // contain rows matched by source, and does any target row match >1
+        // source rows? The probe joins the candidate files with the source
+        // on the merge condition, and counts the matched rows an update
+        // clause takes (numTargetRowsUpdated). When the plan did NOT prove
+        // the source keys unique, grouping by (file, _metadata.row_index)
+        // folds Delta's merge-cardinality check into the SAME job that
+        // collects touched file names; otherwise the probe is map-only, the
+        // set of file names observed during a `noop` write (the per-row
+        // grouping would push every matched row through a wide hash
+        // aggregate for nothing). What reaches the driver is bounded by
+        // file count, never by row count.
+        val (touched, updatedRows): (Seq[FileEntry], Long) =
+          if (plan.candidates.isEmpty) (Seq.empty, 0L)
+          else {
+            // probe scans only the stats-candidate files — skipped files
+            // cannot contain matched rows and are untouched by
+            // construction. keepMeta supplies file/row-index identity
+            // (after a DV anti-join, _metadata no longer resolves)
+            val t = readFiles(plan.candidates, plan.schema, tx.partCols, keepMeta = true).alias(alias)
+            val matched = t.join(sourceSide(plan.sourceSmall), cond, "inner")
+            val (perFile, u) =
+              if (plan.keysUnique == "unchecked") {
+                val maxMatches = labeled("merge: touched-file probe + cardinality") {
+                  matched
+                    .groupBy(col(FileCol), col(RowIdxCol))
+                    .agg(count(lit(1)).as("__graft_m"), sum(updatedRow).as("__graft_u"))
+                    .groupBy(col(FileCol))
+                    .agg(max("__graft_m").as("__graft_maxm"), sum("__graft_u"))
+                    .collect()
+                }
+                if (maxMatches.exists(_.getLong(1) > 1))
+                  throw new IllegalStateException(
+                    "MERGE: multiple source rows matched the same target row")
+                (maxMatches.map(r => (r.getString(0), r.getLong(1))).toSeq, maxMatches.map(_.getLong(2)).sum)
+              } else {
+                // map-only: the names ride an observed set, no shuffle
+                val obs = org.apache.spark.sql.Observation()
+                labeled("merge: touched-file probe") {
+                  matched.select(col(FileCol), updatedRow.as("__graft_u"))
+                    .observe(obs, collect_set(col(FileCol)).as("files"), sum("__graft_u").as("u"))
+                    .write.format("noop").mode("overwrite").save()
+                }
+                (obs.get("files").asInstanceOf[scala.collection.Seq[String]].map(f => (f, 1L)).toSeq,
+                  Option(obs.get("u")).fold(0L)(_.asInstanceOf[Number].longValue))
+              }
+            (touchedFiles(files, perFile).map(_._1), u)
+          }
+
+        // --- 2. rewrite touched files + insert unmatched source rows ----
+        val t = readFiles(touched, plan.schema, tx.partCols).withColumn(TPresent, lit(true)).alias(alias)
+        // a full outer join cannot broadcast; hashing the source side (the
+        // batch) per partition skips sorting both sides for a merge join
+        val s = if (plan.joinType == "full_outer") sourceSide(false).hint("shuffle_hash")
+          else sourceSide(plan.rewriteBroadcast)
+        val joined = t.join(s, cond, plan.joinType)
+        // Deleted rows are simply NOT in the rewrite (their file is dropped
+        // from the log, the survivors copied) — same mechanics as Delta.
         // NB TPresent is NULL (not false) on source-only full-outer rows.
-        // Deleted rows are simply NOT in the rewrite (their file is
-        // dropped from the log, the survivors copied) — same mechanics as
-        // Delta.
-        val obs = org.apache.spark.sql.Observation()
         val kept = joined
           .filter((tPresent && !coalesce(sPresent && delCond, lit(false))) ||
             (!coalesce(col(TPresent), lit(false)) && sPresent && insCond))
-          .observe(obs,
-            sum(when(tPresent && sPresent && updCond, 1L).otherwise(0L)).as("u"),
-            sum(when(sPresent && insCond && !coalesce(col(TPresent), lit(false)), 1L)
-              .otherwise(0L)).as("i"),
-            // surviving target rows — deleted = touched-file row total minus this
-            sum(when(tPresent, 1L).otherwise(0L)).as("t"))
-        val rewritten = kept.select(dataCols.map { f =>
-          val tCol = col(s"$alias.${f.name}")
-          val assigned = m.update.flatMap(_.set.get(f.name)).map(expr).getOrElse(tCol)
-          when(tPresent && sPresent && updCond, assigned.cast(f.dataType))
-            .when(tPresent, tCol)
-            .otherwise(insertValue(f))
-            .as(f.name)
-        }: _*)
+        // With no delete clause every touched row survives, so the rows
+        // inserted are the rows written minus the touched files' live rows,
+        // all from footers and the log. A delete clause needs the survivors
+        // counted: they ride the write as an Observation.
+        val survivors = m.delete.map { _ =>
+          val obs = org.apache.spark.sql.Observation()
+          (obs, sum(when(tPresent, 1L).otherwise(0L)).as("t"))
+        }
+        val rewritten = survivors.fold(kept) { case (obs, survivedSum) => kept.observe(obs, survivedSum) }
+          .select(dataCols.map { f =>
+            val tCol = col(s"$alias.${f.name}")
+            val assigned = m.update.flatMap(_.set.get(f.name)).map(expr).getOrElse(tCol)
+            when(tPresent && sPresent && updCond, assigned.cast(f.dataType))
+              .when(tPresent, tCol)
+              .otherwise(insertValue(f))
+              .as(f.name)
+          }: _*)
 
         if (touched.isEmpty && m.insert.isEmpty) (Seq.empty, touched, 0L, 0L, 0L)
         else {
           val added = labeled("merge: rewrite + write") { writeIn(tx, rewritten) }
-          // obs.get blocks until its action ran — only consult it after a write
-          val o = obs.get
-          def cnt(k: String) = // sums are NULL when zero rows flowed
-            Option(o(k)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-          // deleted rows never reach the observed write — derive them from
-          // the touched files' LIVE row counts (footer total minus rows
-          // already dead under a deletion vector) minus survivors
+          // the touched files' LIVE row counts: footer total minus rows
+          // already dead under a deletion vector
           val touchedRows =
             if (touched.forall(_.rows >= 0)) touched.map(fe => fe.rows - fe.dvRows).sum
             else -1L
+          val addedRows = if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
+          // obs.get blocks until its action ran — only consult it after a write
+          val survived = survivors.fold(touchedRows) { case (obs, _) =>
+            Option(obs.get("t")).fold(0L)(_.asInstanceOf[Number].longValue) // NULL when zero rows flowed
+          }
+          val inserted = if (addedRows < 0 || survived < 0) -1L else addedRows - survived
           val deleted =
-            if (m.delete.isEmpty) 0L else if (touchedRows >= 0) touchedRows - cnt("t") else -1L
+            if (m.delete.isEmpty) 0L else if (touchedRows >= 0) touchedRows - survived else -1L
           // a rewrite measured to change nothing (every matched row failed
           // its clause conditions: e.g. a replayed batch) wrote exact copies
           // of the touched files; swapping them in would only churn the
           // file set, so stage no file action — the transaction deletes
           // the written files no version references
-          if (cnt("u") == 0 && cnt("i") == 0 && deleted == 0 && plan.evolved == 0)
+          if (updatedRows == 0 && inserted == 0 && deleted == 0 && plan.evolved == 0)
             (Seq.empty, Seq.empty, 0L, 0L, 0L)
-          else (added, touched, cnt("u"), cnt("i"), deleted)
+          else (added, touched, updatedRows, inserted, deleted)
         }
       }
 

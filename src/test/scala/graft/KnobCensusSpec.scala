@@ -24,6 +24,13 @@ class KnobCensusSpec extends AnyFunSuite {
     assert(keys == Set("spark.graft.commit.maxRetries"))
   }
 
+  test("the engine sets no spark.sql.codegen conf") {
+    // the codegen cache size and its class names are process-wide: fewer
+    // generated classes must come from the plans, not from a setting
+    val hits = mainSources.filter(f => Files.readString(f).contains("spark.sql.codegen"))
+    assert(hits.isEmpty, hits.mkString(", "))
+  }
+
   test("only the measurement mains and the session builder read the environment") {
     val read = """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
     val allowed = Set("Bench.scala", "ScaleBench.scala", "Verify.scala",

@@ -182,6 +182,33 @@ class HeaderEtlJobSpec extends AnyFunSuite {
     assert(metricsDirs != null && metricsDirs.nonEmpty)
   }
 
+  test("ingest_ts: one value per batch, inside the run's wall clock, later for a later batch") {
+    val root = Files.createTempDirectory("graft-header-ingest").toString
+    def row(cod: String, status: String, ts: String): Seq[String] =
+      Seq(cod, "ORD1", "365", "P1", "", "1.00", "", "", "AG1", status, "", ts)
+    def run(file: String, rows: Seq[Seq[String]]): (Long, Long) = {
+      val path = s"$root/crm/$file"
+      TestCsv.write(path, header, rows)
+      val t0 = System.currentTimeMillis()
+      HeaderEtlJob.run(spark, path, s"$root/table", s"$root/discarded", s"$root/metrics")
+      (t0, System.currentTimeMillis())
+    }
+    val first = run("header_20230101.csv", Seq(
+      row("I1", "Accepted", "2023-01-01 10:00:00"), row("I2", "Accepted", "2023-01-01 11:00:00")))
+    val second = run("header_20230102.csv", Seq(
+      row("I1", "Signed", "2023-01-02 10:00:00"), row("I3", "Accepted", "2023-01-02 11:00:00")))
+    val table = VersionedTable.forPath(spark, s"$root/table").read
+    def stamps(file: String): Seq[Timestamp] =
+      table.filter(col("source_file") === file).select("ingest_ts").distinct()
+        .collect().map(_.getTimestamp(0)).toSeq
+    val Seq(a) = stamps("header_20230101.csv")
+    val Seq(b) = stamps("header_20230102.csv")
+    assert(a.getTime >= first._1 && a.getTime <= first._2, s"$a outside $first")
+    assert(b.getTime >= second._1 && b.getTime <= second._2, s"$b outside $second")
+    assert(b.after(a))
+    assert(table.filter(col("source_file") === "header_20230102.csv").count() == 2)
+  }
+
   test("a merge that throws still releases the persisted batch and the staging dir") {
     val root = Files.createTempDirectory("graft-header-leak").toString
     def run(file: String, ts: String) = {

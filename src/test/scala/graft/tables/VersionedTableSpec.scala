@@ -636,6 +636,24 @@ class VersionedTableSpec extends AnyFunSuite {
     } finally batch.unpersist()
   }
 
+  test("an insert-only merge with nothing to insert adds no file") {
+    val path = tmpDir() + "/tempty"
+    val t = VersionedTable.create(spark,
+      spark.range(0, 300).selectExpr("id", "cast(id AS string) AS v").repartition(3), path).as("e")
+    val before = t.liveEntries.map(_.path).toSet
+    assert(before.size == 3)
+    val empty = spark.range(0).selectExpr("id AS k", "cast(id AS string) AS nv")
+    val m = t.merge(empty.as("s"), "e.id = s.k")
+      .whenNotMatchedInsert(Map("id" -> "s.k", "v" -> "s.nv")).execute()
+    assert(m("insertOnly") == "true" && m("numTargetRowsInserted") == "0")
+    assert(m("numTargetFilesAdded") == "0", s"got $m")
+    assert(t.liveEntries.map(_.path).toSet == before)
+    // the empty file the writer left is deleted, not just unreferenced
+    val onDisk = Files.walk(java.nio.file.Paths.get(path, "data")).iterator()
+    assert(Iterator.continually(onDisk).takeWhile(_.hasNext).map(_.next())
+      .count(_.toString.endsWith(".parquet")) == 3)
+  }
+
   test("merge prunes target files by source key-range stats") {
     val path = tmpDir() + "/t11"
     // 8 files with disjoint id ranges (range partitioning) — the merge
