@@ -227,8 +227,7 @@ object Bench {
           "is_current" -> Seq("is_current"),
           "none" -> Seq.empty[String]).map { case (label, partCols) =>
           val dir = Files.createTempDirectory(s"graft-bench-part-$label").toString
-          graft.tables.VersionedTable.create(spark, t.read, s"$dir/t", partCols)
-          val alt = graft.tables.VersionedTable.forPath(spark, s"$dir/t")
+          val alt = graft.tables.VersionedTable.create(spark, t.read, s"$dir/t", partCols)
           val (s, r) = timed {
             alt.read.filter(col("valid_from_year") === 2023 &&
               col("valid_from_month") === 2 && col("valid_from_day") === 28 &&

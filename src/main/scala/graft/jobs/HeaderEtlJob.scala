@@ -210,36 +210,31 @@ object HeaderEtlJob {
         expr("coalesce(to_date(creazione_dta_raw, 'M/d/yyyy'), to_date(creazione_dta_raw, 'yyyy-MM-dd'))"))
   }
 
-  /** The two-phase SCD2 merge (init if absent, Phase A close-on-change
-    * once per key, Phase B idempotent insert — reference:
-    * src/header_etl.py:157-280). Shared by the batch job and
-    * [[graft.streaming.StreamingScd2Ingest]]. Phases L, A and B run in ONE
-    * [[VersionedTable.transaction]], so a batch lands as one table version
-    * (an init batch: the create plus that one): no reader ever sees a key
-    * whose open row Phase A closed before Phase B inserted its successor.
+  /** The two-phase SCD2 merge (Phase A close-on-change once per key,
+    * Phase B idempotent insert — reference: src/header_etl.py:157-280).
+    * Shared by the batch job and [[graft.streaming.StreamingScd2Ingest]].
+    * Phases L, A and B run in ONE [[VersionedTable.transaction]], so a
+    * batch lands as one table version: no reader ever sees a key whose
+    * open row Phase A closed before Phase B inserted its successor. An
+    * init batch's first step writes it, and A and B then merge it against
+    * itself, harmless by Phase-B idempotence (src/header_etl.py:157-166).
     * @return (table, rows inserted this batch, rows closed this batch) —
-    *         both from merge operation metrics, -1 if unmeasured */
+    *         both from the steps' operation metrics, -1 if unmeasured */
   private[graft] def twoPhaseMerge(spark: SparkSession, writePath: String,
                                    dfTransformed: DataFrame,
                                    batchId: String,
                                    lateSplit: Boolean = false): (VersionedTable, Long, Long) = {
-    val inited = !VersionedTable.isTable(spark, writePath)
-    if (inited) {
-      // init write — the current batch is then ALSO merged against itself,
-      // harmless by Phase-B idempotence (reference: src/header_etl.py:157-166)
-      VersionedTable.create(spark, dfTransformed, writePath, Schemas.PartitionColumns)
-    }
-    val table = VersionedTable.forPath(spark, writePath)
-    // rows written by the init carry this batch_id → they count as inserted
-    val initRows = if (inited) table.lastMetric("numOutputRows") else 0L
+    val table = VersionedTable.open(spark, writePath, dfTransformed.schema, Schemas.PartitionColumns)
+    val (written, closed, insertedB) = table.alias("existing").transaction { tx =>
+      // -- init: the table's first write; its rows count as inserted
+      val written = if (tx.version < 0) tx.create(dfTransformed)("numOutputRows").toLong else 0L
 
-    val (closed, insertedB) = table.alias("existing").transaction { tx =>
       // -- Phase L (opt-in): late-arriving-event interval splitting ------
       // Runs against the PRE-merge state. On an init batch there is no
       // pre-existing history to split. Phase B then inserts the ADJUSTED
       // staged rows.
       val stagedForInsert =
-        if (lateSplit && !inited) lateSplitAdjust(tx, dfTransformed, batchId)
+        if (lateSplit && tx.version >= 0) lateSplitAdjust(tx, dfTransformed, batchId)
         else dfTransformed
 
       // -- Phase A: close open rows only on real change, once per key ----
@@ -296,12 +291,9 @@ object HeaderEtlJob {
         .whenNotMatchedInsert(values =
           StagedColumns.map(c => c -> s"staged.$c").toMap)
         .execute()("numTargetRowsInserted").toLong
-      (closed, inserted)
+      (written, closed, inserted)
     }
-
-    val inserted =
-      if (initRows < 0 || insertedB < 0) -1L else initRows + insertedB
-    (table, inserted, closed)
+    (table, if (written < 0 || insertedB < 0) -1L else written + insertedB, closed)
   }
 
   /** Phase L: late-arriving-event interval splitting (the reference's

@@ -40,7 +40,8 @@ case class ItemsRunMetrics(batch_id: String,
   * count-window dedup that — deliberately, matching the reference — drops
   * ALL copies of any key occurring more than once (not keep-one; see
   * SURVEY.md §2.6 W3); date transform with the 9999-12-31 open sentinel;
-  * then either an init partitioned write or the staged-union SCD2 merge:
+  * then, as one table version, either the table's initial partitioned
+  * write or the staged-union SCD2 merge:
   * changed open rows are closed (`valid_to = new valid_from`) and their
   * new versions inserted through never-matching NULL mergeKey rows.
   *
@@ -60,45 +61,48 @@ object ItemsEtlJob {
     "status_item", "creazione_dta", "valid_from", "valid_from_year",
     "valid_from_month", "valid_from_day", "valid_to")
 
-  /** The SCD2 merge of one transformed batch into the items table
-    * (reference: src/items_etl.py:86-143), in ONE
-    * [[VersionedTable.transaction]]: the change detection joins the
-    * batch with the transaction's pinned state (`tx.read`), so a commit
-    * that lands before this one publishes makes the body re-run on the
-    * new state — the insert arm is never computed from stale open rows.
-    * @return (rows inserted, rows closed), from the merge's metrics */
+  /** One transformed batch into the items table in ONE
+    * [[VersionedTable.transaction]]: the table's first write (reference:
+    * src/items_etl.py:79-81), else the SCD2 merge (:86-143), whose change
+    * detection joins the batch with the pinned state (`tx.read`): a commit
+    * that lands first makes the body re-run on the new state, so no insert
+    * comes from stale open rows and a concurrent init lands its batch once.
+    * @return (rows inserted, rows closed), from the step's metrics */
   private[jobs] def scd2Merge(table: VersionedTable, dfTransformed: DataFrame): (Long, Long) =
     table.alias("existing").transaction { tx =>
-      // open rows whose tracked values differ from this batch's updates
-      // — `<>` non-null-safe, as in the reference
-      val newItemsToInsert = dfTransformed.alias("updates")
-        .join(tx.read, Schemas.ItemsDedupKeys)
-        .where("existing.valid_to = date('9999-12-31') AND (" +
-          "updates.contracted_price <> existing.contracted_price OR " +
-          "updates.total_discount <> existing.total_discount OR " +
-          "updates.data_fine_prestazione <> existing.data_fine_prestazione)")
+      if (tx.version < 0) (tx.create(dfTransformed)("numOutputRows").toLong, 0L)
+      else {
+        // open rows whose tracked values differ from this batch's updates
+        // — `<>` non-null-safe, as in the reference
+        val newItemsToInsert = dfTransformed.alias("updates")
+          .join(tx.read, Schemas.ItemsDedupKeys)
+          .where("existing.valid_to = date('9999-12-31') AND (" +
+            "updates.contracted_price <> existing.contracted_price OR " +
+            "updates.total_discount <> existing.total_discount OR " +
+            "updates.data_fine_prestazione <> existing.data_fine_prestazione)")
 
-      // staged union: NULL-mergeKey rows can never match → always inserted
-      // (the new open versions); keyed rows close their open predecessor
-      // (reference: src/items_etl.py:106-110)
-      val stagedUpdates = newItemsToInsert
-        .selectExpr("NULL as mergeKey", "NULL as mergeKey2", "updates.*")
-        .union(dfTransformed.selectExpr(
-          "contratto_cod as mergeKey", "numero_annuncio as mergeKey2", "*"))
+        // staged union: NULL-mergeKey rows can never match → always inserted
+        // (the new open versions); keyed rows close their open predecessor
+        // (reference: src/items_etl.py:106-110)
+        val stagedUpdates = newItemsToInsert
+          .selectExpr("NULL as mergeKey", "NULL as mergeKey2", "updates.*")
+          .union(dfTransformed.selectExpr(
+            "contratto_cod as mergeKey", "numero_annuncio as mergeKey2", "*"))
 
-      val m = tx
-        .merge(stagedUpdates.alias("staged_updates"),
-          "existing.contratto_cod = mergeKey AND existing.numero_annuncio = mergeKey2")
-        .whenMatchedUpdate(
-          condition = "existing.valid_to = date('9999-12-31') AND (" +
-            "staged_updates.contracted_price <> existing.contracted_price OR " +
-            "staged_updates.total_discount <> existing.total_discount OR " +
-            "staged_updates.data_fine_prestazione <> existing.data_fine_prestazione)",
-          set = Map("valid_to" -> "staged_updates.valid_from"))
-        .whenNotMatchedInsert(values =
-          InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
-        .execute()
-      (m("numTargetRowsInserted").toLong, m("numTargetRowsUpdated").toLong)
+        val m = tx
+          .merge(stagedUpdates.alias("staged_updates"),
+            "existing.contratto_cod = mergeKey AND existing.numero_annuncio = mergeKey2")
+          .whenMatchedUpdate(
+            condition = "existing.valid_to = date('9999-12-31') AND (" +
+              "staged_updates.contracted_price <> existing.contracted_price OR " +
+              "staged_updates.total_discount <> existing.total_discount OR " +
+              "staged_updates.data_fine_prestazione <> existing.data_fine_prestazione)",
+            set = Map("valid_to" -> "staged_updates.valid_from"))
+          .whenNotMatchedInsert(values =
+            InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
+          .execute()
+        (m("numTargetRowsInserted").toLong, m("numTargetRowsUpdated").toLong)
+      }
     }
 
   /** @return number of duplicated rows dropped by the dedup step (the
@@ -172,7 +176,7 @@ object ItemsEtlJob {
       .drop("flag")
     val durTransform = secondsSince(tTransform0)
 
-    // ---- MERGE / INIT (reference: src/items_etl.py:79-143) -------------
+    // ---- INIT OR MERGE, one version (reference: src/items_etl.py:79-143)
     // No second persist here: dfTransformed is a narrow projection over
     // the already-cached flagged frame (the dedup phase materialized it),
     // so its consumers — both arms of the merge's staged union — each
@@ -181,12 +185,9 @@ object ItemsEtlJob {
     // and compete with the merge join for memory (guide §5: caching
     // competes with execution memory).
     val tMerge0 = System.nanoTime()
-    val (insertedCount, closedCount) =
-      if (!VersionedTable.isTable(spark, writePath)) {
-        // ---- INIT (reference: src/items_etl.py:79-81) ------------------
-        (VersionedTable.create(spark, dfTransformed, writePath, Schemas.PartitionColumns)
-          .lastMetric("numOutputRows"), 0L)
-      } else scd2Merge(VersionedTable.forPath(spark, writePath), dfTransformed)
+    val (insertedCount, closedCount) = scd2Merge(
+      VersionedTable.open(spark, writePath, dfTransformed.schema, Schemas.PartitionColumns),
+      dfTransformed)
     val durMerge = secondsSince(tMerge0)
 
     val metrics = ItemsRunMetrics(

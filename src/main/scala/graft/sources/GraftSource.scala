@@ -124,9 +124,10 @@ class GraftSource extends RelationProvider with DataSourceRegister
   * one table commit carrying `(txnAppId, batchId)`, so a batch replayed
   * after a crash-before-checkpoint is skipped by
   * [[VersionedTable.append]]'s transaction watermark — exactly-once into
-  * the table, like Delta's streaming sink. A missing table is created
-  * EMPTY (schema from the first batch, partitioning from the writer's
-  * `partitionBy`) so even batch 0 flows through the guarded append.
+  * the table, like Delta's streaming sink. A missing table is created by
+  * the first batch's append (schema from the batch, partitioning from the
+  * writer's `partitionBy`), so batch 0 flows through the guarded append
+  * and lands as version 0.
   * Scale: a batch writes only its own rows; the idempotence probe is a
   * commit-log scan, no data read. */
 class GraftSink(spark: SparkSession, path: String,
@@ -142,24 +143,9 @@ class GraftSink(spark: SparkSession, path: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit =
     if (batchId > landed) {
       val batch = org.apache.spark.sql.GraftColumnBridge.asBatchFrame(data)
-      val table =
-        if (VersionedTable.isTable(spark, path)) VersionedTable.forPath(spark, path)
-        else try {
-          VersionedTable.create(spark,
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], batch.schema),
-            path, partitionBy = partitionColumns)
-        } catch {
-          // check-then-create race: a concurrent first batch (another
-          // writer app) created the table between the probe and here —
-          // either the CAS loss or create's own existence guard lands
-          // us in the same place: the table exists, append to it
-          case e @ (_: graft.tables.ConcurrentCommitException |
-                    _: IllegalArgumentException)
-            if VersionedTable.isTable(spark, path) =>
-            val _ = e
-            VersionedTable.forPath(spark, path)
-        }
+      // a missing table is created by this batch's append: a concurrent
+      // first batch (another writer app) takes the blind append's CAS slide
+      val table = VersionedTable.open(spark, path, batch.schema, partitionColumns)
       // Upgrade-boundary guard, probed only for this instance's FIRST
       // batch (the only one a crash-replay can resurrect): commits
       // written before the appId was canonicalized carry the RAW

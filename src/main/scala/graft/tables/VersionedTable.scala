@@ -87,7 +87,8 @@ case class Checkpoint(version: Long,
   */
 class VersionedTable private (val spark: SparkSession,
                               val root: String,
-                              private var aliasName: Option[String]) {
+                              private var aliasName: Option[String],
+                              private val init: Option[(StructType, Seq[String])] = None) {
   import VersionedTable._
 
   private val rootPath = new Path(root)
@@ -116,10 +117,7 @@ class VersionedTable private (val spark: SparkSession,
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
   def as(name: String): VersionedTable = alias(name)
-  def alias(name: String): VersionedTable = {
-    val t = new VersionedTable(spark, root, Some(name))
-    t
-  }
+  def alias(name: String): VersionedTable = new VersionedTable(spark, root, Some(name), init)
 
   /** Label the Spark jobs `f` submits (guide §1.5 — the merge path runs
     * several internal jobs per call and unlabeled they are
@@ -255,8 +253,8 @@ class VersionedTable private (val spark: SparkSession,
 
   // private[tables] (not private) so the log-stress spec can drive
   // metadata-only commits without paying a parquet write per version.
-  // Callers other than create and clone (a new log) have refused a torn
-  // newest commit from their state ([[writable]]).
+  // The transaction publish, its one caller, has refused a torn newest
+  // commit from its state ([[writable]]).
   private[tables] def commit(entry: LogEntry): Unit = {
     val f = fs
     f.mkdirs(logDir)
@@ -285,8 +283,8 @@ class VersionedTable private (val spark: SparkSession,
       s"concurrent commit detected: version $version already exists at $root — " +
         "another writer won this version; re-read the table and retry the operation")
 
-  /** The one commit path for every table write (MERGE, UPDATE, DELETE,
-    * OPTIMIZE, RESTORE and append): pin a version, run `body`'s steps
+  /** The one commit path for every table write (CREATE, CLONE, MERGE,
+    * UPDATE, DELETE, OPTIMIZE, RESTORE and append): pin a version, run `body`'s steps
     * against a working copy of that snapshot, publish ONE [[LogEntry]] at
     * pinned + 1. Steps plan against `tx.files`/`tx.schema` and read the
     * working state through [[Txn.read]], so a later step sees an earlier
@@ -301,7 +299,8 @@ class VersionedTable private (val spark: SparkSession,
     * disjoint-key merges that each rewrite the same base file would BOTH
     * land, duplicating every row of that file (caught by the q92 oracle).
     * A torn newest commit refuses the transaction before its body runs
-    * ([[writable]]).
+    * ([[writable]]). A handle [[VersionedTable.open]]ed at a path with no
+    * commit pins the empty version −1 and publishes version 0.
     *
     * A lost CAS (Delta's optimistic concurrency): an attempt whose only
     * step is an append's `WRITE` is BLIND — it read nothing but the
@@ -341,14 +340,14 @@ class VersionedTable private (val spark: SparkSession,
     val maxRetries = spark.conf.get("spark.graft.commit.maxRetries", "10").trim.toInt
     var losses = 0
     while (true) {
-      val r = replay(None, withTxns = txn.isDefined)
+      val r = pin(withTxns = txn.isDefined)
       if (txn.exists(landed(r.state, _))) return None
       val tx = new Txn(this, r.state.version, r.state.files, writable(r).schema, r.state.partitionColumns)
       var rerun = false
       try {
         val out = body(tx)
         var seen = r.state
-        var next = tx.entry(now())
+        var next = tx.entry(System.currentTimeMillis())
         while (next.nonEmpty) {
           val e = next.get
           next = None
@@ -383,6 +382,16 @@ class VersionedTable private (val spark: SparkSession,
         java.util.concurrent.ThreadLocalRandom.current().nextLong(25L * losses + 1))
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The state a writer starts from: the newest replay, or on an opened
+    * path with no commit, the empty version −1 it was opened with. */
+  private def pin(withTxns: Boolean): Replayed = {
+    val log = listLog()
+    init.filter(_ => log.commits.isEmpty).fold(replay(None, withTxns, log = log)) { case (s, p) =>
+      Replayed(Checkpoint(-1L, s.json, p, Seq.empty, Some(Map.empty)),
+        newestTorn = false, txnsComplete = true)
+    }
   }
 
   /** Best-effort recursive delete of data-dir relative paths. */
@@ -545,23 +554,12 @@ class VersionedTable private (val spark: SparkSession,
     * commit files (one more when the newest is torn and skipped). */
   def history(limit: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    newestFirst().take(limit).toSeq
+    val log = listLog()
+    commitsOf(log.commits.reverseIterator, log.newest).take(limit).toSeq
       .map(e => (e.version, new Timestamp(e.timestampMs), e.operation,
         e.operationMetrics, e.add.size.toLong, e.remove.size.toLong))
       .toDF("version", "timestamp", "operation", "operationMetrics",
         "numAddedFiles", "numRemovedFiles")
-  }
-
-  /** One operationMetrics value of the newest commit; -1 when that
-    * commit does not record it. Parses one commit file. */
-  def lastMetric(key: String): Long =
-    newestFirst().nextOption().flatMap(_.operationMetrics.get(key))
-      .map(_.toLong).getOrElse(-1L)
-
-  /** The commits newest first, skipping a torn newest one. */
-  private def newestFirst(): Iterator[LogEntry] = {
-    val log = listLog()
-    commitsOf(log.commits.reverseIterator, log.newest)
   }
 
   def schema: StructType = replay(None).schema
@@ -629,15 +627,21 @@ class VersionedTable private (val spark: SparkSession,
         "compact() the source first to materialize them")
     require(!VersionedTable.isTable(spark, destPath),
       s"$destPath is already a graft table")
-    val dst = new VersionedTable(spark, destPath, None)
     val referenced = files.map(fe => fe.copy(path = qualified(fe).toString))
-    dst.commit(LogEntry(0L, now(), "CLONE", r.state.schemaJson, r.state.partitionColumns,
-      referenced, Seq.empty,
-      Map("sourceTable" -> fs.makeQualified(new Path(root)).toString,
-        "sourceVersion" -> r.state.version.toString,
-        "numReferencedFiles" -> referenced.size.toString,
-        "numCopiedFiles" -> "0")))
-    dst
+    open(spark, destPath, r.schema, r.state.partitionColumns).firstVersion { tx =>
+      tx.stage("CLONE", referenced, Seq.empty,
+        Map("sourceTable" -> fs.makeQualified(new Path(root)).toString,
+          "sourceVersion" -> r.state.version.toString,
+          "numReferencedFiles" -> referenced.size.toString,
+          "numCopiedFiles" -> "0"))
+    }
+  }
+
+  /** Publish this new table's version 0, staged by `step`, as a one-step
+    * [[transaction]]; a re-run after losing that publish throws the loss. */
+  private def firstVersion(step: Txn => Any): VersionedTable = {
+    transaction(tx => if (tx.version >= 0) throw conflict(0L) else step(tx))
+    this
   }
 
   // -------------------------------------------------------------- write --
@@ -659,47 +663,59 @@ class VersionedTable private (val spark: SparkSession,
   def append(df: DataFrame, mergeSchema: Boolean = false,
              txn: Option[(String, Long)] = None): Unit =
     transact(txn) { tx =>
-      val newSchema =
-        if (mergeSchema) widenSchema(tx.schema, df.schema)
-        else {
-          val missing = tx.schema.fieldNames.toSet -- df.schema.fieldNames.toSet
-          val extra = df.schema.fieldNames.toSet -- tx.schema.fieldNames.toSet
-          require(extra.isEmpty, s"append schema has extra columns $extra (use mergeSchema)")
-          require(missing.isEmpty, s"append schema is missing columns $missing")
-          tx.schema
-        }
-      val aligned = df.select(newSchema.fieldNames.toSeq.map { n =>
-        if (df.schema.fieldNames.contains(n))
-          col(n).cast(newSchema(n).dataType).as(n)
-        else lit(null).cast(newSchema(n).dataType).as(n)
-      }: _*)
-      val added = writeIn(tx, aligned)
-      tx.stage("WRITE", added, Seq.empty,
-        Map("numFiles" -> added.size.toString, "mode" -> "Append",
-          "mergeSchema" -> mergeSchema.toString) ++
+      writeStep(tx, df, "WRITE", mergeSchema,
+        Map("mode" -> "Append", "mergeSchema" -> mergeSchema.toString) ++
           txn.map { case (app, b) =>
             Map("txnAppId" -> app, "txnBatchId" -> b.toString)
-          }.getOrElse(Map.empty), newSchema)
+          }.getOrElse(Map.empty))
     }
+
+  /** The write step of append, create and both ETL init batches: `df`
+    * aligned to the working schema (widened under `mergeSchema`), written
+    * and staged as `op` with `metrics` plus its file and row counts. */
+  private[tables] def writeStep(tx: Txn, df: DataFrame, op: String,
+                                mergeSchema: Boolean = false,
+                                metrics: Map[String, String] = Map.empty): Map[String, String] = {
+    val newSchema =
+      if (mergeSchema) widenSchema(tx.schema, df.schema)
+      else {
+        val (have, want) = (df.schema.fieldNames.toSet, tx.schema.fieldNames.toSet)
+        require(have.subsetOf(want), s"append schema has extra columns ${have -- want} (use mergeSchema)")
+        require(want.subsetOf(have), s"append schema is missing columns ${want -- have}")
+        tx.schema
+      }
+    val aligned = df.select(newSchema.fieldNames.toSeq.map { n =>
+      if (df.schema.fieldNames.contains(n))
+        df.col(s"`${n.replace("`", "``")}`").cast(newSchema(n).dataType).as(n)
+      else lit(null).cast(newSchema(n).dataType).as(n)
+    }: _*)
+    val added = writeIn(tx, aligned)
+    val rows = if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
+    tx.stage(op, added, Seq.empty, Map("numFiles" -> added.size.toString,
+      "numOutputRows" -> rows.toString) ++ metrics, newSchema)
+  }
 
   /** Did `state` already land `txn`'s batch (or a later one) for its app? */
   private def landed(state: Checkpoint, txn: (String, Long)): Boolean =
     state.txns.flatMap(_.get(txn._1)).exists(_ >= txn._2)
 
   /** BatchId of the newest commit carrying [[append]]'s `txn` for
-    * `appId`, or None — the idempotence watermark a restarted writer
+    * `appId`, or None (also on an opened path with no commit yet) — the
+    * idempotence watermark a restarted writer
     * consults, read from the replayed state (last-write-wins by version;
     * under the streaming contract, batchIds monotone per appId, also the
     * highest). O(CheckpointInterval) reads, hit or miss, except behind a
     * legacy checkpoint without `txns`, whose older commits are folded
     * too (self-heals at the next checkpoint). */
   def lastTxnBatchId(appId: String): Option[Long] =
-    replay(None, withTxns = true).state.txns.flatMap(_.get(appId))
+    pin(withTxns = true).state.txns.flatMap(_.get(appId))
 
-  /** Physically write `df` partitioned by `partCols` into the data dir via
-    * a staging dir + per-file rename; returns the added FileEntries. */
-  private def writeFiles(df: DataFrame, partCols: Seq[String]): Seq[FileEntry] = {
-    val f = fs
+  /** Physically write `df` for a transaction step, partitioned as `tx`'s
+    * table, into the data dir via a staging dir + per-file rename; returns
+    * the added FileEntries. Each moved file is recorded on `tx` at once,
+    * so a throw before the step stages (or before the publish) deletes it. */
+  private def writeIn(tx: Txn, df: DataFrame): Seq[FileEntry] = {
+    val (f, partCols) = (fs, tx.partCols)
     val stage = new Path(rootPath, s".stage-${UUID.randomUUID()}")
     // Table files are written as TIMESTAMP_MICROS, never the INT96
     // default: INT96 is deprecated and parquet suppresses its min/max
@@ -744,20 +760,12 @@ class VersionedTable private (val spark: SparkSession,
           if (!f.rename(st.getPath, dest))
             throw new IllegalStateException(s"failed to move $relPath into $dataDir")
           moved += ((relPath, dest, st.getLen))
+          tx.written += relPath
         }
       }
     walk(stage, "")
     f.delete(stage, true)
     statsForMoved(moved.toSeq)
-  }
-
-  /** [[writeFiles]] for a transaction step: the written paths are
-    * recorded on `tx` at once, so a throw before the step stages (or
-    * before the publish) still deletes them. */
-  private def writeIn(tx: Txn, df: DataFrame): Seq[FileEntry] = {
-    val added = writeFiles(df, tx.partCols)
-    tx.written ++= added.map(_.path)
-    added
   }
 
   /** Footer stats for a commit's written files, Delta-style: metadata-
@@ -905,7 +913,7 @@ class VersionedTable private (val spark: SparkSession,
     * row group, unsupported type, IO failure) — caller must keep the
     * file. The hash must match the column's parquet PHYSICAL type, so the
     * value is converted under the declared table type (timestamps are
-    * written TIMESTAMP_MICROS by [[writeFiles]] ⇒ int64 micros). */
+    * written TIMESTAMP_MICROS by [[writeIn]] ⇒ int64 micros). */
   private def bloomMightContain(fe: FileEntry, colName: String, value: Any,
                                 dt: DataType): Option[Boolean] =
     try {
@@ -1993,7 +2001,7 @@ object VersionedTable {
 
   /** Reference-counted per-session scope forcing
     * `spark.sql.parquet.outputTimestampType = TIMESTAMP_MICROS` around
-    * table writes (see writeFiles). First enter per session saves the
+    * table writes (see writeIn). First enter per session saves the
     * user's value; the LAST exit restores it — interleaved concurrent
     * writers can no longer restore the override as the "previous" value
     * and leak it into the session. */
@@ -2044,8 +2052,6 @@ object VersionedTable {
   private val TPresent = "__graft_t_present"
   private val SPresent = "__graft_s_present"
   private implicit val fmts: Formats = DefaultFormats
-
-  private def now(): Long = System.currentTimeMillis()
 
   /** Column min/max/null stats AND row count from the parquet footer of
     * one file — metadata-only, no data read. STATIC (no session state)
@@ -2114,7 +2120,17 @@ object VersionedTable {
     new VersionedTable(spark, path, None)
   }
 
-  /** Initial partitioned write (reference: src/header_etl.py:159-162).
+  /** The table at `path` for a writer, whether or not it exists: with no
+    * commit there, a transaction pins the empty version −1 with `schema`
+    * and `partitionBy` ([[Txn.version]]) and publishes version 0. Readers
+    * refuse the path until then. */
+  def open(spark: SparkSession, path: String, schema: StructType,
+           partitionBy: Seq[String] = Seq.empty): VersionedTable =
+    new VersionedTable(spark, path, None, Some((schema, partitionBy)))
+
+  /** Initial partitioned write (reference: src/header_etl.py:159-162): a
+    * one-step transaction staging `df` as `CREATE TABLE AS SELECT`; losing
+    * the publish to a concurrent create throws the lost CAS.
     * `properties` are written once beside the log and are immutable:
     * [[BloomColsProp]] ("bloom.filter.columns", comma-separated) makes
     * every write add parquet bloom filters on those columns, sized by
@@ -2123,21 +2139,12 @@ object VersionedTable {
              partitionBy: Seq[String] = Seq.empty,
              properties: Map[String, String] = Map.empty): VersionedTable = {
     require(!isTable(spark, path), s"$path is already a graft table")
-    val t = new VersionedTable(spark, path, None)
+    val t = open(spark, path, df.schema, partitionBy)
     if (properties.nonEmpty) {
       t.fs.mkdirs(t.logDir)
       t.atomicWrite(t.fs, t.propsPath, Serialization.write(properties))
     }
-    val added = t.writeFiles(df, partitionBy)
-    val rows =
-      if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
-    // a create that loses the publish to a concurrent one leaves no file
-    try t.commit(LogEntry(0L, now(), "CREATE TABLE AS SELECT",
-      df.schema.json, partitionBy, added, Seq.empty,
-      Map("numFiles" -> added.size.toString,
-        "numOutputRows" -> rows.toString)))
-    catch { case e: Throwable => t.deleteData(added.map(_.path)); throw e }
-    t
+    t.firstVersion(_.create(df))
   }
 
   private[tables] def widenSchema(cur: StructType, incoming: StructType): StructType = {
@@ -2193,8 +2200,8 @@ class ConcurrentCommitException(msg: String) extends IllegalStateException(msg)
 /** One attempt of a [[VersionedTable.transaction]]: the pinned version,
   * the working file set (the pinned snapshot plus the steps' staged adds
   * and removes), the working schema, every path the attempt wrote and
-  * each step's (operation, metrics). Callers see only [[merge]] and
-  * [[read]]; the table's writers stage into it. */
+  * each step's (operation, metrics). Callers see only [[version]],
+  * [[create]], [[merge]] and [[read]]; the table's writers stage into it. */
 final class Txn private[tables] (table: VersionedTable,
                                  pinned: Long,
                                  pinnedFiles: Seq[FileEntry],
@@ -2207,6 +2214,16 @@ final class Txn private[tables] (table: VersionedTable,
   /** The attempt only appends: its one step is a `WRITE`, which removes
     * nothing and read only the pinned schema and partitioning. */
   private[tables] def blind: Boolean = steps.map(_._1) == Seq("WRITE")
+
+  /** The pinned version: −1 when this transaction publishes the table's
+    * first version ([[VersionedTable.open]]). */
+  def version: Long = pinned
+
+  /** On version −1, stage `df` (the working schema's columns) as the
+    * table's first write, `CREATE TABLE AS SELECT`.
+    * @return the step's metrics, `numOutputRows` among them */
+  def create(df: DataFrame): Map[String, String] =
+    table.writeStep(this, df, "CREATE TABLE AS SELECT")
 
   /** A MERGE into the working state, staged into this transaction. */
   def merge(source: DataFrame, condition: String): MergeBuilder =

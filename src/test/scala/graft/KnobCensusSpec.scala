@@ -63,15 +63,20 @@ class KnobCensusSpec extends AnyFunSuite {
   }
 
   test("log entries are built only by the transaction publish, append, create and clone") {
-    // every writer but create and clone (version 0 of a new log) stages
-    // into VersionedTable.transaction, the one place that pins,
-    // publishes, cleans up and retries — an append is a one-step WRITE
+    // every writer stages into VersionedTable.transaction, the one place
+    // that pins, publishes, cleans up and retries — an append is a
+    // one-step WRITE, a create or a clone a one-step first version
     val sites = mainSources.flatMap(f => Files.readAllLines(f).asScala.map(_.trim))
       .filter(l => l.contains("LogEntry(") && !l.startsWith("case class") &&
         !l.startsWith("//") && !l.startsWith("*"))
-    val owners = Seq("pinned + 1", "\"CREATE TABLE AS SELECT\"", "\"CLONE\"")
-    assert(sites.size == owners.size && owners.forall(o => sites.exists(_.contains(o))),
-      sites.mkString("\n"))
+    assert(sites.size == 1 && sites.head.contains("pinned + 1"), sites.mkString("\n"))
+  }
+
+  test("a commit file is published from one call site: the transaction's") {
+    val calls = mainSources.flatMap(f => Files.readAllLines(f).asScala.map(_.trim))
+      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
+      .filter(l => """\bcommit\(""".r.findFirstIn(l).isDefined && !l.contains("def commit("))
+    assert(calls.size == 1 && calls.head.contains("try commit(e)"), calls.mkString("\n"))
   }
 
   test("the log is parsed in one place: one call site each for parseEntry and parseCheckpoint") {

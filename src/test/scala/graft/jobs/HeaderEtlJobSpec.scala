@@ -41,7 +41,7 @@ class HeaderEtlJobSpec extends AnyFunSuite {
   private val MaxTs = Timestamp.valueOf("9999-12-31 00:00:00")
 
   test("T1: initial load creates one open version") {
-    runBatch("header_20230101.csv", Seq(
+    val m = runBatch("header_20230101.csv", Seq(
       Seq("C1", "ORD1", "365", "P1", "2022-01-01", "100.00", "", "", "AG1",
         "Accepted", "11/25/2022", "2023-01-01 10:00:00")))
     val rows = tableFor("C1").collect()
@@ -53,8 +53,10 @@ class HeaderEtlJobSpec extends AnyFunSuite {
     // creazione_dta parsed through the M/d/yyyy fallback on the init path
     assert(rows(0).getAs[java.sql.Date]("creazione_dta_parsed") ==
       java.sql.Date.valueOf("2022-11-25"))
-    // an init batch is the create plus one merge transaction
-    assert(VersionedTable.forPath(spark, tablePath).currentVersion == 1L)
+    // an init batch is one transaction: the table's version 0, whose
+    // written rows are the batch's inserted rows
+    assert(VersionedTable.forPath(spark, tablePath).currentVersion == 0L)
+    assert(m.inserted_count == 1L && m.closed_count == 0L)
   }
 
   test("T2: changed status closes previous version and opens a new one") {
@@ -232,4 +234,87 @@ class HeaderEtlJobSpec extends AnyFunSuite {
       "the validation staging dir must be deleted")
     assert(t.currentVersion == torn)
   }
+
+  test("a header init batch with lateSplit lands as one version") {
+    val root = Files.createTempDirectory("graft-header-init-late").toString
+    val path = s"$root/crm/header_20230101.csv"
+    TestCsv.write(path, header, Seq(
+      Seq("N1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Pending", "", "2023-01-01 09:00:00"),
+      Seq("N1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Accepted", "", "2023-01-01 10:00:00"),
+      Seq("N2", "ORD2", "365", "P1", "", "1.00", "", "", "AG1", "Accepted", "", "2023-01-01 11:00:00")))
+    val m = HeaderEtlJob.run(spark, path, s"$root/table", s"$root/discarded", s"$root/metrics",
+      lateSplit = true)
+    val t = VersionedTable.forPath(spark, s"$root/table")
+    assert(t.currentVersion == 0L)
+    assert(m.inserted_count == 3L && m.closed_count == 0L)
+    assert(t.read.count() == 3L && t.read.filter(col("is_current")).count() == 2L)
+  }
+
+  test("two concurrent init runs of one header batch land it once") {
+    val dir = Files.createTempDirectory("graft-header-init-race").toString
+    val (race, serial) = (s"$dir/landing/race", s"$dir/landing/serial")
+    val file = "header_20230301.csv"
+    val csv = s"$dir/crm/$file"
+    TestCsv.write(csv, header, Seq(
+      Seq("R1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Pending", "", "2023-03-01 09:00:00"),
+      Seq("R1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Accepted", "", "2023-03-01 10:00:00"),
+      Seq("R2", "ORD2", "365", "P1", "", "1.00", "", "", "AG1", "Accepted", "", "2023-03-01 11:00:00")))
+    def run(table: String) =
+      HeaderEtlJob.run(spark, csv, table, s"$table-discarded", s"$table-metrics")
+    val once = run(serial)
+    // the batch as the job's transform shapes it (the serial init wrote it
+    // verbatim), held back in its first materialization: the slow run has
+    // then pinned the path with no table yet
+    val t = VersionedTable.forPath(spark, serial)
+    val shape = t.schema
+    val held = spark.createDataFrame(
+      spark.sparkContext.parallelize(t.read.select(shape.fieldNames.toSeq.map(col): _*)
+        .collect().toSeq, 1).mapPartitions { it =>
+        HeaderEtlJobSpec.initEntered.countDown()
+        HeaderEtlJobSpec.initResume.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        it
+      }, shape)
+    val slowOut = new java.util.concurrent.atomic.AtomicReference[Any]
+    val slow = new Thread(() => {
+      slowOut.set(try HeaderEtlJob.twoPhaseMerge(spark, race, held, JobSupport.batchId(file))
+                   catch { case e: Throwable => e })
+    })
+    slow.start()
+    assert(HeaderEtlJobSpec.initEntered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "the slow run never started materializing its batch")
+    val fast = run(race)
+    HeaderEtlJobSpec.initResume.countDown()
+    slow.join(120000)
+    assert(slowOut.get match { case (_, 0L, 0L) => true; case _ => false },
+      s"the slow run re-runs on the fast run's table and changes nothing: ${slowOut.get}")
+    assert((fast.inserted_count, fast.closed_count) == ((once.inserted_count, once.closed_count)))
+    // every column but the two each run stamps: its batch id and start
+    def state(path: String) = VersionedTable.forPath(spark, path).read
+      .drop("batch_id", "ingest_ts").collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(state(race) == state(serial), "two concurrent init runs leave the state of one")
+    val open = VersionedTable.forPath(spark, race).read.filter(col("is_current"))
+      .groupBy("contratto_cod").count()
+    assert(open.count() == 2 && open.filter(col("count") =!= 1).isEmpty)
+    assert(HeaderEtlJobSpec.dataFiles(race) == HeaderEtlJobSpec.liveFiles(spark, race),
+      "the losing run's files must be deleted")
+  }
+}
+
+/** Latches for the concurrent-init test (a top-level object, so the
+  * executor-side closure and the driver share them without capturing
+  * test state), and the file listings it compares. */
+object HeaderEtlJobSpec {
+  val initEntered = new java.util.concurrent.CountDownLatch(1)
+  val initResume = new java.util.concurrent.CountDownLatch(1)
+
+  /** Paths of the parquet files under `<table>/data`. */
+  def dataFiles(table: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(java.nio.file.Paths.get(table, "data")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).map(_.toUri.getPath).toSet
+  }
+
+  /** Paths of the data files live in the table's current version. */
+  def liveFiles(spark: org.apache.spark.sql.SparkSession, table: String): Set[String] =
+    VersionedTable.forPath(spark, table).read.inputFiles.map(f => new java.net.URI(f).getPath).toSet
 }

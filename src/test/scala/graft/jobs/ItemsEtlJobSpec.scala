@@ -42,6 +42,8 @@ class ItemsEtlJobSpec extends AnyFunSuite {
       item("Y2", "10", "120.00")))
     val df = VersionedTable.forPath(spark, tablePath).read
     assert(df.count() == 3)
+    // an init batch is one transaction: the table's version 0
+    assert(VersionedTable.forPath(spark, tablePath).currentVersion == 0L)
     val r = df.filter(col("contratto_cod") === "Y1" && col("numero_annuncio") === "10")
       .collect()(0)
     assert(r.getAs[Date]("valid_from") == Date.valueOf("2023-01-23"))
@@ -144,6 +146,7 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     val m1 = ItemsEtlJob.runWithMetrics(spark, d1, table, Some(metricsDir))
     assert((m1.staged_count, m1.duplicated_count, m1.inserted_count, m1.closed_count) ===
       ((3L, 0L, 3L, 0L)))
+    assert(VersionedTable.forPath(spark, table).currentVersion === 0L)
 
     val d2 = drop("items_20230202.txt", Seq(
       item("M1", "10", "150.00"), // changed tracked field → close + insert
@@ -335,6 +338,54 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     assert(state(race) == state(serial), "two concurrent runs leave the state of one")
     assert(slowOut.get == ((0L, 0L)), s"the slow run re-runs on the fast run's state: ${slowOut.get}")
   }
+
+  test("two concurrent init runs of one items batch land it once") {
+    val dir = Files.createTempDirectory("graft-items-init-race").toString
+    val (race, serial) = (s"$dir/landing/race", s"$dir/landing/serial")
+    val d1 = s"$dir/crm/items_20230401.txt"
+    TestCsv.write(d1, header, Seq(
+      item("I1", "10", "100.00"), item("I1", "11", "200.00"), item("I2", "10", "50.00")))
+    // the batch as the job's transform shapes it, held back in its first
+    // materialization: the slow run has then pinned the path with no table
+    val batch = spark.read.option("header", "true").option("sep", "|")
+      .schema(graft.core.Schemas.Items).csv(d1)
+      .withColumn("valid_from", to_date(lit("20230401"), "yyyyMMdd"))
+      .withColumn("valid_to", to_date(lit(graft.core.Schemas.MaxDate), "yyyyMMdd"))
+      .withColumn("valid_from_year", year(col("valid_from")))
+      .withColumn("valid_from_month", month(col("valid_from")))
+      .withColumn("valid_from_day", dayofmonth(col("valid_from")))
+    val held = spark.createDataFrame(
+      spark.sparkContext.parallelize(batch.collect().toSeq, 1).mapPartitions { it =>
+        ItemsEtlJobSpec.initEntered.countDown()
+        ItemsEtlJobSpec.initResume.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        it
+      }, batch.schema)
+    val slowOut = new java.util.concurrent.atomic.AtomicReference[Any]
+    val slow = new Thread(() => {
+      slowOut.set(try ItemsEtlJob.scd2Merge(VersionedTable.open(spark, race, held.schema,
+        graft.core.Schemas.PartitionColumns), held)
+                  catch { case e: Throwable => e })
+    })
+    slow.start()
+    assert(ItemsEtlJobSpec.initEntered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "the slow run never started materializing its batch")
+    val fast = ItemsEtlJob.runWithMetrics(spark, d1, race)
+    ItemsEtlJobSpec.initResume.countDown()
+    slow.join(120000)
+    val once = ItemsEtlJob.runWithMetrics(spark, d1, serial)
+    assert((once.inserted_count, once.closed_count) == ((3L, 0L)))
+    assert((fast.inserted_count, fast.closed_count) == ((once.inserted_count, once.closed_count)))
+    assert(slowOut.get == ((0L, 0L)), s"the slow run re-runs on the fast run's table: ${slowOut.get}")
+    def state(path: String) =
+      VersionedTable.forPath(spark, path).read.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(state(race) == state(serial), "two concurrent init runs leave the state of one")
+    val open = VersionedTable.forPath(spark, race).read
+      .filter(col("valid_to") === lit(java.sql.Date.valueOf("9999-12-31")))
+      .groupBy("contratto_cod", "numero_annuncio").count()
+    assert(open.count() == 3 && open.filter(col("count") =!= 1).isEmpty)
+    assert(HeaderEtlJobSpec.dataFiles(race) == HeaderEtlJobSpec.liveFiles(spark, race),
+      "the losing run's files must be deleted")
+  }
 }
 
 /** Latches for the concurrent-rerun test: a top-level object, so the
@@ -343,4 +394,6 @@ class ItemsEtlJobSpec extends AnyFunSuite {
 object ItemsEtlJobSpec {
   val raceEntered = new java.util.concurrent.CountDownLatch(1)
   val raceResume = new java.util.concurrent.CountDownLatch(1)
+  val initEntered = new java.util.concurrent.CountDownLatch(1)
+  val initResume = new java.util.concurrent.CountDownLatch(1)
 }

@@ -69,6 +69,7 @@ class GraftStreamSinkSpec extends AnyFunSuite {
     sink.addBatch(0L, batch)
     val t = VersionedTable.forPath(spark, dir + "/t")
     val v = t.currentVersion
+    assert(v == 0L, "the first batch is the table's first version")
     // crash-replay across a RESTART: a fresh sink instance has no
     // in-memory cache, so this must be stopped by the TABLE's txn
     // watermark inside append
@@ -173,4 +174,41 @@ class GraftStreamSinkSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("foreachBatch"), e.getMessage)
   }
+
+  test("two sinks' first batches on a path with no table both land, the first as version 0") {
+    val dir = freshDir("sink-first")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id LONG, app STRING")
+    def rows(app: String, from: Long) = (from until from + 10).map(i => org.apache.spark.sql.Row(i, app))
+    // the slow sink's batch blocks in its write, after its append pinned
+    // the path with no table
+    val held = spark.createDataFrame(spark.sparkContext.parallelize(rows("appS", 0), 1)
+      .mapPartitions { it =>
+        GraftStreamSinkSpec.firstEntered.countDown()
+        GraftStreamSinkSpec.firstResume.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        it
+      }, schema)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val slow = new Thread(() => {
+      try new GraftSink(spark, dir + "/t", Nil, appId = "appS").addBatch(0L, held)
+      catch { case e: Throwable => failure.set(e) }
+    })
+    slow.start()
+    assert(GraftStreamSinkSpec.firstEntered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    new GraftSink(spark, dir + "/t", Nil, appId = "appF")
+      .addBatch(0L, spark.createDataFrame(spark.sparkContext.parallelize(rows("appF", 10)), schema))
+    GraftStreamSinkSpec.firstResume.countDown()
+    slow.join(120000)
+    assert(failure.get == null, s"the slow first batch must land: ${failure.get}")
+    val t = VersionedTable.forPath(spark, dir + "/t")
+    assert(t.currentVersion == 1L, "one version per batch, the first being version 0")
+    assert(t.read.count() == 20 && t.read.filter(col("app") === "appS").count() == 10)
+    assert(t.lastTxnBatchId("appS").contains(0L) && t.lastTxnBatchId("appF").contains(0L))
+  }
+}
+
+/** Latches for the first-batch race: a top-level object, so the
+  * executor-side closure and the driver share them. */
+object GraftStreamSinkSpec {
+  val firstEntered = new java.util.concurrent.CountDownLatch(1)
+  val firstResume = new java.util.concurrent.CountDownLatch(1)
 }
