@@ -1618,7 +1618,7 @@ object SparkEntry {
     // Deletion-vector DELETE drill (DeletionVectorSpec proves zero data
     // files are touched; this proves the DV'd READ loses exactly the
     // deleted rows): ~5% of orders deleted as a (file, row-index) sidecar,
-    // then a full read through the broadcast anti-join. On 100 TB the
+    // then a full read whose parquet scan drops them per file. On 100 TB the
     // same takedown-style delete writes KBs instead of rewriting TBs.
     "q64_dv_delete" -> ((s, dir) => {
       GraftSession.tune(s)

@@ -1,11 +1,9 @@
 package graft.sources
 
 import graft.tables.VersionedTable
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => StreamingOffsetV1, Sink => StreamingSink, Source => StreamingSource}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
@@ -19,13 +17,9 @@ import org.apache.spark.sql.types.StructType
   *   spark.readStream.format("graft").load(path)                 // CDC stream
   * }}}
   *
-  * Implemented on the stable DSv1 relation API as a thin shell: scans
-  * delegate to the table's own parquet read, so column pruning and
-  * filter pushdown reach the parquet scan through the inner DataFrame.
-  * The one cost of this interop path is the Row conversion at the
-  * relation boundary — performance-critical Scala/Java code should use
-  * `VersionedTable.read` directly, which stays whole-stage-codegen'd
-  * end to end.
+  * The relation (DSv1) is the table's own file relation, the one
+  * `VersionedTable.read` plans, so Spark scans it as parquet. Without
+  * `versionAsOf` it lists the newest version on every scan.
   *
   * The STREAMING read is the Delta-source shape (DeltaSource is itself a
   * DSv1 `Source`): the micro-batch offset IS the commit version, so a
@@ -48,10 +42,9 @@ class GraftSource extends RelationProvider with DataSourceRegister
       throw new IllegalArgumentException("graft source requires a 'path' option"))
 
   override def createRelation(sqlContext: SQLContext,
-                              parameters: Map[String, String]): BaseRelation = {
-    val versionAsOf = parameters.get("versionAsOf").map(_.toLong)
-    new GraftRelation(sqlContext, pathOf(parameters), versionAsOf)
-  }
+                              parameters: Map[String, String]): BaseRelation =
+    VersionedTable.forPath(sqlContext.sparkSession, pathOf(parameters))
+      .relation(parameters.get("versionAsOf").map(_.toLong))
 
   /** The stream's schema is the TABLE's schema — a user-supplied one is
     * rejected rather than silently ignored (Delta does the same). */
@@ -229,48 +222,4 @@ class GraftStreamSource(spark: SparkSession, path: String,
   private def version(o: StreamingOffsetV1): Long = o.json.trim.toLong
 
   override def stop(): Unit = ()
-}
-
-class GraftRelation(val sqlContext: SQLContext,
-                    path: String,
-                    versionAsOf: Option[Long]) extends BaseRelation
-    with PrunedFilteredScan {
-
-  private def table: VersionedTable =
-    VersionedTable.forPath(sqlContext.sparkSession, path)
-  private def df: DataFrame =
-    versionAsOf.fold(table.read)(v => table.readVersion(v))
-
-  override val schema: StructType = df.schema
-
-  /** Filters are pushed into the inner DataFrame (and from there into
-    * the parquet scan); anything not translated is left for Spark,
-    * which re-applies every filter above this scan (the default
-    * `unhandledFilters` contract), so translation is an optimization,
-    * never a correctness dependency. */
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] = {
-    val filtered = filters.flatMap(toColumn).foldLeft(df)(_.filter(_))
-    val pruned = filtered.select(requiredColumns.toSeq.map(col): _*)
-    pruned.rdd
-  }
-
-  private def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === v)
-    case EqualNullSafe(a, v) => Some(col(a) <=> v)
-    case GreaterThan(a, v) => Some(col(a) > v)
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= v)
-    case LessThan(a, v) => Some(col(a) < v)
-    case LessThanOrEqual(a, v) => Some(col(a) <= v)
-    case In(a, vs) => Some(col(a).isin(vs.toSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case StringContains(a, v) => Some(col(a).contains(v))
-    case And(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
-    case Or(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
-    case Not(c) => toColumn(c).map(!_)
-    case _ => None
-  }
 }

@@ -6,8 +6,11 @@ import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampNTZType}
 import org.apache.spark.storage.StorageLevel
@@ -1221,8 +1224,8 @@ class VersionedTable private (val spark: SparkSession,
     *    touched entries re-committed pointing at it — no data file is
     *    read-rewritten, so cost scales with the NUMBER of deleted rows.
     *    On a 100 TB table, deleting a user's rows for a takedown request
-    *    becomes a sidecar write instead of a multi-TB rewrite. Readers
-    *    apply the sidecar as a broadcast anti-join (see
+    *    becomes a sidecar write instead of a multi-TB rewrite. The scan
+    *    drops the marked rows of each file as it reads it (see
     *    [[readFiles]]); the next merge/compact touching a file
     *    rewrites it clean and drops its vector, and [[vacuum]] reclaims
     *    unreferenced sidecars. DVs are for SMALL deletions by contract —
@@ -1443,46 +1446,50 @@ class VersionedTable private (val spark: SparkSession,
   }
 
   /** The one read path: `entries` as ONE relation over a
-    * [[LogFileIndex]], with their deletion vectors applied. The frame has
-    * the table's columns, partition columns last and every field nullable
-    * (a parquet source's read schema). `keepMeta=true` also exposes
+    * [[LogFileIndex]], their deletion vectors applied inside the scan
+    * ([[DeletionVectorParquetFormat]]). The frame has the table's
+    * columns, partition columns last and every field nullable (a parquet
+    * source's read schema). `keepMeta=true` also exposes
     * [[VersionedTable.FileCol]] (`_metadata.file_path`, i.e. [[scanPath]])
     * and [[VersionedTable.RowIdxCol]] (`_metadata.row_index`) as columns
-    * for the DML and merge probes: after the DV anti-join `_metadata` no
-    * longer resolves. DVs apply as a LEFT ANTI join against the entries'
-    * sidecars on (scan path, row index), the sidecar side broadcast — DVs
-    * are tiny by contract (a delete touching most rows should rewrite
-    * instead). Entries without DVs pay nothing: the plan is the bare scan.
-    * `skipping=false` lists `entries` without pruning them again, for a
-    * caller that already ran [[pruneFiles]] on the filter it applies. */
+    * for the DML and merge probes. `skipping=false` lists `entries`
+    * without pruning them again, for a caller that already ran
+    * [[pruneFiles]] on the filter it applies. */
   private def readFiles(entries: Seq[FileEntry], schema: StructType, partCols: Seq[String],
                         keepMeta: Boolean = false, skipping: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val scan = spark.baseRelationToDataFrame(fileRelation(Some(entries), schema, partCols, skipping))
+    if (!keepMeta) scan
+    else scan.withColumns(Map(FileCol -> col("_metadata.file_path"), RowIdxCol -> col("_metadata.row_index")))
+  }
+
+  /** The table at `asOf` as the `graft` data source's relation; without
+    * `asOf` unpinned, so a `USING graft` table sees every later commit. */
+  private[graft] def relation(asOf: Option[Long]): HadoopFsRelation = {
+    val r = replay(asOf)
+    fileRelation(asOf.map(_ => r.state.files), r.schema, r.state.partitionColumns, skipping = true)
+  }
+
+  private def fileRelation(pinned: Option[Seq[FileEntry]], schema: StructType,
+                           partCols: Seq[String], skipping: Boolean): HadoopFsRelation = {
     val nullable = org.apache.spark.sql.GraftColumnBridge.asNullable(schema)
     val partSchema = StructType(partCols.map(nullable(_)))
-    val scan = spark.baseRelationToDataFrame(HadoopFsRelation(
-      new LogFileIndex(this, entries, schema, partSchema, skipping), partSchema,
+    val index = new LogFileIndex(this, pinned, schema, partSchema, skipping)
+    HadoopFsRelation(index, partSchema,
       StructType(nullable.filterNot(f => partCols.contains(f.name))),
-      None, new ParquetFileFormat, Map.empty)(spark))
-    val withDv = entries.filter(_.dv.nonEmpty)
-    if (withDv.isEmpty && !keepMeta) return scan
-    val withMeta = scan
-      .withColumn(FileCol, col("_metadata.file_path"))
-      .withColumn(RowIdxCol, col("_metadata.row_index"))
-    val applied =
-      if (withDv.isEmpty) withMeta
-      else {
-        // a sidecar row names its file by log path: join in the scan path
-        val dv = spark.read.schema(DvSchema)
-          .parquet(withDv.flatMap(_.dv).distinct.map(p => new Path(dataDir, p).toString): _*)
-          .join(spark.createDataFrame(withDv.map(fe => (fe.path, scanPath(fe))))
-            .toDF("file", "scan"), "file")
-        withMeta.join(broadcast(dv),
-          col(FileCol) === dv("scan") && col(RowIdxCol) === dv("row_idx"), "left_anti")
-      }
-    if (keepMeta) applied else applied.drop(FileCol, RowIdxCol)
+      None, new DeletionVectorParquetFormat(index), Map.empty)(spark)
   }
+
+  /** The sorted row indexes the deletion vectors of `files` mark, by log
+    * path, read on the driver without a Spark job (DVs are tiny by
+    * contract). A sidecar row is (`file`: log path, `row_idx`). */
+  private[tables] def deletedRows(files: Seq[FileEntry]): Map[String, Array[Long]] =
+    files.flatMap(_.dv).distinct.flatMap { p =>
+      val r = ParquetReader.builder(new GroupReadSupport, new Path(dataDir, p))
+        .withConf(spark.sparkContext.hadoopConfiguration).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null)
+        .map(g => (g.getString("file", 0), g.getLong("row_idx", 0))).toVector
+      finally r.close()
+    }.groupMap(_._1)(_._2).map { case (f, rows) => f -> rows.toArray.sorted }
 
   /** Plan one MERGE step: the only place a MERGE decides anything — the
     * evolved schema, the candidate files, what proves the source keys
@@ -1846,7 +1853,6 @@ class VersionedTable private (val spark: SparkSession,
             // probe scans only the stats-candidate files — skipped files
             // cannot contain matched rows and are untouched by
             // construction. keepMeta supplies file/row-index identity
-            // (after a DV anti-join, _metadata no longer resolves)
             val t = readFiles(plan.candidates, plan.schema, tx.partCols, keepMeta = true).alias(alias)
             val matched = t.join(sourceSide(plan.sourceSmall), cond, "inner")
             val (perFile, u) =
@@ -2041,12 +2047,8 @@ object VersionedTable {
   val BloomNdvProp = "bloom.filter.ndv"
   private val FileCol = "__graft_file"
   private val RowIdxCol = "__graft_row_idx"
-  /** Deletion-vector sidecar schema: one row marks one deleted physical
-    * row — `file` is the data file's path relative to `<root>/data`,
-    * `row_idx` its parquet `_metadata.row_index`. */
-  private val DvSchema = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("row_idx", LongType, nullable = false)))
+  /** Per-file scan metadata: the file's deleted row indexes, sorted. */
+  private[tables] val DeletedRows = "graft_deleted_rows"
   /** A timestamp string: the local date-time, then an optional offset. */
   private val TsForm = """(\d{4}-\d\d-\d\d[T ][^+Z-]*)(Z|[+-]\d\d:?\d\d)?""".r
   private val TPresent = "__graft_t_present"

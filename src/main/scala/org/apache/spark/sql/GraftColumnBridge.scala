@@ -31,33 +31,17 @@ object GraftColumnBridge {
       case _ => ()
     }
 
-  /** Re-tag a batch DataFrame's relation leaves as streaming. The DSv1
+  /** Re-tag a batch DataFrame's relations as streaming. The DSv1
     * `Source.getBatch` contract requires the returned plan to carry
-    * `isStreaming = true` (MicroBatchExecution asserts it); built-in
-    * DSv1 sources satisfy it by constructing their batch relations with
-    * the flag set (Spark's FileStreamSource builds
-    * `LogicalRelation(..., isStreaming = true)`), which is exactly what
-    * this does after the fact for a frame built through the normal
-    * reader: a graft change-frame is one file relation (LogicalRelation),
-    * empty batches included. */
-  def asStreamingBatch(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-    def retag(plan: LogicalPlan): LogicalPlan = plan match {
-      case j: Join if j.joinType == LeftAnti =>
-        // deletion-vector sidecars are applied as a LeftAnti against a
-        // broadcast dv scan (VersionedTable.readFiles): the dv
-        // side must STAY a batch relation — stream-STATIC left-anti is
-        // a supported streaming join, stream-stream left-anti is not
-        j.copy(left = retag(j.left))
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-        if !lr.isStreaming => lr.copy(isStreaming = true)
-      case other => other.mapChildren(retag)
-    }
-    classic.Dataset.ofRows(
-      df.sparkSession.asInstanceOf[classic.SparkSession],
-      retag(df.queryExecution.analyzed))
-  }
+    * `isStreaming = true` (MicroBatchExecution asserts it); Spark's
+    * FileStreamSource builds `LogicalRelation(..., isStreaming = true)`,
+    * as this does after the fact for a graft change-frame, which is one
+    * file relation, empty batches included. */
+  def asStreamingBatch(df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed.transform {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.copy(isStreaming = true)
+      })
 
   /** The inverse direction, for SINKS: re-materialize a micro-batch's
     * streaming-planned frame as a writable batch frame. A sink's

@@ -50,16 +50,27 @@ class KnobCensusSpec extends AnyFunSuite {
   }
 
   test("table data files are read only through the log's file index") {
-    // the one parquet read left in the table layer is the deletion-vector
-    // sidecar's; the readWhere* helpers are gone — a filter prunes
+    // deletion vectors apply inside the scan and their sidecars are read
+    // without a Spark job, so the table layer holds no spark.read; the
+    // readWhere* helpers are gone — a filter prunes
     val tables = root.resolve("graft").resolve("tables")
     val reads = mainSources.filter(_.startsWith(tables))
       .map(f => "spark\\.read".r.findAllIn(Files.readString(f)).size).sum
-    assert(reads == 1)
+    assert(reads == 0)
     val main = root.getParent
     val helpers = Files.walk(main).iterator().asScala.filter(Files.isRegularFile(_))
       .filter(f => Files.readString(f).contains("readWhere")).toSeq
     assert(helpers.isEmpty, helpers.mkString(", "))
+  }
+
+  test("the graft data source hands Spark the table's file relation, not rows") {
+    // no RDD boundary and no hand translation of pushed filters: Spark
+    // plans the relation as a parquet scan and pushes filters itself
+    val text = Files.readString(root.resolve("graft").resolve("sources").resolve("GraftSource.scala"))
+    assert(!text.contains(".rdd"))
+    assert(!text.contains("PrunedFilteredScan"))
+    assert("""\bFilter\b|sources\._""".r.findFirstIn(text).isEmpty,
+      "GraftSource matches no org.apache.spark.sql.sources.Filter")
   }
 
   test("log entries are built only by the transaction publish, append, create and clone") {

@@ -106,6 +106,35 @@ class PlanAuditSpec extends AnyFunSuite {
     GraftSession.deleteRec(new java.io.File(root))
   }
 
+  test("format(graft) and dv'd reads plan as one parquet scan over the log's file index") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, RowDataSourceScanExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val root = Files.createTempDirectory("graft-relation-plan").toString
+    val t = VersionedTable.create(spark,
+      spark.range(0, 400).selectExpr("id", "id % 4 AS grp").repartition(2), s"$root/t")
+    // one FileSourceScanExec over LogFileIndex, no join, the filter pushed;
+    // `columnar`: batches read and turned into rows above the scan
+    def audit(q: org.apache.spark.sql.DataFrame, columnar: Boolean): Unit = {
+      val p = q.queryExecution.executedPlan
+      val scans = p.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1 && scans.head.relation.location.getClass.getSimpleName == "LogFileIndex",
+        s"one scan over the log's file index:\n$p")
+      assert(scans.head.dataFilters.exists(_.references.exists(_.name == "grp")),
+        s"the filter must reach the scan's DataFilters:\n$p")
+      assert(p.collect { case j: BaseJoinExec => j }.isEmpty, s"no join:\n$p")
+      assert(p.collect { case r: RowDataSourceScanExec => r }.isEmpty, s"no row relation:\n$p")
+      assert(p.exists(_.isInstanceOf[ColumnarToRowExec]) == columnar, s"columnar=$columnar:\n$p")
+    }
+    val viaSource = spark.read.format("graft").load(s"$root/t").filter(col("grp") === 1)
+    audit(viaSource, columnar = true)
+    assert(viaSource.count() == 100)
+    assert(t.delete("id % 10 = 3", deletionVectors = true) == 40)
+    audit(t.read.filter(col("grp") === 1), columnar = false)
+    audit(spark.read.format("graft").load(s"$root/t").filter(col("grp") === 1), columnar = false)
+    assert(t.read.filter(col("grp") === 1).count() == 80)
+    GraftSession.deleteRec(new java.io.File(root))
+  }
+
   test("PQ ADC scan is map-only with whole-stage codegen'd top-k heaps") {
     // the production shape: PQ encodes the raw float column directly —
     // a transform() cast lambda here would break whole-stage codegen

@@ -59,4 +59,54 @@ class GraftSourceSpec extends AnyFunSuite {
         .filter($"grp" === 1).count())
     } finally spark.sql("DROP TABLE IF EXISTS graft_sql_t")
   }
+
+  test("a USING graft table sees commits after its first query; versionAsOf stays pinned") {
+    // the session catalog keeps the table's relation: it must list the
+    // newest version each time it is scanned
+    val p = Files.createTempDirectory("graft-src-fresh").toString + "/t"
+    val t = VersionedTable.create(spark, spark.range(0, 100).toDF("id"), p)
+    def count(where: String) =
+      spark.sql(s"SELECT count(*) FROM graft_fresh_t WHERE $where").as[Long].head()
+    spark.sql("DROP TABLE IF EXISTS graft_fresh_t")
+    spark.sql(s"CREATE TABLE graft_fresh_t USING graft OPTIONS (path '$p')")
+    try {
+      assert(count("true") == 100)
+      t.append(spark.range(100, 150).toDF("id"))
+      assert(count("true") == 150)
+      assert(count("id >= 100") == 50)
+      t.delete("id < 10", deletionVectors = true)
+      assert(count("true") == 140)
+      assert(spark.read.format("graft").option("versionAsOf", 0).load(p).count() == 100)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_fresh_t")
+  }
+
+  test("INSERT into a USING graft table fails and writes nothing past the log") {
+    val p = Files.createTempDirectory("graft-src-insert").toString + "/t"
+    val t = VersionedTable.create(spark, spark.range(0, 10).toDF("id").coalesce(1), p)
+    def files = Files.walk(java.nio.file.Paths.get(p)).count()
+    val before = files
+    spark.sql("DROP TABLE IF EXISTS graft_insert_t")
+    spark.sql(s"CREATE TABLE graft_insert_t USING graft OPTIONS (path '$p')")
+    try {
+      for (stmt <- Seq("INSERT INTO", "INSERT OVERWRITE TABLE")) {
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          spark.sql(s"$stmt graft_insert_t SELECT 99L AS id"))
+        assert(e.getMessage.contains("UNSUPPORTED_INSERT"), e.getMessage)
+      }
+      assert(files == before)
+      assert(t.read.count() == 10 && t.currentVersion == 0)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_insert_t")
+  }
+
+  test("a dv delete between planning and running an unpinned scan fails it, never serves deleted rows") {
+    val p = Files.createTempDirectory("graft-src-race").toString + "/t"
+    val t = VersionedTable.create(spark, spark.range(0, 100).toDF("id").repartition(2), p)
+    val planned = spark.read.format("graft").load(p).queryExecution
+    assert(planned.executedPlan.exists(_.getClass.getSimpleName == "ColumnarToRowExec"),
+      "no deletion vector yet: the scan is planned to read batches")
+    t.delete("id < 10", deletionVectors = true)
+    val e = intercept[IllegalStateException](planned.toRdd.count())
+    assert(e.getMessage.contains("after this scan was planned"))
+    assert(spark.read.format("graft").load(p).count() == 90)
+  }
 }

@@ -3,14 +3,16 @@ package graft.tables
 import java.nio.file.Files
 
 import graft.SharedSpark
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Deletion vectors: DELETE as a tiny (file, row-index) sidecar instead
-  * of a data-file rewrite. The contract under test: identical logical
-  * results to the rewrite strategy, zero data files written, correct
-  * interplay with every reader and with merge / compact / vacuum /
-  * restore / time travel. */
+  * of a data-file rewrite, applied per file inside the parquet scan. The
+  * contract under test: identical logical results to the rewrite
+  * strategy, zero data files written, correct interplay with every
+  * reader (`format("graft")`, cached reads, split files) and with
+  * merge / compact / vacuum / restore / time travel. */
 class DeletionVectorSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
@@ -172,5 +174,58 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(e.getMessage.contains("DELETE"))
     // with includeRewrites the delete contributes nothing; the append shows
     assert(t.readChanges(v0, includeRewrites = true).count() === 1)
+  }
+
+  test("a persisted read never serves rows a later dv delete removed") {
+    val t = VersionedTable.create(spark, baseDf.repartition(4), tmpDir() + "/t")
+    val before = t.currentVersion
+    val cached = t.read.persist()
+    def fromCache(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation])
+    try {
+      assert(cached.count() === 2000)
+      t.delete("grp = 7", deletionVectors = true)
+      // same data files, new vectors: not the persisted read
+      assert(!fromCache(t.read))
+      assert(t.read.count() === 1900)
+      // same files, same (no) vectors: the persisted read
+      assert(fromCache(t.readVersion(before)))
+      assert(t.readVersion(before).count() === 2000)
+    } finally cached.unpersist()
+  }
+
+  test("format(graft) on a dv'd table reads what t.read reads, filtered and not") {
+    val root = tmpDir() + "/t"
+    val t = VersionedTable.create(spark, baseDf.repartition(4), root)
+    assert(t.delete("grp = 7 OR id < 50", deletionVectors = true) === 147)
+    val viaSource = spark.read.format("graft").load(root)
+    val expected = baseDf.filter(col("grp") =!= 7 && col("id") >= 50).collect().toSet
+    assert(viaSource.count() === 1853)
+    assert(viaSource.collect().toSet === expected)
+    assert(t.read.collect().toSet === expected)
+    val f = col("id").between(40, 160) && col("v") > 150
+    assert(viaSource.filter(f).collect().toSet === t.read.filter(f).collect().toSet)
+    assert(viaSource.filter(f).count() === 105)
+  }
+
+  test("a dv'd file read as several scan splits loses exactly the deleted rows") {
+    val root = tmpDir() + "/t"
+    val big = spark.range(100000)
+      .select(col("id"), (col("id") % 20).as("grp"), (col("id") * 3).as("v"))
+    // small row groups, written and then read as several splits of one file
+    val confs = Seq("parquet.block.size" -> "65536", "spark.sql.files.maxPartitionBytes" -> "131072")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val t = VersionedTable.create(spark, big.coalesce(1), root)
+      assert(t.liveEntries.size === 1)
+      assert(t.delete("id % 1000 = 3", deletionVectors = true) === 100)
+      val perSplit = t.read.rdd.mapPartitions(rows => Iterator(rows.size)).collect()
+      assert(perSplit.count(_ > 0) > 1, s"one split read every row: ${perSplit.mkString(",")}")
+      assert(t.read.collect().toSet === big.filter(col("id") % 1000 =!= 3).collect().toSet)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
