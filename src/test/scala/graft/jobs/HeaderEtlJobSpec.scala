@@ -250,6 +250,74 @@ class HeaderEtlJobSpec extends AnyFunSuite {
     assert(t.read.count() == 3L && t.read.filter(col("is_current")).count() == 2L)
   }
 
+  test("a replayed header batch runs no rewrite and commits no data file, with and without lateSplit") {
+    val root = Files.createTempDirectory("graft-header-replay").toString
+    val table = s"$root/table"
+    val path = s"$root/crm/header_20230201.csv"
+    TestCsv.write(path, header, Seq(
+      Seq("P1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Pending", "", "2023-02-01 09:00:00"),
+      Seq("P1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Accepted", "", "2023-02-01 10:00:00"),
+      Seq("P2", "ORD2", "365", "P1", "", "1.00", "", "", "AG1", "Accepted", "", "2023-02-01 11:00:00")))
+    def run(lateSplit: Boolean) =
+      HeaderEtlJob.run(spark, path, table, s"$root/discarded", s"$root/metrics", lateSplit)
+    val loaded = run(lateSplit = false)
+    assert((loaded.inserted_count, loaded.closed_count) == ((3L, 0L)))
+    val rewrites = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") ==
+          "graft.merge: rewrite + write")) rewrites.incrementAndGet()
+    }
+    for (lateSplit <- Seq(false, true)) {
+      val (live, onDisk) = (HeaderEtlJobSpec.liveFiles(spark, table), HeaderEtlJobSpec.dataFiles(table))
+      rewrites.set(0)
+      spark.sparkContext.addSparkListener(jobs)
+      val replay = try {
+        val m = run(lateSplit)
+        org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+        m
+      } finally spark.sparkContext.removeSparkListener(jobs)
+      assert((replay.inserted_count, replay.closed_count) == ((0L, 0L)), s"lateSplit=$lateSplit")
+      assert(rewrites.get == 0, s"lateSplit=$lateSplit: ${rewrites.get} rewrite jobs")
+      val last = VersionedTable.forPath(spark, table).history(1).head()
+      assert((last.getAs[Long]("numAddedFiles"), last.getAs[Long]("numRemovedFiles")) == ((0L, 0L)),
+        s"lateSplit=$lateSplit: the replay's commit swapped files")
+      assert(HeaderEtlJobSpec.liveFiles(spark, table) == live, s"lateSplit=$lateSplit")
+      assert(HeaderEtlJobSpec.dataFiles(table) == onDisk, s"lateSplit=$lateSplit")
+    }
+  }
+
+  test("late-event rule: a stale older change keeps the open row open; lateSplit closes it at the newer change") {
+    def row(status: String, at: String): Seq[String] =
+      Seq("S1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", status, "", at)
+    for (lateSplit <- Seq(false, true)) {
+      val root = Files.createTempDirectory("graft-header-late-rule").toString
+      // two drops of one day, each in its own directory
+      def run(drop: String, rows: Seq[Seq[String]]) = {
+        val path = s"$root/crm/$drop/header_20230302.csv"
+        TestCsv.write(path, header, rows)
+        HeaderEtlJob.run(spark, path, s"$root/table", s"$root/discarded", s"$root/metrics", lateSplit)
+      }
+      run("d1", Seq(row("Accepted", "2023-03-02 12:00:00")))
+      // the earliest differing event (08:00) is older than the open row
+      // (12:00); a newer one (14:00) differs too
+      val m = run("d2", Seq(row("Pending", "2023-03-02 08:00:00"), row("Signed", "2023-03-02 14:00:00")))
+      val noon = VersionedTable.forPath(spark, s"$root/table").read
+        .filter(col("valid_from_ts") === Timestamp.valueOf("2023-03-02 12:00:00")).collect()
+      assert(noon.length == 1)
+      if (!lateSplit) {
+        assert(m.closed_count == 0L)
+        assert(noon.head.getAs[Boolean]("is_current") && noon.head.getAs[Timestamp]("valid_to_ts") == MaxTs,
+          "the stale minimum blocks the close")
+      } else {
+        assert(m.closed_count == 1L)
+        assert(!noon.head.getAs[Boolean]("is_current") &&
+          noon.head.getAs[Timestamp]("valid_to_ts") == Timestamp.valueOf("2023-03-02 14:00:00"))
+      }
+      assert(m.inserted_count == 2L)
+    }
+  }
+
   test("two concurrent init runs of one header batch land it once") {
     val dir = Files.createTempDirectory("graft-header-init-race").toString
     val (race, serial) = (s"$dir/landing/race", s"$dir/landing/serial")

@@ -221,6 +221,49 @@ class VersionedTableSpec extends AnyFunSuite {
     }
   }
 
+  test("a unique-key update-only merge touches only the files its clause changes") {
+    // one key with a closed version in one file and its open version in
+    // another: the clause holds only for the open row
+    def twoFiles(name: String): (VersionedTable, String) = {
+      val t = VersionedTable.create(spark,
+        Seq(("k1", 1, false), ("k2", 5, true)).toDF("key", "val", "open").coalesce(1), tmpDir() + s"/$name")
+      val Seq(closedFile) = t.liveEntries.map(_.path)
+      t.append(Seq(("k1", 2, true)).toDF("key", "val", "open"))
+      assert(t.liveEntries.size == 2)
+      (t.alias("e"), closedFile)
+    }
+    val src = Seq(("k1", 9), ("k1", 7)).toDF("key", "v").groupBy("key").agg(max("v").as("nv")).alias("s")
+    val (t, closedFile) = twoFiles("tprobe")
+    val m = t.merge(src, "e.key = s.key")
+      .whenMatchedUpdate(condition = "e.open", set = Map("val" -> "s.nv", "open" -> "false"))
+      .execute()
+    assert(m("sourceKeysUnique") == "plan" && m("rewriteJoinType") == "left_outer", s"$m")
+    assert(m("numTargetFilesRemoved") == "1" && m("numTargetRowsUpdated") == "1", s"$m")
+    assert(t.liveEntries.map(_.path).contains(closedFile), "the unchanged file stays live by reference")
+    assert(t.read.orderBy("key", "val").as[(String, Int, Boolean)].collect().toSeq ==
+      Seq(("k1", 1, false), ("k1", 9, false), ("k2", 5, true)))
+
+    // with an insert clause the full-outer rewrite must see every matched
+    // row: both files are rewritten and the matched key is not inserted
+    val (u, _) = twoFiles("tprobe-ins")
+    val mi = u.merge(src, "e.key = s.key")
+      .whenMatchedUpdate(condition = "e.open", set = Map("val" -> "s.nv", "open" -> "false"))
+      .whenNotMatchedInsert(Map("key" -> "s.key", "val" -> "s.nv", "open" -> "true"))
+      .execute()
+    assert(mi("rewriteJoinType") == "full_outer", s"$mi")
+    assert(mi("numTargetFilesRemoved") == "2" && mi("numTargetRowsInserted") == "0", s"$mi")
+    assert(u.read.orderBy("key", "val").as[(String, Int, Boolean)].collect().toSeq ==
+      Seq(("k1", 1, false), ("k1", 9, false), ("k2", 5, true)))
+
+    // an unchecked source counts every key match, also where no clause holds
+    val dup = Seq(("k1", 9), ("k1", 7)).toDF("key", "nv").alias("s")
+    val e = intercept[IllegalStateException] {
+      twoFiles("tprobe-dup")._1.merge(dup, "e.key = s.key")
+        .whenMatchedUpdate(condition = "e.open AND s.nv > 100", set = Map("val" -> "s.nv")).execute()
+    }
+    assert(e.getMessage.contains("multiple source rows matched the same target row"))
+  }
+
   test("merge records its source, broadcast, join and uniqueness decisions") {
     import org.apache.spark.storage.StorageLevel
     def lastMetrics(t: VersionedTable): Map[String, String] =
