@@ -44,16 +44,18 @@ case class HeaderRunMetrics(batch_id: String,
   *     rows via `lead()` over (contratto_cod, event_time asc), y/m/d
   *     partition columns, `creazione_dta` normalization + parse.
   *  4. two-phase SCD2 merge into a [[VersionedTable]]:
-  *     Phase A's merge clause closes each open row at its key's first
-  *     newer event differing null-safely on {status_quote, codice_agente,
+  *     Phase A closes the open row once per key at the first event that
+  *     null-safely differs on {status_quote, codice_agente,
   *     codice_ordine_sap}; Phase B idempotently inserts all version rows
   *     keyed on (contratto_cod, valid_from_ts). Both phases (and the
   *     opt-in Phase L) commit as ONE table version per batch.
   *
   * Scale notes: the transformed batch is persisted once and feeds the init
-  * write, Phase A's per-key events and the Phase-B staging — one CSV scan
-  * + one window shuffle total. Phase A reads no table file outside its
-  * merge, whose probe touches only the files whose rows it changes.
+  * write, the Phase-A change join, and the Phase-B staging — one CSV
+  * scan + one window shuffle total. The change-detection join's existing
+  * side is pre-projected to 5 columns (reference does the same to shrink
+  * the join); the merge itself rewrites only the files holding an open row
+  * it closes, so a replayed batch rewrites none.
   */
 object HeaderEtlJob {
   import JobSupport.secondsSince
@@ -209,15 +211,16 @@ object HeaderEtlJob {
         expr("coalesce(to_date(creazione_dta_raw, 'M/d/yyyy'), to_date(creazione_dta_raw, 'yyyy-MM-dd'))"))
   }
 
-  /** The two-phase SCD2 merge (Phase A close-on-change, decided in its
-    * merge clause by [[closeOnChange]]; Phase B idempotent insert —
-    * reference: src/header_etl.py:157-280).
+  /** The two-phase SCD2 merge (Phase A close-on-change once per key,
+    * Phase B idempotent insert — reference: src/header_etl.py:157-280).
     * Shared by the batch job and [[graft.streaming.StreamingScd2Ingest]].
     * Phases L, A and B run in ONE [[VersionedTable.transaction]], so a
     * batch lands as one table version: no reader ever sees a key whose
     * open row Phase A closed before Phase B inserted its successor. An
-    * init batch's first step writes it; A and B then merge it against
-    * itself and touch no file (src/header_etl.py:157-166).
+    * init batch's first step writes it, and A and B then merge it against
+    * itself (src/header_etl.py:157-166). Neither changes anything there
+    * when every row has a `valid_from_ts`: Phase A closes no row and
+    * touches no file, and Phase B's anti-join inserts nothing.
     * @return (table, rows inserted this batch, rows closed this batch) —
     *         both from the steps' operation metrics, -1 if unmeasured */
   private[graft] def twoPhaseMerge(spark: SparkSession, writePath: String,
@@ -237,15 +240,47 @@ object HeaderEtlJob {
         if (lateSplit && tx.version >= 0) lateSplitAdjust(tx, dfTransformed, batchId)
         else dfTransformed
 
-      // -- Phase A: close each open row at its key's first real change --
+      // -- Phase A: close open rows only on real change, once per key ----
       // (reference: src/header_etl.py:168-215)
-      val (events, closeCond, firstChange) = closeOnChange(dfTransformed, lateSplit)
+      val existingCurrent = tx.read
+        .filter(col("valid_to_ts").isNull || col("valid_to_ts") === expr(MaxTsExpr))
+        // narrow projection shrinks the join (reference: src/header_etl.py:174-180)
+        .select("contratto_cod", "status_quote", "codice_agente",
+          "codice_ordine_sap", "valid_from_ts")
+
+      val joined = dfTransformed.alias("st").join(
+        existingCurrent.alias("ex"),
+        col("st.contratto_cod") === col("ex.contratto_cod"), "inner")
+
+      // null-safe difference on the tracked attributes (reference: :189-194)
+      val diffExpr =
+        "NOT (st.status_quote <=> ex.status_quote) OR " +
+          "NOT (st.codice_agente <=> ex.codice_agente) OR " +
+          "NOT (st.codice_ordine_sap <=> ex.codice_ordine_sap)"
+      // Under lateSplit, an event OLDER than the open version belongs to
+      // Phase L — left in here it would poison min(first_change_ts) below
+      // the open row's valid_from and block the close of the open row at
+      // a genuinely newer change. Without lateSplit the reference's exact
+      // behavior is kept (the merge condition neutralizes the stale min).
+      val changeCandidates =
+        if (lateSplit) joined.filter(col("st.valid_from_ts") > col("ex.valid_from_ts"))
+        else joined
+      val changedEvents = changeCandidates.filter(expr(diffExpr))
+        .select(col("st.contratto_cod").as("contratto_cod"),
+          col("st.valid_from_ts").as("valid_from_ts"))
+
+      // first event causing a difference, per key (reference: :200)
+      val firstChange = changedEvents.groupBy("contratto_cod")
+        .agg(min("valid_from_ts").as("first_change_ts"))
+
       val closed = tx
-        .merge(events.alias("min_staged"), "existing.contratto_cod = min_staged.contratto_cod")
+        .merge(firstChange.alias("min_staged"),
+          "existing.contratto_cod = min_staged.contratto_cod")
         .whenMatchedUpdate(
-          condition = closeCond,
+          condition = s"(existing.valid_to_ts = $MaxTsExpr OR existing.valid_to_ts IS NULL) " +
+            "AND min_staged.first_change_ts > existing.valid_from_ts",
           set = Map(
-            "valid_to_ts" -> firstChange,
+            "valid_to_ts" -> "min_staged.first_change_ts",
             "is_current" -> "false",
             "closed_by_batch" -> s"'$batchId'"))
         .execute()("numTargetRowsUpdated").toLong
@@ -262,27 +297,6 @@ object HeaderEtlJob {
       (written, closed, inserted)
     }
     (table, if (written < 0 || insertedB < 0) -1L else written + insertedB, closed)
-  }
-
-  /** Phase A's merge source and clause: the batch's events per key (unique
-    * by plan, never read from the table), and a clause that closes an open
-    * row at the earliest event of its key that null-safely differs from it
-    * on the tracked columns (reference: :189-200) and is newer than it.
-    * Without lateSplit an older differing event counts too, as in the
-    * reference, and its stale minimum keeps the row open; under lateSplit
-    * it is Phase L's.
-    * @return (source, condition, first change) over `existing`/`min_staged` */
-  private[graft] def closeOnChange(dfTransformed: DataFrame,
-                                   lateSplit: Boolean): (DataFrame, String, String) = {
-    val events = dfTransformed.groupBy("contratto_cod").agg(collect_list(struct(
-      "valid_from_ts", "status_quote", "codice_agente", "codice_ordine_sap")).as("events"))
-    val differs = Seq("status_quote", "codice_agente", "codice_ordine_sap")
-      .map(c => s"NOT (e.$c <=> existing.$c)").mkString("(", " OR ", ")")
-    val newer = if (lateSplit) " AND e.valid_from_ts > existing.valid_from_ts" else ""
-    val firstChange =
-      s"array_min(transform(filter(min_staged.events, e -> $differs$newer), e -> e.valid_from_ts))"
-    (events, s"(existing.valid_to_ts = $MaxTsExpr OR existing.valid_to_ts IS NULL) " +
-      s"AND $firstChange > existing.valid_from_ts", firstChange)
   }
 
   /** Phase L: late-arriving-event interval splitting (the reference's

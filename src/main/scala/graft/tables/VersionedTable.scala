@@ -1372,10 +1372,10 @@ class VersionedTable private (val spark: SparkSession,
   private[tables] def executeMerge(txn: Option[Txn], m: MergeBuilder): Map[String, String] = {
     // The source is consumed 2-3 times (the stats pass, the file-prune
     // probe, then the rewrite or anti join) — persist it so the lineage
-    // runs once. SCD2 merge sources are typically an aggregate or a join
-    // (HeaderEtlJob Phase A's per-key events; ItemsEtlJob's staged union,
-    // a join with the TARGET TABLE itself): unpersisted, every evaluation
-    // replays its shuffle or table scan. GUARDED (guide §5: caching
+    // runs once. SCD2 merge sources are typically a join/aggregate over
+    // the TARGET TABLE itself (HeaderEtlJob Phase A's first-change frame,
+    // ItemsEtlJob's staged union): unpersisted, every evaluation replays
+    // a table scan plus a shuffle join. GUARDED (guide §5: caching
     // competes with execution memory): only a plan with a join/aggregate/
     // window/generate above its scans — in the analyzed plan, or
     // introduced by the optimizer (a distinct becomes an Aggregate) — is
@@ -1681,7 +1681,7 @@ class VersionedTable private (val spark: SparkSession,
     // filtered out by the rewrite (its insert guard is lit(false)). The
     // switch matters because Spark can never execute a full-outer as a
     // broadcast hash join — with it, a small source (e.g. the header
-    // job's Phase-A per-key events) rewrites the touched files in one
+    // job's Phase-A first-change keys) rewrites the touched files in one
     // map-only scan instead of shuffling + sorting every touched row
     // through a sort-merge join (guide §2.4/§3.1).
     val joinType =
@@ -1836,7 +1836,7 @@ class VersionedTable private (val spark: SparkSession,
           (if (broadcastIt) broadcast(src) else src).withColumn(SPresent, lit(true))
 
         // --- 1. prune + cardinality, ONE job: which existing files
-        // contain rows the merge changes, and does any target row match >1
+        // contain rows the merge must rewrite, and does any target row match >1
         // source rows? The probe joins the candidate files with the source
         // on the merge condition, and counts the matched rows an update
         // clause takes (numTargetRowsUpdated). When the plan did NOT prove
@@ -1935,7 +1935,7 @@ class VersionedTable private (val spark: SparkSession,
           val deleted =
             if (m.delete.isEmpty) 0L else if (touchedRows >= 0) touchedRows - survived else -1L
           // a rewrite measured to change nothing (every matched row failed
-          // its clause conditions: e.g. a replayed items batch) wrote exact copies
+          // its clause conditions: e.g. a replayed batch) wrote exact copies
           // of the touched files; swapping them in would only churn the
           // file set, so stage no file action — the transaction deletes
           // the written files no version references

@@ -94,29 +94,6 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("Phase A's merge source reads the batch alone: no table scan, no join") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val root = Files.createTempDirectory("graft-phase-a-plan").toString
-    val csv = s"$root/header_20230201.csv"
-    graft.jobs.TestCsv.write(csv, graft.core.Schemas.Header.fieldNames.toSeq, Seq(
-      Seq("K1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Pending", "", "2023-02-01 09:00:00"),
-      Seq("K1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", "Accepted", "", "2023-02-01 10:00:00")))
-    val batch = graft.jobs.HeaderEtlJob.transform(spark.read.option("header", "true").option("sep", "|")
-      .schema(graft.core.Schemas.Header).csv(csv))
-    for (lateSplit <- Seq(false, true)) {
-      val (events, _, _) = graft.jobs.HeaderEtlJob.closeOnChange(batch, lateSplit)
-      val p = events.queryExecution.optimizedPlan
-      val tableScans = p.collect { case r: LogicalRelation => r.relation }.collect {
-        case h: HadoopFsRelation if h.location.getClass.getSimpleName == "LogFileIndex" => h
-      }
-      assert(tableScans.isEmpty, s"lateSplit=$lateSplit: Phase A's source scans the table:\n$p")
-      assert(p.collect { case j: Join => j }.isEmpty, s"lateSplit=$lateSplit: Phase A's source joins:\n$p")
-      assert(events.count() == 1)
-    }
-    GraftSession.deleteRec(new java.io.File(root))
-  }
-
   test("versioned table read prunes partitions under filters") {
     val root = Files.createTempDirectory("graft-prune-spec").toString
     val base = spark.range(0, 300).selectExpr("id", "cast(id % 3 + 2021 as int) as y")

@@ -318,6 +318,32 @@ class HeaderEtlJobSpec extends AnyFunSuite {
     }
   }
 
+  test("several open rows of one key all close at the key's first change") {
+    def row(status: String, at: String): Seq[String] =
+      Seq("M1", "ORD1", "365", "P1", "", "1.00", "", "", "AG1", status, "", at)
+    val root = Files.createTempDirectory("graft-header-open-rows").toString
+    def run(drop: String, rows: Seq[Seq[String]]) = {
+      val path = s"$root/crm/$drop/header_20230303.csv"
+      TestCsv.write(path, header, rows)
+      HeaderEtlJob.run(spark, path, s"$root/table", s"$root/discarded", s"$root/metrics")
+    }
+    run("d1", Seq(row("Accepted", "2023-03-03 12:00:00")))
+    // a late event alone in its batch lands open: the key has two open rows
+    run("d2", Seq(row("Pending", "2023-03-03 08:00:00")))
+    def rows = VersionedTable.forPath(spark, s"$root/table").read.orderBy("valid_from_ts").collect().toSeq
+    assert(rows.count(_.getAs[Boolean]("is_current")) == 2)
+    // 13:00 equals the 12:00 row but differs from the 08:00 one: the key's
+    // first change is 13:00, and every open row older than it closes there
+    val m = run("d3", Seq(row("Accepted", "2023-03-03 13:00:00")))
+    assert((m.inserted_count, m.closed_count) == ((1L, 2L)))
+    val thirteen = Timestamp.valueOf("2023-03-03 13:00:00")
+    assert(rows.map(r => (r.getAs[Timestamp]("valid_from_ts"), r.getAs[Timestamp]("valid_to_ts"),
+      r.getAs[Boolean]("is_current"))) == Seq(
+      (Timestamp.valueOf("2023-03-03 08:00:00"), thirteen, false),
+      (Timestamp.valueOf("2023-03-03 12:00:00"), thirteen, false),
+      (thirteen, MaxTs, true)))
+  }
+
   test("two concurrent init runs of one header batch land it once") {
     val dir = Files.createTempDirectory("graft-header-init-race").toString
     val (race, serial) = (s"$dir/landing/race", s"$dir/landing/serial")
