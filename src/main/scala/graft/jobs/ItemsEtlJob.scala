@@ -41,9 +41,9 @@ case class ItemsRunMetrics(batch_id: String,
   * ALL copies of any key occurring more than once (not keep-one; see
   * SURVEY.md §2.6 W3); date transform with the 9999-12-31 open sentinel;
   * then, as one table version, either the table's initial partitioned
-  * write or the staged-union SCD2 merge:
-  * changed open rows are closed (`valid_to = new valid_from`) and their
-  * new versions inserted through never-matching NULL mergeKey rows.
+  * write or the SCD2 merge's two steps: an update-only merge closes each
+  * changed open row (`valid_to = new valid_from`), then an insert-only
+  * merge inserts every batch row whose key has no open row left.
   *
   * The change predicate uses non-null-safe `<>` on {contracted_price,
   * total_discount, data_fine_prestazione} — a known reference defect
@@ -63,45 +63,35 @@ object ItemsEtlJob {
 
   /** One transformed batch into the items table in ONE
     * [[VersionedTable.transaction]]: the table's first write (reference:
-    * src/items_etl.py:79-81), else the SCD2 merge (:86-143), whose change
-    * detection joins the batch with the pinned state (`tx.read`): a commit
-    * that lands first makes the body re-run on the new state, so no insert
-    * comes from stale open rows and a concurrent init lands its batch once.
-    * @return (rows inserted, rows closed), from the step's metrics */
+    * src/items_etl.py:79-81), else the SCD2 merge (:86-143) as two steps,
+    * close then insert (SURVEY.md J6: "model it as two actions"). The
+    * insert step reads the close step's staged state, so a batch row is
+    * inserted exactly when its key has no open row after the close: a new
+    * key, or a changed one. A commit that lands first makes the body re-run
+    * on the new state, so a concurrent run lands the batch once.
+    * @return (rows inserted, rows closed), from the steps' metrics */
   private[jobs] def scd2Merge(table: VersionedTable, dfTransformed: DataFrame): (Long, Long) =
     table.alias("existing").transaction { tx =>
       if (tx.version < 0) (tx.create(dfTransformed)("numOutputRows").toLong, 0L)
       else {
-        // open rows whose tracked values differ from this batch's updates
-        // — `<>` non-null-safe, as in the reference
-        val newItemsToInsert = dfTransformed.alias("updates")
-          .join(tx.read, Schemas.ItemsDedupKeys)
-          .where("existing.valid_to = date('9999-12-31') AND (" +
-            "updates.contracted_price <> existing.contracted_price OR " +
-            "updates.total_discount <> existing.total_discount OR " +
-            "updates.data_fine_prestazione <> existing.data_fine_prestazione)")
-
-        // staged union: NULL-mergeKey rows can never match → always inserted
-        // (the new open versions); keyed rows close their open predecessor
-        // (reference: src/items_etl.py:106-110)
-        val stagedUpdates = newItemsToInsert
-          .selectExpr("NULL as mergeKey", "NULL as mergeKey2", "updates.*")
-          .union(dfTransformed.selectExpr(
-            "contratto_cod as mergeKey", "numero_annuncio as mergeKey2", "*"))
-
-        val m = tx
-          .merge(stagedUpdates.alias("staged_updates"),
-            "existing.contratto_cod = mergeKey AND existing.numero_annuncio = mergeKey2")
+        val b = dfTransformed.alias("b")
+        val sameKey = "existing.contratto_cod = b.contratto_cod AND existing.numero_annuncio = b.numero_annuncio"
+        // close the open row whose tracked values differ — `<>`
+        // non-null-safe, as in the reference (src/items_etl.py:114-119)
+        val closed = tx.merge(b, sameKey)
           .whenMatchedUpdate(
             condition = "existing.valid_to = date('9999-12-31') AND (" +
-              "staged_updates.contracted_price <> existing.contracted_price OR " +
-              "staged_updates.total_discount <> existing.total_discount OR " +
-              "staged_updates.data_fine_prestazione <> existing.data_fine_prestazione)",
-            set = Map("valid_to" -> "staged_updates.valid_from"))
-          .whenNotMatchedInsert(values =
-            InsertColumns.map(c => c -> s"staged_updates.$c").toMap)
-          .execute()
-        (m("numTargetRowsInserted").toLong, m("numTargetRowsUpdated").toLong)
+              "b.contracted_price <> existing.contracted_price OR " +
+              "b.total_discount <> existing.total_discount OR " +
+              "b.data_fine_prestazione <> existing.data_fine_prestazione)",
+            set = Map("valid_to" -> "b.valid_from"))
+          .execute()("numTargetRowsUpdated").toLong
+        // insert each batch row whose key has no open row left; b.valid_to
+        // is the open sentinel, so every key is a source column
+        val inserted = tx.merge(b, s"$sameKey AND existing.valid_to = b.valid_to")
+          .whenNotMatchedInsert(values = InsertColumns.map(c => c -> s"b.$c").toMap)
+          .execute()("numTargetRowsInserted").toLong
+        (inserted, closed)
       }
     }
 
@@ -177,13 +167,11 @@ object ItemsEtlJob {
     val durTransform = secondsSince(tTransform0)
 
     // ---- INIT OR MERGE, one version (reference: src/items_etl.py:79-143)
-    // No second persist here: dfTransformed is a narrow projection over
-    // the already-cached flagged frame (the dedup phase materialized it),
-    // so its consumers — both arms of the merge's staged union — each
-    // replay only cheap column expressions over the cache. A second
-    // full-width copy of the batch in storage memory would buy nothing
-    // and compete with the merge join for memory (guide §5: caching
-    // competes with execution memory).
+    // No persist here: dfTransformed is a narrow projection over the
+    // already-cached flagged frame (the dedup phase materialized it).
+    // Each merge step persists its own source anyway (executeMerge: the
+    // analyzed plan holds the dedup window), so a copy made here would
+    // be a third one.
     val tMerge0 = System.nanoTime()
     val (insertedCount, closedCount) = scd2Merge(
       VersionedTable.open(spark, writePath, dfTransformed.schema, Schemas.PartitionColumns),

@@ -1372,17 +1372,18 @@ class VersionedTable private (val spark: SparkSession,
   private[tables] def executeMerge(txn: Option[Txn], m: MergeBuilder): Map[String, String] = {
     // The source is consumed 2-3 times (the stats pass, the file-prune
     // probe, then the rewrite or anti join) — persist it so the lineage
-    // runs once. SCD2 merge sources are typically a join/aggregate over
-    // the TARGET TABLE itself (HeaderEtlJob Phase A's first-change frame,
-    // ItemsEtlJob's staged union): unpersisted, every evaluation replays
-    // a table scan plus a shuffle join. GUARDED (guide §5: caching
-    // competes with execution memory): only a plan with a join/aggregate/
-    // window/generate above its scans — in the analyzed plan, or
-    // introduced by the optimizer (a distinct becomes an Aggregate) — is
-    // worth a second materialization. The common cheap shape, a
-    // projection over the caller's ALREADY-CACHED batch (the header job's
-    // Phase-B staging), would only double-cache the batch; re-running a
-    // projection over the existing cache costs less than that copy.
+    // runs once. An SCD2 merge source can be a join/aggregate over the
+    // TARGET TABLE itself (HeaderEtlJob Phase A's first-change frame):
+    // unpersisted, every evaluation replays a table scan plus a shuffle
+    // join. GUARDED (guide §5: caching competes with execution memory):
+    // only a plan with a join/aggregate/window/generate above its scans —
+    // in the analyzed plan, or introduced by the optimizer (a distinct
+    // becomes an Aggregate) — gets a second materialization. The test
+    // reads the analyzed plan, which keeps the lineage beneath a cache:
+    // a projection over the caller's ALREADY-CACHED batch whose lineage
+    // holds a window (the header job's Phase-B staging, both items steps)
+    // is persisted too, a second copy of the batch. The key bounds come
+    // from that copy's statistics ([[keyBounds]]).
     // Non-deterministic sources are persisted regardless of shape:
     // re-evaluating one across the probe/rewrite passes would let the
     // probe and the rewrite see DIFFERENT rows. try/finally: any failure
@@ -1557,20 +1558,18 @@ class VersionedTable private (val spark: SparkSession,
     //  - a Filter keeps its child's uniqueness;
     //  - a Filter keeping one row per window partition over (a subset of)
     //    the keys: `count(1) = 1` over the whole unordered partition, or
-    //    `row_number() = 1` — the items batch's dedup;
-    //  - a Union whose arms all project a NULL key but one, that one
-    //    unique — the items job's staged union.
-    // Every other shape (joins, generators, overlapping union arms) is
-    // unproven and takes the probe's cardinality check.
+    //    `row_number() = 1` — the items batch's dedup.
+    // Every other shape (joins, unions, generators) is unproven and takes
+    // the probe's cardinality check.
     def keysUniqueByPlan: Boolean =
       pureEqui && pairs.nonEmpty && {
         import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-        import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeSet, Cast, EqualTo,
+        import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeSet, EqualTo,
           Expression => CExpr, RowNumber, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding,
           WindowExpression}
         import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
         import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project,
-          SubqueryAlias, Union, Window => LWindow}
+          SubqueryAlias, Window => LWindow}
         try {
           // the expression defining `a` below `p` and the plan it reads,
           // followed through plain renames and operators that only drop
@@ -1588,15 +1587,6 @@ class VersionedTable private (val spark: SparkSession,
               case al: Alias if al.exprId == a.exprId => (al.child, w.child)
             }.orElse(origin(w.child, a))
             case _ => None
-          }
-          // `a` is NULL in every row `p` produces
-          def isNull(p: LogicalPlan, a: Attribute): Boolean = origin(p, a).exists {
-            case (e, _) if e.foldable => e.eval() == null
-            case (c: Cast, child) => c.child match {
-              case b: Attribute => isNull(child, b)
-              case _ => false
-            }
-            case _ => false
           }
           def isOne(e: CExpr): Boolean = e.foldable && (e.eval() match {
             case n: java.lang.Long => n == 1L
@@ -1642,10 +1632,6 @@ class VersionedTable private (val spark: SparkSession,
                 case _ => false
               })
               onePerKey || dig(child, keys)
-            case u: Union =>
-              val at = u.output.indices.filter(i => keys.contains(u.output(i)))
-              val keyed = u.children.filterNot(c => at.exists(i => isNull(c, c.output(i))))
-              keyed.size <= 1 && keyed.forall(c => dig(c, AttributeSet(at.map(c.output))))
             case agg: Aggregate =>
               val groupAttrs = agg.groupingExpressions.flatMap {
                 case a: Attribute => Some(a)
@@ -2345,9 +2331,8 @@ private[tables] final case class Clause(cond: Option[String], set: Map[String, S
   * @param candidates target files that may hold matched rows
   * @param keysUnique "plan" when the source plan proves its keys unique
   *                   (a groupBy on the keys, a one-row-per-key window
-  *                   filter, a union whose other arms have NULL keys),
-  *                   else "unchecked" (the probe's per-row cardinality
-  *                   check runs)
+  *                   filter), else "unchecked" (the probe's per-row
+  *                   cardinality check runs)
   * @param joinType   the join that writes the new files: `left_anti` on
   *                   the insert-only path, else `left_outer`/`full_outer`
   * @param sourceSmall the cached source is small enough to broadcast */

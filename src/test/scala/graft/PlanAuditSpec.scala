@@ -94,6 +94,53 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("a steady items day runs no full-outer join and no union") {
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("graft-items-plan").toString
+    val cols = Seq("contratto_cod", "numero_annuncio", "list_total", "contracted_price",
+      "total_discount", "data_attivazione", "data_fine_prestazione", "product_code", "quantity",
+      "causale_annullamento", "data_annullamento", "status_item", "creazione_dta")
+    def day(date: String, rows: Seq[(String, String)]): Unit = {
+      val path = s"$root/crm/items_$date.txt"
+      graft.jobs.TestCsv.write(path, cols, rows.map { case (cod, price) =>
+        Seq(cod, "10", "1000.00", price, "0.00", "2023-01-01", "2023-12-31",
+          "PROD1", "1", "", "", "L", "2023-01-01")
+      })
+      graft.jobs.ItemsEtlJob.run(spark, path, s"$root/landing/items")
+    }
+    day("20230601", Seq("A1" -> "100.00", "A2" -> "200.00", "A3" -> "300.00"))
+    def offending(p: LogicalPlan): Boolean = p.exists {
+      case j: Join => j.joinType == FullOuter
+      case _: Union => true
+      case _ => false
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val ran = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        ran.incrementAndGet()
+        if (offending(qe.analyzed) || offending(qe.optimizedPlan)) seen.add(qe.analyzed.toString)
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // a changed item, an unchanged one and a new key
+      day("20230602", Seq("A1" -> "150.00", "A2" -> "200.00", "A4" -> "400.00"))
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(ran.get > 0, "the listener saw no query")
+    assert(seen.isEmpty, s"queries with a full-outer join or a union:\n${seen.asScala.mkString("\n")}")
+    val open = VersionedTable.forPath(spark, s"$root/landing/items").read
+      .filter(col("valid_to") === lit(java.sql.Date.valueOf("9999-12-31")))
+    assert(open.count() == 4)
+    GraftSession.deleteRec(new java.io.File(root))
+  }
+
   test("versioned table read prunes partitions under filters") {
     val root = Files.createTempDirectory("graft-prune-spec").toString
     val base = spark.range(0, 300).selectExpr("id", "cast(id % 3 + 2021 as int) as y")

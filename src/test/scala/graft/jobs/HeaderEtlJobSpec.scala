@@ -262,23 +262,11 @@ class HeaderEtlJobSpec extends AnyFunSuite {
       HeaderEtlJob.run(spark, path, table, s"$root/discarded", s"$root/metrics", lateSplit)
     val loaded = run(lateSplit = false)
     assert((loaded.inserted_count, loaded.closed_count) == ((3L, 0L)))
-    val rewrites = new java.util.concurrent.atomic.AtomicInteger
-    val jobs = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") ==
-          "graft.merge: rewrite + write")) rewrites.incrementAndGet()
-    }
     for (lateSplit <- Seq(false, true)) {
       val (live, onDisk) = (HeaderEtlJobSpec.liveFiles(spark, table), HeaderEtlJobSpec.dataFiles(table))
-      rewrites.set(0)
-      spark.sparkContext.addSparkListener(jobs)
-      val replay = try {
-        val m = run(lateSplit)
-        org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-        m
-      } finally spark.sparkContext.removeSparkListener(jobs)
+      val (replay, rewrites) = HeaderEtlJobSpec.rewriteJobs(spark)(run(lateSplit))
       assert((replay.inserted_count, replay.closed_count) == ((0L, 0L)), s"lateSplit=$lateSplit")
-      assert(rewrites.get == 0, s"lateSplit=$lateSplit: ${rewrites.get} rewrite jobs")
+      assert(rewrites == 0, s"lateSplit=$lateSplit: $rewrites rewrite jobs")
       val last = VersionedTable.forPath(spark, table).history(1).head()
       assert((last.getAs[Long]("numAddedFiles"), last.getAs[Long]("numRemovedFiles")) == ((0L, 0L)),
         s"lateSplit=$lateSplit: the replay's commit swapped files")
@@ -411,4 +399,21 @@ object HeaderEtlJobSpec {
   /** Paths of the data files live in the table's current version. */
   def liveFiles(spark: org.apache.spark.sql.SparkSession, table: String): Set[String] =
     VersionedTable.forPath(spark, table).read.inputFiles.map(f => new java.net.URI(f).getPath).toSet
+
+  /** `body`'s result and the number of MERGE rewrite jobs it started. */
+  def rewriteJobs[T](spark: org.apache.spark.sql.SparkSession)(body: => T): (T, Int) = {
+    val rewrites = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") ==
+          "graft.merge: rewrite + write")) rewrites.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(jobs)
+    val out = try {
+      val r = body
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(jobs)
+    (out, rewrites.get)
+  }
 }

@@ -204,12 +204,15 @@ class ItemsEtlJobSpec extends AnyFunSuite {
     val d2 = day("items_20230402.txt", "150.00")
     val changed = ItemsEtlJob.runWithMetrics(spark, d2, table)
     assert((changed.inserted_count, changed.closed_count) == ((1L, 1L)))
-    // the staged union (a NULL-key arm over the deduped batch) is unique by plan
-    assert(lastCommit()._1("sourceKeysUnique") == "plan")
+    // the close step's source, the deduped batch, is unique by plan, so
+    // its probe keeps only the rows it closes; the insert step's
+    // `valid_to` key is a computed column
+    assert(lastCommit()._1("sourceKeysUnique") == "plan,unchecked")
     val (before, onDisk) = (live(), dataFiles())
 
-    val replay = ItemsEtlJob.runWithMetrics(spark, d2, table)
+    val (replay, rewrites) = HeaderEtlJobSpec.rewriteJobs(spark)(ItemsEtlJob.runWithMetrics(spark, d2, table))
     assert((replay.inserted_count, replay.closed_count) == ((0L, 0L)))
+    assert(rewrites == 0, s"$rewrites rewrite jobs ran on the replay")
     val (metrics, added, removed) = lastCommit()
     assert((added, removed) == ((0L, 0L)), s"the replay's commit swapped files: $metrics")
     assert(metrics("numTargetFilesAdded") == "0" && metrics("numTargetFilesRemoved") == "0")
