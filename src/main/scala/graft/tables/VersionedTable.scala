@@ -1494,7 +1494,7 @@ class VersionedTable private (val spark: SparkSession,
 
   /** Plan one MERGE step: the only place a MERGE decides anything — the
     * evolved schema, the candidate files, what proves the source keys
-    * unique, the join that writes the new files and the broadcast test.
+    * unique, whether the step rewrites and the broadcast test.
     * Runs at most one job (the source stats pass, map-only, no
     * aggregate), writes no file and stages nothing. */
   private[tables] def planMerge(tx: Txn, m: MergeBuilder, src: DataFrame): MergePlan = {
@@ -1659,45 +1659,35 @@ class VersionedTable private (val spark: SparkSession,
             dig(analyzed, AttributeSet(keyAttrs))
         } catch { case scala.util.control.NonFatal(_) => false }
       }
-    val anyMatchedClause = m.update.isDefined || m.delete.isDefined
+    // A step with a matched clause probes the candidates and rewrites the
+    // files its clauses change through a left-outer join; an insert-only
+    // step rewrites nothing.
+    val rewrites = m.update.isDefined || m.delete.isDefined || m.insert.isEmpty
 
-    // An update/delete-only merge (no insert clause) preserves every
-    // target row and adds none, so a LEFT join is exactly equivalent to
-    // the full-outer: the source-only rows full-outer would emit are
-    // filtered out by the rewrite (its insert guard is lit(false)). The
-    // switch matters because Spark can never execute a full-outer as a
-    // broadcast hash join — with it, a small source (e.g. the header
-    // job's Phase-A first-change keys) rewrites the touched files in one
-    // map-only scan instead of shuffling + sorting every touched row
-    // through a sort-merge join (guide §2.4/§3.1).
-    val joinType =
-      if (!anyMatchedClause && m.insert.isDefined) "left_anti"
-      else if (m.insert.isEmpty) "left_outer" else "full_outer"
-
-    // --- broadcast the source side of the probe/rewrite joins when its
+    // --- broadcast the source side of the probe and rewrite joins when its
     // MATERIALIZED (cached) size is provably small: the other side is the
     // table — at 100 TB the only sane plan ships the source to the data,
-    // never the reverse (guide §3.1). The size comes from the cache's own
+    // never the reverse (guide §3.1). With it, a small source (e.g. the
+    // header job's Phase-A first-change keys) rewrites the touched files in
+    // one map-only scan instead of shuffling + sorting every touched row
+    // through a sort-merge join. The size comes from the cache's own
     // stats (exact once the stats pass above materialized it), never from
     // a pre-execution estimate; an unpersisted or unmaterialized source
-    // conservatively stays un-hinted and Catalyst/AQE decides. Full-outer
-    // rewrites (update+insert merges) are excluded by
-    // [[MergePlan.rewriteBroadcast]] — broadcast hash join does not
-    // support full-outer and the hint would be dead weight.
+    // conservatively stays un-hinted and Catalyst/AQE decides.
     // `src.storageLevel != NONE` covers both a source executeMerge
     // persisted and one the caller cached. Read strictly after the stats
     // pass above filled the cache, so the InMemoryRelation stats read
     // here are the exact materialized bytes (on the no-stats ≤2-file
     // path the cache may be cold and this reads the estimate — a ≤2-file
     // table is fixture scale, where either join strategy is fine). The
-    // anti-join path never reads it.
-    val sourceSmall = joinType != "left_anti" && src.storageLevel != StorageLevel.NONE && (try {
+    // anti-join never reads it.
+    val sourceSmall = rewrites && src.storageLevel != StorageLevel.NONE && (try {
       src.queryExecution.optimizedPlan.stats.sizeInBytes <= MergeBroadcastSourceBytes
     } catch { case scala.util.control.NonFatal(_) => false })
 
     MergePlan(schema, evolvedCols.size, candidates, files.size - candidates.size,
       if (keysUniqueByPlan) "plan" else "unchecked",
-      joinType, src.storageLevel != StorageLevel.NONE, sourceSmall)
+      rewrites, src.storageLevel != StorageLevel.NONE, sourceSmall)
   }
 
   /** Min and max of each source key expression (NULL for a key with no
@@ -1765,61 +1755,34 @@ class VersionedTable private (val spark: SparkSession,
 
   /** Execute a [[MergePlan]]: write the step's files and stage them into
     * `tx` as one MERGE step carrying the plan's metrics and the measured
-    * counts. Decides nothing — it branches once, on the plan's join type:
-    * the insert-only anti-join write, or probe → [[touchedFiles]] →
-    * rewrite.
+    * counts. Decides nothing. A step with a matched clause probes the
+    * candidate files ([[touchedFiles]]) and rewrites the touched ones
+    * through a left-outer join; a step with an insert clause then writes
+    * the source rows no candidate row matches through a left-anti join.
+    * Both read the pinned candidates, never the rewrite's output: the
+    * not-matched clause sees the target as it was before the merge.
     * @return the step's operation metrics */
   private def runMerge(tx: Txn, m: MergeBuilder, src: DataFrame, plan: MergePlan): Map[String, String] = {
     val (files, alias, cond) = (tx.files, m.targetAlias, expr(m.condition))
     val dataCols = plan.schema.fields.toSeq
-    def insertValue(f: StructField): Column =
-      m.insert.flatMap(_.set.get(f.name)).map(expr).getOrElse(lit(null)).cast(f.dataType)
-    val (added, touched, updated, inserted, deleted) =
-      if (plan.joinType == "left_anti") {
-        // --- fast path: insert-only merge rewrites NOTHING --------------
-        // With no matched-update/delete clause (e.g. the header job's
-        // Phase B), matched target rows are untouched by definition — the
-        // merge reduces to appending the source rows that match no target
-        // row: one left-anti join + write of new files. No touched-file
-        // collect, no full-outer rewrite of files whose rows would only be
-        // copied. (At 10M rows this halves the merge phase; Delta
-        // special-cases insert-only merges the same way.) The anti-join
-        // reads only the stats-candidate files: rows in skipped files
-        // cannot equal any source key, so they cannot absorb inserts.
-        // with every file pruned the empty target would be broadcast and
-        // each source partition write its own files; the sort-merge join
-        // shuffles the inserts by key instead, and AQE packs them
-        val target = readFiles(plan.candidates, plan.schema, tx.partCols).alias(alias)
-        val unmatched = src.join(if (plan.candidates.isEmpty) target.hint("merge") else target,
-          cond, "left_anti")
-        val toInsert = m.insert.get.cond.fold(unmatched)(c => unmatched.filter(expr(c)))
-        // a file whose footer counts no row (the writer's one file for an
-        // empty result) is not staged; the transaction deletes it
-        val added = labeled("merge: insert-only anti-join + write") {
-          writeIn(tx, toInsert.select(dataCols.map(f => insertValue(f).as(f.name)): _*))
-        }.filter(_.rows != 0)
-        // inserted rows come free from the written files' footer counts —
-        // callers never need a post-merge table scan for accounting
-        (added, Seq.empty[FileEntry], 0L,
-          if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L, 0L)
-      } else {
-        val tPresent = col(TPresent) === lit(true)
+    // a footer that could not be read counts -1
+    def rowsOf(fes: Seq[FileEntry]): Long = if (fes.forall(_.rows >= 0)) fes.map(_.rows).sum else -1L
+
+    val none = (Seq.empty[FileEntry], Seq.empty[FileEntry], 0L, 0L)
+    val (rewriteFiles, touched, updated, deleted) =
+      if (!plan.rewrites) none
+      else {
         val sPresent = col(SPresent) === lit(true)
         val (upd, del) = (m.update.fold(lit(false))(_.guard), m.delete.fold(lit(false))(_.guard))
         // Delta clause semantics: matched clauses are tried in the order
         // they were added, first satisfied condition wins, and a NULL
         // condition means NOT satisfied. The earlier clause's guard must
         // therefore be coalesced to false before negation — `!NULL` is
-        // NULL, and a NULL guard would block the later clause (or, worse,
-        // a NULL delete term in the keep filter below would silently DROP
-        // unmatched target rows riding the same file, since
-        // `tPresent && !NULL` filters as false).
+        // NULL, and a NULL guard would block the later clause.
         val updCond = if (m.deleteFirst && m.delete.isDefined) upd && !coalesce(del, lit(false)) else upd
         val delCond = if (!m.deleteFirst && m.update.isDefined) del && !coalesce(upd, lit(false)) else del
-        val insCond = m.insert.fold(lit(false))(_.guard)
         val updatedRow = when(sPresent && updCond, 1L).otherwise(0L)
-        def sourceSide(broadcastIt: Boolean) =
-          (if (broadcastIt) broadcast(src) else src).withColumn(SPresent, lit(true))
+        val source = (if (plan.sourceSmall) broadcast(src) else src).withColumn(SPresent, lit(true))
 
         // --- 1. prune + cardinality, ONE job: which existing files
         // contain rows the merge must rewrite, and does any target row match >1
@@ -1828,13 +1791,13 @@ class VersionedTable private (val spark: SparkSession,
         // clause takes (numTargetRowsUpdated). When the plan did NOT prove
         // the source keys unique, grouping by (file, _metadata.row_index)
         // folds Delta's merge-cardinality check into the SAME job that
-        // collects touched file names. Otherwise the probe is map-only, the
-        // set of file names observed during a `noop` write (the per-row
-        // grouping would push every matched row through a wide hash
-        // aggregate for nothing), and a merge with no insert clause keeps
-        // only the rows a clause changes: with one, the full-outer rewrite
-        // must see every match, or it would insert those source rows again.
-        // What reaches the driver is bounded by file count, never by row count.
+        // collects touched file names, before either write. Otherwise the
+        // probe is map-only, the set of file names observed during a `noop`
+        // write (the per-row grouping would push every matched row through
+        // a wide hash aggregate for nothing), and it keeps only the matched
+        // rows a clause changes: the insert clause's anti-join decides
+        // matches on its own. What reaches the driver is bounded by file
+        // count, never by row count.
         val (touched, updatedRows): (Seq[FileEntry], Long) =
           if (plan.candidates.isEmpty) (Seq.empty, 0L)
           else {
@@ -1842,7 +1805,7 @@ class VersionedTable private (val spark: SparkSession,
             // cannot contain matched rows and are untouched by
             // construction. keepMeta supplies file/row-index identity
             val t = readFiles(plan.candidates, plan.schema, tx.partCols, keepMeta = true).alias(alias)
-            val matched = t.join(sourceSide(plan.sourceSmall), cond, "inner")
+            val matched = t.join(source, cond, "inner")
             val (perFile, u) =
               if (plan.keysUnique == "unchecked") {
                 val maxMatches = labeled("merge: touched-file probe + cardinality") {
@@ -1860,10 +1823,9 @@ class VersionedTable private (val spark: SparkSession,
               } else {
                 // map-only: the names ride an observed set, no shuffle
                 val obs = org.apache.spark.sql.Observation()
-                val changing = if (m.insert.isEmpty) matched.filter(coalesce(updCond || delCond, lit(false)))
-                  else matched
                 labeled("merge: touched-file probe") {
-                  changing.select(col(FileCol), updatedRow.as("__graft_u"))
+                  matched.filter(coalesce(updCond || delCond, lit(false)))
+                    .select(col(FileCol), updatedRow.as("__graft_u"))
                     .observe(obs, collect_set(col(FileCol)).as("files"), sum("__graft_u").as("u"))
                     .write.format("noop").mode("overwrite").save()
                 }
@@ -1873,64 +1835,69 @@ class VersionedTable private (val spark: SparkSession,
             (touchedFiles(files, perFile).map(_._1), u)
           }
 
-        // --- 2. rewrite touched files + insert unmatched source rows ----
-        val t = readFiles(touched, plan.schema, tx.partCols).withColumn(TPresent, lit(true)).alias(alias)
-        // a full outer join cannot broadcast; hashing the source side (the
-        // batch) per partition skips sorting both sides for a merge join
-        val s = if (plan.joinType == "full_outer") sourceSide(false).hint("shuffle_hash")
-          else sourceSide(plan.rewriteBroadcast)
-        val joined = t.join(s, cond, plan.joinType)
-        // Deleted rows are simply NOT in the rewrite (their file is dropped
-        // from the log, the survivors copied) — same mechanics as Delta.
-        // NB TPresent is NULL (not false) on source-only full-outer rows.
-        val kept = joined
-          .filter((tPresent && !coalesce(sPresent && delCond, lit(false))) ||
-            (!coalesce(col(TPresent), lit(false)) && sPresent && insCond))
-        // With no delete clause every touched row survives, so the rows
-        // inserted are the rows written minus the touched files' live rows,
-        // all from footers and the log. A delete clause needs the survivors
-        // counted: they ride the write as an Observation.
-        val survivors = m.delete.map { _ =>
-          val obs = org.apache.spark.sql.Observation()
-          (obs, sum(when(tPresent, 1L).otherwise(0L)).as("t"))
-        }
-        val rewritten = survivors.fold(kept) { case (obs, survivedSum) => kept.observe(obs, survivedSum) }
-          .select(dataCols.map { f =>
-            val tCol = col(s"$alias.${f.name}")
-            val assigned = m.update.flatMap(_.set.get(f.name)).map(expr).getOrElse(tCol)
-            when(tPresent && sPresent && updCond, assigned.cast(f.dataType))
-              .when(tPresent, tCol)
-              .otherwise(insertValue(f))
-              .as(f.name)
-          }: _*)
-
-        if (touched.isEmpty && m.insert.isEmpty) (Seq.empty, touched, 0L, 0L, 0L)
+        // --- 2. rewrite the touched files: every output row is a target
+        // row. Deleted rows are simply NOT in the rewrite (their file is
+        // dropped from the log, the survivors copied) — same mechanics as
+        // Delta. An unmatched row's delete term is NULL, hence the coalesce.
+        if (touched.isEmpty) none
         else {
-          val added = labeled("merge: rewrite + write") { writeIn(tx, rewritten) }
+          val kept = readFiles(touched, plan.schema, tx.partCols).alias(alias)
+            .join(source, cond, "left_outer")
+            .filter(!coalesce(sPresent && delCond, lit(false)))
+            .select(dataCols.map { f =>
+              val tCol = col(s"$alias.${f.name}")
+              val assigned = m.update.flatMap(_.set.get(f.name)).map(expr).getOrElse(tCol)
+              when(sPresent && updCond, assigned.cast(f.dataType)).otherwise(tCol).as(f.name)
+            }: _*)
+          val added = labeled("merge: rewrite + write") { writeIn(tx, kept) }
           // the touched files' LIVE row counts: footer total minus rows
-          // already dead under a deletion vector
+          // already dead under a deletion vector; the rewrite wrote the
+          // survivors
           val touchedRows =
             if (touched.forall(_.rows >= 0)) touched.map(fe => fe.rows - fe.dvRows).sum
             else -1L
-          val addedRows = if (added.forall(_.rows >= 0)) added.map(_.rows).sum else -1L
-          // obs.get blocks until its action ran — only consult it after a write
-          val survived = survivors.fold(touchedRows) { case (obs, _) =>
-            Option(obs.get("t")).fold(0L)(_.asInstanceOf[Number].longValue) // NULL when zero rows flowed
-          }
-          val inserted = if (addedRows < 0 || survived < 0) -1L else addedRows - survived
+          val addedRows = rowsOf(added)
           val deleted =
-            if (m.delete.isEmpty) 0L else if (touchedRows >= 0) touchedRows - survived else -1L
+            if (m.delete.isEmpty) 0L
+            else if (touchedRows >= 0 && addedRows >= 0) touchedRows - addedRows
+            else -1L
           // a rewrite measured to change nothing (every matched row failed
           // its clause conditions: e.g. a replayed batch) wrote exact copies
           // of the touched files; swapping them in would only churn the
-          // file set, so stage no file action — the transaction deletes
+          // file set, so stage none of its files — the transaction deletes
           // the written files no version references
-          if (updatedRows == 0 && inserted == 0 && deleted == 0 && plan.evolved == 0)
-            (Seq.empty, Seq.empty, 0L, 0L, 0L)
-          else (added, touched, updatedRows, inserted, deleted)
+          if (updatedRows == 0 && deleted == 0 && plan.evolved == 0) none
+          else (added, touched, updatedRows, deleted)
         }
       }
 
+    // --- 3. insert: the source rows that match no candidate row. Insert-only
+    // (e.g. the header job's Phase B), this is the whole merge: no probe, no
+    // rewrite of files whose rows would only be copied (at 10M rows this
+    // halves the merge phase; Delta special-cases insert-only merges the
+    // same way). Rows in skipped files cannot equal any source key, so they
+    // cannot absorb inserts.
+    val (insertFiles, inserted) = m.insert.fold((Seq.empty[FileEntry], 0L)) { ins =>
+      // with every file pruned the empty target would be broadcast and
+      // each source partition write its own files; the sort-merge join
+      // shuffles the inserts by key instead, and AQE packs them
+      val target = readFiles(plan.candidates, plan.schema, tx.partCols).alias(alias)
+      val unmatched = src.join(if (plan.candidates.isEmpty) target.hint("merge") else target,
+        cond, "left_anti")
+      val toInsert = ins.cond.fold(unmatched)(c => unmatched.filter(expr(c)))
+      // a file whose footer counts no row (the writer's one file for an
+      // empty result) is not staged; the transaction deletes it
+      val added = labeled("merge: insert-only anti-join + write") {
+        writeIn(tx, toInsert.select(dataCols.map { f =>
+          ins.set.get(f.name).map(expr).getOrElse(lit(null)).cast(f.dataType).as(f.name)
+        }: _*))
+      }.filter(_.rows != 0)
+      // inserted rows come free from the written files' footer counts —
+      // callers never need a post-merge table scan for accounting
+      (added, rowsOf(added))
+    }
+
+    val added = rewriteFiles ++ insertFiles
     tx.stage("MERGE", added, touched.map(_.path), plan.metrics ++ Map(
       "numTargetFilesUntouched" -> (files.size - touched.size).toString,
       "numTargetRowsUpdated" -> updated.toString,
@@ -1938,7 +1905,7 @@ class VersionedTable private (val spark: SparkSession,
       "numTargetRowsDeleted" -> deleted.toString,
       "numTargetFilesAdded" -> added.size.toString,
       "numTargetFilesRemoved" -> touched.size.toString) ++
-      (if (plan.joinType == "left_anti") Map("insertOnly" -> "true") else Map.empty),
+      (if (plan.rewrites) Map.empty else Map("insertOnly" -> "true")),
       plan.schema)
   }
 
@@ -2041,7 +2008,6 @@ object VersionedTable {
   private[tables] val DeletedRows = "graft_deleted_rows"
   /** A timestamp string: the local date-time, then an optional offset. */
   private val TsForm = """(\d{4}-\d\d-\d\d[T ][^+Z-]*)(Z|[+-]\d\d:?\d\d)?""".r
-  private val TPresent = "__graft_t_present"
   private val SPresent = "__graft_s_present"
   private implicit val fmts: Formats = DefaultFormats
 
@@ -2333,29 +2299,29 @@ private[tables] final case class Clause(cond: Option[String], set: Map[String, S
   *                   (a groupBy on the keys, a one-row-per-key window
   *                   filter), else "unchecked" (the probe's per-row
   *                   cardinality check runs)
-  * @param joinType   the join that writes the new files: `left_anti` on
-  *                   the insert-only path, else `left_outer`/`full_outer`
-  * @param sourceSmall the cached source is small enough to broadcast */
+  * @param rewrites   the step has a matched clause (or none at all): it
+  *                   probes the candidates and rewrites the touched files
+  *                   through a left-outer join. Else it is insert-only,
+  *                   and only the left-anti join writes
+  * @param sourceSmall the cached source is small enough to broadcast into
+  *                   the probe and rewrite joins */
 private[tables] final case class MergePlan(schema: StructType,
                                            evolved: Int,
                                            candidates: Seq[FileEntry],
                                            skippedByStats: Int,
                                            keysUnique: String,
-                                           joinType: String,
+                                           rewrites: Boolean,
                                            sourceCached: Boolean,
                                            sourceSmall: Boolean) {
-  /** The rewrite join carries the source broadcast hint; a broadcast hash
-    * join cannot run a full outer join. */
-  def rewriteBroadcast: Boolean = joinType == "left_outer" && sourceSmall
-
   /** The decision part of the step's operationMetrics (and so of
-    * history()): whether the source was cached, whether the join that
-    * writes the new files carried the broadcast hint, that join's type,
-    * the uniqueness proof, the stats-skipped files and evolved columns. */
+    * history()): whether the source was cached, whether the probe and
+    * rewrite joins carried the broadcast hint, the join type (`left_outer`
+    * when the step rewrites, `left_anti` when it only inserts), the
+    * uniqueness proof, the stats-skipped files and evolved columns. */
   def metrics: Map[String, String] = Map(
     "sourceCached" -> sourceCached.toString,
-    "sourceBroadcast" -> rewriteBroadcast.toString,
-    "rewriteJoinType" -> joinType,
+    "sourceBroadcast" -> sourceSmall.toString,
+    "rewriteJoinType" -> (if (rewrites) "left_outer" else "left_anti"),
     "sourceKeysUnique" -> keysUnique,
     "numTargetFilesSkippedByStats" -> skippedByStats.toString,
     "numColumnsEvolved" -> evolved.toString)

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import graft.tables.VersionedTable
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -94,11 +96,36 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("a steady items day runs no full-outer join and no union") {
-    import org.apache.spark.sql.catalyst.plans.FullOuter
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
+  /** Runs `body` and returns how many queries it executed and the
+    * analyzed plan of each whose analyzed or optimized plan `offending`
+    * flags. */
+  private def auditQueries(offending: LogicalPlan => Boolean)(body: => Unit): (Int, Seq[String]) = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val ran = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        ran.incrementAndGet()
+        if (offending(qe.analyzed) || offending(qe.optimizedPlan)) seen.add(qe.analyzed.toString)
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    (ran.get, seen.asScala.toSeq)
+  }
+
+  private def fullOuter(p: LogicalPlan): Boolean = p.exists {
+    case j: Join => j.joinType == FullOuter
+    case _ => false
+  }
+
+  test("a steady items day runs no full-outer join and no union") {
     val root = Files.createTempDirectory("graft-items-plan").toString
     val cols = Seq("contratto_cod", "numero_annuncio", "list_total", "contracted_price",
       "total_discount", "data_attivazione", "data_fine_prestazione", "product_code", "quantity",
@@ -112,33 +139,26 @@ class PlanAuditSpec extends AnyFunSuite {
       graft.jobs.ItemsEtlJob.run(spark, path, s"$root/landing/items")
     }
     day("20230601", Seq("A1" -> "100.00", "A2" -> "200.00", "A3" -> "300.00"))
-    def offending(p: LogicalPlan): Boolean = p.exists {
-      case j: Join => j.joinType == FullOuter
-      case _: Union => true
-      case _ => false
-    }
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val ran = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        ran.incrementAndGet()
-        if (offending(qe.analyzed) || offending(qe.optimizedPlan)) seen.add(qe.analyzed.toString)
-      }
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val (ran, seen) = auditQueries(p => fullOuter(p) || p.exists(_.isInstanceOf[Union])) {
       // a changed item, an unchanged one and a new key
       day("20230602", Seq("A1" -> "150.00", "A2" -> "200.00", "A4" -> "400.00"))
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    assert(ran.get > 0, "the listener saw no query")
-    assert(seen.isEmpty, s"queries with a full-outer join or a union:\n${seen.asScala.mkString("\n")}")
+    }
+    assert(ran > 0, "the listener saw no query")
+    assert(seen.isEmpty, s"queries with a full-outer join or a union:\n${seen.mkString("\n")}")
     val open = VersionedTable.forPath(spark, s"$root/landing/items").read
       .filter(col("valid_to") === lit(java.sql.Date.valueOf("9999-12-31")))
     assert(open.count() == 4)
     GraftSession.deleteRec(new java.io.File(root))
+  }
+
+  test("q66 and q92: an upsert runs no full-outer join") {
+    val (ran, seen) = auditQueries(fullOuter) {
+      try Seq("q66_merge_evolve", "q92_concurrent_merge").foreach(q =>
+        SparkEntry.queries(q)(spark, dir).collect())
+      finally graft.ops.Caches.releaseAll()
+    }
+    assert(ran > 0, "the listener saw no query")
+    assert(seen.isEmpty, s"queries with a full-outer join:\n${seen.mkString("\n")}")
   }
 
   test("versioned table read prunes partitions under filters") {

@@ -134,10 +134,10 @@ class VersionedTableSpec extends AnyFunSuite {
   }
 
   test("merge delete: unmatched target rows sharing a file with matches survive") {
-    // regression: for a target-only full-outer row the delete term is
-    // NULL (source cols absent), and an un-coalesced `tPresent && !NULL`
-    // filtered the row OUT — silently deleting every unmatched row that
-    // happened to share a file with a matched one. One file forces it.
+    // regression: for an unmatched row of the left-outer rewrite the
+    // delete term is NULL (source cols absent), and an un-coalesced
+    // `!NULL` filtered the row OUT — silently deleting every unmatched row
+    // that happened to share a file with a matched one. One file forces it.
     val path = tmpDir() + "/t4g"
     val t = VersionedTable.create(spark,
       Seq(("k1", "v1"), ("k2", "v2"), ("k3", "v3")).toDF("key", "val").coalesce(1),
@@ -243,15 +243,16 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.read.orderBy("key", "val").as[(String, Int, Boolean)].collect().toSeq ==
       Seq(("k1", 1, false), ("k1", 9, false), ("k2", 5, true)))
 
-    // with an insert clause the full-outer rewrite must see every matched
-    // row: both files are rewritten and the matched key is not inserted
-    val (u, _) = twoFiles("tprobe-ins")
+    // an insert clause too: still only the file whose row changes is
+    // rewritten, and the anti-join does not insert the matched key
+    val (u, closedU) = twoFiles("tprobe-ins")
     val mi = u.merge(src, "e.key = s.key")
       .whenMatchedUpdate(condition = "e.open", set = Map("val" -> "s.nv", "open" -> "false"))
       .whenNotMatchedInsert(Map("key" -> "s.key", "val" -> "s.nv", "open" -> "true"))
       .execute()
-    assert(mi("rewriteJoinType") == "full_outer", s"$mi")
-    assert(mi("numTargetFilesRemoved") == "2" && mi("numTargetRowsInserted") == "0", s"$mi")
+    assert(mi("rewriteJoinType") == "left_outer", s"$mi")
+    assert(mi("numTargetFilesRemoved") == "1" && mi("numTargetRowsInserted") == "0", s"$mi")
+    assert(u.liveEntries.map(_.path).contains(closedU), "the unchanged file stays live by reference")
     assert(u.read.orderBy("key", "val").as[(String, Int, Boolean)].collect().toSeq ==
       Seq(("k1", 1, false), ("k1", 9, false), ("k2", 5, true)))
 
@@ -262,6 +263,45 @@ class VersionedTableSpec extends AnyFunSuite {
         .whenMatchedUpdate(condition = "e.open AND s.nv > 100", set = Map("val" -> "s.nv")).execute()
     }
     assert(e.getMessage.contains("multiple source rows matched the same target row"))
+  }
+
+  test("a replayed upsert runs no rewrite and commits no data file") {
+    val t = VersionedTable.create(spark,
+      (1 to 6).map(i => (s"k$i", i)).toDF("key", "val").repartition(3), tmpDir() + "/tupsert-replay")
+    val src = Seq(("k1", 10), ("k1", 9), ("k7", 7)).toDF("key", "v")
+      .groupBy("key").agg(max("v").as("nv")).alias("s")
+    def upsert() = t.alias("e").merge(src, "e.key = s.key")
+      .whenMatchedUpdate(condition = "e.val <> s.nv", set = Map("val" -> "s.nv"))
+      .whenNotMatchedInsert(Map("key" -> "s.key", "val" -> "s.nv"))
+      .execute()
+    val first = upsert()
+    assert(first("sourceKeysUnique") == "plan" && first("numTargetRowsUpdated") == "1" &&
+      first("numTargetRowsInserted") == "1" && first("numTargetFilesRemoved") == "1", s"$first")
+    val (live, onDisk) = (t.liveEntries.map(_.path).toSet, dataFiles(t.root))
+    val (replay, rewrites) = graft.jobs.HeaderEtlJobSpec.rewriteJobs(spark)(upsert())
+    assert(rewrites == 0, s"$rewrites rewrite jobs")
+    assert(Seq("numTargetRowsUpdated", "numTargetRowsInserted", "numTargetFilesAdded",
+      "numTargetFilesRemoved").forall(replay(_) == "0"), s"$replay")
+    assert(t.liveEntries.map(_.path).toSet == live && dataFiles(t.root) == onDisk)
+    assert(t.read.orderBy("key").as[(String, Int)].collect().toSeq ==
+      ("k1", 10) +: (2 to 7).map(i => (s"k$i", i)))
+  }
+
+  test("an upsert whose matched rows all fail their clause commits only its inserts") {
+    val t = VersionedTable.create(spark,
+      (1 to 6).map(i => (s"k$i", i)).toDF("key", "val").repartition(3), tmpDir() + "/tupsert-ins")
+    val (v0, live) = (t.currentVersion, t.liveEntries.map(_.path).toSet)
+    // an unchecked source: its probe touches every file a key matches
+    val src = Seq(("k1", 1), ("k2", 2), ("k8", 8)).toDF("key", "nv").alias("s")
+    val m = t.alias("e").merge(src, "e.key = s.key")
+      .whenMatchedUpdate(condition = "e.val <> s.nv", set = Map("val" -> "s.nv"))
+      .whenNotMatchedInsert(Map("key" -> "s.key", "val" -> "s.nv"))
+      .execute()
+    assert(m("sourceKeysUnique") == "unchecked" && m("numTargetRowsUpdated") == "0" &&
+      m("numTargetRowsInserted") == "1" && m("numTargetFilesRemoved") == "0" &&
+      m("numTargetFilesAdded") == "1", s"$m")
+    assert(live.subsetOf(t.liveEntries.map(_.path).toSet), "no file is removed")
+    assert(t.readChanges(v0).as[(String, Int)].collect().toSeq == Seq(("k8", 8)))
   }
 
   test("merge records its source, broadcast, join and uniqueness decisions") {
@@ -301,9 +341,10 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(m1("sourceKeysUnique") == "plan")
     assert(t.read.filter($"key" === "k1").select("val").as[Int].head() == 7)
 
-    // update + insert from a plain frame: full-outer rewrite, which a
-    // broadcast hash join cannot run; nothing in a local relation's plan
-    // proves its keys unique, so the probe checks per target row
+    // update + insert from a plain frame: the left-outer rewrite plus the
+    // anti-join; an uncached source is not broadcast, and nothing in a
+    // local relation's plan proves its keys unique, so the probe checks
+    // per target row
     val plain = Seq(("k2", 20), ("k99", 99)).toDF("key", "v").alias("s")
     val upsert = t.alias("e").merge(plain, "e.key = s.key")
       .whenMatchedUpdate(set = Map("val" -> "s.v"))
@@ -312,7 +353,7 @@ class VersionedTableSpec extends AnyFunSuite {
     upsert.execute()
     val m2 = lastMetrics(t)
     assert(p2.metrics.toSet.subsetOf(m2.toSet), s"plan ${p2.metrics} vs commit $m2")
-    assert(m2("rewriteJoinType") == "full_outer")
+    assert(m2("rewriteJoinType") == "left_outer")
     assert(m2("sourceBroadcast") == "false")
     assert(m2("sourceCached") == "false")
     assert(m2("sourceKeysUnique") == "unchecked")
@@ -337,7 +378,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val theta = plan(t, t.alias("e").merge(plain, "e.val > s.v")
       .whenMatchedUpdate(set = Map("val" -> "s.v")), plain)
     assert(theta.candidates == live && theta.skippedByStats == 0)
-    assert(theta.keysUnique == "unchecked" && theta.joinType == "left_outer")
+    assert(theta.keysUnique == "unchecked" && theta.rewrites)
     // a duplicate key: unproven, so the probe must check per row
     val dup = Seq(("k1", 1), ("k1", 2)).toDF("key", "v").alias("s")
     val dupPlan = plan(t, t.alias("e").merge(dup, "e.key = s.key")
@@ -349,7 +390,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val tiny = plan(small, small.alias("e").merge(one, "e.key = s.key")
       .whenNotMatchedInsert(values = Map("key" -> "s.key", "val" -> "s.v")), one)
     assert(tiny.candidates == small.liveEntries && tiny.skippedByStats == 0)
-    assert(tiny.keysUnique == "unchecked" && tiny.joinType == "left_anti")
+    assert(tiny.keysUnique == "unchecked" && !tiny.rewrites)
   }
 
   test("merge key uniqueness from the plan: filters and per-key windows") {
